@@ -283,55 +283,6 @@ object Prof {
     }
   }
 
-  /** Scratch copy of [[graft.operators.Similarity.nswWalkVisited]] with
-    * knobs, for the r17 A/B only — the winner gets folded back into the
-    * operator (identical semantics: hints and checkpoint cadence change
-    * neither the visited set nor the ranks). */
-  private def walkVariant(s: SparkSession, edges: org.apache.spark.sql.DataFrame,
-                          points: org.apache.spark.sql.DataFrame,
-                          probes: org.apache.spark.sql.DataFrame,
-                          entries: Array[Long], bcast: Boolean,
-                          ckptEvery: Int): Unit = {
-    import graft.functions.VectorSql.norm2Fast
-    import graft.queries.SimilarityQueries.{K, NswBeam, NswSteps}
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    def cosFromNorms(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-                     na: org.apache.spark.sql.Column, nb: org.apache.spark.sql.Column) =
-      graft.functions.VectorSql.dotFast(a, b) / (na * nb)
-    val entryPairs = probes.select(col("probe_id"))
-      .crossJoin(entries.toSeq.toDF("vec_id"))
-    val pn0 = points.withColumn("nrm", norm2Fast(col("v")))
-      .select(col("vec_id"), col("v"), col("nrm"))
-    val pn = if (bcast) broadcast(pn0) else pn0
-    val ed = if (bcast) broadcast(edges) else edges
-    val pr = probes.withColumn("np", norm2Fast(col("p")))
-      .localCheckpoint(eager = true)
-    def score(reached: org.apache.spark.sql.DataFrame) =
-      reached.join(pn, "vec_id").join(broadcast(pr), "probe_id")
-        .select(col("probe_id"), col("vec_id"),
-          cosFromNorms(col("v"), col("p"), col("nrm"), col("np")).as("cos"))
-    var visited = score(
-        broadcast(entryPairs.select(col("probe_id"), col("vec_id")).distinct()))
-      .localCheckpoint(eager = true)
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
-    for (step <- 1 to NswSteps) {
-      val beamDf = visited.withColumn("rn", row_number().over(w))
-        .where(col("rn") <= NswBeam).select(col("probe_id"), col("vec_id"))
-      val reached = beamDf.join(ed, beamDf("vec_id") === ed("src"))
-        .select(col("probe_id"), col("dst").as("vec_id"))
-      visited = visited.unionByName(score(reached)).distinct()
-      if (step % ckptEvery == 0 || step == NswSteps)
-        visited = visited.localCheckpoint(eager = true)
-    }
-    val wr = Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
-    visited.where(col("vec_id") =!= col("probe_id"))
-      .withColumn("rank", row_number().over(wr)).where(col("rank") <= K)
-      .select(col("probe_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos_sim"))
-      .write.format("noop").mode("overwrite").save()
-  }
-
   /** Dumps the INTERNAL frames' plans that entry-level explain cannot see
     * (driver-side fits, foreachBatch bodies): the per-iteration PQ
     * assignment frame and the preimage change feed. */

@@ -2,12 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
-/** Native Catalyst expressions for the two hot vector kernels (SURVEY.md
+/** Native Catalyst expressions for the hot vector kernels (SURVEY.md
   * §7.2's optional perf tier): unlike Scala UDFs they read `ArrayData`
   * in place (no per-row array materialization, no boxing) and generate Java
   * directly into whole-stage codegen, fusing with the surrounding join/agg
@@ -78,6 +78,83 @@ case class ArraySqDist(left: Expression, right: Expression) extends ArrayFoldExp
   override def prettyName: String = "array_sqdist"
 }
 
+/** Index of the nearest of K prototypes (squared L2) to an `array<double>`
+  * row: the SOM best-matching-unit search as ONE expression. The K×d
+  * prototypes are one row-major `double[]` handed to codegen as a
+  * reference object, so the generated code and the plan string are the
+  * same size for any K.
+  *
+  * Float discipline: each distance is the left-to-right fold of
+  * [[ArraySqDist]] (bit-identical to `Vectors.sqdist` and the oracle's
+  * sums); the argmin keeps the FIRST minimum and orders NaN above every
+  * number, exactly like `array_position(d, array_min(d))` and the oracle's
+  * `row_number() OVER (ORDER BY d2, cell)`: ties go to the lower index, an
+  * all-NaN row maps to 0. A null row yields null; a row whose length is not
+  * d throws. Interpreted eval and codegen both call [[ArrayArgminSqDist.argmin]].
+  */
+case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: Int)
+    extends UnaryExpression {
+  require(dim > 0 && prototypes.nonEmpty && prototypes.length % dim == 0,
+    s"prototypes must be a non-empty K×$dim matrix, got ${prototypes.length} values")
+
+  override def dataType: DataType = IntegerType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<double> argument, got ${other.simpleString}")
+  }
+
+  override protected def nullSafeEval(v: Any): Any =
+    ArrayArgminSqDist.argmin(v.asInstanceOf[ArrayData], prototypes, dim)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val p = ctx.addReferenceObj("prototypes", prototypes, "double[]")
+    defineCodeGen(ctx, ev, v => s"graft.functions.ArrayArgminSqDist.argmin($v, $p, $dim)")
+  }
+
+  override def toString: String = s"$prettyName($child, K=${prototypes.length / dim}, d=$dim)"
+  override protected def withNewChildInternal(c: Expression): ArrayArgminSqDist = copy(child = c)
+  override def prettyName: String = "array_argmin_sqdist"
+}
+
+object ArrayArgminSqDist {
+  /** Row-major copy of K equal-length prototypes, the layout the kernel reads. */
+  def flatten(prototypes: Seq[Array[Double]]): Array[Double] = {
+    require(prototypes.nonEmpty && prototypes.forall(_.length == prototypes.head.length),
+      s"prototypes must be non-empty and of equal length, got lengths " +
+        prototypes.map(_.length).distinct.mkString(","))
+    Array.concat(prototypes: _*)
+  }
+
+  /** The one loop both eval paths run: the row is copied out once (d
+    * doubles), then the K distances are scanned over primitive arrays. */
+  def argmin(x: ArrayData, prototypes: Array[Double], dim: Int): Int = {
+    val n = x.numElements()
+    if (n != dim) throw new IllegalArgumentException(
+      s"array_argmin_sqdist: feature array has $n elements but the prototypes have $dim")
+    val a = x.toDoubleArray()
+    var best = 0
+    var bestD = Double.NaN
+    var c = 0
+    var off = 0
+    while (off < prototypes.length) {
+      var s = 0.0
+      var i = 0
+      while (i < dim) {
+        val d = a(i) - prototypes(off + i)
+        s += d * d
+        i += 1
+      }
+      // s < bestD with NaN ordered last: a number always beats NaN
+      if (s == s && !(s >= bestD)) { best = c; bestD = s }
+      c += 1
+      off += dim
+    }
+    best
+  }
+}
+
 object ArrayVectorExpressions {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -86,6 +163,10 @@ object ArrayVectorExpressions {
 
   def arraySqDist(a: Column, b: Column): Column =
     ColumnBridge.column(ArraySqDist(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** BMU index of `features` among the row-major K×`dim` `prototypes`. */
+  def argminSqDist(features: Column, prototypes: Array[Double], dim: Int): Column =
+    ColumnBridge.column(ArrayArgminSqDist(ColumnBridge.expression(features), prototypes, dim))
 
   /** Make `array_dot` / `array_sqdist` callable from `spark.sql(...)` text. */
   def registerSqlFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -414,10 +414,10 @@ object MlQueries {
     * shape applied to the reference's own estimator): the model from
     * [[somFitStreamModel]]'s five-slice online run scores arriving
     * points micro-batch by micro-batch with the fully-codegen argmin
-    * projection ([[graft.som.SOMModel.transformNative]]'s expression
-    * shape — per-row distances to the broadcast K×d literals,
-    * `array_position(d, array_min(d))` tie-break, no UDF, NO STATE: a
-    * scoring stream is stateless by construction, so at 100 TB it scales
+    * kernel ([[graft.som.SOMModel.transformNative]]'s expression — the
+    * native `ArrayArgminSqDist` over the K×d prototypes, min-index
+    * tie-break, no UDF, NO STATE: a scoring stream is stateless by
+    * construction, so at 100 TB it scales
     * with executor count alone). Both halves sit under ONE DuckDB
     * oracle: the sliced training chain feeds an argmin CTE, so training
     * schedule, final model, and every served assignment are hash-gated
@@ -429,11 +429,10 @@ object MlQueries {
     SomQueries.points(fork, dir).repartition(3).write.parquet(inDir)
     val stream = fork.readStream.schema("vec_id LONG, v ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val dists = array(protos.map(p =>
-      graft.functions.VectorSql.sqDistFast(col("v"), typedLit(p.toSeq))): _*)
+    val bmu = graft.functions.ArrayVectorExpressions.argminSqDist(col("v"),
+      graft.functions.ArrayArgminSqDist.flatten(protos.toSeq), protos(0).length)
     val q = stream
-      .select(col("vec_id"),
-        (array_position(dists, array_min(dists)) - 1).cast("int").as("prediction"))
+      .select(col("vec_id"), bmu.as("prediction"))
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)
       .outputMode("append")
@@ -452,7 +451,7 @@ object MlQueries {
 
   /** Oracle for the full Estimator→transformNative path: the fit5 chain's
     * final prototypes plus one argmin assignment CTE (row_number tie-break ==
-    * min-index, same as `array_position(d, array_min(d))`). */
+    * min-index, same as the native `ArrayArgminSqDist` kernel). */
   def somFitPredictOracle: String =
     fit5Chain + s""",
       |df AS (

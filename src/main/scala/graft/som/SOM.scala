@@ -44,19 +44,24 @@ private[graft] object Distance {
   * k-means-style batch update plus topological neighborhood smoothing
   * (reference `som/SOM.scala`).
   *
-  * Spark-first rework of the reference's RDD pipeline:
-  *  - the per-iteration assign+aggregate is one DataFrame job:
-  *    `groupBy(bmu).agg(Summarizer.sum(features), count, sum(d2))` — Catalyst
-  *    performs the map-side partial aggregation the reference hand-rolled
-  *    with `mapPartitions` + `reduceByKey` (reference `som/SOM.scala:192-212`);
-  *  - the quantization cost rides the same aggregate as an exact column
-  *    instead of an at-least-once accumulator (reference `som/SOM.scala:181`);
+  * Rework of the reference's RDD pipeline:
+  *  - the features are decoded and normed once into a cached
+  *    `RDD[VectorWithNorm]`; each iteration's assign+aggregate is one
+  *    single-stage job: `mapPartitions` folds every partition into one K×d
+  *    partial (sums, counts, Σd2), and the driver merges the partials in
+  *    partition-index order from an ordered `collect` (tree-reduced only
+  *    when partitions×K×d is large), so the float sums are reproducible
+  *    run to run — the reference used `mapPartitions` + `reduceByKey`
+  *    (reference `som/SOM.scala:192-212`);
+  *  - the quantization cost rides the same partials, so a retried task
+  *    cannot count it twice as the reference's at-least-once accumulator
+  *    could (reference `som/SOM.scala:181`);
   *  - the O(K²·d) neighborhood smoothing stays on the driver, exactly like
   *    the reference (`som/SOM.scala:219-234`) — K is always tiny relative to N.
   *
-  * Scale: per iteration, one scan of N rows (no shuffle of the data — the
-  * shuffle moves only ≤K partial aggregates), one ≤K-row collect. The model
-  * (K·d doubles) is broadcast each iteration and destroyed after.
+  * Scale: per iteration, one scan of N rows with no shuffle, and one
+  * collect of numPartitions K×d partials. The model (K·d doubles) is
+  * broadcast each iteration and destroyed after.
   */
 class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
     with org.apache.spark.ml.util.DefaultParamsWritable {

@@ -57,12 +57,17 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
     dataset.withColumn($(predictionCol), predictUdf(f))
   }
 
-  /** Fully codegen scoring for array-typed features: per-row distances to all
-    * K prototypes as an array of native `ArraySqDist` expressions, argmin via
-    * `array_position(d, array_min(d))` (first occurrence == min-index
-    * tie-break, same as `findClosest`). No UDF, no serialization barrier —
-    * the whole scoring projection stays inside whole-stage codegen. Works on
-    * batch and streaming DataFrames alike. */
+  /** Prototypes as one row-major K×d array, the layout the native argmin
+    * kernel reads; built once per model. */
+  private lazy val flatPrototypes: Array[Double] =
+    graft.functions.ArrayArgminSqDist.flatten(prototypes.map(_.toArray).toSeq)
+
+  /** Fully codegen scoring for array-typed features: one native
+    * `ArrayArgminSqDist` expression per row (exact sqdist to each of the K
+    * prototypes, first minimum wins — the same min-index tie-break as
+    * `findClosest`). No UDF, no serialization barrier, and generated code
+    * whose size does not depend on K. Works on batch and streaming
+    * DataFrames alike. */
   def transformNative(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
     val v = dataset.schema($(featuresCol)).dataType match {
@@ -71,10 +76,8 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
       case other => throw new IllegalArgumentException(
         s"transformNative requires an array feature column, got $other (use transform)")
     }
-    val dists = array(prototypes.map(p =>
-      graft.functions.VectorSql.sqDistFast(v, typedLit(p.toArray))): _*)
-    dataset.withColumn($(predictionCol),
-      (array_position(dists, array_min(dists)) - 1).cast("int"))
+    dataset.withColumn($(predictionCol), graft.functions.ArrayVectorExpressions
+      .argminSqDist(v, flatPrototypes, prototypes(0).size))
   }
 
   /** Total quantization error: Σ min-squared-distance, one aggregate job. */

@@ -153,6 +153,23 @@ class NndGraphSpec extends SparkSpec {
       "random: converged build must equal the fixed build at the realized count")
   }
 
+  /** `nndDescent` removes the previous round's edges with a `left_anti`
+    * join, not `except`. The two give the same set only while each round's
+    * directed top-M has no duplicate rows and no null keys, which this pins. */
+  test("every NND round's directed top-M edges are distinct, non-null rows") {
+    val pts = clustered(8, 80).localCheckpoint(true)
+    val n = pts.count()
+    val spilled = spilledFor(pts, n)
+    for (rounds <- 0 to SimilarityQueries.NndRounds) {
+      val e = Similarity.knnGraphDirectedNnd(spilled, pts, SimilarityQueries.NswM,
+        SimilarityQueries.nndRingDeg(n), rounds).localCheckpoint(true)
+      val rows = e.count()
+      assert(rows > 0, s"round $rounds: empty edge set")
+      assert(rows == e.distinct().count(), s"round $rounds: duplicate directed edges")
+      assert(e.where(col("src").isNull || col("dst").isNull).isEmpty, s"round $rounds: null key")
+    }
+  }
+
   /** The `ann_nsw_nnd_delta` lifecycle property: increments over an NND
     * day-zero artifact COMPOUND — applying delta batch 1 then batch 2 to
     * the carried DIRECTED result equals applying both at once. (Top-M

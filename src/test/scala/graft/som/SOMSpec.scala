@@ -177,6 +177,110 @@ class SOMSpec extends SparkSpec {
     assert(!plan.contains("UDF("))
   }
 
+  /** Runs `body` once with codegen that must compile (no silent
+    * interpreted fallback), once fully interpreted. */
+  private def codegenAndInterpreted[T](body: => T): (T, T) = (
+    withConf("spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(body),
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body))
+
+  /** A side×side model over the 64-d embeddings: prototype i is 0.9×
+    * embedding row i, except that each odd cell in the upper half repeats
+    * the prototype K/2 cells below it, so rows nearest such a pair tie. */
+  private def embeddingModel(side: Int): SOMModel = {
+    val rows = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+      .orderBy("vec_id").limit(side * side).collect()
+      .map(_.getAs[Seq[Float]]("embedding").map(_ * 0.9).toArray)
+    val k = rows.length
+    val protos = Array.tabulate(k)(i => if (i >= k / 2 && i % 2 == 1) rows(i - k / 2) else rows(i))
+    new SOMModel("som_emb", protos.map(Vectors.dense)).setGrid(side, side)
+  }
+
+  for (side <- Seq(10, 20); elem <- Seq("float", "double"))
+    test(s"transformNative == transform == brute-force argmin at ${side}x$side on array<$elem>") {
+      import org.apache.spark.sql.functions.col
+      val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+        .select(col("vec_id"), col("embedding").cast(s"array<$elem>").as("features"))
+      val model = embeddingModel(side)
+      val k = side * side
+      val protos = model.prototypes
+      val brute = emb.collect().map { r =>
+        val v = Vectors.dense(r.getSeq[Number](1).map(_.doubleValue).toArray)
+        r.getLong(0) -> protos.indices.minBy(c => (Vectors.sqdist(protos(c), v), c))
+      }.toMap
+      def scored(df: org.apache.spark.sql.DataFrame) =
+        df.select("vec_id", "prediction").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val (gen, interp) = codegenAndInterpreted(scored(model.transformNative(emb)))
+      assert(gen == brute)
+      assert(interp == brute)
+      assert(scored(model.transform(emb)) == brute)
+      // duplicate prototypes resolve to the lower index, and ties did occur
+      val dups = (k / 2 until k).filter(_ % 2 == 1).toSet
+      assert(!brute.values.exists(dups))
+      assert(brute.values.exists(c => dups(c + k / 2)))
+    }
+
+  test("native argmin kernel matches the array_min argmin on ties, NaN, ±∞ and null") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val inf = Double.PositiveInfinity
+    val protos = Array(Array(inf, 0.0), Array(0.0, 0.0), Array(0.0, 0.0),
+      Array(1.0, 1.0), Array(-inf, 0.0))
+    val rows = Seq[(Long, Array[Double])]((0L, Array(0.0, 0.0)), (1L, Array(inf, 0.0)),
+      (2L, Array(Double.NaN, 0.0)), (3L, Array(-inf, 0.0)), (4L, Array(0.9, 1.2)),
+      (5L, null), (6L, Array(inf, inf)))
+    val df = rows.toDF("id", "v").repartition(2)
+    // the K-literal form the kernel replaced, kept here as its reference
+    val dists = array(protos.toSeq.map(p =>
+      graft.functions.VectorSql.sqDistFast(col("v"), typedLit(p))): _*)
+    val reference = (array_position(dists, array_min(dists)) - 1).cast("int")
+    val kernel = graft.functions.ArrayVectorExpressions.argminSqDist(col("v"),
+      graft.functions.ArrayArgminSqDist.flatten(protos.toSeq), 2)
+    def run(c: org.apache.spark.sql.Column) = df.select(col("id"), c).collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    val want = run(reference)
+    assert(want(0L).contains(1) && want(1L).contains(1) && want(5L).isEmpty)
+    val (gen, interp) = codegenAndInterpreted(run(kernel))
+    assert(gen == want)
+    assert(interp == want)
+  }
+
+  test("transformNative: null rows score null, wrong-length rows throw naming both lengths") {
+    import spark.implicits._
+    val model = new SOMModel("som_small",
+      Array.tabulate(4)(i => Vectors.dense(Array.fill(4)(i.toDouble)))).setGrid(2, 2)
+    val ok = Seq[(Long, Array[Double])]((1L, Array(0.9, 0.9, 0.9, 0.9)), (2L, null))
+      .toDF("id", "features").repartition(2)
+    val (gen, interp) = codegenAndInterpreted(model.transformNative(ok)
+      .select("id", "prediction").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap)
+    assert(gen == Map(1L -> Some(1), 2L -> None))
+    assert(interp == gen)
+    val short = Seq[(Long, Array[Double])]((1L, Array(0.5, 0.5, 0.5)))
+      .toDF("id", "features").repartition(2)
+    codegenAndInterpreted {
+      val e = intercept[Exception](model.transformNative(short).collect())
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("has 3 elements") && m.contains("have 4")),
+        s"unexpected error: $e")
+    }
+  }
+
+  test("transformNative's executed plan is UDF-free and does not grow with K") {
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+      .withColumnRenamed("embedding", "features")
+    def plan(side: Int): String = {
+      val protos = Array.tabulate(side * side)(i => Vectors.dense(Array.fill(64)(i.toDouble)))
+      new SOMModel("som_plan", protos).setGrid(side, side)
+        .transformNative(emb).queryExecution.executedPlan.toString
+    }
+    val (small, large) = (plan(2), plan(20))
+    assert(!small.contains("UDF(") && !large.contains("UDF("))
+    assert(large.contains("K=400, d=64"))
+    assert(math.abs(large.length - small.length) <= 16,
+      s"plan grew with K: ${small.length} -> ${large.length} chars")
+  }
+
   test("scoring a streaming DataFrame works (streaming model inference)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
