@@ -1,38 +1,29 @@
 package graft.queries
 
-import graft.som.{SOM, SOMModel, Distance, VectorWithNorm}
+import graft.som.{SOM, SOMModel, VectorWithNorm}
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Queries that exercise the full SOM Estimator/Model API end-to-end.
-  * The iterative fit is not ANSI-expressible, so these get the driver's
-  * weaker rows-only check — but they are made fully deterministic anyway:
+/** Queries that exercise the full SOM Estimator/Model API end-to-end, plus
+  * the catalog's other ML entries. The iterative fits are not
+  * ANSI-expressible as one aggregate, but every one is still oracle-hashed:
   * warm-start init from the fixed prototype table (embeddings vec_id < 9)
-  * removes all sampling.
+  * removes all sampling, and quantized iterates let a DuckDB CTE chain
+  * replay the whole training run.
   */
 object MlQueries {
 
   /** Fit a 3×3 SOM on the embeddings table (warm-started from the fixed
     * prototypes), score the same table: (vec_id, prediction).
     *
-    * Fully oracle-checked: with `protoDecimals = 4` the estimator quantizes
-    * every iterate exactly like the proven `som_fit5` CTE chain, so the
-    * fitted prototypes equal the chain's `p5` and the final assignment is
+    * Fully oracle-checked: the fit is [[fit5Model]] (equal to the proven
+    * `som_fit5` CTE chain's `p5`), so the final assignment is
     * ANSI-expressible (chain + one argmin CTE). Scoring goes through
     * [[SOMModel.transformNative]] — whole-stage codegen, no UDF barrier. */
   def somFitPredict(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").as("features"))
-    val init = SomQueries.protos(s, dir).orderBy("proto_id").collect()
-      .map(r => org.apache.spark.ml.linalg.Vectors.dense(
-        r.getAs[Seq[Double]]("c").toArray.map(r4)))
-    val warm = new SOMModel("som_init", init).setGrid(3, 3)
-    val model = new SOM().setHeight(3).setWidth(3)
-      .setMaxIter(FitIters).setTMax(FitTMax).setTMin(FitTMin).setTol(0.0)
-      .setSeed(42).setProtoDecimals(4).setSumDecimals(6)
-      .setInitialModel(warm)
-      .fit(emb)
-    model.transformNative(emb).select(col("vec_id"), col("prediction"))
+    val emb = embFeatures(s, dir)
+    fit5Model(s, dir, emb).transformNative(emb).select(col("vec_id"), col("prediction"))
   }
 
   /** Per-dimension z-score standardization of the embedding corpus — the
@@ -268,96 +259,59 @@ object MlQueries {
   // ---- oracle-checked training loop --------------------------------------
   // 5 full batch-SOM iterations, checkable against a generated DuckDB CTE
   // chain. Two determinism devices make cross-engine equality exact:
-  //  - prototypes are rounded to 4 decimals after every update, so both
-  //    engines start each iteration from bit-identical prototypes (the
-  //    ~1e-13 aggregation-order drift is quantized away);
-  //  - the gaussian neighborhood weights are injected as LITERALS computed
-  //    once on the driver (no libm exp() divergence).
+  //  - per-cell sums are rounded to 6 decimals and prototypes to 4 after
+  //    every update, so both engines start each iteration from bit-identical
+  //    prototypes (the ~1e-13 aggregation-order drift is quantized away);
+  //  - the gaussian neighborhood weights enter the oracle as LITERALS
+  //    computed once on the driver (no libm exp() divergence).
   val FitIters = 5
   private val FitTMax = 2.0; private val FitTMin = 0.5
 
-  // HALF_UP matches both Spark's round() and DuckDB's round() (away from
-  // zero on exact halves) — math.rint would be half-even.
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+  /** Neighborhood weight (cell k, cell j) of fit iteration `iter`. */
+  private def fitWeight(iter: Int): (Int, Int) => Double = {
+    val t = graft.som.Grid.temperature("exponential", iter, FitIters, FitTMax, FitTMin)
+    (k, j) => graft.som.Grid.kernelWeight("gaussian",
+      graft.som.Grid.cellDist(SomQueries.Width)(k, j), t)
+  }
 
   private def fitWeights(iter: Int): Seq[(Int, Int, Double)] = {
-    val t = graft.som.Grid.temperature("exponential", iter, FitIters, FitTMax, FitTMin)
-    for (k <- 0 until SomQueries.K; j <- 0 until SomQueries.K)
-      yield (k, j, graft.som.Grid.kernelWeight("gaussian",
-        graft.som.Grid.cellDist(SomQueries.Width)(k, j), t))
+    val w = fitWeight(iter)
+    for (k <- 0 until SomQueries.K; j <- 0 until SomQueries.K) yield (k, j, w(k, j))
   }
 
-  /** ONE quantized SOM iteration over `pts` against `protos` — the shared
-    * update both the batch fit ([[somFit5]]) and the streaming fit
-    * ([[somFitStream]], where `pts` is one arriving slice) apply.
-    * Argmin carries the point vector through the aggregate (first(v) — v
-    * is constant across a point's K candidate rows), so the per-cell sums
-    * need no second join against pts: one shuffle per iteration instead
-    * of two plus a join (the assignedVec pattern from SomQueries).
-    * Vector-shaped aggregate (the som_update/cellStats shape): N in-place
-    * vector adds and a K-row shuffle, with the K×d explode AFTER the agg —
-    * the posexplode-first formulation pushed N·d rows (2M at sf0.1)
-    * through the aggregate every iteration. round(·, 6) on the
-    * order-dependent component sums keeps every input of the weighted
-    * ratio identical across engines and partition counts by
-    * construction. */
-  private def somUpdateOnce(pts: DataFrame, protos: Array[Array[Double]],
-                            iter: Int): Array[Array[Double]] = {
-    val s = pts.sparkSession
-    import s.implicits._
-    val protoDF = protos.zipWithIndex
-      .map { case (c, k) => (k.toLong, c) }.toSeq.toDF("proto_id", "c")
-    val assign = pts.crossJoin(broadcast(protoDF))
-      .select(col("vec_id"), col("v"),
-        graft.functions.VectorSql.sqDistFast(col("v"), col("c")).as("d2"),
-        col("proto_id"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("proto_id"))).as("m"), first(col("v")).as("v"))
-      .select(col("m.proto_id").as("bmu"), col("v"))
-    val sums = assign
-      .select(col("bmu"), org.apache.spark.ml.functions.array_to_vector(col("v")).as("fv"))
-      .groupBy(col("bmu"))
-      .agg(org.apache.spark.ml.stat.Summarizer.sum(col("fv")).as("sv"), count(lit(1)).as("n"))
-      .select(col("bmu"), col("n"),
-        posexplode(org.apache.spark.ml.functions.vector_to_array(col("sv"))).as(Seq("dim", "x")))
-      .select(col("bmu"), col("dim"), round(col("x"), 6).as("s"), col("n"))
-    val w = fitWeights(iter).toDF("k", "j", "w")
-    val next = sums.join(broadcast(w), sums("bmu") === w("j"))
-      .groupBy(col("k"), col("dim"))
-      .agg(round(sum(col("w") * col("s")) / sum(col("w") * col("n")), 4).as("nv"))
-      .collect()
-    val arr = Array.fill(SomQueries.K, SomQueries.Dim)(0.0)
-    next.foreach(r => arr(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-    arr
-  }
+  private def embFeatures(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").as("features"))
 
-  /** The deterministic r4-rounded init (embeddings vec_id < 9) both fit
+  /** The deterministic 4-decimal init (embeddings vec_id < 9) both fit
     * forms start from. */
-  private def initProtos(s: SparkSession, dir: String): Array[Array[Double]] =
-    SomQueries.protos(s, dir).orderBy("proto_id").collect()
-      .map(_.getAs[Seq[Double]]("c").toArray.map(r4))
+  private def initProtos(s: SparkSession, dir: String): Array[Vector] =
+    SomQueries.protoVectors(s, dir, 4)
+
+  /** The estimator run behind `som_fit5` and `som_fit_predict` over
+    * [[embFeatures]]: a 3×3 map warm-started from [[initProtos]],
+    * [[FitIters]] iterations with the weights of [[fitWeight]] (the
+    * estimator's default exponential decay, gaussian kernel and rectangular
+    * grid), sums rounded to 6 decimals and prototypes to 4, no early stop. */
+  private def fit5Model(s: SparkSession, dir: String, emb: DataFrame): SOMModel = {
+    val warm = new SOMModel("som_init", initProtos(s, dir)).setGrid(3, 3)
+    new SOM().setHeight(3).setWidth(3)
+      .setMaxIter(FitIters).setTMax(FitTMax).setTMin(FitTMin).setTol(0.0)
+      .setSeed(42).setProtoDecimals(4).setSumDecimals(6)
+      .setInitialModel(warm)
+      .fit(emb)
+  }
 
   /** Final prototypes after [[FitIters]] oracle-checked iterations:
     * (cell, dim, nv). */
-  def somFit5(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pts = SomQueries.points(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init: embeddings vec_id < 9, rounded like every later iterate
-    var protos = initProtos(s, dir)
-    for (iter <- 0 until FitIters)
-      protos = somUpdateOnce(pts, protos, iter)
-    protos.zipWithIndex
-      .flatMap { case (c, k) => c.zipWithIndex.map { case (x, d) => (k, d, x) } }
-      .toSeq.toDF("cell", "dim", "nv")
-  }
+  def somFit5(s: SparkSession, dir: String): DataFrame =
+    SomQueries.cellRows(s, fit5Model(s, dir, embFeatures(s, dir)).prototypes.toSeq)
 
   /** ONLINE (mini-batch) SOM TRAINING as a stream — the reference's core
     * estimator meets the streaming discipline: the corpus arrives in
     * [[FitIters]] event-ordered slices (`vec_id mod FitIters`, staged
     * one file per micro-batch via [[StreamScratch.stageOrdered]]), and
-    * each micro-batch applies ONE [[somUpdateOnce]] step — assign →
+    * each micro-batch applies ONE [[SOM.step]] — assign →
     * cell sums → kernel smoothing — using ONLY its slice, with the
     * iteration-indexed temperature schedule keyed on the deterministic
     * batch id. Model state is the K×d prototype matrix (bounded, never
@@ -366,21 +320,17 @@ object MlQueries {
     * model warm-starts today's data. A replayed batch is guarded by the
     * monotone batch-id check (the CDC txn-app-id discipline), so
     * at-least-once delivery cannot double-apply an update. Every
-    * iterate is quantized exactly like [[somFit5]] (r6 sums, r4
+    * iterate is quantized exactly like [[somFit5]] (6-decimal sums, 4-decimal
     * prototypes), so DuckDB replays the ENTIRE five-slice training run
     * as one CTE chain and the final model itself is hash-gated —
     * SomStreamSpec additionally pins that the stream crossed one
     * micro-batch per slice. */
-  def somFitStream(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    somFitStreamModel(s, dir).zipWithIndex
-      .flatMap { case (c, k) => c.zipWithIndex.map { case (x, d) => (k, d, x) } }
-      .toSeq.toDF("cell", "dim", "nv")
-  }
+  def somFitStream(s: SparkSession, dir: String): DataFrame =
+    SomQueries.cellRows(s, somFitStreamModel(s, dir).toSeq)
 
   /** The online fit itself: runs the slice-scheduled training stream and
     * returns the final K×d prototype matrix. */
-  private def somFitStreamModel(s: SparkSession, dir: String): Array[Array[Double]] =
+  private def somFitStreamModel(s: SparkSession, dir: String): Array[Vector] =
     Scoped(s) { fork =>
       val root = StreamScratch.fresh("somfit")
       val ckpt = s"$root/ckpt"
@@ -391,14 +341,15 @@ object MlQueries {
         (0 until FitIters).map(b =>
           pts.where(pmod(col("vec_id"), lit(FitIters)) === b))
       }
-      var protos = initProtos(fork, dir)
+      var protos = initProtos(fork, dir).map(VectorWithNorm(_))
       var lastApplied = -1L
       val stream = fork.readStream.schema("vec_id LONG, v ARRAY<DOUBLE>")
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (batchId > lastApplied) { // idempotent replay guard
-            protos = somUpdateOnce(batch, protos, batchId.toInt)
+            protos = SOM.step(SOM.points(batch, "v"), protos, fitWeight(batchId.toInt),
+              sumDecimals = 6, protoDecimals = 4)._1
             lastApplied = batchId
           }
         }
@@ -406,7 +357,7 @@ object MlQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      protos
+      protos.map(_.vector)
     }
 
   /** The ONLINE LIFECYCLE COMPOSED — train on a stream, then SERVE a
@@ -430,7 +381,7 @@ object MlQueries {
     val stream = fork.readStream.schema("vec_id LONG, v ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1).parquet(inDir)
     val bmu = graft.functions.ArrayVectorExpressions.argminSqDist(col("v"),
-      graft.functions.ArrayArgminSqDist.flatten(protos.toSeq), protos(0).length)
+      graft.functions.ArrayArgminSqDist.flatten(protos.map(_.toArray).toSeq), protos(0).size)
     val q = stream
       .select(col("vec_id"), bmu.as("prediction"))
       .writeStream.format("parquet")
@@ -533,8 +484,8 @@ object MlQueries {
     * per-dimension mean under the DECIMAL-sum discipline (exact in both
     * engines, then one identical double division — no rounding needed on
     * the output). The exploded decimal formulation is the verifiability
-    * tax; production uses Summarizer.mean over vectors (the som_cell_stats
-    * shape) with the same join. */
+    * tax; production would sum whole vectors per language (as
+    * som_cell_stats does per cell) after the same join. */
   def mlLangCentroids(s: SparkSession, dir: String): DataFrame = {
     val pred = TextDedupQueries.textLangId(s, dir).select(col("doc_id"), col("pred"))
     SomQueries.points(s, dir)

@@ -3,28 +3,26 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorSql._
-import graft.som.Grid
+import graft.som.{Grid, SOM, VectorWithNorm}
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 
-/** Oracle-checkable relational formulations of every SOM algebra step
-  * (SURVEY.md §7.4 B1/B2): BMU assignment, quantization cost, per-cell
-  * aggregation and one neighborhood-weighted update step, all against a
-  * deterministic fixed prototype table (embeddings rows vec_id < 9 → a 3×3
-  * map) so correctness never depends on sampling.
+/** The SOM algebra steps as catalog entries, all against a deterministic
+  * fixed prototype table (embeddings rows vec_id < 9 → a 3×3 map) so
+  * correctness never depends on sampling, each checked against a relational
+  * DuckDB oracle.
   *
-  * These are the SQL-expressible twins of the reference's RDD pipeline
-  * (reference `som/SOM.scala:192-244`, `som/SOMModel.scala:76-97`): the
-  * broadcast of the model becomes a broadcast hash join of a 9-row prototypes
-  * DataFrame, the hand-rolled mapPartitions+reduceByKey partial aggregation
-  * becomes `groupBy().agg()` (Catalyst already does partial+final hash
-  * aggregation), and the accumulator-based cost becomes an exact agg column.
-  *
-  * Scale notes (100 TB stance):
-  *  - prototypes side is always tiny (K rows) → `broadcast()` hint keeps the
-  *    big embeddings scan shuffle-free for assignment/cost.
-  *  - the per-point argmin is a map-side `min(struct(d2, proto_id))` partial
-  *    aggregate over vec_id: with K·N join rows the partial agg collapses to N
-  *    rows before any exchange; the only shuffle is on vec_id (or none for the
-  *    global cost sum).
+  * Two shapes:
+  *  - scoring (BMU assignment, quantization cost, map quality, U-matrix) is
+  *    relational: the broadcast of the model becomes a broadcast hash join of
+  *    the 9-row prototypes DataFrame, the per-point argmin a map-side
+  *    `min(struct(d2, proto_id))` partial aggregate over vec_id (with K·N
+  *    join rows the partial agg collapses to N rows before any exchange),
+  *    and the reference's accumulator cost an exact agg column (reference
+  *    `som/SOMModel.scala:76-97`);
+  *  - the update side (per-cell stats, one neighborhood-weighted update)
+  *    runs the estimator's own kernel, [[graft.som.SOM.cellStats]] /
+  *    [[graft.som.SOM.step]]: one scan with no shuffle, K×d partials merged
+  *    on the driver (reference `som/SOM.scala:192-244`).
   */
 object SomQueries {
   val K = 9       // 3×3 map
@@ -43,6 +41,20 @@ object SomQueries {
   def protos(s: SparkSession, dir: String): DataFrame =
     emb(s, dir).where(col("vec_id") < K)
       .select(col("vec_id").cast("long").as("proto_id"), asDouble(col("embedding")).as("c"))
+
+  /** The fixed prototypes as vectors in proto_id order, each component
+    * rounded to `decimals` (-1 = off). */
+  def protoVectors(s: SparkSession, dir: String, decimals: Int = -1): Array[Vector] =
+    protos(s, dir).collect().sortBy(_.getLong(0))
+      .map(r => Vectors.dense(r.getAs[Seq[Double]]("c").toArray.map(SOM.round(decimals))))
+
+  /** A K×d prototype matrix as (cell, dim, nv) rows. */
+  def cellRows(s: SparkSession, protos: Seq[Vector]): DataFrame = {
+    import s.implicits._
+    protos.zipWithIndex
+      .flatMap { case (p, k) => p.toArray.zipWithIndex.map { case (x, d) => (k, d, x) } }
+      .toDF("cell", "dim", "nv")
+  }
 
   /** point × prototype distances; prototype side broadcast (no shuffle). */
   private def dists(s: SparkSession, dir: String): DataFrame =
@@ -64,38 +76,20 @@ object SomQueries {
       .agg(min(struct(col("d2"), col("proto_id"))).as("m"))
       .select(col("vec_id"), col("m.proto_id").as("bmu"), col("m.d2").as("d2"))
 
-  /** Assignment carrying the point vector through the argmin aggregate
-    * (`first(v)` — v is constant across a point's K candidate rows), so
-    * downstream per-cell stats need no second join against `points`:
-    * one wide shuffle instead of shuffle + join. */
-  private def assignedVec(s: SparkSession, dir: String): DataFrame =
-    points(s, dir).crossJoin(broadcast(protos(s, dir)))
-      .select(col("vec_id"), col("v"), col("proto_id"),
-        sqDistFast(col("v"), col("c")).as("d2"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("proto_id"))).as("m"), first(col("v")).as("v"))
-      .select(col("vec_id"), col("m.proto_id").as("bmu"), col("v"))
-
   /** Global quantization error — reference `computeCost`
     * (`som/SOMModel.scala:92-97`) as one exact aggregate (no accumulator). */
   def cost(s: SparkSession, dir: String): DataFrame =
     assignRaw(s, dir).agg(count(lit(1)).as("n"), round(sum(col("d2")), 2).as("cost"))
 
   /** Per-cell componentwise sums + counts — the partial-agg step of training
-    * (reference `som/SOM.scala:192-212`). Vector-valued aggregation
-    * (Summarizer) instead of posexplode+groupBy: the explode shape pushes
-    * N·d rows through the aggregate (32M at sf0.1), the vector shape does N
-    * in-place vector adds and shuffles only K partial sums. The K×d result
-    * explodes AFTER the aggregate — 576 rows, not 32M. */
+    * (reference `som/SOM.scala:192-212`), read off the estimator's
+    * [[SOM.cellStats]] against the fixed prototypes; sums rounded to 4
+    * decimals. */
   def cellStats(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.stat.Summarizer
-    val a = assignedVec(s, dir)
-    a.select(col("bmu"), org.apache.spark.ml.functions.array_to_vector(col("v")).as("fv"))
-      .groupBy(col("bmu"))
-      .agg(Summarizer.sum(col("fv")).as("sv"), count(lit(1)).as("n"))
-      .select(col("bmu"), col("n"),
-        posexplode(org.apache.spark.ml.functions.vector_to_array(col("sv"))).as(Seq("dim", "x")))
-      .select(col("bmu"), col("dim"), round(col("x"), 4).as("s"), col("n"))
+    import s.implicits._
+    val agg = SOM.cellStats(SOM.points(points(s, dir), "v"), protoVectors(s, dir).map(VectorWithNorm(_)))
+    (for (c <- 0 until K if agg.counts(c) > 0; (x, d) <- agg.sums(c).zipWithIndex)
+      yield (c.toLong, d, SOM.round(4)(x), agg.counts(c))).toDF("bmu", "dim", "s", "n")
   }
 
   /** One neighborhood-weighted update step at fixed temperature T: the
@@ -111,40 +105,20 @@ object SomQueries {
     * dist((1,0),(0,1)) is 1 where Manhattan gives 2, while
     * dist((0,0),(1,1)) stays 2 — which diagonal is a single hex step
     * depends on the row's parity), so the weight table and the resulting
-    * prototypes genuinely diverge from `som_update`; both engines join the
-    * same driver-computed literal weights built from
-    * [[graft.som.Grid.cellDistHex]]. */
+    * prototypes genuinely diverge from `som_update`; both engines use the
+    * same driver-computed weights built from [[graft.som.Grid.cellDistHex]]
+    * (the oracle as literals). */
   def updateStepHex(s: SparkSession, dir: String): DataFrame =
     updateStepTopo(s, dir, "hexagonal")
 
+  /** One [[SOM.step]] from the fixed prototypes: sums rounded to 6
+    * decimals, prototypes to 4 (the oracle's round(sum, 6) and round(nv, 4)). */
   private def updateStepTopo(s: SparkSession, dir: String, topology: String): DataFrame = {
-    import org.apache.spark.ml.stat.Summarizer
-    val a = assignedVec(s, dir)
-    // same vector-shaped aggregate as [[cellStats]] — K×d rows explode after
-    // the agg, never N·d before it
-    val sums = a.select(col("bmu"), org.apache.spark.ml.functions.array_to_vector(col("v")).as("fv"))
-      .groupBy(col("bmu"))
-      .agg(Summarizer.sum(col("fv")).as("sv"), count(lit(1)).as("n"))
-      .select(col("bmu"), col("n"),
-        posexplode(org.apache.spark.ml.functions.vector_to_array(col("sv"))).as(Seq("dim", "s")))
-      // SURVEY §8 float-determinism: the component sums are the only
-      // order-dependent doubles feeding the update ratio — quantize them in
-      // BOTH engines (oracle does round(sum, 6) too) so the ratio's inputs
-      // are identical by construction, not by drift staying off a boundary.
-      .select(col("bmu"), col("dim"), round(col("s"), 6).as("s"), col("n"))
-    // K×K weight table as a tiny literal DataFrame (driver-side compute,
-    // exactly like the reference's Array.tabulate — K is always small).
-    val w = {
-      import s.implicits._
-      val cd = graft.som.Grid.cellDistFor(topology, Width)
-      val rows = for (k <- 0 until K; j <- 0 until K)
-        yield (k.toLong, j.toLong, graft.som.Grid.kernelWeight("gaussian", cd(k, j), T))
-      rows.toDF("k", "j", "w")
-    }
-    sums.join(broadcast(w), sums("bmu") === w("j"))
-      .groupBy(col("k"), col("dim"))
-      .agg((sum(col("w") * col("s")) / sum(col("w") * col("n"))).as("nv"))
-      .select(col("k").as("cell"), col("dim"), round(col("nv"), 4).as("nv"))
+    val cd = Grid.cellDistFor(topology, Width)
+    val (next, _) = SOM.step(SOM.points(points(s, dir), "v"), protoVectors(s, dir).map(VectorWithNorm(_)),
+      (k, j) => Grid.kernelWeight("gaussian", cd(k, j), T), sumDecimals = 6, protoDecimals = 4)
+    cellRows(s, next.map(_.vector).toSeq)
+      .select(col("cell").cast("long").as("cell"), col("dim"), col("nv"))
   }
 
   /** Same BMU assignment expressed as pure SQL text through the parser, with

@@ -1,10 +1,10 @@
 package graft.som
 
 import org.apache.spark.ml.Estimator
-import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
-import org.apache.spark.ml.stat.Summarizer
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -12,6 +12,10 @@ import org.apache.spark.storage.StorageLevel
 /** A point with its cached L2 norm, used for triangle-inequality pruning in
   * the BMU search (reference `som/SOM.scala:351-359`). */
 private[graft] case class VectorWithNorm(vector: Vector, norm: Double)
+
+private[graft] object VectorWithNorm {
+  def apply(vector: Vector): VectorWithNorm = VectorWithNorm(vector, Vectors.norm(vector, 2.0))
+}
 
 private[graft] object Distance {
   /** Squared-distance lower bound from norms: (‖a‖−‖b‖)². Lets the BMU scan
@@ -46,7 +50,8 @@ private[graft] object Distance {
   *
   * Rework of the reference's RDD pipeline:
   *  - the features are decoded and normed once into a cached
-  *    `RDD[VectorWithNorm]`; each iteration's assign+aggregate is one
+  *    `RDD[VectorWithNorm]`; each iteration is one [[SOM.step]] (the kernel
+  *    the catalog's SOM update entries share), whose assign+aggregate is one
   *    single-stage job: `mapPartitions` folds every partition into one K×d
   *    partial (sums, counts, Σd2), and the driver merges the partials in
   *    partition-index order from an ordered `collect` (tree-reduced only
@@ -97,8 +102,6 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
 
   override def fit(dataset: Dataset[_]): SOMModel = {
     transformSchema(dataset.schema, logging = true)
-    val spark = dataset.sparkSession
-    val sc = spark.sparkContext
     val k = numCells
 
     // Column pruning + normalization to VectorUDT (Catalyst prunes the scan
@@ -109,14 +112,8 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
     // costs more than the aggregation itself — the same reason MLlib's
     // iterative estimators (KMeans, GMM) run their training loops on RDD
     // aggregates. Row decode and norm compute happen once, not per
-    // iteration; the aggregation below is still map-side partial + combine,
-    // shuffling only K×d partials per partition.
-    val fcol = SOMModel.toVectorCol(dataset.schema($(featuresCol)).dataType, col($(featuresCol))).as("f")
-    val data = dataset.select(fcol)
-    val points = data.rdd.map { r =>
-      val v = r.getAs[Vector](0)
-      VectorWithNorm(v, Vectors.norm(v, 2.0))
-    }
+    // iteration.
+    val points = SOM.points(dataset, $(featuresCol))
     points.persist(StorageLevel.MEMORY_AND_DISK)
 
     // --- init: K seeded random rows with the reference's exact seed chain —
@@ -126,7 +123,7 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
     // row order, so the same seed draws the same rows as sampling the
     // DataFrame did.)
     var prototypes: Array[VectorWithNorm] = initialModel match {
-      case Some(m) => m.prototypes.map(v => VectorWithNorm(v, Vectors.norm(v, 2.0)))
+      case Some(m) => m.prototypes.map(VectorWithNorm(_))
       case None =>
         val sample = points.takeSample(withReplacement = true, num = k,
           seed = new XORShiftRandom($(seed)).nextInt())
@@ -134,107 +131,23 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
         sample.map(p => VectorWithNorm(Vectors.dense(p.vector.toArray), p.norm))
     }
 
-    val kern = $(kernel); val dec = $(decay); val w = $(width)
-    val cellD = Grid.cellDistFor($(topology), w)
+    val kern = $(kernel); val dec = $(decay)
+    val cellD = Grid.cellDistFor($(topology), $(width))
     val tMx = $(tMax); val tMn = $(tMin); val iters = $(maxIter); val eps = $(tol)
-    val pd = $(protoDecimals); val sd = $(sumDecimals)
-    // HALF_UP matches both Spark's round() and DuckDB's round() (away from
-    // zero on exact halves) — math.rint would be half-even. Non-finite
-    // components pass through unrounded (BigDecimal rejects NaN/Inf) so a
-    // poisoned feature row surfaces as a NaN prototype, not a crash.
-    def r(scale: Int)(x: Double): Double =
-      if (!java.lang.Double.isFinite(x)) x
-      else BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def quantize(v: Vector): Vector =
-      if (pd < 0) v else Vectors.dense(v.toArray.map(r(pd)))
     val history = scala.collection.mutable.ArrayBuffer.empty[Double]
     var iter = 0
     var converged = false
 
-    val dim0 = prototypes(0).vector.size
     while (iter < iters && !converged) {
-      val bc = sc.broadcast(prototypes)
-      // One single-stage job per iteration: map-side partial aggregation into
-      // a K×d accumulator per partition, combined treewise when K×d is large
-      // (same partial+final shape as a hash aggregate, minus the per-
-      // iteration plan compile and exchange).
-      val partials = points.mapPartitions { it =>
-        val a = SOM.CellAgg(k, dim0)
-        it.foreach { p =>
-          val (cell, d2) = Distance.findClosest(bc.value, p)
-          a.add(cell, p.vector, d2)
-        }
-        Iterator.single(a)
-      }
-      // Merge partials in PARTITION-INDEX order (collect preserves it): the
-      // float sums are then reproducible run-to-run for a fixed partitioning,
-      // unlike aggregate/treeAggregate whose driver merge follows task
-      // completion order. Driver holds numPartitions×K×d doubles — fine up
-      // to ~128 MB; past that, fall back to the tree combine (order
-      // nondeterministic in the last ulp; set sumDecimals to quantize it
-      // away when cross-run bit-equality matters at that scale).
-      val agg =
-        if (points.getNumPartitions.toLong * k * dim0 > (1L << 24))
-          partials.treeReduce((a, b) => a.merge(b), depth = 2)
-        else
-          partials.collect().reduceLeft((a, b) => a.merge(b))
-      bc.destroy()
-
-      val sums = Array.fill(k)(null: Vector)
-      val counts = new Array[Double](k)
-      // Quantize the cost with the sums, per the sumDecimals contract: the
-      // recorded history/summary stays reproducible across partition counts
-      // and treeReduce merge order. (Convergence itself is decided by
-      // prototype MOVEMENT below — and the prototypes are already quantized
-      // via protoDecimals — so this only stabilizes the reported cost.)
-      val totalCost = if (sd < 0) agg.cost else r(sd)(agg.cost)
-      var c = 0
-      while (c < k) {
-        if (agg.counts(c) > 0) {
-          // Quantize the order-dependent per-cell sums BEFORE the weighted
-          // combine, so the update ratio's inputs are reproducible across
-          // engines and partition counts (matches the som_fit5 oracle
-          // chain's round(sum(x), sumDecimals)).
-          val s = agg.sums(c)
-          sums(c) = Vectors.dense(if (sd < 0) s else s.map(r(sd)))
-          counts(c) = agg.counts(c).toDouble
-        }
-        c += 1
-      }
-
-      // Driver-side neighborhood smoothing (the one difference from k-means,
-      // reference `som/SOM.scala:219-244`): weighted sums over *all* cells.
       val t = Grid.temperature(dec, iter, iters, tMx, tMn)
-      val dim = prototypes(0).vector.size
-      val next = new Array[VectorWithNorm](k)
-      var moved = false
-      var cell = 0
-      while (cell < k) {
-        val acc = new Array[Double](dim)
-        var wn = 0.0
-        var j = 0
-        while (j < k) {
-          if (counts(j) > 0) {
-            val wgt = Grid.kernelWeight(kern, cellD(cell, j), t)
-            if (wgt != 0.0) {
-              val sj = sums(j).toArray
-              var d = 0
-              while (d < dim) { acc(d) += wgt * sj(d); d += 1 }
-              wn += wgt * counts(j)
-            }
-          }
-          j += 1
-        }
-        val nv = quantize(
-          if (wn > 0) { var d = 0; while (d < dim) { acc(d) /= wn; d += 1 }; Vectors.dense(acc) }
-          else prototypes(cell).vector) // no mass anywhere near: keep
-        if (Vectors.sqdist(nv, prototypes(cell).vector) > eps * eps) moved = true
-        next(cell) = VectorWithNorm(nv, Vectors.norm(nv, 2.0))
-        cell += 1
-      }
+      val (next, cost) = SOM.step(points, prototypes,
+        (cell, j) => Grid.kernelWeight(kern, cellD(cell, j), t), $(sumDecimals), $(protoDecimals))
+      // Converged when no prototype moved more than tol (the prototypes are
+      // already quantized via protoDecimals).
+      converged = !next.indices.exists(c =>
+        Vectors.sqdist(next(c).vector, prototypes(c).vector) > eps * eps)
       prototypes = next
-      converged = !moved
-      history += totalCost
+      history += cost
       iter += 1
     }
 
@@ -256,15 +169,111 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
 }
 
 /** Params-only persistence for the unfitted estimator, so `Pipeline.save`
-  * accepts a pipeline with a SOM stage. */
+  * accepts a pipeline with a SOM stage; and the one batch-SOM kernel that
+  * [[SOM.fit]] and the catalog's SOM update entries all run. */
 object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
   override def load(path: String): SOM = super.load(path)
+
+  /** The features column decoded to vectors with their norms, computed once
+    * so an iterative caller can cache the result. */
+  private[graft] def points(dataset: Dataset[_], featuresCol: String): RDD[VectorWithNorm] = {
+    val f = SOMModel.toVectorCol(dataset.schema(featuresCol).dataType, col(featuresCol))
+    dataset.select(f).rdd.map(r => VectorWithNorm(r.getAs[Vector](0)))
+  }
+
+  /** Per-cell sums, counts and total quantization cost of `points` against
+    * `protos`, in one single-stage job: `mapPartitions` folds every
+    * partition into one K×d partial (map-side partial aggregation minus the
+    * per-iteration plan compile and exchange), and the driver merges the
+    * partials. The prototypes are broadcast and destroyed after. */
+  private[graft] def cellStats(points: RDD[VectorWithNorm], protos: Array[VectorWithNorm]): CellAgg = {
+    val k = protos.length
+    val dim = protos(0).vector.size
+    val bc = points.sparkContext.broadcast(protos)
+    try {
+      val partials = points.mapPartitions { it =>
+        val a = CellAgg(k, dim)
+        it.foreach { p =>
+          val (cell, d2) = Distance.findClosest(bc.value, p)
+          a.add(cell, p.vector, d2)
+        }
+        Iterator.single(a)
+      }
+      // Merge partials in PARTITION-INDEX order (collect preserves it): the
+      // float sums are then reproducible run-to-run for a fixed partitioning,
+      // unlike aggregate/treeAggregate whose driver merge follows task
+      // completion order. Driver holds numPartitions×K×d doubles — fine up
+      // to ~128 MB; past that, fall back to the tree combine (order
+      // nondeterministic in the last ulp; set sumDecimals to quantize it
+      // away when cross-run bit-equality matters at that scale). The fold
+      // starts from an empty partial, so an input with no partitions
+      // aggregates to no points.
+      if (points.getNumPartitions.toLong * k * dim > (1L << 24))
+        partials.treeReduce((a, b) => a.merge(b), depth = 2)
+      else
+        partials.collect().foldLeft(CellAgg(k, dim))((a, b) => a.merge(b))
+    } finally bc.destroy()
+  }
+
+  /** One batch-SOM iteration: [[cellStats]], then the driver-side
+    * neighborhood smoothing (the one difference from k-means, reference
+    * `som/SOM.scala:219-244`) — prototype `cell` becomes
+    * Σ_j weight(cell, j)·S_j / Σ_j weight(cell, j)·n_j over the cells j that
+    * own points. The O(K²·d) smoothing stays on the driver, exactly like the
+    * reference: K is always tiny relative to N.
+    *
+    * Rounding (HALF_UP, -1 = off): the order-dependent per-cell sums and the
+    * cost are rounded to `sumDecimals` BEFORE the ratio, so its inputs are
+    * reproducible across engines and partition counts (the som_* oracle
+    * chains' round(sum(x), 6)); each new prototype is rounded to
+    * `protoDecimals` after it. A cell with no neighborhood mass keeps its
+    * prototype, still rounded. Returns the next prototypes and the cost of
+    * `protos` over `points`. */
+  private[graft] def step(points: RDD[VectorWithNorm], protos: Array[VectorWithNorm],
+                          weight: (Int, Int) => Double, sumDecimals: Int,
+                          protoDecimals: Int): (Array[VectorWithNorm], Double) = {
+    val agg = cellStats(points, protos)
+    val k = protos.length
+    val dim = protos(0).vector.size
+    val sums = agg.sums.map(s => if (s == null) null else s.map(round(sumDecimals)))
+    val next = Array.tabulate(k) { cell =>
+      val acc = new Array[Double](dim)
+      var wn = 0.0
+      var j = 0
+      while (j < k) {
+        if (agg.counts(j) > 0) {
+          val wgt = weight(cell, j)
+          if (wgt != 0.0) {
+            val sj = sums(j)
+            var d = 0
+            while (d < dim) { acc(d) += wgt * sj(d); d += 1 }
+            wn += wgt * agg.counts(j)
+          }
+        }
+        j += 1
+      }
+      val nv =
+        if (wn > 0) { var d = 0; while (d < dim) { acc(d) /= wn; d += 1 }; Vectors.dense(acc) }
+        else protos(cell).vector // no mass anywhere near: keep
+      VectorWithNorm(if (protoDecimals < 0) nv else Vectors.dense(nv.toArray.map(round(protoDecimals))))
+    }
+    (next, round(sumDecimals)(agg.cost))
+  }
+
+  /** `x` rounded to `scale` decimals, HALF_UP — which matches both Spark's
+    * round() and DuckDB's round() (away from zero on exact halves;
+    * math.rint would be half-even). A negative scale is off. Non-finite
+    * values pass through unrounded (BigDecimal rejects NaN/Inf) so a
+    * poisoned feature row surfaces as a NaN prototype, not a crash. */
+  private[graft] def round(scale: Int)(x: Double): Double =
+    if (scale < 0 || !java.lang.Double.isFinite(x)) x
+    else BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Mutable per-partition accumulator for one training iteration: per-cell
     * component sums + counts + total quantization cost. The `sums` rows are
     * allocated lazily so an iteration over a partition that hits few cells
     * never materializes K×d zeros. */
-  private[som] final case class CellAgg(k: Int, dim: Int) {
+  private[graft] final case class CellAgg(k: Int, dim: Int) {
     val sums: Array[Array[Double]] = new Array[Array[Double]](k)
     val counts: Array[Long] = new Array[Long](k)
     var cost: Double = 0.0

@@ -26,7 +26,7 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
     extends Model[SOMModel] with SOMParams with MLWritable {
 
   private val protosWithNorm: Array[VectorWithNorm] =
-    prototypes.map(v => VectorWithNorm(v, Vectors.norm(v, 2.0)))
+    prototypes.map(VectorWithNorm(_))
 
   def setFeaturesCol(v: String): this.type = set(featuresCol, v)
   def setPredictionCol(v: String): this.type = set(predictionCol, v)
@@ -45,13 +45,13 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
 
   /** BMU index for a single point (reference `som/SOMModel.scala:88-90`). */
   def predict(features: Vector): Int =
-    Distance.findClosest(protosWithNorm, VectorWithNorm(features, Vectors.norm(features, 2.0)))._1
+    Distance.findClosest(protosWithNorm, VectorWithNorm(features))._1
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
     val protos = protosWithNorm
     val predictUdf = udf { (v: Vector) =>
-      Distance.findClosest(protos, VectorWithNorm(v, Vectors.norm(v, 2.0)))._1
+      Distance.findClosest(protos, VectorWithNorm(v))._1
     }
     val f = SOMModel.toVectorCol(dataset.schema($(featuresCol)).dataType, col($(featuresCol)))
     dataset.withColumn($(predictionCol), predictUdf(f))
@@ -80,14 +80,15 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
       .argminSqDist(v, flatPrototypes, prototypes(0).size))
   }
 
-  /** Total quantization error: Σ min-squared-distance, one aggregate job. */
+  /** Total quantization error: Σ min-squared-distance, one aggregate job;
+    * 0.0 on an empty dataset, like the reference's RDD sum. */
   def computeCost(dataset: Dataset[_]): Double = {
     val protos = protosWithNorm
     val costUdf = udf { (v: Vector) =>
-      Distance.findClosest(protos, VectorWithNorm(v, Vectors.norm(v, 2.0)))._2
+      Distance.findClosest(protos, VectorWithNorm(v))._2
     }
     val f = SOMModel.toVectorCol(dataset.schema($(featuresCol)).dataType, col($(featuresCol)))
-    dataset.select(sum(costUdf(f)).as("cost")).head().getDouble(0)
+    dataset.select(coalesce(sum(costUdf(f)), lit(0.0)).as("cost")).head().getDouble(0)
   }
 
   /** Prototypes as a small DataFrame `(cell, prototype)` — the broadcastable

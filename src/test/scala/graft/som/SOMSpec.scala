@@ -343,6 +343,78 @@ class SOMSpec extends SparkSpec {
     assert(e.getMessage.contains("not enough data"))
   }
 
+  /** A 1×3 line map for hand-computed [[SOM.step]] cases: cells 0 and 1
+    * hold the same prototype (a distance tie), cell 2 sits apart. The five
+    * 1-d points and every sum are exact in binary, so each expected value
+    * below is exact arithmetic plus one HALF_UP rounding. */
+  private val lineProtos = Array(0.125, 0.125, 10.0).map(x => VectorWithNorm(Vectors.dense(x)))
+  private def linePoints(partitions: Int) = spark.sparkContext.parallelize(
+    Seq(1.0, 2.0, 0.25, 9.0, 12.25).map(x => VectorWithNorm(Vectors.dense(x))), partitions)
+  private def rectWeight(t: Double): (Int, Int) => Double =
+    (k, j) => Grid.kernelWeight("rectangular", Grid.cellDist(3)(k, j), t)
+  private def values(protos: Array[VectorWithNorm]): Seq[Double] = protos.map(_.vector(0)).toSeq
+
+  test("cellStats: a distance tie goes to the lower cell; counts, sums and cost") {
+    val agg = SOM.cellStats(linePoints(1), lineProtos)
+    // 1.0, 2.0 and 0.25 tie between cells 0 and 1 and go to cell 0
+    assert(agg.counts.toSeq == Seq(3L, 0L, 2L))
+    assert(agg.sums(0).toSeq == Seq(3.25) && agg.sums(1) == null && agg.sums(2).toSeq == Seq(21.25))
+    // (0.875² + 1.875² + 0.125² + 1² + 2.25²) = 663/64
+    assert(agg.cost == 10.359375)
+  }
+
+  test("step on a hand-computed map: sum and prototype rounding, kept cells, cost") {
+    // rectangular window at T=0.5: every cell weighs only itself, so cell 1
+    // (no points) has no neighborhood mass and keeps its prototype, rounded
+    // HALF_UP (0.125 -> 0.13; half-even would give 0.12). Sums round to one
+    // decimal first: cell 0 is 3.25 -> 3.3, / 3 = 1.1 (unrounded: 1.08);
+    // cell 2 is 21.25 -> 21.3, / 2 = 10.65 (unrounded: 10.63).
+    val (next, cost) = SOM.step(linePoints(1), lineProtos, rectWeight(0.5),
+      sumDecimals = 1, protoDecimals = 2)
+    assert(values(next) == Seq(1.1, 0.13, 10.65))
+    assert(cost == 10.4)
+    next.foreach(p => assert(p.norm == Vectors.norm(p.vector, 2.0)))
+    // T=1: cell 1 now averages both neighbors: (3.3 + 21.3) / 5 = 4.92
+    assert(values(SOM.step(linePoints(1), lineProtos, rectWeight(1.0), 1, 2)._1) ==
+      Seq(1.1, 4.92, 10.65))
+    // rounding off: plain ratios, the kept prototype untouched, exact cost
+    val (raw, rawCost) = SOM.step(linePoints(1), lineProtos, rectWeight(0.5), -1, -1)
+    assert(values(raw) == Seq(3.25 / 3, 0.125, 10.625))
+    assert(rawCost == 10.359375)
+    // the partition-ordered merge gives the same result at any partitioning
+    assert(values(SOM.step(linePoints(3), lineProtos, rectWeight(0.5), 1, 2)._1) ==
+      Seq(1.1, 0.13, 10.65))
+  }
+
+  test("step over an input with no partitions keeps every prototype, rounded") {
+    val none = spark.sparkContext.emptyRDD[VectorWithNorm]
+    assert(none.getNumPartitions == 0)
+    val (next, cost) = SOM.step(none, lineProtos, rectWeight(1.0), sumDecimals = 1, protoDecimals = 2)
+    assert(values(next) == Seq(0.13, 0.13, 10.0))
+    assert(cost == 0.0)
+  }
+
+  test("warm-started fit on empty data, with 0 or 2 partitions, returns the initial prototypes") {
+    import spark.implicits._
+    val init = new SOMModel("init", Array.tabulate(4)(i => Vectors.dense(i.toDouble, -i.toDouble)))
+      .setGrid(2, 2)
+    val noPartitions = Seq.empty[(Double, Vector)].toDF("label", "features")
+    val twoPartitions = spark.sparkContext.parallelize(Seq.empty[(Double, Vector)], 2)
+      .toDF("label", "features")
+    assert(noPartitions.rdd.getNumPartitions == 0 && twoPartitions.rdd.getNumPartitions == 2)
+    for (df <- Seq(noPartitions, twoPartitions)) {
+      val m = new SOM().setHeight(2).setWidth(2).setMaxIter(3).setInitialModel(init).fit(df)
+      assert(m.prototypes.toSeq == init.prototypes.toSeq)
+      assert(m.objectiveHistory.toSeq == Seq(0.0)) // nothing moved: converged after one step
+    }
+  }
+
+  test("computeCost of an empty dataset is 0.0") {
+    import spark.implicits._
+    val model = new SOM().setHeight(2).setWidth(2).setMaxIter(1).setSeed(1).fit(demoDF(50))
+    assert(model.computeCost(Seq.empty[(Double, Vector)].toDF("label", "features")) == 0.0)
+  }
+
   test("param validators reject bad values") {
     intercept[IllegalArgumentException](new SOM().setHeight(1))
     intercept[IllegalArgumentException](new SOM().setKernel("triangular"))

@@ -11,7 +11,10 @@ for sf in sf0.001 sf0.01 sf0.1; do
   echo "== verify $sf =="
   out="/tmp/graft_ci_$sf"
   rm -rf "$out"
-  sbt -batch "runMain graft.Verify /root/testdata/$sf $out" >/dev/null 2>&1
+  # keep only the per-entry "[verify] <name> failed: <msg>" lines, so an
+  # entry that throws shows why next to check.py's FAIL
+  sbt -batch "runMain graft.Verify /root/testdata/$sf $out" 2>&1 \
+    | { grep -F "[verify]" || true; }
   python3 tools/check.py "/root/testdata/$sf" "$out" | tail -1
 done
 
