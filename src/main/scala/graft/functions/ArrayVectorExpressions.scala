@@ -84,13 +84,10 @@ case class ArraySqDist(left: Expression, right: Expression) extends ArrayFoldExp
   * reference object, so the generated code and the plan string are the
   * same size for any K.
   *
-  * Float discipline: each distance is the left-to-right fold of
-  * [[ArraySqDist]] (bit-identical to `Vectors.sqdist` and the oracle's
-  * sums); the argmin keeps the FIRST minimum and orders NaN above every
-  * number, exactly like `array_position(d, array_min(d))` and the oracle's
-  * `row_number() OVER (ORDER BY d2, cell)`: ties go to the lower index, an
-  * all-NaN row maps to 0. A null row yields null; a row whose length is not
-  * d throws. Interpreted eval and codegen both call [[ArrayArgminSqDist.argmin]].
+  * Both eval paths run the one BMU kernel, [[ArrayArgminSqDist.nearest]]:
+  * its argmin orders exactly like `array_position(d, array_min(d))` and the
+  * oracle's `row_number() OVER (ORDER BY d2, cell)`. A null row yields
+  * null; a row whose length is not d throws.
   */
 case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: Int)
     extends UnaryExpression {
@@ -127,32 +124,55 @@ object ArrayArgminSqDist {
     Array.concat(prototypes: _*)
   }
 
-  /** The one loop both eval paths run: the row is copied out once (d
-    * doubles), then the K distances are scanned over primitive arrays. */
-  def argmin(x: ArrayData, prototypes: Array[Double], dim: Int): Int = {
-    val n = x.numElements()
-    if (n != dim) throw new IllegalArgumentException(
-      s"array_argmin_sqdist: feature array has $n elements but the prototypes have $dim")
-    val a = x.toDoubleArray()
+  /** One row of `array_argmin_sqdist`, copied out once (d doubles). */
+  def argmin(x: ArrayData, prototypes: Array[Double], dim: Int): Int =
+    nearest(x.toDoubleArray(), prototypes, dim)._1
+
+  /** The one best-matching-unit kernel, behind every SOM argmin: (index,
+    * squared distance) of the prototype nearest to `x` among the row-major
+    * K×`dim` `prototypes`. Four prototypes share each pass over `x`, each
+    * with its own accumulator, so four add chains overlap; the K mod 4 tail
+    * takes one at a time. Each accumulator is the left-to-right `Σ(a−p)²`
+    * fold, bit-identical to `Vectors.sqdist`. Distances are compared in
+    * index order with NaN above every number: the first minimum wins, and a
+    * row with no non-NaN distance maps to (0, NaN). A row whose length is
+    * not `dim` throws, naming both lengths. */
+  def nearest(x: Array[Double], prototypes: Array[Double], dim: Int): (Int, Double) = {
+    if (x.length != dim) throw new IllegalArgumentException(
+      s"feature array has ${x.length} elements but the prototypes have $dim")
+    val k = prototypes.length / dim
     var best = 0
     var bestD = Double.NaN
     var c = 0
-    var off = 0
-    while (off < prototypes.length) {
-      var s = 0.0
+    while (c + 4 <= k) {
+      val o0 = c * dim; val o1 = o0 + dim; val o2 = o1 + dim; val o3 = o2 + dim
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
       var i = 0
       while (i < dim) {
-        val d = a(i) - prototypes(off + i)
-        s += d * d
+        val a = x(i)
+        val d0 = a - prototypes(o0 + i); s0 += d0 * d0
+        val d1 = a - prototypes(o1 + i); s1 += d1 * d1
+        val d2 = a - prototypes(o2 + i); s2 += d2 * d2
+        val d3 = a - prototypes(o3 + i); s3 += d3 * d3
         i += 1
       }
-      // s < bestD with NaN ordered last: a number always beats NaN
-      if (s == s && !(s >= bestD)) { best = c; bestD = s }
-      c += 1
-      off += dim
+      if (closer(s0, bestD)) { best = c; bestD = s0 }
+      if (closer(s1, bestD)) { best = c + 1; bestD = s1 }
+      if (closer(s2, bestD)) { best = c + 2; bestD = s2 }
+      if (closer(s3, bestD)) { best = c + 3; bestD = s3 }
+      c += 4
     }
-    best
+    while (c < k) {
+      val o = c * dim; var s = 0.0; var i = 0
+      while (i < dim) { val d = x(i) - prototypes(o + i); s += d * d; i += 1 }
+      if (closer(s, bestD)) { best = c; bestD = s }
+      c += 1
+    }
+    (best, bestD)
   }
+
+  /** s < bestD with NaN ordered last: a number always beats NaN. */
+  @inline private def closer(s: Double, bestD: Double): Boolean = s == s && !(s >= bestD)
 }
 
 object ArrayVectorExpressions {

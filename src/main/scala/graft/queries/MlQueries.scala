@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.som.{SOM, SOMModel, VectorWithNorm}
+import graft.som.{SOM, SOMModel}
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -341,7 +341,7 @@ object MlQueries {
         (0 until FitIters).map(b =>
           pts.where(pmod(col("vec_id"), lit(FitIters)) === b))
       }
-      var protos = initProtos(fork, dir).map(VectorWithNorm(_))
+      var protos = initProtos(fork, dir)
       var lastApplied = -1L
       val stream = fork.readStream.schema("vec_id LONG, v ARRAY<DOUBLE>")
         .option("maxFilesPerTrigger", 1).parquet(inDir)
@@ -357,7 +357,7 @@ object MlQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      protos.map(_.vector)
+      protos
     }
 
   /** The ONLINE LIFECYCLE COMPOSED — train on a stream, then SERVE a

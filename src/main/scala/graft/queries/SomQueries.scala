@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorSql._
-import graft.som.{Grid, SOM, VectorWithNorm}
+import graft.som.{Grid, SOM}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 
 /** The SOM algebra steps as catalog entries, all against a deterministic
@@ -64,10 +64,7 @@ object SomQueries {
   /** (vec_id, bmu, d2) best-matching-unit per point, min-id tie-break —
     * relational twin of reference `findClosest` (`som/SOM.scala:306-326`). */
   def assign(s: SparkSession, dir: String): DataFrame =
-    dists(s, dir)
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("proto_id"))).as("m"))
-      .select(col("vec_id"), col("m.proto_id").as("bmu"), round(col("m.d2"), 4).as("d2r"))
+    assignRaw(s, dir).select(col("vec_id"), col("bmu"), round(col("d2"), 4).as("d2r"))
 
   /** Unrounded assignment for internal reuse. */
   private def assignRaw(s: SparkSession, dir: String): DataFrame =
@@ -87,7 +84,7 @@ object SomQueries {
     * decimals. */
   def cellStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val agg = SOM.cellStats(SOM.points(points(s, dir), "v"), protoVectors(s, dir).map(VectorWithNorm(_)))
+    val agg = SOM.cellStats(SOM.points(points(s, dir), "v"), protoVectors(s, dir))
     (for (c <- 0 until K if agg.counts(c) > 0; (x, d) <- agg.sums(c).zipWithIndex)
       yield (c.toLong, d, SOM.round(4)(x), agg.counts(c))).toDF("bmu", "dim", "s", "n")
   }
@@ -115,9 +112,9 @@ object SomQueries {
     * decimals, prototypes to 4 (the oracle's round(sum, 6) and round(nv, 4)). */
   private def updateStepTopo(s: SparkSession, dir: String, topology: String): DataFrame = {
     val cd = Grid.cellDistFor(topology, Width)
-    val (next, _) = SOM.step(SOM.points(points(s, dir), "v"), protoVectors(s, dir).map(VectorWithNorm(_)),
+    val (next, _) = SOM.step(SOM.points(points(s, dir), "v"), protoVectors(s, dir),
       (k, j) => Grid.kernelWeight("gaussian", cd(k, j), T), sumDecimals = 6, protoDecimals = 4)
-    cellRows(s, next.map(_.vector).toSeq)
+    cellRows(s, next.toSeq)
       .select(col("cell").cast("long").as("cell"), col("dim"), col("nv"))
   }
 

@@ -1,5 +1,6 @@
 package graft.som
 
+import graft.functions.ArrayArgminSqDist
 import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
@@ -9,55 +10,22 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
-/** A point with its cached L2 norm, used for triangle-inequality pruning in
-  * the BMU search (reference `som/SOM.scala:351-359`). */
-private[graft] case class VectorWithNorm(vector: Vector, norm: Double)
-
-private[graft] object VectorWithNorm {
-  def apply(vector: Vector): VectorWithNorm = VectorWithNorm(vector, Vectors.norm(vector, 2.0))
-}
-
-private[graft] object Distance {
-  /** Squared-distance lower bound from norms: (‖a‖−‖b‖)². Lets the BMU scan
-    * skip the O(d) distance for most prototypes (reference
-    * `som/SOM.scala:312-316`). */
-  @inline def lowerBound(a: VectorWithNorm, b: VectorWithNorm): Double = {
-    val diff = a.norm - b.norm
-    diff * diff
-  }
-
-  /** Argmin over prototypes with min-index tie-break (strict `<`, reference
-    * `som/SOM.scala:306-326`). Returns (bmuIndex, squaredDistance). */
-  def findClosest(protos: Array[VectorWithNorm], p: VectorWithNorm): (Int, Double) = {
-    var best = Double.PositiveInfinity
-    var bestIdx = 0
-    var k = 0
-    while (k < protos.length) {
-      val c = protos(k)
-      if (lowerBound(c, p) < best) {
-        val d = Vectors.sqdist(c.vector, p.vector)
-        if (d < best) { best = d; bestIdx = k }
-      }
-      k += 1
-    }
-    (bestIdx, best)
-  }
-}
-
 /** Batch Self-Organizing Map estimator — Kohonen map trained with the
   * k-means-style batch update plus topological neighborhood smoothing
   * (reference `som/SOM.scala`).
   *
   * Rework of the reference's RDD pipeline:
-  *  - the features are decoded and normed once into a cached
-  *    `RDD[VectorWithNorm]`; each iteration is one [[SOM.step]] (the kernel
-  *    the catalog's SOM update entries share), whose assign+aggregate is one
-  *    single-stage job: `mapPartitions` folds every partition into one K×d
-  *    partial (sums, counts, Σd2), and the driver merges the partials in
-  *    partition-index order from an ordered `collect` (tree-reduced only
-  *    when partitions×K×d is large), so the float sums are reproducible
-  *    run to run — the reference used `mapPartitions` + `reduceByKey`
-  *    (reference `som/SOM.scala:192-212`);
+  *  - the features are decoded once into a cached `RDD[Vector]`; each
+  *    iteration is one [[SOM.step]] (the kernel the catalog's SOM update
+  *    entries share), whose assign+aggregate is one single-stage job: each
+  *    BMU is an exhaustive [[ArrayArgminSqDist.nearest]] scan (the
+  *    reference's norm-bound prune skipped 3 % of candidates at K=400),
+  *    `mapPartitions` folds every partition into one K×d partial (sums,
+  *    counts, Σd2), and the driver merges the partials in partition-index
+  *    order from an ordered `collect` (tree-reduced only when
+  *    partitions×K×d is large), so the float sums are reproducible run to
+  *    run — the reference used `mapPartitions` + `reduceByKey` (reference
+  *    `som/SOM.scala:192-212`);
   *  - the quantization cost rides the same partials, so a retried task
   *    cannot count it twice as the reference's at-least-once accumulator
   *    could (reference `som/SOM.scala:181`);
@@ -105,14 +73,13 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
     val k = numCells
 
     // Column pruning + normalization to VectorUDT (Catalyst prunes the scan
-    // to the features column), then ONE exit to a cached RDD[VectorWithNorm]
-    // for the iterative hot loop. The per-iteration assign+aggregate is a
+    // to the features column), then ONE exit to a cached RDD[Vector] for
+    // the iterative hot loop. The per-iteration assign+aggregate is a
     // tiny ≤K-row result over an unchanging input: re-planning it through
     // Catalyst every iteration (analysis + whole-stage codegen + exchange)
     // costs more than the aggregation itself — the same reason MLlib's
     // iterative estimators (KMeans, GMM) run their training loops on RDD
-    // aggregates. Row decode and norm compute happen once, not per
-    // iteration.
+    // aggregates. Row decode happens once, not per iteration.
     val points = SOM.points(dataset, $(featuresCol))
     points.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -122,30 +89,36 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
     // precedence. (Sampling the mapped RDD preserves partition structure and
     // row order, so the same seed draws the same rows as sampling the
     // DataFrame did.)
-    var prototypes: Array[VectorWithNorm] = initialModel match {
-      case Some(m) => m.prototypes.map(VectorWithNorm(_))
+    var prototypes: Array[Vector] = initialModel match {
+      case Some(m) => m.prototypes
       case None =>
         val sample = points.takeSample(withReplacement = true, num = k,
           seed = new XORShiftRandom($(seed)).nextInt())
         require(sample.length == k, s"not enough data to sample $k prototypes")
-        sample.map(p => VectorWithNorm(Vectors.dense(p.vector.toArray), p.norm))
+        sample.map(p => Vectors.dense(p.toArray))
     }
 
     val kern = $(kernel); val dec = $(decay)
     val cellD = Grid.cellDistFor($(topology), $(width))
     val tMx = $(tMax); val tMn = $(tMin); val iters = $(maxIter); val eps = $(tol)
     val history = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val scanSeconds, updateSeconds = scala.collection.mutable.ArrayBuffer.empty[Double]
     var iter = 0
     var converged = false
 
     while (iter < iters && !converged) {
       val t = Grid.temperature(dec, iter, iters, tMx, tMn)
-      val (next, cost) = SOM.step(points, prototypes,
+      // SOM.step, with its scan and its driver update timed apart
+      val t0 = System.nanoTime()
+      val agg = SOM.cellStats(points, prototypes)
+      val t1 = System.nanoTime()
+      val (next, cost) = SOM.smooth(agg, prototypes,
         (cell, j) => Grid.kernelWeight(kern, cellD(cell, j), t), $(sumDecimals), $(protoDecimals))
+      scanSeconds += (t1 - t0) / 1e9
+      updateSeconds += (System.nanoTime() - t1) / 1e9
       // Converged when no prototype moved more than tol (the prototypes are
       // already quantized via protoDecimals).
-      converged = !next.indices.exists(c =>
-        Vectors.sqdist(next(c).vector, prototypes(c).vector) > eps * eps)
+      converged = !next.indices.exists(c => Vectors.sqdist(next(c), prototypes(c)) > eps * eps)
       prototypes = next
       history += cost
       iter += 1
@@ -153,11 +126,12 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
 
     points.unpersist(blocking = false)
 
-    val model = copyValues(new SOMModel(uid, prototypes.map(_.vector)).setParent(this))
+    val model = copyValues(new SOMModel(uid, prototypes).setParent(this))
     val summary = new SOMTrainingSummary(
       model.transform(dataset), $(featuresCol), $(predictionCol),
       $(height), $(width), $(maxIter), iter,
-      if (history.nonEmpty) history.last else 0.0, history.toArray)
+      if (history.nonEmpty) history.last else 0.0, history.toArray,
+      scanSeconds.toArray, updateSeconds.toArray)
     model.setSummary(Some(summary))
     model
   }
@@ -174,28 +148,30 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
 object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
   override def load(path: String): SOM = super.load(path)
 
-  /** The features column decoded to vectors with their norms, computed once
-    * so an iterative caller can cache the result. */
-  private[graft] def points(dataset: Dataset[_], featuresCol: String): RDD[VectorWithNorm] = {
+  /** The features column decoded to vectors once, for an iterative caller
+    * to cache. Sparse rows stay sparse (the BMU scan densifies per call). */
+  private[graft] def points(dataset: Dataset[_], featuresCol: String): RDD[Vector] = {
     val f = SOMModel.toVectorCol(dataset.schema(featuresCol).dataType, col(featuresCol))
-    dataset.select(f).rdd.map(r => VectorWithNorm(r.getAs[Vector](0)))
+    dataset.select(f).rdd.map(_.getAs[Vector](0))
   }
 
   /** Per-cell sums, counts and total quantization cost of `points` against
     * `protos`, in one single-stage job: `mapPartitions` folds every
     * partition into one K×d partial (map-side partial aggregation minus the
     * per-iteration plan compile and exchange), and the driver merges the
-    * partials. The prototypes are broadcast and destroyed after. */
-  private[graft] def cellStats(points: RDD[VectorWithNorm], protos: Array[VectorWithNorm]): CellAgg = {
+    * partials. Each point's BMU is [[ArrayArgminSqDist.nearest]] over the
+    * prototypes as one row-major K×d matrix, broadcast and destroyed after. */
+  private[graft] def cellStats(points: RDD[Vector], protos: Array[Vector]): CellAgg = {
     val k = protos.length
-    val dim = protos(0).vector.size
-    val bc = points.sparkContext.broadcast(protos)
+    val dim = protos(0).size
+    val bc = points.sparkContext.broadcast(ArrayArgminSqDist.flatten(protos.map(_.toArray).toSeq))
     try {
       val partials = points.mapPartitions { it =>
+        val flat = bc.value
         val a = CellAgg(k, dim)
         it.foreach { p =>
-          val (cell, d2) = Distance.findClosest(bc.value, p)
-          a.add(cell, p.vector, d2)
+          val (cell, d2) = ArrayArgminSqDist.nearest(p.toArray, flat, dim)
+          a.add(cell, p, d2)
         }
         Iterator.single(a)
       }
@@ -215,8 +191,14 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
     } finally bc.destroy()
   }
 
-  /** One batch-SOM iteration: [[cellStats]], then the driver-side
-    * neighborhood smoothing (the one difference from k-means, reference
+  /** One batch-SOM iteration: [[cellStats]], then [[smooth]]. */
+  private[graft] def step(points: RDD[Vector], protos: Array[Vector],
+                          weight: (Int, Int) => Double, sumDecimals: Int,
+                          protoDecimals: Int): (Array[Vector], Double) =
+    smooth(cellStats(points, protos), protos, weight, sumDecimals, protoDecimals)
+
+  /** The driver half of [[step]]: the neighborhood smoothing of `agg`, the
+    * [[cellStats]] of `protos` (the one difference from k-means, reference
     * `som/SOM.scala:219-244`) — prototype `cell` becomes
     * Σ_j weight(cell, j)·S_j / Σ_j weight(cell, j)·n_j over the cells j that
     * own points. The O(K²·d) smoothing stays on the driver, exactly like the
@@ -228,13 +210,12 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
     * chains' round(sum(x), 6)); each new prototype is rounded to
     * `protoDecimals` after it. A cell with no neighborhood mass keeps its
     * prototype, still rounded. Returns the next prototypes and the cost of
-    * `protos` over `points`. */
-  private[graft] def step(points: RDD[VectorWithNorm], protos: Array[VectorWithNorm],
-                          weight: (Int, Int) => Double, sumDecimals: Int,
-                          protoDecimals: Int): (Array[VectorWithNorm], Double) = {
-    val agg = cellStats(points, protos)
+    * `protos`. */
+  private[graft] def smooth(agg: CellAgg, protos: Array[Vector],
+                            weight: (Int, Int) => Double, sumDecimals: Int,
+                            protoDecimals: Int): (Array[Vector], Double) = {
     val k = protos.length
-    val dim = protos(0).vector.size
+    val dim = protos(0).size
     val sums = agg.sums.map(s => if (s == null) null else s.map(round(sumDecimals)))
     val next = Array.tabulate(k) { cell =>
       val acc = new Array[Double](dim)
@@ -254,8 +235,8 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
       }
       val nv =
         if (wn > 0) { var d = 0; while (d < dim) { acc(d) /= wn; d += 1 }; Vectors.dense(acc) }
-        else protos(cell).vector // no mass anywhere near: keep
-      VectorWithNorm(if (protoDecimals < 0) nv else Vectors.dense(nv.toArray.map(round(protoDecimals))))
+        else protos(cell) // no mass anywhere near: keep
+      if (protoDecimals < 0) nv else Vectors.dense(nv.toArray.map(round(protoDecimals)))
     }
     (next, round(sumDecimals)(agg.cost))
   }

@@ -1,5 +1,6 @@
 package graft.som
 
+import graft.functions.ArrayArgminSqDist
 import org.apache.spark.ml.Model
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.{Param, ParamMap}
@@ -12,10 +13,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, S
   * (reference `som/SOMModel.scala`).
   *
   * Scoring keeps the reference's UDF form (`som/SOMModel.scala:76-82`): the
-  * prototypes array (K·d doubles) rides the task closure, each row gets its
-  * BMU from the pruned linear scan — an embarrassingly parallel map, no
-  * shuffle, survives any scale-out. `computeCost` is one exact aggregate
-  * (`som/SOMModel.scala:92-97`, minus the RDD detour).
+  * K×d prototype matrix rides the task closure, each row gets its BMU from
+  * the one argmin kernel [[ArrayArgminSqDist.nearest]] — an embarrassingly
+  * parallel map, no shuffle. `predict`, `computeCost` (one exact aggregate,
+  * `som/SOMModel.scala:92-97` minus the RDD detour) and [[transformNative]]
+  * run the same kernel, so all four agree on every row, NaN and ±∞ too.
   *
   * Persistence (absent in the reference, `README.md:91`): prototypes ↔
   * parquet `(cell, prototype: array<double>)` via [[SOMModel.save]] /
@@ -24,9 +26,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, S
   */
 class SOMModel(override val uid: String, val prototypes: Array[Vector])
     extends Model[SOMModel] with SOMParams with MLWritable {
-
-  private val protosWithNorm: Array[VectorWithNorm] =
-    prototypes.map(VectorWithNorm(_))
 
   def setFeaturesCol(v: String): this.type = set(featuresCol, v)
   def setPredictionCol(v: String): this.type = set(predictionCol, v)
@@ -43,31 +42,29 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
 
   private[graft] def setGrid(h: Int, w: Int): this.type = { set(height, h); set(width, w); this }
 
-  /** BMU index for a single point (reference `som/SOMModel.scala:88-90`). */
+  /** The prototypes as the kernel's row-major K×d array, built once. */
+  private lazy val flatPrototypes: Array[Double] =
+    ArrayArgminSqDist.flatten(prototypes.map(_.toArray).toSeq)
+
+  /** BMU index for a single point (reference `som/SOMModel.scala:88-90`).
+    * Here and in the UDFs a sparse point is densified for the call only. */
   def predict(features: Vector): Int =
-    Distance.findClosest(protosWithNorm, VectorWithNorm(features))._1
+    ArrayArgminSqDist.nearest(features.toArray, flatPrototypes, prototypes(0).size)._1
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
-    val protos = protosWithNorm
-    val predictUdf = udf { (v: Vector) =>
-      Distance.findClosest(protos, VectorWithNorm(v))._1
-    }
+    val protos = flatPrototypes
+    val dim = prototypes(0).size
+    val predictUdf = udf { (v: Vector) => ArrayArgminSqDist.nearest(v.toArray, protos, dim)._1 }
     val f = SOMModel.toVectorCol(dataset.schema($(featuresCol)).dataType, col($(featuresCol)))
     dataset.withColumn($(predictionCol), predictUdf(f))
   }
 
-  /** Prototypes as one row-major K×d array, the layout the native argmin
-    * kernel reads; built once per model. */
-  private lazy val flatPrototypes: Array[Double] =
-    graft.functions.ArrayArgminSqDist.flatten(prototypes.map(_.toArray).toSeq)
-
   /** Fully codegen scoring for array-typed features: one native
     * `ArrayArgminSqDist` expression per row (exact sqdist to each of the K
-    * prototypes, first minimum wins — the same min-index tie-break as
-    * `findClosest`). No UDF, no serialization barrier, and generated code
-    * whose size does not depend on K. Works on batch and streaming
-    * DataFrames alike. */
+    * prototypes, first minimum wins — the same kernel as [[transform]]).
+    * No UDF, no serialization barrier, and generated code whose size does
+    * not depend on K. Works on batch and streaming DataFrames alike. */
   def transformNative(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
     val v = dataset.schema($(featuresCol)).dataType match {
@@ -81,12 +78,12 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
   }
 
   /** Total quantization error: Σ min-squared-distance, one aggregate job;
-    * 0.0 on an empty dataset, like the reference's RDD sum. */
+    * 0.0 on an empty dataset, like the reference's RDD sum. A row whose
+    * distances are all NaN adds NaN. */
   def computeCost(dataset: Dataset[_]): Double = {
-    val protos = protosWithNorm
-    val costUdf = udf { (v: Vector) =>
-      Distance.findClosest(protos, VectorWithNorm(v))._2
-    }
+    val protos = flatPrototypes
+    val dim = prototypes(0).size
+    val costUdf = udf { (v: Vector) => ArrayArgminSqDist.nearest(v.toArray, protos, dim)._2 }
     val f = SOMModel.toVectorCol(dataset.schema($(featuresCol)).dataType, col($(featuresCol)))
     dataset.select(coalesce(sum(costUdf(f)), lit(0.0)).as("cost")).head().getDouble(0)
   }

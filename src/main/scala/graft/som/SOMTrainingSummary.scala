@@ -5,7 +5,9 @@ import org.apache.spark.sql.DataFrame
 /** Training metadata holder (reference `som/SOMTrainingSummary.scala:5-18`):
   * the scored training set plus hyper-params, final cost and per-iteration
   * objective history ("in order to check convergence", reference
-  * `README.md:39-46`). `predictions` is lazy — computed at first action. */
+  * `README.md:39-46`). `predictions` is lazy — computed at first action.
+  * Per-iteration seconds split into the scan job ([[SOM.cellStats]]: exactly
+  * N·K distance evaluations) and the driver update ([[SOM.smooth]]). */
 class SOMTrainingSummary(
     val predictions: DataFrame,
     val featuresCol: String,
@@ -15,4 +17,6 @@ class SOMTrainingSummary(
     val maxIter: Int,
     val numIter: Int,
     val cost: Double,
-    val objectiveHistory: Array[Double])
+    val objectiveHistory: Array[Double],
+    val iterationScanSeconds: Array[Double] = Array.empty,
+    val iterationUpdateSeconds: Array[Double] = Array.empty)

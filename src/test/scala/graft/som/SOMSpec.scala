@@ -1,6 +1,7 @@
 package graft.som
 
 import graft.SparkSpec
+import graft.functions.ArrayArgminSqDist
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import scala.util.Random
 
@@ -15,21 +16,80 @@ class SOMSpec extends SparkSpec {
     rows.toDF("label", "features")
   }
 
+  /** The BMU kernel over `protos` as the model and the fit hand it over. */
+  private def nearest(protos: Array[Vector], p: Vector): (Int, Double) =
+    ArrayArgminSqDist.nearest(p.toArray, ArrayArgminSqDist.flatten(protos.map(_.toArray).toSeq), p.size)
+
+  // The assertions of the deleted norm-pruned `findClosest`, on the kernel
+  // that replaced it.
   test("findClosest equals naive argmin with min-index tie-break") {
     val rnd = new Random(1)
     val protos = Array.fill(25)(Vectors.dense(Array.fill(8)(rnd.nextDouble())))
-      .map(v => VectorWithNorm(v, Vectors.norm(v, 2.0)))
     for (_ <- 0 until 200) {
       val p = Vectors.dense(Array.fill(8)(rnd.nextDouble()))
-      val pw = VectorWithNorm(p, Vectors.norm(p, 2.0))
-      val (bmu, d2) = Distance.findClosest(protos, pw)
-      val naive = protos.map(c => Vectors.sqdist(c.vector, p)).zipWithIndex.minBy { case (d, i) => (d, i) }
+      val (bmu, d2) = nearest(protos, p)
+      val naive = protos.map(c => Vectors.sqdist(c, p)).zipWithIndex.minBy { case (d, i) => (d, i) }
       assert(bmu == naive._2)
       assert(math.abs(d2 - naive._1) < 1e-12)
     }
     // exact tie: duplicate prototypes -> lowest index wins
     val dup = Array(protos(3), protos(3), protos(3))
-    assert(Distance.findClosest(dup, protos(3))._1 == 0)
+    assert(nearest(dup, protos(3))._1 == 0)
+  }
+
+  /** Reference argmin: each distance the plain left-to-right fold, the
+    * lowest index among the smallest non-NaN distances, (0, NaN) if none. */
+  private def naiveNearest(protos: Array[Array[Double]], x: Array[Double]): (Int, Double) = {
+    val d = protos.map { c =>
+      var s = 0.0
+      for (i <- x.indices) { val t = x(i) - c(i); s += t * t }
+      s
+    }
+    val numbers = d.indices.filterNot(i => d(i).isNaN)
+    if (numbers.isEmpty) (0, Double.NaN) else { val m = numbers.minBy(i => (d(i), i)); (m, d(m)) }
+  }
+
+  private def sameBits(a: Double, b: Double): Boolean =
+    java.lang.Double.doubleToRawLongBits(a) == java.lang.Double.doubleToRawLongBits(b)
+
+  test("BMU kernel: every K mod 4 tail, the bit-exact distance, first minimum across lanes and blocks") {
+    val rnd = new Random(3)
+    for (k <- Seq(1, 2, 3, 5, 7, 400); dim <- Seq(1, 3, 64)) {
+      val protos = Array.fill(k)(Array.fill(dim)(rnd.nextGaussian()))
+      val flat = ArrayArgminSqDist.flatten(protos.toSeq)
+      for (_ <- 0 until 50) {
+        val x = Array.fill(dim)(rnd.nextGaussian())
+        val (bmu, d2) = ArrayArgminSqDist.nearest(x, flat, dim)
+        val (want, wantD2) = naiveNearest(protos, x)
+        assert(bmu == want, s"K=$k d=$dim")
+        assert(sameBits(d2, wantD2), s"K=$k d=$dim: $d2 vs $wantD2")
+        assert(sameBits(d2, Vectors.sqdist(Vectors.dense(protos(bmu)), Vectors.dense(x))))
+      }
+    }
+    // an exact tie between any two of K=9 cells (two full blocks and a
+    // tail; e.g. 3 and 4 straddle the first block boundary) goes to the
+    // lower index; every other cell is farther away
+    for (i <- 0 until 9; j <- i + 1 until 9) {
+      val protos = Array.tabulate(9)(c => if (c == i || c == j) Array(0.5, -2.0) else Array(c + 1.0, 3.0))
+      assert(ArrayArgminSqDist.nearest(Array(0.5, -1.0), ArrayArgminSqDist.flatten(protos.toSeq), 2) ==
+        (i, 1.0), s"tie $i/$j")
+    }
+  }
+
+  test("BMU kernel on NaN and ±∞ rows: the reference argmin, NaN ordered last") {
+    val inf = Double.PositiveInfinity
+    val nan = Double.NaN
+    val protos = Array(Array(inf, 0.0), Array(0.0, 0.0), Array(0.0, 0.0), Array(1.0, 1.0),
+      Array(-inf, 0.0), Array(nan, 0.0), Array(0.0, inf))
+    val rows = Seq(Array(0.0, 0.0), Array(inf, 0.0), Array(nan, 0.0), Array(-inf, 0.0),
+      Array(0.9, 1.2), Array(inf, inf), Array(-inf, -inf), Array(0.0, -inf))
+    for (k <- 1 to protos.length; x <- rows) {
+      val (bmu, d2) = ArrayArgminSqDist.nearest(x, ArrayArgminSqDist.flatten(protos.take(k).toSeq), 2)
+      val (want, wantD2) = naiveNearest(protos.take(k), x)
+      val row = x.mkString("(", ", ", ")")
+      assert(bmu == want, s"K=$k row $row")
+      assert(if (wantD2.isNaN) d2.isNaN else sameBits(d2, wantD2), s"K=$k row $row: $d2")
+    }
   }
 
   test("fit produces a full grid model with decreasing-ish objective") {
@@ -47,6 +107,17 @@ class SOMSpec extends SparkSpec {
     assert(hist.forall(_ > 0))
     assert(hist.last < hist.head)
     assert(model.summary.numIter == hist.length)
+  }
+
+  test("training summary times each iteration's scan and driver update") {
+    val model = new SOM().setHeight(3).setWidth(3).setMaxIter(4).setTol(0.0).setSeed(42).fit(demoDF(500))
+    val s = model.summary
+    assert(s.numIter == 4)
+    for (secs <- Seq(s.iterationScanSeconds, s.iterationUpdateSeconds)) {
+      assert(secs.length == s.numIter)
+      assert(secs.forall(_ >= 0.0))
+    }
+    assert(s.iterationScanSeconds.forall(_ > 0.0)) // each scan is a Spark job
   }
 
   test("hexagonal topology trains and differs from rectangular") {
@@ -221,6 +292,26 @@ class SOMSpec extends SparkSpec {
       assert(brute.values.exists(c => dups(c + k / 2)))
     }
 
+  test("transform, predict and transformNative agree on NaN and ±∞ rows; an all-NaN row costs NaN") {
+    import spark.implicits._
+    val inf = Double.PositiveInfinity
+    val model = new SOMModel("som_edge", Array(Vectors.dense(inf, 0.0), Vectors.dense(0.0, 0.0),
+      Vectors.dense(0.0, 0.0), Vectors.dense(1.0, 1.0), Vectors.dense(-inf, 0.0)))
+    val rows = Seq(Array(0.0, 0.0), Array(inf, 0.0), Array(Double.NaN, 0.0), Array(-inf, 0.0),
+      Array(0.9, 1.2), Array(inf, inf))
+    val df = rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "features").repartition(2)
+    def scored(out: org.apache.spark.sql.DataFrame) =
+      out.select("id", "prediction").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val predicted = rows.indices.map(i => i.toLong -> model.predict(Vectors.dense(rows(i)))).toMap
+    // (∞, 0): distances NaN, ∞, ∞, ∞, ∞ -> the first ∞, as array_min orders them
+    assert(predicted(1L) == 1)
+    assert(scored(model.transform(df)) == predicted)
+    val (gen, interp) = codegenAndInterpreted(scored(model.transformNative(df)))
+    assert(gen == predicted && interp == predicted)
+    // (NaN, 0) has no non-NaN distance
+    assert(model.computeCost(df.where("id = 2")).isNaN)
+  }
+
   test("native argmin kernel matches the array_min argmin on ties, NaN, ±∞ and null") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -347,12 +438,12 @@ class SOMSpec extends SparkSpec {
     * hold the same prototype (a distance tie), cell 2 sits apart. The five
     * 1-d points and every sum are exact in binary, so each expected value
     * below is exact arithmetic plus one HALF_UP rounding. */
-  private val lineProtos = Array(0.125, 0.125, 10.0).map(x => VectorWithNorm(Vectors.dense(x)))
+  private val lineProtos: Array[Vector] = Array(0.125, 0.125, 10.0).map(x => Vectors.dense(x))
   private def linePoints(partitions: Int) = spark.sparkContext.parallelize(
-    Seq(1.0, 2.0, 0.25, 9.0, 12.25).map(x => VectorWithNorm(Vectors.dense(x))), partitions)
+    Seq(1.0, 2.0, 0.25, 9.0, 12.25).map(x => Vectors.dense(x)), partitions)
   private def rectWeight(t: Double): (Int, Int) => Double =
     (k, j) => Grid.kernelWeight("rectangular", Grid.cellDist(3)(k, j), t)
-  private def values(protos: Array[VectorWithNorm]): Seq[Double] = protos.map(_.vector(0)).toSeq
+  private def values(protos: Array[Vector]): Seq[Double] = protos.map(_(0)).toSeq
 
   test("cellStats: a distance tie goes to the lower cell; counts, sums and cost") {
     val agg = SOM.cellStats(linePoints(1), lineProtos)
@@ -373,7 +464,6 @@ class SOMSpec extends SparkSpec {
       sumDecimals = 1, protoDecimals = 2)
     assert(values(next) == Seq(1.1, 0.13, 10.65))
     assert(cost == 10.4)
-    next.foreach(p => assert(p.norm == Vectors.norm(p.vector, 2.0)))
     // T=1: cell 1 now averages both neighbors: (3.3 + 21.3) / 5 = 4.92
     assert(values(SOM.step(linePoints(1), lineProtos, rectWeight(1.0), 1, 2)._1) ==
       Seq(1.1, 4.92, 10.65))
@@ -387,7 +477,7 @@ class SOMSpec extends SparkSpec {
   }
 
   test("step over an input with no partitions keeps every prototype, rounded") {
-    val none = spark.sparkContext.emptyRDD[VectorWithNorm]
+    val none = spark.sparkContext.emptyRDD[Vector]
     assert(none.getNumPartitions == 0)
     val (next, cost) = SOM.step(none, lineProtos, rectWeight(1.0), sumDecimals = 1, protoDecimals = 2)
     assert(values(next) == Seq(0.13, 0.13, 10.0))

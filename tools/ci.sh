@@ -7,6 +7,11 @@ cd "$(dirname "$0")/.."
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests:|All tests" | tail -2
 
+echo "== perfbench selftest =="
+# includes the independent RefSom vs SOM.fit bit-for-bit check of the BMU
+# kernel and the batch update
+python3 perfbench/run.py --selftest
+
 for sf in sf0.001 sf0.01 sf0.1; do
   echo "== verify $sf =="
   out="/tmp/graft_ci_$sf"
