@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HalfUp
 import graft.functions.VectorSql._
 
 /** Trained Lloyd k-means coarse quantizer for the IVF serving family.
@@ -39,9 +40,6 @@ import graft.functions.VectorSql._
   * fixed and small — a coarse quantizer needs balance, not convergence.
   */
 object Kmeans {
-
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Deterministic MAXIMIN (Gonzalez farthest-point) seeding — the
     * k-means++ job without its RNG: seed 0 is the minimum-id row; each
@@ -129,7 +127,7 @@ object Kmeans {
     * Initial centroids = the [[maximinSeeds]] rows (or rows vec_id < k
     * when `firstKSeeds` — the data-sampled heuristic, kept for controlled
     * comparison and for corpora where ingest order is known-shuffled),
-    * r4-quantized. Returns k × d centroid components in cell order. An
+    * round(4)-quantized. Returns k × d centroid components in cell order. An
     * iteration that empties a cell carries the cell's previous centroid
     * forward (no respawn heuristics — deterministic and oracle-replayable
     * as a LEFT JOIN + COALESCE). */
@@ -141,11 +139,11 @@ object Kmeans {
     var protos: Array[Array[Double]] =
       if (firstKSeeds)
         points.where(col("vec_id") < k).orderBy("vec_id").collect()
-          .map(_.getAs[Seq[Double]]("v").toArray.map(r4))
+          .map(_.getAs[Seq[Double]]("v").toArray.map(HalfUp.round(4)))
       else {
         val seedIds = maximinSeedsSampled(points, k, spherical, seedRatePpm)
         val byId = points.where(col("vec_id").isin(seedIds.toSeq: _*)).collect()
-          .map(r => r.getLong(0) -> r.getAs[Seq[Double]]("v").toArray.map(r4)).toMap
+          .map(r => r.getLong(0) -> r.getAs[Seq[Double]]("v").toArray.map(HalfUp.round(4))).toMap
         seedIds.map(byId)
       }
     require(protos.length == k, s"need $k seed rows, got ${protos.length}")
@@ -257,7 +255,7 @@ object Kmeans {
           col("v"))
         .select(col("sub"), col("code").cast("long").as("code"),
           slice(col("v"), col("sub") * lit(subDims) + lit(1), lit(subDims)).as("sv"))
-      // EXACT integer sums over r4-quantized components: at 2048 codes ×
+      // EXACT integer sums over round(4)-quantized components: at 2048 codes ×
       // 8 dims × iters there are ~50k independent sums per fit, and the
       // km_fit float discipline (fp sum rounded to 6) measurably hits
       // rounding-boundary collisions at that count (8/16384 rows in the

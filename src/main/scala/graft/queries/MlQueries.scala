@@ -267,11 +267,11 @@ object MlQueries {
   val FitIters = 5
   private val FitTMax = 2.0; private val FitTMin = 0.5
 
-  /** Neighborhood weight (cell k, cell j) of fit iteration `iter`. */
-  private def fitWeight(iter: Int): (Int, Int) => Double = {
+  /** Neighborhood kernel table of fit iteration `iter`. */
+  private def fitWeight(iter: Int): graft.som.Grid.Neighborhood = {
     val t = graft.som.Grid.temperature("exponential", iter, FitIters, FitTMax, FitTMin)
-    (k, j) => graft.som.Grid.kernelWeight("gaussian",
-      graft.som.Grid.cellDist(SomQueries.Width)(k, j), t)
+    graft.som.Grid.neighborhood("gaussian", "rectangular",
+      SomQueries.K / SomQueries.Width, SomQueries.Width, t)
   }
 
   private def fitWeights(iter: Int): Seq[(Int, Int, Double)] = {

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HalfUp
 import graft.functions.VectorSql._
 import graft.som.{Grid, SOM}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
@@ -46,7 +47,7 @@ object SomQueries {
     * rounded to `decimals` (-1 = off). */
   def protoVectors(s: SparkSession, dir: String, decimals: Int = -1): Array[Vector] =
     protos(s, dir).collect().sortBy(_.getLong(0))
-      .map(r => Vectors.dense(r.getAs[Seq[Double]]("c").toArray.map(SOM.round(decimals))))
+      .map(r => Vectors.dense(r.getAs[Seq[Double]]("c").toArray.map(HalfUp.round(decimals))))
 
   /** A K×d prototype matrix as (cell, dim, nv) rows. */
   def cellRows(s: SparkSession, protos: Seq[Vector]): DataFrame = {
@@ -86,7 +87,7 @@ object SomQueries {
     import s.implicits._
     val agg = SOM.cellStats(SOM.points(points(s, dir), "v"), protoVectors(s, dir))
     (for (c <- 0 until K if agg.counts(c) > 0; (x, d) <- agg.sums(c).zipWithIndex)
-      yield (c.toLong, d, SOM.round(4)(x), agg.counts(c))).toDF("bmu", "dim", "s", "n")
+      yield (c.toLong, d, HalfUp.round(4)(x), agg.counts(c))).toDF("bmu", "dim", "s", "n")
   }
 
   /** One neighborhood-weighted update step at fixed temperature T: the
@@ -111,9 +112,8 @@ object SomQueries {
   /** One [[SOM.step]] from the fixed prototypes: sums rounded to 6
     * decimals, prototypes to 4 (the oracle's round(sum, 6) and round(nv, 4)). */
   private def updateStepTopo(s: SparkSession, dir: String, topology: String): DataFrame = {
-    val cd = Grid.cellDistFor(topology, Width)
     val (next, _) = SOM.step(SOM.points(points(s, dir), "v"), protoVectors(s, dir),
-      (k, j) => Grid.kernelWeight("gaussian", cd(k, j), T), sumDecimals = 6, protoDecimals = 4)
+      Grid.neighborhood("gaussian", topology, K / Width, Width, T), sumDecimals = 6, protoDecimals = 4)
     cellRows(s, next.toSeq)
       .select(col("cell").cast("long").as("cell"), col("dim"), col("nv"))
   }

@@ -62,4 +62,44 @@ object Grid {
     case other         => throw new IllegalArgumentException(s"unknown kernel: $other")
   }
 
+  /** The neighborhood kernel of one iteration on a `height`×`width` map:
+    * [[kernelWeight]] at temperature `t`, evaluated once per integer grid
+    * distance 0 .. height+width-2 (no two cells are farther apart under
+    * either topology), so `apply(k1, k2)` returns the same bits as
+    * `kernelWeight(kernel, cellDistFor(topology, width)(k1, k2), t)` without
+    * a per-pair closure or `exp`. O(K + height + width) memory. */
+  def neighborhood(kernel: String, topology: String, height: Int, width: Int,
+                   t: Double): Neighborhood = {
+    val hex = topology match {
+      case "rectangular" => false
+      case "hexagonal"   => true
+      case other         => throw new IllegalArgumentException(s"unknown topology: $other")
+    }
+    new Neighborhood(hex, height * width, width,
+      Array.tabulate(height + width - 1)(d => kernelWeight(kernel, d.toDouble, t)))
+  }
+
+  /** A [[neighborhood]] table and the per-cell grid coordinates it is
+    * indexed through. */
+  final class Neighborhood private[Grid] (hex: Boolean, val cells: Int, width: Int,
+                                          weights: Array[Double]) {
+    // per-cell coordinates: (col, row) on the rectangular grid, (axial q,
+    // row) on the hexagonal one (the odd-r conversion of cellDistHex)
+    private val qs = Array.tabulate(cells) { k =>
+      val row = k / width; val col = k % width
+      if (hex) col - (row - (row & 1)) / 2 else col
+    }
+    private val rs = Array.tabulate(cells)(_ / width)
+
+    /** [[cellDist]] or [[cellDistHex]] of cells k1 and k2, as an Int. */
+    def dist(k1: Int, k2: Int): Int = {
+      val dq = qs(k1) - qs(k2); val dr = rs(k1) - rs(k2)
+      if (hex) (math.abs(dq) + math.abs(dr) + math.abs(dq + dr)) / 2
+      else math.abs(dq) + math.abs(dr)
+    }
+
+    /** Neighborhood weight of the pair (k1, k2). */
+    def apply(k1: Int, k2: Int): Double = weights(dist(k1, k2))
+  }
+
 }

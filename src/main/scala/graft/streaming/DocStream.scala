@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.HalfUp
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -97,12 +98,6 @@ object DocStream {
     n
   }
 
-  // HALF_UP, like Spark's round() and DuckDB's round() (the MlQueries r4
-  // convention) — the emitted jaccard must be bit-identical to the batch
-  // column `round(inter/(na+nb-inter), 6)`.
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   private def emit(key: (Int, String), rows: Iterator[BandDoc],
                    state: GroupState[BucketState]): Iterator[NearDupPair] = {
     val carried = state.getOption.map(_.docs).getOrElse(Nil)
@@ -117,7 +112,7 @@ object DocStream {
         if (inter > 0) {
           val jac = inter.toDouble / (b.hs.length + hs2.length - inter)
           if (jac >= MinJaccard)
-            out += NearDupPair(math.min(b.doc, d2), math.max(b.doc, d2), r6(jac))
+            out += NearDupPair(math.min(b.doc, d2), math.max(b.doc, d2), HalfUp.round(6)(jac))
         }
       }
       acc = (b.doc, b.hs) :: acc
@@ -188,7 +183,7 @@ object DocStream {
         if (inter > 0) {
           val jac = inter.toDouble / (b.hs.length + hs2.length - inter)
           if (jac >= MinJaccard)
-            out += NearDupPair(math.min(b.doc, d2), math.max(b.doc, d2), r6(jac))
+            out += NearDupPair(math.min(b.doc, d2), math.max(b.doc, d2), HalfUp.round(6)(jac))
         }
       }
       acc = (b.doc, b.hs, bt) :: acc

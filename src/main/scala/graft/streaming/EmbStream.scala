@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.HalfUp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -75,9 +76,6 @@ object EmbStream {
     acc
   }
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   val MinCos = graft.operators.Similarity.MinCos
 
   private def emit(key: (Int, Long), rows: Iterator[BandVec],
@@ -91,7 +89,7 @@ object EmbStream {
       for ((id2, v2, n2) <- acc if id2 != b.vec_id) {
         val cos = dot(b.v, v2) / (nb * n2)
         if (cos >= MinCos)
-          out += CosPair(math.min(b.vec_id, id2), math.max(b.vec_id, id2), r6(cos))
+          out += CosPair(math.min(b.vec_id, id2), math.max(b.vec_id, id2), HalfUp.round(6)(cos))
       }
       acc = (b.vec_id, b.v, nb) :: acc
     }
@@ -178,7 +176,7 @@ object EmbStream {
       for ((id2, v2, n2, t2) <- acc if id2 != b.vec_id && math.abs(bt - t2) <= horizonMs) {
         val cos = dot(b.v, v2) / (nb * n2)
         if (cos >= MinCos)
-          out += CosPair(math.min(b.vec_id, id2), math.max(b.vec_id, id2), r6(cos))
+          out += CosPair(math.min(b.vec_id, id2), math.max(b.vec_id, id2), HalfUp.round(6)(cos))
       }
       acc = (b.vec_id, b.v, nb, bt) :: acc
     }

@@ -81,4 +81,21 @@ class GridSpec extends AnyFunSuite {
     assert(Grid.kernelWeight("rectangular", 2.0, 2.0) == 1.0)
     assert(Grid.kernelWeight("rectangular", 2.0001, 2.0) == 0.0)
   }
+
+  test("neighborhood table: cellDistFor distances and kernelWeight bits for every pair") {
+    def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+    for ((h, w) <- Seq((1, 1), (1, 3), (3, 1), (3, 3), (4, 7), (7, 4), (20, 20));
+         topology <- Seq("rectangular", "hexagonal"); kernel <- Seq("gaussian", "rectangular");
+         t <- Seq(10.0, 3.0, 1.0, 0.3, 0.0, Double.NaN)) {
+      val nb = Grid.neighborhood(kernel, topology, h, w, t)
+      val cd = Grid.cellDistFor(topology, w)
+      assert(nb.cells == h * w)
+      for (k1 <- 0 until h * w; k2 <- 0 until h * w) {
+        assert(nb.dist(k1, k2) == cd(k1, k2))
+        assert(bits(nb(k1, k2)) == bits(Grid.kernelWeight(kernel, cd(k1, k2), t)))
+      }
+    }
+    intercept[IllegalArgumentException](Grid.neighborhood("gaussian", "toroidal", 2, 2, 1.0))
+    intercept[IllegalArgumentException](Grid.neighborhood("bubble", "hexagonal", 2, 2, 1.0))
+  }
 }

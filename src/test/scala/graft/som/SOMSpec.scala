@@ -1,7 +1,7 @@
 package graft.som
 
 import graft.SparkSpec
-import graft.functions.ArrayArgminSqDist
+import graft.functions.{ArrayArgminSqDist, HalfUp}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import scala.util.Random
 
@@ -441,8 +441,8 @@ class SOMSpec extends SparkSpec {
   private val lineProtos: Array[Vector] = Array(0.125, 0.125, 10.0).map(x => Vectors.dense(x))
   private def linePoints(partitions: Int) = spark.sparkContext.parallelize(
     Seq(1.0, 2.0, 0.25, 9.0, 12.25).map(x => Vectors.dense(x)), partitions)
-  private def rectWeight(t: Double): (Int, Int) => Double =
-    (k, j) => Grid.kernelWeight("rectangular", Grid.cellDist(3)(k, j), t)
+  private def rectWeight(t: Double): Grid.Neighborhood =
+    Grid.neighborhood("rectangular", "rectangular", 1, 3, t)
   private def values(protos: Array[Vector]): Seq[Double] = protos.map(_(0)).toSeq
 
   test("cellStats: a distance tie goes to the lower cell; counts, sums and cost") {
@@ -497,6 +497,101 @@ class SOMSpec extends SparkSpec {
       assert(m.prototypes.toSeq == init.prototypes.toSeq)
       assert(m.objectiveHistory.toSeq == Seq(0.0)) // nothing moved: converged after one step
     }
+  }
+
+  /** The driver update as it was before the kernel table: one weight
+    * closure call per (cell, j) pair and BigDecimal HALF_UP rounding. Kept
+    * as the reference [[SOM.smooth]] must reproduce bit for bit. */
+  private def perPairSmooth(agg: SOM.CellAgg, protos: Array[Vector],
+                            weight: (Int, Int) => Double, sumDecimals: Int,
+                            protoDecimals: Int): (Array[Vector], Double) = {
+    def round(scale: Int)(x: Double): Double =
+      if (scale < 0 || !java.lang.Double.isFinite(x)) x
+      else BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val k = protos.length
+    val dim = protos(0).size
+    val sums = agg.sums.map(s => if (s == null) null else s.map(round(sumDecimals)))
+    val next = Array.tabulate(k) { cell =>
+      val acc = new Array[Double](dim)
+      var wn = 0.0
+      var j = 0
+      while (j < k) {
+        if (agg.counts(j) > 0) {
+          val wgt = weight(cell, j)
+          if (wgt != 0.0) {
+            val sj = sums(j)
+            var d = 0
+            while (d < dim) { acc(d) += wgt * sj(d); d += 1 }
+            wn += wgt * agg.counts(j)
+          }
+        }
+        j += 1
+      }
+      val nv =
+        if (wn > 0) { var d = 0; while (d < dim) { acc(d) /= wn; d += 1 }; Vectors.dense(acc) }
+        else protos(cell)
+      if (protoDecimals < 0) nv else Vectors.dense(nv.toArray.map(round(protoDecimals)))
+    }
+    (next, round(sumDecimals)(agg.cost))
+  }
+
+  /** Random cell statistics on an h×w map: cells in the top two rows and
+    * every fifth cell own no points, one owner's sums are all NaN, and some
+    * sums sit exactly on a 6-decimal half. */
+  private def smoothCase(h: Int, w: Int, dim: Int, seed: Long): (SOM.CellAgg, Array[Vector]) = {
+    val rnd = new Random(seed)
+    val k = h * w
+    val agg = SOM.CellAgg(k, dim)
+    for (c <- 0 until k if c >= 2 * w && c % 5 != 0) {
+      val n = 1 + rnd.nextInt(60)
+      agg.counts(c) = n
+      agg.sums(c) = Array.fill(dim)(
+        if (rnd.nextInt(8) == 0) (rnd.nextInt(2000000) - 1000000 + 0.5) / 1e6
+        else n * (rnd.nextGaussian() * 3 + 1))
+      agg.cost += n * rnd.nextDouble()
+    }
+    val owners = (0 until k).filter(agg.counts(_) > 0)
+    agg.sums(owners(rnd.nextInt(owners.length))) = Array.fill(dim)(Double.NaN)
+    val protos = Array.fill(k)(Vectors.dense(Array.fill(dim)(rnd.nextGaussian())))
+    (agg, protos)
+  }
+
+  test("smooth with the kernel table equals the per-pair loop bit for bit") {
+    def bits(protos: Array[Vector]) =
+      protos.toSeq.map(_.toArray.toSeq.map(java.lang.Double.doubleToRawLongBits))
+    var keptCells = 0
+    for (((h, w), seed) <- Seq((20, 20), (7, 13)).zipWithIndex) {
+      val (agg, protos) = smoothCase(h, w, 64, seed)
+      for (topology <- Seq("rectangular", "hexagonal"); kernel <- Seq("gaussian", "rectangular");
+           t <- Seq(10.0, 3.0, 1.0); (sd, pd) <- Seq((6, 4), (-1, -1), (2, 0))) {
+        val cd = Grid.cellDistFor(topology, w)
+        val (want, wantCost) = perPairSmooth(agg, protos,
+          (c, j) => Grid.kernelWeight(kernel, cd(c, j), t), sd, pd)
+        val (got, gotCost) = SOM.smooth(agg, protos, Grid.neighborhood(kernel, topology, h, w, t), sd, pd)
+        val what = s"${h}x$w $topology $kernel T=$t rounding ($sd, $pd)"
+        assert(bits(got) == bits(want), what)
+        assert(java.lang.Double.doubleToRawLongBits(gotCost) ==
+          java.lang.Double.doubleToRawLongBits(wantCost), what)
+        // the NaN row reaches its neighbors; a rectangular-kernel cell in
+        // the empty top rows at T=1 has no mass and keeps its prototype,
+        // rounded (or the very vector when rounding is off)
+        assert(got.exists(_.toArray.exists(_.isNaN)), what)
+        if (kernel == "rectangular" && t == 1.0) {
+          assert(got(0).toArray.toSeq == protos(0).toArray.toSeq.map(HalfUp.round(pd)), what)
+          if (pd < 0) assert(got(0) eq protos(0), what)
+          keptCells += 1
+        }
+      }
+    }
+    assert(keptCells == 2 * 2 * 3)
+    // the input is left as it was: the sums are rounded into copies
+    val (agg, protos) = smoothCase(3, 4, 5, 9)
+    val before = agg.sums.map(r => if (r == null) null else r.clone())
+    SOM.smooth(agg, protos, Grid.neighborhood("gaussian", "rectangular", 3, 4, 1.0), 1, 1)
+    assert(agg.sums.zip(before).forall { case (a, b) => (a == null && b == null) ||
+      a.map(java.lang.Double.doubleToRawLongBits).sameElements(b.map(java.lang.Double.doubleToRawLongBits)) })
+    intercept[IllegalArgumentException](
+      SOM.smooth(agg, protos, Grid.neighborhood("gaussian", "rectangular", 4, 4, 1.0), 1, 1))
   }
 
   test("computeCost of an empty dataset is 0.0") {

@@ -4,6 +4,15 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+echo "== one HALF_UP rounding helper =="
+# every decimal rounding in src/main goes through graft.functions.HalfUp,
+# the fast exact form of BigDecimal HALF_UP; a private BigDecimal copy is
+# slower and must not come back
+if grep -rn "RoundingMode.HALF_UP" src/main | grep -v "^src/main/scala/graft/functions/HalfUp.scala:"; then
+  echo "RoundingMode.HALF_UP outside graft.functions.HalfUp: call HalfUp.round"
+  exit 1
+fi
+
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests:|All tests" | tail -2
 
