@@ -130,22 +130,31 @@ object ArrayArgminSqDist {
 
   /** The one best-matching-unit kernel, behind every SOM argmin: (index,
     * squared distance) of the prototype nearest to `x` among the row-major
-    * K×`dim` `prototypes`. Four prototypes share each pass over `x`, each
-    * with its own accumulator, so four add chains overlap; the K mod 4 tail
+    * K×`dim` `prototypes`. [[nearestOf]] over every prototype. */
+  def nearest(x: Array[Double], prototypes: Array[Double], dim: Int): (Int, Double) =
+    nearestOf(x, prototypes, dim, null, prototypes.length / dim)
+
+  /** The exact fold behind [[nearest]] and the training scan's refine
+    * (`graft.som.BlockNearest`): the nearest of the first `n` prototypes
+    * listed in `cells` (ascending), or of prototypes 0 until `n` when
+    * `cells` is null. Four prototypes share each pass over `x`, each with
+    * its own accumulator, so four add chains overlap; the `n` mod 4 tail
     * takes one at a time. Each accumulator is the left-to-right `Σ(a−p)²`
     * fold, bit-identical to `Vectors.sqdist`. Distances are compared in
-    * index order with NaN above every number: the first minimum wins, and a
-    * row with no non-NaN distance maps to (0, NaN). A row whose length is
-    * not `dim` throws, naming both lengths. */
-  def nearest(x: Array[Double], prototypes: Array[Double], dim: Int): (Int, Double) = {
+    * list order with NaN above every number: the first minimum wins, and a
+    * row with no non-NaN distance maps to (first listed, NaN). A row whose
+    * length is not `dim` throws, naming both lengths. */
+  private[graft] def nearestOf(x: Array[Double], prototypes: Array[Double], dim: Int,
+                               cells: Array[Int], n: Int): (Int, Double) = {
     if (x.length != dim) throw new IllegalArgumentException(
       s"feature array has ${x.length} elements but the prototypes have $dim")
-    val k = prototypes.length / dim
-    var best = 0
+    @inline def cell(j: Int): Int = if (cells == null) j else cells(j)
+    var best = cell(0)
     var bestD = Double.NaN
-    var c = 0
-    while (c + 4 <= k) {
-      val o0 = c * dim; val o1 = o0 + dim; val o2 = o1 + dim; val o3 = o2 + dim
+    var j = 0
+    while (j + 4 <= n) {
+      val c0 = cell(j); val c1 = cell(j + 1); val c2 = cell(j + 2); val c3 = cell(j + 3)
+      val o0 = c0 * dim; val o1 = c1 * dim; val o2 = c2 * dim; val o3 = c3 * dim
       var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
       var i = 0
       while (i < dim) {
@@ -156,17 +165,17 @@ object ArrayArgminSqDist {
         val d3 = a - prototypes(o3 + i); s3 += d3 * d3
         i += 1
       }
-      if (closer(s0, bestD)) { best = c; bestD = s0 }
-      if (closer(s1, bestD)) { best = c + 1; bestD = s1 }
-      if (closer(s2, bestD)) { best = c + 2; bestD = s2 }
-      if (closer(s3, bestD)) { best = c + 3; bestD = s3 }
-      c += 4
+      if (closer(s0, bestD)) { best = c0; bestD = s0 }
+      if (closer(s1, bestD)) { best = c1; bestD = s1 }
+      if (closer(s2, bestD)) { best = c2; bestD = s2 }
+      if (closer(s3, bestD)) { best = c3; bestD = s3 }
+      j += 4
     }
-    while (c < k) {
-      val o = c * dim; var s = 0.0; var i = 0
+    while (j < n) {
+      val c = cell(j); val o = c * dim; var s = 0.0; var i = 0
       while (i < dim) { val d = x(i) - prototypes(o + i); s += d * d; i += 1 }
       if (closer(s, bestD)) { best = c; bestD = s }
-      c += 1
+      j += 1
     }
     (best, bestD)
   }

@@ -2,7 +2,7 @@ package graft.som
 
 import graft.functions.{ArrayArgminSqDist, HalfUp}
 import org.apache.spark.ml.Estimator
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
@@ -17,9 +17,14 @@ import org.apache.spark.storage.StorageLevel
   * Rework of the reference's RDD pipeline:
   *  - the features are decoded once into a cached `RDD[Vector]`; each
   *    iteration is one [[SOM.step]] (the kernel the catalog's SOM update
-  *    entries share), whose assign+aggregate is one single-stage job: each
-  *    BMU is an exhaustive [[ArrayArgminSqDist.nearest]] scan (the
-  *    reference's norm-bound prune skipped 3 % of candidates at K=400),
+  *    entries share), whose assign+aggregate is one single-stage job: the
+  *    BMUs come from [[BlockNearest]], which screens blocks of four points
+  *    against all prototypes with centred dot products and a derived
+  *    rounding-error bound, then runs the exact [[ArrayArgminSqDist.nearest]]
+  *    fold only on the prototypes the bound cannot exclude (about one per
+  *    point on a clustered 64-d input at K=400), so the BMU and its distance
+  *    are bit for bit the exhaustive scan's (the reference's norm-bound
+  *    prune skipped 3 % of candidates at K=400);
   *    `mapPartitions` folds every partition into one K×d partial (sums,
   *    counts, Σd2), and the driver merges the partials in partition-index
   *    order from an ordered `collect` (tree-reduced only when
@@ -33,7 +38,7 @@ import org.apache.spark.storage.StorageLevel
   *    reference (`som/SOM.scala:219-234`), but reads the kernel from a
   *    per-iteration table indexed by grid distance and rounds without
   *    BigDecimal ([[SOM.smooth]]): at K=400, d=64 it takes about 3 ms of
-  *    an iteration (28 ms before), against a scan job of about 170 ms.
+  *    an iteration (28 ms before), against a scan job of about 65 ms.
   *
   * Scale: per iteration, one scan of N rows with no shuffle, and one
   * collect of numPartitions K×d partials. The model (K·d doubles) is
@@ -105,6 +110,7 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
     val tMx = $(tMax); val tMn = $(tMin); val iters = $(maxIter); val eps = $(tol)
     val history = scala.collection.mutable.ArrayBuffer.empty[Double]
     val scanSeconds, updateSeconds = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val exactDistances = scala.collection.mutable.ArrayBuffer.empty[Long]
     var iter = 0
     var converged = false
 
@@ -118,6 +124,7 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
         Grid.neighborhood(kern, topo, $(height), $(width), t), $(sumDecimals), $(protoDecimals))
       scanSeconds += (t1 - t0) / 1e9
       updateSeconds += (System.nanoTime() - t1) / 1e9
+      exactDistances += agg.exact
       // Converged when no prototype moved more than tol (the prototypes are
       // already quantized via protoDecimals).
       converged = !next.indices.exists(c => Vectors.sqdist(next(c), prototypes(c)) > eps * eps)
@@ -133,7 +140,7 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
       model.transform(dataset), $(featuresCol), $(predictionCol),
       $(height), $(width), $(maxIter), iter,
       if (history.nonEmpty) history.last else 0.0, history.toArray,
-      scanSeconds.toArray, updateSeconds.toArray)
+      scanSeconds.toArray, updateSeconds.toArray, exactDistances.toArray)
     model.setSummary(Some(summary))
     model
   }
@@ -161,20 +168,22 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
     * `protos`, in one single-stage job: `mapPartitions` folds every
     * partition into one K×d partial (map-side partial aggregation minus the
     * per-iteration plan compile and exchange), and the driver merges the
-    * partials. Each point's BMU is [[ArrayArgminSqDist.nearest]] over the
-    * prototypes as one row-major K×d matrix, broadcast and destroyed after. */
-  private[graft] def cellStats(points: RDD[Vector], protos: Array[Vector]): CellAgg = {
+    * partials. Each point's BMU is exactly [[ArrayArgminSqDist.nearest]]'s,
+    * found by [[BlockNearest]]'s filter and refine over blocks of four
+    * points (`screen = false`: by `nearest` itself) against the prototypes
+    * as one row-major K×d matrix, broadcast and destroyed after. The
+    * partial also counts the exact distance evaluations. */
+  private[graft] def cellStats(points: RDD[Vector], protos: Array[Vector],
+                               screen: Boolean = true): CellAgg = {
     val k = protos.length
     val dim = protos(0).size
     val bc = points.sparkContext.broadcast(ArrayArgminSqDist.flatten(protos.map(_.toArray).toSeq))
     try {
       val partials = points.mapPartitions { it =>
-        val flat = bc.value
+        val search = new BlockNearest(bc.value, dim, screen)
         val a = CellAgg(k, dim)
-        it.foreach { p =>
-          val (cell, d2) = ArrayArgminSqDist.nearest(p.toArray, flat, dim)
-          a.add(cell, p, d2)
-        }
+        search.foreach(it)((p, cell, d2) => a.add(cell, p, d2))
+        a.exact = search.exact
         Iterator.single(a)
       }
       // Merge partials in PARTITION-INDEX order (collect preserves it): the
@@ -287,11 +296,19 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
     val sums: Array[Array[Double]] = new Array[Array[Double]](k)
     val counts: Array[Long] = new Array[Long](k)
     var cost: Double = 0.0
+    /** exact distance evaluations the BMU search made */
+    var exact: Long = 0L
 
     def add(cell: Int, v: Vector, d2: Double): this.type = {
       if (sums(cell) == null) sums(cell) = new Array[Double](dim)
       val row = sums(cell)
-      v.foreachActive((i, x) => row(i) += x)
+      v match {
+        case dv: DenseVector =>
+          val xs = dv.values
+          var i = 0
+          while (i < xs.length) { row(i) += xs(i); i += 1 }
+        case _ => v.foreachActive((i, x) => row(i) += x)
+      }
       counts(cell) += 1
       cost += d2
       this
@@ -312,6 +329,7 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
         c += 1
       }
       cost += o.cost
+      exact += o.exact
       this
     }
   }

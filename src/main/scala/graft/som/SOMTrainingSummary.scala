@@ -6,8 +6,11 @@ import org.apache.spark.sql.DataFrame
   * the scored training set plus hyper-params, final cost and per-iteration
   * objective history ("in order to check convergence", reference
   * `README.md:39-46`). `predictions` is lazy — computed at first action.
-  * Per-iteration seconds split into the scan job ([[SOM.cellStats]]: exactly
-  * N·K distance evaluations) and the driver update ([[SOM.smooth]]). */
+  * Per-iteration seconds split into the scan job ([[SOM.cellStats]]) and the
+  * driver update ([[SOM.smooth]]). The scan screens all N·K (point,
+  * prototype) pairs and evaluates the exact distance only for the pairs the
+  * screen cannot exclude: `iterationExactDistances(i) / (N·K)` is the share
+  * iteration i evaluated exactly (1.0 = an exhaustive scan). */
 class SOMTrainingSummary(
     val predictions: DataFrame,
     val featuresCol: String,
@@ -19,4 +22,5 @@ class SOMTrainingSummary(
     val cost: Double,
     val objectiveHistory: Array[Double],
     val iterationScanSeconds: Array[Double] = Array.empty,
-    val iterationUpdateSeconds: Array[Double] = Array.empty)
+    val iterationUpdateSeconds: Array[Double] = Array.empty,
+    val iterationExactDistances: Array[Long] = Array.empty)

@@ -608,4 +608,167 @@ class SOMSpec extends SparkSpec {
     new SOM().setTopology("hexagonal") // extension: valid since round 2
     intercept[IllegalArgumentException](new SOM().setMaxIter(-1))
   }
+
+  /** [[BlockNearest]] over `rows` as one partition: per row (index,
+    * distance), and the exact-fold evaluations it made. */
+  private def blockSearch(protos: Seq[Array[Double]], rows: Seq[Array[Double]],
+                          sparse: Boolean): (Seq[(Int, Double)], Long) = {
+    val search = new BlockNearest(ArrayArgminSqDist.flatten(protos), protos.head.length)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
+    val vs = rows.iterator.map(r => if (sparse) Vectors.dense(r).toSparse else Vectors.dense(r))
+    search.foreach(vs)((_, cell, d2) => out += ((cell, d2)))
+    (out.toSeq, search.exact)
+  }
+
+  /** The block search gives every row `nearest`'s index and distance bits;
+    * returns its exact-fold evaluations. */
+  private def assertBlockIsNearest(protos: Seq[Array[Double]], rows: Seq[Array[Double]],
+                                   clue: String, sparse: Boolean = false): Long = {
+    val flat = ArrayArgminSqDist.flatten(protos)
+    val (got, exact) = blockSearch(protos, rows, sparse)
+    assert(got.length == rows.length, clue)
+    for (((x, (cell, d2)), r) <- rows.zip(got).zipWithIndex) {
+      val (want, wantD2) = ArrayArgminSqDist.nearest(x, flat, protos.head.length)
+      assert(cell == want && sameBits(d2, wantD2), s"$clue, row $r: ($cell, $d2) vs ($want, $wantD2)")
+    }
+    exact
+  }
+
+  /** `n` points drawn around random `centres` with gaussian `spread`. */
+  private def mixture(rnd: Random, centres: Array[Array[Double]], n: Int, spread: Double) =
+    Seq.fill(n) {
+      val c = centres(rnd.nextInt(centres.length))
+      Array.tabulate(c.length)(i => c(i) + spread * rnd.nextGaussian())
+    }
+
+  test("block BMU search equals nearest for every K mod 4, d and block tail") {
+    val rnd = new Random(11)
+    for (k <- Seq(1, 2, 3, 4, 5, 7, 9, 400); dim <- Seq(1, 2, 3, 64)) {
+      val centres = Array.fill(6)(Array.fill(dim)(4 * rnd.nextGaussian()))
+      // prototypes sampled from the data as at init, and clustered as late in a fit
+      for ((protos, shape) <- Seq(mixture(rnd, centres, k, 1.0) -> "sampled",
+                                  mixture(rnd, centres, k, 0.05) -> "clustered")) {
+        for (n <- 0 to 7) {
+          val exact = assertBlockIsNearest(protos, mixture(rnd, centres, n, 1.0), s"K=$k d=$dim n=$n $shape")
+          assert(exact >= n && exact <= n.toLong * k)
+          if (n < 4) assert(exact == n.toLong * k)
+        }
+        val exact = assertBlockIsNearest(protos, mixture(rnd, centres, 64, 1.0), s"K=$k d=$dim n=64 $shape")
+        assert(exact >= 64 && exact <= 64L * k)
+        if (k == 400 && dim == 64) assert(exact < 64L * k / 20, s"$shape: $exact exact distances")
+      }
+    }
+  }
+
+  test("block BMU search on duplicated prototypes, 1-ulp near ties and a point at the prototype mean") {
+    val rnd = new Random(12)
+    for (dim <- Seq(1, 2, 3, 64)) {
+      // each of 5 prototypes three times, interleaved across blocks: the
+      // lowest index must win
+      val base = Array.fill(5)(Array.fill(dim)(rnd.nextGaussian()))
+      val protos = Seq.tabulate(15)(i => base(i * 7 % 5))
+      assertBlockIsNearest(protos, base.toSeq ++ mixture(rnd, base, 23, 0.3), s"duplicates d=$dim")
+    }
+    // near ties far from the prototype mean, where the screen's own rounding
+    // is many ulps of the distance: prototype b is prototype a with one
+    // component moved by -2..2 ulps, both at random places among K=9
+    for (trial <- 0 until 400) {
+      val dim = Seq(2, 3, 64)(trial % 3)
+      val x = Array.fill(dim)(1000 + rnd.nextGaussian())
+      val a = x.map(v => v + 0.01 * rnd.nextGaussian())
+      val b = a.clone()
+      val j = rnd.nextInt(dim)
+      val ulps = rnd.nextInt(5) - 2
+      for (_ <- 0 until ulps.abs) b(j) = if (ulps > 0) Math.nextUp(b(j)) else Math.nextDown(b(j))
+      val far = Seq.fill(7)(Array.fill(dim)(-1000 + rnd.nextGaussian()))
+      val slots = rnd.shuffle((0 until 9).toList)
+      val protos = Array.fill(9)(Array.emptyDoubleArray)
+      protos(slots(0)) = a; protos(slots(1)) = b
+      slots.drop(2).zip(far).foreach { case (s, p) => protos(s) = p }
+      assertBlockIsNearest(protos.toSeq, Seq(x, x.map(Math.nextUp), a, b), s"near tie $trial")
+    }
+    // rows at the prototype mean, which is itself a prototype: x' = p' = 0,
+    // so the screen value and its bound are exactly 0
+    for (dim <- Seq(1, 2, 3, 64); k <- Seq(4, 5, 9)) {
+      val v = Array.fill(dim)((rnd.nextInt(7) - 3).toDouble)
+      val protos = Seq.tabulate(k)(i => v.map(_ * (i - (k - 1) / 2.0)))
+      val mean = Array.tabulate(dim)(i => protos.map(_(i)).sum / k)
+      assertBlockIsNearest(protos, Seq.fill(4)(mean) ++ Seq(mean, protos(1)), s"mean K=$k d=$dim")
+    }
+    // a point at the mean of random prototypes
+    val protos = Seq.fill(9)(Array.fill(3)(rnd.nextGaussian()))
+    val mean = Array.tabulate(3)(i => protos.map(_(i)).sum / 9)
+    assertBlockIsNearest(protos, Seq.fill(4)(mean), "mean of random prototypes")
+  }
+
+  test("block BMU search at extreme magnitudes, on NaN and ±∞ rows, a NaN prototype and sparse rows") {
+    val rnd = new Random(13)
+    def gauss(n: Int, dim: Int, scale: Double) = Seq.fill(n)(Array.fill(dim)(scale * rnd.nextGaussian()))
+    for (scale <- Seq(1e-300, 1e-160, 1e150, 1e200); dim <- Seq(1, 3, 64); k <- Seq(4, 9, 400)) {
+      val clue = s"scale=$scale K=$k d=$dim"
+      assertBlockIsNearest(gauss(k, dim, scale), gauss(13, dim, scale), clue)
+      assertBlockIsNearest(gauss(k, dim, 1.0), gauss(13, dim, scale), s"$clue, rows only")
+      assertBlockIsNearest(gauss(k, dim, scale), gauss(13, dim, 1.0), s"$clue, prototypes only")
+      // one tiny or huge component in otherwise unit rows
+      val rows = gauss(12, dim, 1.0)
+      rows.foreach(r => r(rnd.nextInt(dim)) = scale * rnd.nextGaussian())
+      assertBlockIsNearest(gauss(k, dim, 1.0), rows, s"$clue, one component")
+    }
+    val inf = Double.PositiveInfinity
+    for (dim <- Seq(1, 3, 64); k <- Seq(4, 9, 400)) {
+      val protos = gauss(k, dim, 1.0)
+      val rows = gauss(11, dim, 1.0)
+      Seq(1 -> Double.NaN, 4 -> inf, 6 -> -inf, 9 -> Double.NaN).foreach { case (r, v) =>
+        rows(r)(rnd.nextInt(dim)) = v }
+      assertBlockIsNearest(protos, rows, s"non-finite rows K=$k d=$dim")
+      for (bad <- Seq(Double.NaN, inf)) {
+        val withBad = protos.map(_.clone())
+        withBad(k / 2)(0) = bad
+        assertBlockIsNearest(withBad, gauss(9, dim, 1.0), s"prototype $bad K=$k d=$dim")
+      }
+      val sparse = gauss(10, dim, 1.0).map(_.map(v => if (rnd.nextInt(3) == 0) v else 0.0))
+      assertBlockIsNearest(protos, sparse, s"sparse K=$k d=$dim", sparse = true)
+    }
+    // a wrong-length row inside a block throws, as nearest does
+    val protos = gauss(8, 3, 1.0)
+    intercept[IllegalArgumentException](blockSearch(protos, gauss(3, 3, 1.0) :+ Array(1.0, 2.0), sparse = false))
+  }
+
+  test("fit through the block search is bit-identical to a fit forced through nearest, 20x20") {
+    import spark.implicits._
+    val rnd = new Random(14)
+    val (n, dim, iters) = (3000, 16, 5)
+    val centres = Array.fill(12)(Array.fill(dim)(3 * rnd.nextGaussian()))
+    val rows = mixture(rnd, centres, n, 1.0)
+    val df = spark.sparkContext.parallelize(rows.map(r => (0.0, Vectors.dense(r))), 3).toDF("label", "features")
+    val init = rows.take(400).map(r => Vectors.dense(r.map(HalfUp.round(4)))).toArray
+    val model = new SOM().setHeight(20).setWidth(20).setMaxIter(iters).setTol(0.0)
+      .setProtoDecimals(4).setSumDecimals(6)
+      .setInitialModel(new SOMModel("init", init)).fit(df)
+    assert(model.summary.numIter == iters)
+    // the same loop, every BMU from nearest
+    val points = SOM.points(df, "features").cache()
+    var protos = init
+    val costs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    for (iter <- 0 until iters) {
+      val t = Grid.temperature("exponential", iter, iters, 10.0, 1.0)
+      val agg = SOM.cellStats(points, protos, screen = false)
+      assert(agg.exact == n.toLong * 400)
+      val (next, cost) = SOM.smooth(agg, protos, Grid.neighborhood("gaussian", "rectangular", 20, 20, t), 6, 4)
+      protos = next
+      costs += cost
+    }
+    points.unpersist()
+    assert(model.prototypes.length == 400)
+    for ((p, q) <- model.prototypes.zip(protos))
+      assert(p.toArray.map(java.lang.Double.doubleToRawLongBits).sameElements(
+        q.toArray.map(java.lang.Double.doubleToRawLongBits)))
+    assert(model.summary.objectiveHistory.map(java.lang.Double.doubleToRawLongBits).sameElements(
+      costs.map(java.lang.Double.doubleToRawLongBits)))
+    // the screen's work: at least the winner per point, far fewer than N·K
+    val exact = model.summary.iterationExactDistances
+    assert(exact.length == iters)
+    assert(exact.forall(e => e >= n && e < n.toLong * 400 / 10), exact.mkString(","))
+  }
+
 }

@@ -13,6 +13,15 @@ if grep -rn "RoundingMode.HALF_UP" src/main | grep -v "^src/main/scala/graft/fun
   exit 1
 fi
 
+echo "== no Math.fma in src/main =="
+# HotSpot intrinsifies Math.fma only on CPUs with FMA; elsewhere it runs
+# BigDecimal code, which would make the BMU scan about 100x slower without
+# failing anything. The kernels use plain * and +.
+if grep -rn "Math\.fma" src/main; then
+  echo "Math.fma under src/main: use plain * and +"
+  exit 1
+fi
+
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests:|All tests" | tail -2
 
