@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,39 +80,46 @@ case class ArraySqDist(left: Expression, right: Expression) extends ArrayFoldExp
   override def prettyName: String = "array_sqdist"
 }
 
-/** Index of the nearest of K prototypes (squared L2) to an `array<double>`
-  * row: the SOM best-matching-unit search as ONE expression. The K×d
-  * prototypes are one row-major `double[]` handed to codegen as a
-  * reference object, so the generated code and the plan string are the
-  * same size for any K.
+/** The nearest of K prototypes (squared L2) to an `array<double>` or
+  * VectorUDT row, read in place: the SOM best-matching-unit search as ONE
+  * expression, giving the cell index (`int`) or with `distance` its
+  * squared distance (`double`). The K×d prototypes are one row-major
+  * `double[]` handed to codegen as a reference object, so the generated
+  * code and the plan string are the same size for any K.
   *
   * Both eval paths run the one BMU kernel, [[ArrayArgminSqDist.nearest]]:
   * its argmin orders exactly like `array_position(d, array_min(d))` and the
   * oracle's `row_number() OVER (ORDER BY d2, cell)`. A null row yields
   * null; a row whose length is not d throws.
   */
-case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: Int)
+case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: Int,
+                             distance: Boolean = false)
     extends UnaryExpression {
   require(dim > 0 && prototypes.nonEmpty && prototypes.length % dim == 0,
     s"prototypes must be a non-empty K×$dim matrix, got ${prototypes.length} values")
 
-  override def dataType: DataType = IntegerType
+  override def dataType: DataType = if (distance) DoubleType else IntegerType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(DoubleType, _) | SQLDataTypes.VectorType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<double> argument, got ${other.simpleString}")
+      s"$prettyName requires an array<double> or vector argument, got ${other.simpleString}")
   }
 
-  override protected def nullSafeEval(v: Any): Any =
-    ArrayArgminSqDist.argmin(v.asInstanceOf[ArrayData], prototypes, dim)
+  override protected def nullSafeEval(v: Any): Any = {
+    import ArrayArgminSqDist._
+    val x = v match { case r: InternalRow => features(r); case a: ArrayData => features(a) }
+    if (distance) minSqDist(x, prototypes, dim) else argmin(x, prototypes, dim)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val p = ctx.addReferenceObj("prototypes", prototypes, "double[]")
-    defineCodeGen(ctx, ev, v => s"graft.functions.ArrayArgminSqDist.argmin($v, $p, $dim)")
+    val (o, out) = ("graft.functions.ArrayArgminSqDist", if (distance) "minSqDist" else "argmin")
+    defineCodeGen(ctx, ev, v => s"$o.$out($o.features($v), $p, $dim)")
   }
 
-  override def toString: String = s"$prettyName($child, K=${prototypes.length / dim}, d=$dim)"
+  override def toString: String =
+    s"$prettyName($child, K=${prototypes.length / dim}, d=$dim${if (distance) ", distance" else ""})"
   override protected def withNewChildInternal(c: Expression): ArrayArgminSqDist = copy(child = c)
   override def prettyName: String = "array_argmin_sqdist"
 }
@@ -124,9 +133,23 @@ object ArrayArgminSqDist {
     Array.concat(prototypes: _*)
   }
 
-  /** One row of `array_argmin_sqdist`, copied out once (d doubles). */
-  def argmin(x: ArrayData, prototypes: Array[Double], dim: Int): Int =
-    nearest(x.toDoubleArray(), prototypes, dim)._1
+  /** One `array<double>` row, copied out once (d doubles). */
+  def features(x: ArrayData): Array[Double] = x.toDoubleArray()
+
+  /** One VectorUDT row `(type, size, indices, values)` as `Vector.toArray`
+    * gives it: dense values copied once, a sparse row densified. */
+  def features(v: InternalRow): Array[Double] = {
+    val values = v.getArray(3)
+    if (v.getByte(0) == 1) return values.toDoubleArray()
+    val (out, indices) = (new Array[Double](v.getInt(1)), v.getArray(2))
+    var i = 0
+    while (i < indices.numElements()) { out(indices.getInt(i)) = values.getDouble(i); i += 1 }
+    out
+  }
+
+  /** The index of, or the squared distance to, the prototype nearest to `x`. */
+  def argmin(x: Array[Double], prototypes: Array[Double], dim: Int): Int = nearest(x, prototypes, dim)._1
+  def minSqDist(x: Array[Double], prototypes: Array[Double], dim: Int): Double = nearest(x, prototypes, dim)._2
 
   /** The one best-matching-unit kernel, behind every SOM argmin: (index,
     * squared distance) of the prototype nearest to `x` among the row-major
@@ -193,9 +216,11 @@ object ArrayVectorExpressions {
   def arraySqDist(a: Column, b: Column): Column =
     ColumnBridge.column(ArraySqDist(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** BMU index of `features` among the row-major K×`dim` `prototypes`. */
-  def argminSqDist(features: Column, prototypes: Array[Double], dim: Int): Column =
-    ColumnBridge.column(ArrayArgminSqDist(ColumnBridge.expression(features), prototypes, dim))
+  /** BMU index (or with `distance` its squared distance) of `features`
+    * among the row-major K×`dim` `prototypes`. */
+  def argminSqDist(features: Column, prototypes: Array[Double], dim: Int,
+                   distance: Boolean = false): Column =
+    ColumnBridge.column(ArrayArgminSqDist(ColumnBridge.expression(features), prototypes, dim, distance))
 
   /** Make `array_dot` / `array_sqdist` callable from `spark.sql(...)` text. */
   def registerSqlFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -19,8 +19,8 @@ object MlQueries {
     *
     * Fully oracle-checked: the fit is [[fit5Model]] (equal to the proven
     * `som_fit5` CTE chain's `p5`), so the final assignment is
-    * ANSI-expressible (chain + one argmin CTE). Scoring goes through
-    * [[SOMModel.transformNative]] — whole-stage codegen, no UDF barrier. */
+    * ANSI-expressible (chain + one argmin CTE). Scoring is `transform`'s
+    * native expression — whole-stage codegen, no UDF barrier. */
   def somFitPredict(s: SparkSession, dir: String): DataFrame = {
     val emb = embFeatures(s, dir)
     fit5Model(s, dir, emb).transformNative(emb).select(col("vec_id"), col("prediction"))
@@ -364,9 +364,9 @@ object MlQueries {
     * scoring stream with the trained model (`ann_serve_stream_live`'s
     * shape applied to the reference's own estimator): the model from
     * [[somFitStreamModel]]'s five-slice online run scores arriving
-    * points micro-batch by micro-batch with the fully-codegen argmin
-    * kernel ([[graft.som.SOMModel.transformNative]]'s expression — the
-    * native `ArrayArgminSqDist` over the K×d prototypes, min-index
+    * points micro-batch by micro-batch through
+    * [[graft.som.SOMModel.transform]] (the fully-codegen native
+    * `ArrayArgminSqDist` over the K×d prototypes, min-index
     * tie-break, no UDF, NO STATE: a scoring stream is stateless by
     * construction, so at 100 TB it scales
     * with executor count alone). Both halves sit under ONE DuckDB
@@ -380,10 +380,8 @@ object MlQueries {
     SomQueries.points(fork, dir).repartition(3).write.parquet(inDir)
     val stream = fork.readStream.schema("vec_id LONG, v ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val bmu = graft.functions.ArrayVectorExpressions.argminSqDist(col("v"),
-      graft.functions.ArrayArgminSqDist.flatten(protos.map(_.toArray).toSeq), protos(0).size)
-    val q = stream
-      .select(col("vec_id"), bmu.as("prediction"))
+    val q = new SOMModel("som_stream", protos).setFeaturesCol("v").transform(stream)
+      .select(col("vec_id"), col("prediction"))
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)
       .outputMode("append")

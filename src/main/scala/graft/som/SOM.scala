@@ -2,12 +2,13 @@ package graft.som
 
 import graft.functions.{ArrayArgminSqDist, HalfUp}
 import org.apache.spark.ml.Estimator
-import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Batch Self-Organizing Map estimator — Kohonen map trained with the
@@ -157,10 +158,17 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
 object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
   override def load(path: String): SOM = super.load(path)
 
-  /** The features column decoded to vectors once, for an iterative caller
-    * to cache. Sparse rows stay sparse (the BMU scan densifies per call). */
+  /** The features column (VectorUDT or array<float|double>) decoded to
+    * vectors once, for an iterative caller to cache. Sparse rows stay
+    * sparse (the BMU scan densifies per call). */
   private[graft] def points(dataset: Dataset[_], featuresCol: String): RDD[Vector] = {
-    val f = SOMModel.toVectorCol(dataset.schema(featuresCol).dataType, col(featuresCol))
+    val c = col(featuresCol)
+    val f = dataset.schema(featuresCol).dataType match {
+      case SQLDataTypes.VectorType => c
+      case ArrayType(DoubleType, _) => array_to_vector(c)
+      case ArrayType(FloatType, _) => array_to_vector(c.cast("array<double>"))
+      case other => throw new IllegalArgumentException(s"unsupported features type $other")
+    }
     dataset.select(f).rdd.map(_.getAs[Vector](0))
   }
 

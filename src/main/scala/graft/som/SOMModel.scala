@@ -1,28 +1,28 @@
 package graft.som
 
-import graft.functions.ArrayArgminSqDist
+import graft.functions.{ArrayArgminSqDist, ArrayVectorExpressions}
 import org.apache.spark.ml.Model
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.{Param, ParamMap}
-import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
+import org.apache.spark.ml.util.{MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 
 /** Fitted SOM: K = height×width prototype vectors + scoring/cost operators
   * (reference `som/SOMModel.scala`).
   *
-  * Scoring keeps the reference's UDF form (`som/SOMModel.scala:76-82`): the
-  * K×d prototype matrix rides the task closure, each row gets its BMU from
-  * the one argmin kernel [[ArrayArgminSqDist.nearest]] — an embarrassingly
-  * parallel map, no shuffle. `predict`, `computeCost` (one exact aggregate,
-  * `som/SOMModel.scala:92-97` minus the RDD detour) and [[transformNative]]
-  * run the same kernel, so all four agree on every row, NaN and ±∞ too.
+  * Scoring is one native Catalyst expression, `ArrayArgminSqDist`, not the
+  * reference's UDF (`som/SOMModel.scala:76-82`): the K×d prototype matrix
+  * rides the plan, each row gets its BMU from the one argmin kernel
+  * [[ArrayArgminSqDist.nearest]] — an embarrassingly parallel map, no
+  * shuffle. [[transform]] and [[computeCost]] (one exact aggregate of its
+  * distance output, `som/SOMModel.scala:92-97` minus the RDD detour) are
+  * that expression and `predict` calls the kernel, so all agree on every
+  * row, NaN and ±∞ too.
   *
-  * Persistence (absent in the reference, `README.md:91`): prototypes ↔
-  * parquet `(cell, prototype: array<double>)` via [[SOMModel.save]] /
-  * [[SOMModel.load]] — the same layout feeds oracle queries as a fixed
-  * prototype table.
+  * Persistence (absent in the reference, `README.md:91`): `MLWritable`
+  * `model.write.save(path)` / [[SOMModel.load]], as `PipelineModel` uses.
   */
 class SOMModel(override val uid: String, val prototypes: Array[Vector])
     extends Model[SOMModel] with SOMParams with MLWritable {
@@ -47,46 +47,38 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
     ArrayArgminSqDist.flatten(prototypes.map(_.toArray).toSeq)
 
   /** BMU index for a single point (reference `som/SOMModel.scala:88-90`).
-    * Here and in the UDFs a sparse point is densified for the call only. */
+    * A sparse point is densified for the call only. */
   def predict(features: Vector): Int =
     ArrayArgminSqDist.nearest(features.toArray, flatPrototypes, prototypes(0).size)._1
 
+  /** `ArrayArgminSqDist` over the features column: the BMU index, or with
+    * `distance` its squared distance. `array<float>` is cast first. */
+  private def scoreCol(schema: StructType, distance: Boolean): Column = {
+    val f = col($(featuresCol))
+    val v = schema($(featuresCol)).dataType match {
+      case ArrayType(FloatType, _) => f.cast("array<double>")
+      case ArrayType(DoubleType, _) | SQLDataTypes.VectorType => f
+      case other => throw new IllegalArgumentException(s"unsupported features type $other")
+    }
+    ArrayVectorExpressions.argminSqDist(v, flatPrototypes, prototypes(0).size, distance)
+  }
+
+  /** Appends each row's BMU index (null for a null row): no UDF, generated
+    * code whose size does not depend on K; batch and streaming alike. */
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
-    val protos = flatPrototypes
-    val dim = prototypes(0).size
-    val predictUdf = udf { (v: Vector) => ArrayArgminSqDist.nearest(v.toArray, protos, dim)._1 }
-    val f = SOMModel.toVectorCol(dataset.schema($(featuresCol)).dataType, col($(featuresCol)))
-    dataset.withColumn($(predictionCol), predictUdf(f))
+    dataset.withColumn($(predictionCol), scoreCol(dataset.schema, distance = false))
   }
 
-  /** Fully codegen scoring for array-typed features: one native
-    * `ArrayArgminSqDist` expression per row (exact sqdist to each of the K
-    * prototypes, first minimum wins — the same kernel as [[transform]]).
-    * No UDF, no serialization barrier, and generated code whose size does
-    * not depend on K. Works on batch and streaming DataFrames alike. */
-  def transformNative(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema, logging = true)
-    val v = dataset.schema($(featuresCol)).dataType match {
-      case ArrayType(DoubleType, _) => col($(featuresCol))
-      case ArrayType(FloatType, _) => col($(featuresCol)).cast("array<double>")
-      case other => throw new IllegalArgumentException(
-        s"transformNative requires an array feature column, got $other (use transform)")
-    }
-    dataset.withColumn($(predictionCol), graft.functions.ArrayVectorExpressions
-      .argminSqDist(v, flatPrototypes, prototypes(0).size))
-  }
+  /** [[transform]] under its earlier name. */
+  def transformNative(dataset: Dataset[_]): DataFrame = transform(dataset)
 
   /** Total quantization error: Σ min-squared-distance, one aggregate job;
-    * 0.0 on an empty dataset, like the reference's RDD sum. A row whose
-    * distances are all NaN adds NaN. */
-  def computeCost(dataset: Dataset[_]): Double = {
-    val protos = flatPrototypes
-    val dim = prototypes(0).size
-    val costUdf = udf { (v: Vector) => ArrayArgminSqDist.nearest(v.toArray, protos, dim)._2 }
-    val f = SOMModel.toVectorCol(dataset.schema($(featuresCol)).dataType, col($(featuresCol)))
-    dataset.select(coalesce(sum(costUdf(f)), lit(0.0)).as("cost")).head().getDouble(0)
-  }
+    * 0.0 on an empty dataset, like the reference's RDD sum. Null rows are
+    * skipped; a row whose distances are all NaN adds NaN. */
+  def computeCost(dataset: Dataset[_]): Double =
+    dataset.select(coalesce(sum(scoreCol(dataset.schema, distance = true)), lit(0.0)))
+      .head().getDouble(0)
 
   /** Prototypes as a small DataFrame `(cell, prototype)` — the broadcastable
     * dimension side for SQL-expressible scoring. */
@@ -94,13 +86,6 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
     import spark.implicits._
     prototypes.zipWithIndex
       .map { case (v, i) => (i, v.toArray) }.toSeq.toDF("cell", "prototype")
-  }
-
-  def save(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    prototypesDF(spark).repartition(1).write.mode("overwrite").parquet(s"$path/prototypes")
-    Seq(($(height), $(width))).toDF("height", "width")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
   override def transformSchema(schema: StructType): StructType =
@@ -175,28 +160,5 @@ object SOMModel extends MLReadable[SOMModel] {
         s"prototype count ${protos.length} does not match saved grid params")
       model
     }
-  }
-
-  /** Normalize a features column (VectorUDT or array<float|double>) to
-    * VectorUDT (SURVEY.md §7.3.6 conversion layer). */
-  private[graft] def toVectorCol(dt: DataType, c: Column): Column = dt match {
-    case t if t == org.apache.spark.ml.linalg.SQLDataTypes.VectorType => c
-    case ArrayType(DoubleType, _) => org.apache.spark.ml.functions.array_to_vector(c)
-    case ArrayType(FloatType, _) => org.apache.spark.ml.functions.array_to_vector(c.cast("array<double>"))
-    case other => throw new IllegalArgumentException(s"unsupported features type $other")
-  }
-
-  /** Load a model saved by [[SOMModel.save]] (grid dims come from the saved
-    * metadata). */
-  def load(spark: SparkSession, path: String): SOMModel = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (height, width) = (meta.getInt(0), meta.getInt(1))
-    val rows = spark.read.parquet(s"$path/prototypes").select("cell", "prototype").collect()
-    require(rows.length == height * width,
-      s"expected ${height * width} prototypes, found ${rows.length}")
-    val protos = new Array[Vector](rows.length)
-    rows.foreach(r => protos(r.getInt(0)) = Vectors.dense(r.getAs[Seq[Double]](1).toArray))
-    new SOMModel(org.apache.spark.ml.util.Identifiable.randomUID("som"), protos)
-      .setGrid(height, width)
   }
 }

@@ -202,8 +202,8 @@ class SOMSpec extends SparkSpec {
     val df = demoDF(100)
     val m = new SOM().setHeight(2).setWidth(3).setMaxIter(2).setSeed(4).fit(df)
     val path = java.nio.file.Files.createTempDirectory("sommodel").toString + "/m"
-    m.save(spark, path)
-    val loaded = SOMModel.load(spark, path)
+    m.write.overwrite().save(path)
+    val loaded = SOMModel.load(path)
     assert(loaded.getHeight == 2 && loaded.getWidth == 3)
     m.prototypes.zip(loaded.prototypes).foreach { case (a, b) => assert(Vectors.sqdist(a, b) == 0.0) }
   }
@@ -370,6 +370,112 @@ class SOMSpec extends SparkSpec {
     assert(large.contains("K=400, d=64"))
     assert(math.abs(large.length - small.length) <= 16,
       s"plan grew with K: ${small.length} -> ${large.length} chars")
+  }
+
+  /** `rows` as an `(id, features: vector)` frame in one partition, row order kept. */
+  private def vectorDF(rows: Seq[(Long, Vector)]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, v) => Row(i, v) }, 1),
+      StructType(Seq(StructField("id", LongType),
+        StructField("features", org.apache.spark.ml.linalg.SQLDataTypes.VectorType))))
+  }
+
+  private def predictions(out: org.apache.spark.sql.DataFrame): Map[Long, Option[Any]] =
+    out.select("id", "prediction").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+
+  test("transform's schema is transformSchema's: prediction nullable exactly when the features are") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+    import spark.implicits._
+    val model = new SOMModel("som_schema",
+      Array.tabulate(4)(i => Vectors.dense(Array.fill(3)(i.toDouble)))).setGrid(2, 2)
+    val arrays = Seq((1L, Array(0.1, 0.2, 0.3))).toDF("id", "features")
+    val notNull = spark.createDataFrame(java.util.Arrays.asList(Row(1L, Seq(0.1, 0.2, 0.3))),
+      StructType(Seq(StructField("id", org.apache.spark.sql.types.LongType),
+        StructField("features", ArrayType(DoubleType, containsNull = false), nullable = false))))
+    val inputs = Seq(
+      vectorDF(Seq(1L -> Vectors.dense(0.1, 0.2, 0.3))),
+      arrays,
+      arrays.select(col("id"), col("features").cast("array<float>").as("features")),
+      notNull)
+    for (df <- inputs) {
+      val out = model.transform(df)
+      assert(out.schema == model.transformSchema(df.schema), s"on ${df.schema.simpleString}")
+      assert(out.schema("prediction").nullable == df.schema("features").nullable)
+      assert(out.select("prediction").head().getInt(0) == 0)
+    }
+  }
+
+  test("null rows score null through transform on vector and array columns; computeCost skips them") {
+    import spark.implicits._
+    val model = new SOMModel("som_null",
+      Array.tabulate(4)(i => Vectors.dense(Array.fill(3)(i.toDouble)))).setGrid(2, 2)
+    val vec = vectorDF(Seq(1L -> Vectors.dense(0.9, 0.9, 0.9), 2L -> null,
+      3L -> Vectors.sparse(3, Array(2), Array(2.5))))
+    val arr = Seq[(Long, Array[Double])]((1L, Array(0.9, 0.9, 0.9)), (2L, null),
+      (3L, Array(0.0, 0.0, 2.5))).toDF("id", "features").repartition(2)
+    val want = Map(1L -> Some(1), 2L -> None, 3L -> Some(1))
+    for (df <- Seq(vec, arr)) {
+      val (gen, interp) = codegenAndInterpreted(predictions(model.transform(df)))
+      assert(gen == want && interp == want)
+    }
+    val (gen, interp) = codegenAndInterpreted(
+      (model.computeCost(vec), model.computeCost(vec.where("id <> 2"))))
+    val flat = ArrayArgminSqDist.flatten(model.prototypes.map(_.toArray).toSeq)
+    val kernelSum = Seq(Array(0.9, 0.9, 0.9), Array(0.0, 0.0, 2.5))
+      .foldLeft(0.0)((s, x) => s + ArrayArgminSqDist.nearest(x, flat, 3)._2)
+    for ((withNull, without) <- Seq(gen, interp)) {
+      assert(sameBits(withNull, without))
+      assert(sameBits(withNull, kernelSum))
+    }
+    assert(sameBits(model.computeCost(vec.where("id = 2")), 0.0))
+  }
+
+  test("VectorUDT scoring: dense and sparse rows match predict and the kernel's cost bit for bit") {
+    val rnd = new Random(17)
+    val d = 5
+    val protos = Array.fill(7)(Vectors.dense(Array.fill(d)(rnd.nextGaussian())))
+    val model = new SOMModel("som_vec", protos :+ Vectors.zeros(d) :+ protos(2)).setGrid(3, 3)
+    val rows: Seq[Vector] = Seq(
+      Vectors.sparse(d, Array.empty[Int], Array.empty[Double]),
+      Vectors.sparse(d, Array(d - 1), Array(1.75)),
+      Vectors.sparse(d, Array(0, 2), Array(-0.5, 3.0)),
+      protos(2).copy, protos(2).toSparse) ++
+      Seq.fill(40)(Vectors.dense(Array.fill(d)(rnd.nextGaussian()))) ++
+      Seq.fill(40)(Vectors.dense(Array.fill(d)(if (rnd.nextBoolean()) rnd.nextGaussian() else 0.0)).toSparse)
+    val df = vectorDF(rows.zipWithIndex.map { case (v, i) => i.toLong -> v })
+    val want = rows.zipWithIndex.map { case (v, i) => i.toLong -> Some(model.predict(v)) }.toMap
+    assert(want(0L).contains(7) && want(3L).contains(2) && want(4L).contains(2))
+    val (gen, interp) = codegenAndInterpreted(predictions(model.transform(df)))
+    assert(gen == want)
+    assert(interp == want)
+    val flat = ArrayArgminSqDist.flatten(model.prototypes.map(_.toArray).toSeq)
+    val rowOrderSum = rows.foldLeft(0.0)((s, v) => s + ArrayArgminSqDist.nearest(v.toArray, flat, d)._2)
+    val (genCost, interpCost) = codegenAndInterpreted(model.computeCost(df))
+    assert(sameBits(genCost, rowOrderSum) && sameBits(interpCost, rowOrderSum))
+    for (bad <- Seq(Vectors.dense(0.5, 0.5, 0.5), Vectors.sparse(3, Array(1), Array(2.0))))
+      codegenAndInterpreted {
+        val e = intercept[Exception](model.transform(vectorDF(Seq(1L -> bad))).collect())
+        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains("has 3 elements but the prototypes have 5")),
+          s"unexpected error: $e")
+      }
+  }
+
+  test("transform's executed plan is UDF-free on vector and array input") {
+    import spark.implicits._
+    val model = new SOMModel("som_plan_udt",
+      Array.tabulate(4)(i => Vectors.dense(Array.fill(3)(i.toDouble)))).setGrid(2, 2)
+    val inputs = Seq(vectorDF(Seq(1L -> Vectors.dense(0.1, 0.2, 0.3))),
+      Seq((1L, Array(0.1, 0.2, 0.3))).toDF("id", "features").repartition(2))
+    for (df <- inputs) {
+      val plan = model.transform(df).queryExecution.executedPlan.toString
+      assert(!plan.contains("UDF("), plan)
+      assert(plan.contains("array_argmin_sqdist"), plan)
+    }
   }
 
   test("scoring a streaming DataFrame works (streaming model inference)") {

@@ -22,6 +22,14 @@ if grep -rn "Math\.fma" src/main; then
   exit 1
 fi
 
+echo "== one SOM scoring path =="
+# transform and computeCost are the native ArrayArgminSqDist expression;
+# a UDF in the SOM package would be a second scoring path
+if grep -rn "udf" src/main/scala/graft/som/; then
+  echo "udf under src/main/scala/graft/som: score through ArrayArgminSqDist"
+  exit 1
+fi
+
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests:|All tests" | tail -2
 
