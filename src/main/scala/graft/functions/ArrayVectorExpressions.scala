@@ -89,8 +89,9 @@ case class ArraySqDist(left: Expression, right: Expression) extends ArrayFoldExp
   *
   * Both eval paths run the one BMU kernel, [[ArrayArgminSqDist.nearest]]:
   * its argmin orders exactly like `array_position(d, array_min(d))` and the
-  * oracle's `row_number() OVER (ORDER BY d2, cell)`. A null row yields
-  * null; a row whose length is not d throws.
+  * oracle's `row_number() OVER (ORDER BY d2, cell)`. A null row, or an
+  * `array<double>` row holding a null element, yields null; a row whose
+  * length is not d throws.
   */
 case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: Int,
                              distance: Boolean = false)
@@ -100,6 +101,10 @@ case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: 
 
   override def dataType: DataType = if (distance) DoubleType else IntegerType
 
+  /** Rows of an array type that admits null elements are scanned for them. */
+  private def elementNulls: Boolean = PartialFunction.cond(child.dataType) { case ArrayType(_, n) => n }
+  override def nullable: Boolean = child.nullable || elementNulls
+
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) | SQLDataTypes.VectorType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
@@ -108,14 +113,18 @@ case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: 
 
   override protected def nullSafeEval(v: Any): Any = {
     import ArrayArgminSqDist._
-    val x = v match { case r: InternalRow => features(r); case a: ArrayData => features(a) }
-    if (distance) minSqDist(x, prototypes, dim) else argmin(x, prototypes, dim)
+    val x = v match { case r: InternalRow => features(r); case a: ArrayData => features(a, elementNulls) }
+    if (x == null) null else if (distance) minSqDist(x, prototypes, dim) else argmin(x, prototypes, dim)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val p = ctx.addReferenceObj("prototypes", prototypes, "double[]")
     val (o, out) = ("graft.functions.ArrayArgminSqDist", if (distance) "minSqDist" else "argmin")
-    defineCodeGen(ctx, ev, v => s"$o.$out($o.features($v), $p, $dim)")
+    val x = ctx.freshName("x")
+    val nulls = if (child.dataType.isInstanceOf[ArrayType]) s", $elementNulls" else ""
+    val onNull = if (elementNulls) s"if ($x == null) ${ev.isNull} = true; else " else ""
+    nullSafeCodeGen(ctx, ev, v =>
+      s"double[] $x = $o.features($v$nulls);\n$onNull${ev.value} = $o.$out($x, $p, $dim);")
   }
 
   override def toString: String =
@@ -133,8 +142,13 @@ object ArrayArgminSqDist {
     Array.concat(prototypes: _*)
   }
 
-  /** One `array<double>` row, copied out once (d doubles). */
-  def features(x: ArrayData): Array[Double] = x.toDoubleArray()
+  /** One `array<double>` row, copied out once (d doubles); null when `nulls`
+    * is set and the row holds a null element, which the copy reads as 0.0. */
+  def features(x: ArrayData, nulls: Boolean): Array[Double] = {
+    var i = 0
+    while (nulls && i < x.numElements()) { if (x.isNullAt(i)) return null; i += 1 }
+    x.toDoubleArray()
+  }
 
   /** One VectorUDT row `(type, size, indices, values)` as `Vector.toArray`
     * gives it: dense values copied once, a sparse row densified. */

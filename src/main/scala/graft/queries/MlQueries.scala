@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.som.{SOM, SOMModel}
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -286,7 +286,7 @@ object MlQueries {
   /** The deterministic 4-decimal init (embeddings vec_id < 9) both fit
     * forms start from. */
   private def initProtos(s: SparkSession, dir: String): Array[Vector] =
-    SomQueries.protoVectors(s, dir, 4)
+    SomQueries.protoMatrix(s, dir, decimals = 4)._2.map(Vectors.dense)
 
   /** The estimator run behind `som_fit5` and `som_fit_predict` over
     * [[embFeatures]]: a 3×3 map warm-started from [[initProtos]],

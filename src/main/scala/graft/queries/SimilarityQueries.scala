@@ -27,29 +27,13 @@ object SimilarityQueries {
 
   /** (vec_id, v, cell): corpus with IVF cell assignment (nearest prototype
     * among the first `cells` embedding rows — data-sampled coarse centroids,
-    * the classic IVF quantizer). */
+    * the classic IVF quantizer): one projection of [[SomQueries.nearest]],
+    * `cell` the nearest centroid's proto_id. */
   // private[graft]: AnnServeStreamSpec rebuilds the serve layout when its
   // session's artifact cache misses (the batch-replay idempotence test)
   private[graft] def assigned(s: SparkSession, dir: String, cells: Int = K9): DataFrame =
-    assignAgainst(pts(s, dir), ivfProtos(s, dir, cells))
-
-  /** The frozen coarse quantizer itself: (proto_id, c). Factored out so the
-    * STREAMING maintenance path can assign each micro-batch against the
-    * exact same centroids the base layout used. */
-  private def ivfProtos(s: SparkSession, dir: String, cells: Int = K9): DataFrame =
-    pts(s, dir).where(col("vec_id") < cells)
-      .select(col("vec_id").cast("long").as("proto_id"), col("v").as("c"))
-
-  /** Nearest-centroid assignment of an ARBITRARY row set (vec_id, v) —
-    * the math of [[assigned]] applied to any frame (full corpus, a delta,
-    * or one micro-batch). */
-  private def assignAgainst(rows: DataFrame, protos: DataFrame): DataFrame =
-    rows.crossJoin(broadcast(protos))
-      .select(col("vec_id"), col("v"), col("proto_id"),
-        graft.functions.VectorSql.sqDistFast(col("v"), col("c")).as("d2"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("proto_id"))).as("m"), first(col("v")).as("v"))
-      .select(col("vec_id"), col("v"), col("m.proto_id").as("cell"))
+    pts(s, dir).select(col("vec_id"), col("v"),
+      SomQueries.nearest(col("v"), SomQueries.protoMatrix(s, dir, cells))._1.as("cell"))
 
   /** Lloyd iterations for the TRAINED coarse quantizer (r8 verdict #4):
     * fixed and small — a coarse quantizer needs balanced cells, not
@@ -206,8 +190,7 @@ object SimilarityQueries {
   }
 
   def annIvf(s: SparkSession, dir: String): DataFrame = {
-    val centroids = SomQueries.protos(s, dir)
-      .select(col("proto_id").as("cell"), col("c"))
+    val centroids = SomQueries.protos(s, dir).withColumnRenamed("proto_id", "cell")
     Similarity.ivfTopK(assigned(s, dir), centroids, probes(s, dir), K, NProbe)
   }
 
@@ -222,8 +205,7 @@ object SimilarityQueries {
   val SpillCells = 2
   val SpillNProbe = 1
   def annIvfMultiprobe(s: SparkSession, dir: String): DataFrame = {
-    val centroids = SomQueries.protos(s, dir)
-      .select(col("proto_id").as("cell"), col("c"))
+    val centroids = SomQueries.protos(s, dir).withColumnRenamed("proto_id", "cell")
     Similarity.ivfTopKSpill(pts(s, dir), centroids, probes(s, dir), K,
       nprobe = SpillNProbe, spill = SpillCells)
   }
@@ -237,8 +219,7 @@ object SimilarityQueries {
     * probe reads `1/K` of the directories. Same oracle as
     * `ann_ivf_multiprobe`: the layout hop must not change a neighbor. */
   def annIvfMultiprobePruned(s: SparkSession, dir: String): DataFrame = {
-    val centroids = SomQueries.protos(s, dir)
-      .select(col("proto_id").as("cell"), col("c"))
+    val centroids = SomQueries.protos(s, dir).withColumnRenamed("proto_id", "cell")
     def cosC(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.VectorSql.dotFast(a, b) /
         (graft.functions.VectorSql.norm2Fast(a) * graft.functions.VectorSql.norm2Fast(b))
@@ -661,8 +642,7 @@ object SimilarityQueries {
     * cell tie-break). */
   private def probeCellsFor(s: SparkSession, dir: String,
                             probesDf: DataFrame): DataFrame = {
-    val centroids = SomQueries.protos(s, dir)
-      .select(col("proto_id").as("cell"), col("c"))
+    val centroids = SomQueries.protos(s, dir).withColumnRenamed("proto_id", "cell")
     val cellRank = Window.partitionBy(col("probe_id")).orderBy(col("cd2"), col("cell"))
     probesDf.crossJoin(broadcast(centroids))
       .select(col("probe_id"), col("p"), col("cell"),
@@ -721,14 +701,10 @@ object SimilarityQueries {
   def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
     val p = pts(s, dir)
     val cells = centroidCount(p.count())
-    val a = assigned(s, dir, cells)
+    val (cell, d2) = SomQueries.nearest(col("v"), SomQueries.protoMatrix(s, dir, cells))
     // localCheckpoint: three consumers below (pair join, CC node list, rep
     // join) would each re-run the corpus × √N-prototype argmin otherwise
-    val withD2 = a.join(broadcast(p.where(col("vec_id") < cells)
-        .select(col("vec_id").cast("long").as("proto_id"), col("v").as("c"))),
-        col("cell") === col("proto_id"))
-      .select(col("vec_id"), col("v"), col("cell"),
-        graft.functions.VectorSql.sqDistFast(col("v"), col("c")).as("d2"))
+    val withD2 = p.select(col("vec_id"), col("v"), cell.as("cell"), d2.as("d2"))
       .localCheckpoint(eager = true)
     val pairs = Similarity.semanticPairs(withD2, SemTau)
     val cc = graft.operators.Dedup.keepListConverged(
@@ -769,12 +745,8 @@ object SimilarityQueries {
     val pairs = Similarity.lshNearDupPairs(p, SemTau, nBits = 8 * bpb, bands = 8)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val cells = centroidCount(n)
-    val a = assigned(s, dir, cells)
-    val withD2 = a.join(broadcast(p.where(col("vec_id") < cells)
-        .select(col("vec_id").cast("long").as("proto_id"), col("v").as("c"))),
-        col("cell") === col("proto_id"))
-      .select(col("vec_id"), col("cell"),
-        graft.functions.VectorSql.sqDistFast(col("v"), col("c")).as("d2"))
+    val (cell, d2) = SomQueries.nearest(col("v"), SomQueries.protoMatrix(s, dir, cells))
+    val withD2 = p.select(col("vec_id"), cell.as("cell"), d2.as("d2"))
       .localCheckpoint(eager = true)
     val cc = graft.operators.Dedup.keepListConverged(
       withD2.select(col("vec_id")), "vec_id", pairs)
@@ -966,8 +938,7 @@ object SimilarityQueries {
       // the spilled assignment once and builds every index flavor from it.
       val p = pts(s, dir)
       val cells = centroidCount(p.count())
-      val protos = p.where(col("vec_id") < cells)
-        .select(col("vec_id").cast("long").as("cell"), col("v").as("c"))
+      val protos = SomQueries.protos(s, dir, cells).withColumnRenamed("proto_id", "cell")
       val cosC = graft.functions.VectorSql.dotFast(col("v"), col("c")) /
         (graft.functions.VectorSql.norm2Fast(col("v")) *
           graft.functions.VectorSql.norm2Fast(col("c")))
@@ -1072,8 +1043,7 @@ object SimilarityQueries {
   private[graft] def hierEntryPairs(s: SparkSession, dir: String): DataFrame = {
     val p = pts(s, dir)
     val cells = centroidCount(p.count())
-    val protos = p.where(col("vec_id") < cells)
-      .select(col("vec_id").cast("long").as("cell"), col("v").as("c"))
+    val protos = SomQueries.protos(s, dir, cells).withColumnRenamed("proto_id", "cell")
     val cosC = graft.functions.VectorSql.dotFast(col("p"), col("c")) /
       (graft.functions.VectorSql.norm2Fast(col("p")) *
         graft.functions.VectorSql.norm2Fast(col("c")))
@@ -1440,7 +1410,7 @@ object SimilarityQueries {
     * Yesterday's corpus (all but the newest n/10 vectors) is the immutable
     * base layout (`partitionBy(cell)`, the `ann_ivf_pruned` artifact
     * discipline); each micro-batch of arrivals is assigned to the SAME
-    * frozen coarse centroids ([[assignAgainst]] over [[ivfProtos]]) and
+    * frozen coarse centroids (the [[assigned]] projection) and
     * lands as its own SEGMENT directory `batch=<id>/cell=<c>/…` — the
     * LSM shape: base + ordered immutable segments, compaction
     * (= [[graft.sources.Sources.appendIvfLayout]], the `ann_ivf_delta`
@@ -1482,12 +1452,13 @@ object SimilarityQueries {
     // trigger, so the gated run genuinely crosses micro-batch boundaries
     pts(fork, dir).where(col("vec_id") >= cut)
       .select(col("vec_id"), col("v")).repartition(3).write.parquet(inDir)
-    val protos = ivfProtos(fork, dir)
+    // the frozen centroids, collected once: every batch lands where a rebuild would put it
+    val (cell, _) = SomQueries.nearest(col("v"), SomQueries.protoMatrix(fork, dir, K9))
     val stream = fork.readStream.schema("vec_id LONG, v ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1).parquet(inDir)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        assignAgainst(batch, protos)
+        batch.select(col("vec_id"), col("v"), cell.as("cell"))
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$segDir/batch=$batchId")
         ()

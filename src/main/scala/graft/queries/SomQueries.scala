@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.HalfUp
+import graft.functions.{ArrayArgminSqDist, HalfUp}
+import graft.functions.ArrayVectorExpressions.argminSqDist
 import graft.functions.VectorSql._
 import graft.som.{Grid, SOM}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
@@ -12,14 +13,13 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
   * correctness never depends on sampling, each checked against a relational
   * DuckDB oracle.
   *
-  * Two shapes:
-  *  - scoring (BMU assignment, quantization cost, map quality, U-matrix) is
-  *    relational: the broadcast of the model becomes a broadcast hash join of
-  *    the 9-row prototypes DataFrame, the per-point argmin a map-side
-  *    `min(struct(d2, proto_id))` partial aggregate over vec_id (with K·N
-  *    join rows the partial agg collapses to N rows before any exchange),
-  *    and the reference's accumulator cost an exact agg column (reference
-  *    `som/SOMModel.scala:76-97`);
+  * Three shapes:
+  *  - BMU assignment and quantization cost project the model's scoring
+  *    kernel ([[nearest]]) over the points: no join, no shuffle (reference
+  *    `som/SOMModel.scala:76-97`); `som_assign_sql` keeps the relational
+  *    cross join + `min(struct(d2, proto_id))` as SQL text;
+  *  - map quality and the U-matrix are relational (a rank-2 window, a 9×9
+  *    prototype self-join);
   *  - the update side (per-cell stats, one neighborhood-weighted update)
   *    runs the estimator's own kernel, [[graft.som.SOM.cellStats]] /
   *    [[graft.som.SOM.step]]: one scan with no shuffle, K×d partials merged
@@ -38,16 +38,28 @@ object SomQueries {
   def points(s: SparkSession, dir: String): DataFrame =
     emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
 
-  /** prototypes: (proto_id, c: array<double>) — 9 deterministic rows. */
-  def protos(s: SparkSession, dir: String): DataFrame =
-    emb(s, dir).where(col("vec_id") < K)
-      .select(col("vec_id").cast("long").as("proto_id"), asDouble(col("embedding")).as("c"))
+  /** The first `n` embedding rows as prototypes (SOM cells, IVF centroids):
+    * (proto_id: long, c: array<double>). */
+  def protos(s: SparkSession, dir: String, n: Int = K): DataFrame =
+    points(s, dir).where(col("vec_id") < n)
+      .select(col("vec_id").cast("long").as("proto_id"), col("v").as("c"))
 
-  /** The fixed prototypes as vectors in proto_id order, each component
-    * rounded to `decimals` (-1 = off). */
-  def protoVectors(s: SparkSession, dir: String, decimals: Int = -1): Array[Vector] =
-    protos(s, dir).collect().sortBy(_.getLong(0))
-      .map(r => Vectors.dense(r.getAs[Seq[Double]]("c").toArray.map(HalfUp.round(decimals))))
+  /** [[protos]] collected once in proto_id order: the ids and the rows,
+    * each component rounded to `decimals` (-1 = off). */
+  def protoMatrix(s: SparkSession, dir: String, n: Int = K,
+                  decimals: Int = -1): (Array[Long], Array[Array[Double]]) = {
+    val rows = protos(s, dir, n).collect().sortBy(_.getLong(0))
+    (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray.map(HalfUp.round(decimals))))
+  }
+
+  /** (id, squared distance) of the prototype in `protos` nearest to the
+    * `array<double>` column `v`: the BMU kernel [[ArrayArgminSqDist]], its
+    * index read back through the ids. Same bits as `min(struct(d2, proto_id))`
+    * over `array_sqdist`: lowest id on ties, NaN above every number. */
+  def nearest(v: Column, protos: (Array[Long], Array[Array[Double]])): (Column, Column) = {
+    val (flat, dim) = (ArrayArgminSqDist.flatten(protos._2.toSeq), protos._2.head.length)
+    (typedLit(protos._1).getItem(argminSqDist(v, flat, dim)), argminSqDist(v, flat, dim, distance = true))
+  }
 
   /** A K×d prototype matrix as (cell, dim, nv) rows. */
   def cellRows(s: SparkSession, protos: Seq[Vector]): DataFrame = {
@@ -62,22 +74,18 @@ object SomQueries {
     points(s, dir).crossJoin(broadcast(protos(s, dir)))
       .select(col("vec_id"), col("proto_id"), sqDistFast(col("v"), col("c")).as("d2"))
 
-  /** (vec_id, bmu, d2) best-matching-unit per point, min-id tie-break —
-    * relational twin of reference `findClosest` (`som/SOM.scala:306-326`). */
-  def assign(s: SparkSession, dir: String): DataFrame =
-    assignRaw(s, dir).select(col("vec_id"), col("bmu"), round(col("d2"), 4).as("d2r"))
-
-  /** Unrounded assignment for internal reuse. */
-  private def assignRaw(s: SparkSession, dir: String): DataFrame =
-    dists(s, dir)
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("proto_id"))).as("m"))
-      .select(col("vec_id"), col("m.proto_id").as("bmu"), col("m.d2").as("d2"))
+  /** (vec_id, bmu, d2r) best-matching-unit per point, min-id tie-break —
+    * reference `findClosest` (`som/SOM.scala:306-326`) as one projection. */
+  def assign(s: SparkSession, dir: String): DataFrame = {
+    val (bmu, d2) = nearest(col("v"), protoMatrix(s, dir))
+    points(s, dir).select(col("vec_id"), bmu.as("bmu"), round(d2, 4).as("d2r"))
+  }
 
   /** Global quantization error — reference `computeCost`
     * (`som/SOMModel.scala:92-97`) as one exact aggregate (no accumulator). */
   def cost(s: SparkSession, dir: String): DataFrame =
-    assignRaw(s, dir).agg(count(lit(1)).as("n"), round(sum(col("d2")), 2).as("cost"))
+    points(s, dir).agg(count(lit(1)).as("n"),
+      round(sum(nearest(col("v"), protoMatrix(s, dir))._2), 2).as("cost"))
 
   /** Per-cell componentwise sums + counts — the partial-agg step of training
     * (reference `som/SOM.scala:192-212`), read off the estimator's
@@ -85,7 +93,7 @@ object SomQueries {
     * decimals. */
   def cellStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val agg = SOM.cellStats(SOM.points(points(s, dir), "v"), protoVectors(s, dir))
+    val agg = SOM.cellStats(SOM.points(points(s, dir), "v"), protoMatrix(s, dir)._2.map(Vectors.dense))
     (for (c <- 0 until K if agg.counts(c) > 0; (x, d) <- agg.sums(c).zipWithIndex)
       yield (c.toLong, d, HalfUp.round(4)(x), agg.counts(c))).toDF("bmu", "dim", "s", "n")
   }
@@ -112,7 +120,7 @@ object SomQueries {
   /** One [[SOM.step]] from the fixed prototypes: sums rounded to 6
     * decimals, prototypes to 4 (the oracle's round(sum, 6) and round(nv, 4)). */
   private def updateStepTopo(s: SparkSession, dir: String, topology: String): DataFrame = {
-    val (next, _) = SOM.step(SOM.points(points(s, dir), "v"), protoVectors(s, dir),
+    val (next, _) = SOM.step(SOM.points(points(s, dir), "v"), protoMatrix(s, dir)._2.map(Vectors.dense),
       Grid.neighborhood("gaussian", topology, K / Width, Width, T), sumDecimals = 6, protoDecimals = 4)
     cellRows(s, next.toSeq)
       .select(col("cell").cast("long").as("cell"), col("dim"), col("nv"))

@@ -102,7 +102,8 @@ private[graft] trait SOMParams extends Params {
   /** Schema check + append of the prediction column (reference
     * `som/SOMParams.scala:95-97` → `util/SchemaUtils.scala:85-103`):
     * fails if the prediction column already exists; empty predictionCol
-    * disables the append. A null features row scores null. */
+    * disables the append. A null features row, or an array row holding a
+    * null element, scores null. */
   protected def validateAndTransformSchema(schema: StructType): StructType = {
     val f = schema($(featuresCol))
     require(isFeatureType(f.dataType),
@@ -111,7 +112,8 @@ private[graft] trait SOMParams extends Params {
     else {
       require(!schema.fieldNames.contains($(predictionCol)),
         s"prediction column '${$(predictionCol)}' already exists")
-      StructType(schema.fields :+ StructField($(predictionCol), IntegerType, nullable = f.nullable))
+      val nullable = f.nullable || PartialFunction.cond(f.dataType) { case ArrayType(_, n) => n }
+      StructType(schema.fields :+ StructField($(predictionCol), IntegerType, nullable))
     }
   }
 }

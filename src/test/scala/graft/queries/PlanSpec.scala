@@ -12,12 +12,13 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("som_assign: prototype side broadcast, filter pushed, partial agg before shuffle") {
+  test("som_assign: one array_argmin_sqdist projection, no join, no exchange") {
     val p = plan(SomQueries.assign(spark, dir))
-    assert(p.contains("BroadcastExchange"), "prototypes must broadcast")
-    assert(p.contains("LessThan(vec_id,9)"), "proto filter must reach parquet scan")
-    assert(p.contains("partial_min"), "argmin must partial-aggregate map-side")
-    assert(!p.contains("CartesianProduct"), "cross join must build on the broadcast side")
+    assert(p.contains("array_argmin_sqdist"), s"the BMU must be the kernel expression:\n$p")
+    assert(!p.contains("Exchange") && !p.contains("Join") && !p.contains("CartesianProduct"),
+      s"the assignment must be one projection over the points scan:\n$p")
+    assert(p.contains("ReadSchema: struct<vec_id:bigint,embedding:array<float>>"),
+      "column pruning must reach the parquet scan")
   }
 
   test("som_assign: scan reads only the needed columns") {

@@ -234,18 +234,28 @@ class SOMSpec extends SparkSpec {
     assert(out.count() == 300)
   }
 
-  test("transformNative matches the UDF scoring path exactly on array features") {
+  test("array and VectorUDT scoring equal a brute-force argmin on the embeddings") {
+    import org.apache.spark.ml.functions.array_to_vector
+    import org.apache.spark.sql.functions.col
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
-      .withColumnRenamed("embedding", "features")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("features"))
+    val vec = emb.select(col("vec_id"), array_to_vector(col("features")).as("features"))
     val model = new SOM().setHeight(3).setWidth(3).setMaxIter(3).setSeed(11).fit(emb)
-    val udfPath = model.transform(emb).select("vec_id", "prediction").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val nativePath = model.transformNative(emb).select("vec_id", "prediction").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(udfPath == nativePath)
-    // and the native plan is UDF-free
-    val plan = model.transformNative(emb).queryExecution.executedPlan.toString
-    assert(!plan.contains("UDF("))
+    val protos = model.prototypes
+    val rows = emb.collect().map(r => r.getLong(0) -> Vectors.dense(r.getSeq[Double](1).toArray))
+    val brute = rows.map { case (id, v) => id -> protos.indices.minBy(c => (Vectors.sqdist(protos(c), v), c)) }.toMap
+    val bruteCost = rows.map { case (_, v) => protos.map(Vectors.sqdist(_, v)).min }.sum
+    def scored(df: org.apache.spark.sql.DataFrame) =
+      model.transform(df).select("vec_id", "prediction").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // features(ArrayData) and features(InternalRow): the two decode paths
+    for (df <- Seq(emb, vec)) {
+      val (gen, interp) = codegenAndInterpreted((scored(df), model.computeCost(df)))
+      assert(gen._1 == brute && interp._1 == brute)
+      assert(sameBits(gen._2, interp._2))
+      assert(math.abs(gen._2 - bruteCost) <= 1e-9 * bruteCost)
+    }
+    assert(sameBits(model.computeCost(emb), model.computeCost(vec)))
+    assert(brute.values.toSet.size > 1)
   }
 
   /** Runs `body` once with codegen that must compile (no silent
@@ -285,7 +295,12 @@ class SOMSpec extends SparkSpec {
       val (gen, interp) = codegenAndInterpreted(scored(model.transformNative(emb)))
       assert(gen == brute)
       assert(interp == brute)
-      assert(scored(model.transform(emb)) == brute)
+      // the same rows as VectorUDT: the other decode path of the expression
+      val vec = emb.select(col("vec_id"),
+        org.apache.spark.ml.functions.array_to_vector(col("features")).as("features"))
+      val (vecGen, vecInterp) = codegenAndInterpreted(scored(model.transform(vec)))
+      assert(vecGen == brute)
+      assert(vecInterp == brute)
       // duplicate prototypes resolve to the lower index, and ties did occur
       val dups = (k / 2 until k).filter(_ % 2 == 1).toSet
       assert(!brute.values.exists(dups))
@@ -432,6 +447,34 @@ class SOMSpec extends SparkSpec {
       assert(sameBits(withNull, kernelSum))
     }
     assert(sameBits(model.computeCost(vec.where("id = 2")), 0.0))
+  }
+
+  test("a null element in an array row scores null on both outputs; computeCost skips the row") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+    val model = new SOMModel("som_null_elem", Array(Vectors.dense(0.0, 0.0), Vectors.dense(5.0, 5.0)))
+    val rows = Seq(Row(1L, Seq(5.0, null)), Row(2L, Seq(null, null)), Row(3L, Seq(4.0, 4.5)))
+    val doubles = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("id", LongType),
+        StructField("features", ArrayType(DoubleType, containsNull = true), nullable = false))))
+    val floats = doubles.select(col("id"), col("features").cast("array<float>").as("features"))
+    val flat = ArrayArgminSqDist.flatten(model.prototypes.map(_.toArray).toSeq)
+    val distance = graft.functions.ArrayVectorExpressions
+      .argminSqDist(col("features").cast("array<double>"), flat, 2, distance = true)
+    for (df <- Seq(doubles, floats)) {
+      // the features field is not nullable: only its null elements make prediction nullable
+      assert(model.transformSchema(df.schema)("prediction").nullable)
+      assert(model.transform(df).schema == model.transformSchema(df.schema))
+      val (gen, interp) = codegenAndInterpreted((predictions(model.transform(df)),
+        df.select(col("id"), distance).collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap,
+        model.computeCost(df)))
+      for ((cells, d2, cost) <- Seq(gen, interp)) {
+        assert(cells == Map(1L -> None, 2L -> None, 3L -> Some(1)))
+        assert(d2 == Map(1L -> None, 2L -> None, 3L -> Some(1.25)))
+        assert(sameBits(cost, 1.25))
+      }
+    }
   }
 
   test("VectorUDT scoring: dense and sparse rows match predict and the kernel's cost bit for bit") {

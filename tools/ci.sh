@@ -30,6 +30,16 @@ if grep -rn "udf" src/main/scala/graft/som/; then
   exit 1
 fi
 
+echo "== one nearest-prototype kernel =="
+# the catalog's BMU and IVF-cell assignment project ArrayArgminSqDist
+# (SomQueries.nearest); a cross join + min(struct(d2, ...)) argmin would be a
+# second copy of its fold, tie-break and NaN order (som_assign_sql keeps
+# that form as SQL text, which this pattern does not match)
+if grep -rn 'min(struct(col("d2")' src/main; then
+  echo 'min(struct(col("d2") ...)) under src/main: assign through SomQueries.nearest'
+  exit 1
+fi
+
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests:|All tests" | tail -2
 
