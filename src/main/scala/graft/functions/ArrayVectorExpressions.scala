@@ -29,6 +29,14 @@ abstract class ArrayFoldExpression extends BinaryExpression {
       s"$prettyName requires two array<double> arguments, got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
+
+  /** Arrays of a type that admits null elements are scanned for them: a
+    * null element scores null, as in `ArrayArgminSqDist`. */
+  private def elementNulls(e: Expression): Boolean =
+    PartialFunction.cond(e.dataType) { case ArrayType(_, n) => n }
+  override def nullable: Boolean =
+    left.nullable || right.nullable || elementNulls(left) || elementNulls(right)
+
   /** Java source for one element step: updates accumulator `s` from `a`,`b`,`i`. */
   protected def stepJava(s: String, a: String, b: String, i: String): String
   protected def stepEval(x: ArrayData, y: ArrayData, i: Int): Double
@@ -37,24 +45,42 @@ abstract class ArrayFoldExpression extends BinaryExpression {
     val x = av.asInstanceOf[ArrayData]
     val y = bv.asInstanceOf[ArrayData]
     val n = x.numElements()
+    if (y.numElements() != n) throw lengthMismatch(n, y.numElements())
+    val (xNulls, yNulls) = (elementNulls(left), elementNulls(right))
     var s = 0.0
     var i = 0
-    while (i < n) { s += stepEval(x, y, i); i += 1 }
+    while (i < n) {
+      if ((xNulls && x.isNullAt(i)) || (yNulls && y.isNullAt(i))) return null
+      s += stepEval(x, y, i)
+      i += 1
+    }
     s
   }
 
+  /** Arrays of different lengths are an error, not a fold over the shorter
+    * (or past its end). */
+  def lengthMismatch(n: Int, m: Int): IllegalArgumentException =
+    new IllegalArgumentException(s"$prettyName: the arrays have $n and $m elements")
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
+      val Seq(i, n, s, hasNull) = Seq("i", "n", "s", "hasNull").map(ctx.freshName)
+      val self = ctx.addReferenceObj("fold", this)
+      val nullTests = Seq(left -> a, right -> b).collect { case (e, v) if elementNulls(e) => s"$v.isNullAt($i)" }
+      val (onNull, result) =
+        if (nullTests.isEmpty) ("", s"${ev.value} = $s;")
+        else (s"if (${nullTests.mkString(" || ")}) { $hasNull = true; break; }",
+          s"if ($hasNull) ${ev.isNull} = true; else ${ev.value} = $s;")
       s"""
          |final int $n = $a.numElements();
+         |if ($b.numElements() != $n) throw $self.lengthMismatch($n, $b.numElements());
          |double $s = 0.0;
+         |boolean $hasNull = false;
          |for (int $i = 0; $i < $n; $i++) {
+         |  $onNull
          |  ${stepJava(s, a, b, i)}
          |}
-         |${ev.value} = $s;
+         |$result
        """.stripMargin
     })
 }
@@ -83,21 +109,20 @@ case class ArraySqDist(left: Expression, right: Expression) extends ArrayFoldExp
 /** The nearest of K prototypes (squared L2) to an `array<double>` or
   * VectorUDT row, read in place: the SOM best-matching-unit search as ONE
   * expression, giving the cell index (`int`) or with `distance` its
-  * squared distance (`double`). The K×d prototypes are one row-major
-  * `double[]` handed to codegen as a reference object, so the generated
-  * code and the plan string are the same size for any K.
+  * squared distance (`double`). The prototypes are a [[BmuFold]] handed to
+  * codegen as a reference object, so the generated code and the plan string
+  * are the same size for any K; generated code keeps one K-double distance
+  * buffer per instance (a partition), interpreted eval allocates one per
+  * row.
   *
-  * Both eval paths run the one BMU kernel, [[ArrayArgminSqDist.nearest]]:
-  * its argmin orders exactly like `array_position(d, array_min(d))` and the
-  * oracle's `row_number() OVER (ORDER BY d2, cell)`. A null row, or an
+  * Both eval paths run the one BMU kernel, [[BmuFold.argmin]]: its argmin
+  * orders exactly like `array_position(d, array_min(d))` and the oracle's
+  * `row_number() OVER (ORDER BY d2, cell)`. A null row, or an
   * `array<double>` row holding a null element, yields null; a row whose
   * length is not d throws.
   */
-case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: Int,
-                             distance: Boolean = false)
+case class ArrayArgminSqDist(child: Expression, prototypes: BmuFold, distance: Boolean = false)
     extends UnaryExpression {
-  require(dim > 0 && prototypes.nonEmpty && prototypes.length % dim == 0,
-    s"prototypes must be a non-empty K×$dim matrix, got ${prototypes.length} values")
 
   override def dataType: DataType = if (distance) DoubleType else IntegerType
 
@@ -114,34 +139,33 @@ case class ArrayArgminSqDist(child: Expression, prototypes: Array[Double], dim: 
   override protected def nullSafeEval(v: Any): Any = {
     import ArrayArgminSqDist._
     val x = v match { case r: InternalRow => features(r); case a: ArrayData => features(a, elementNulls) }
-    if (x == null) null else if (distance) minSqDist(x, prototypes, dim) else argmin(x, prototypes, dim)
+    if (x == null) return null
+    val acc = new Array[Double](prototypes.k)
+    val cell = prototypes.argmin(x, acc)
+    if (distance) acc(cell) else cell
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val p = ctx.addReferenceObj("prototypes", prototypes, "double[]")
-    val (o, out) = ("graft.functions.ArrayArgminSqDist", if (distance) "minSqDist" else "argmin")
-    val x = ctx.freshName("x")
+    val p = ctx.addReferenceObj("prototypes", prototypes)
+    val acc = ctx.addMutableState("double[]", "bmuDistances", v => s"$v = new double[${prototypes.k}];")
+    val Seq(x, cell) = Seq("x", "cell").map(ctx.freshName)
     val nulls = if (child.dataType.isInstanceOf[ArrayType]) s", $elementNulls" else ""
     val onNull = if (elementNulls) s"if ($x == null) ${ev.isNull} = true; else " else ""
     nullSafeCodeGen(ctx, ev, v =>
-      s"double[] $x = $o.features($v$nulls);\n$onNull${ev.value} = $o.$out($x, $p, $dim);")
+      s"""double[] $x = graft.functions.ArrayArgminSqDist.features($v$nulls);
+         |$onNull{
+         |  int $cell = $p.argmin($x, $acc);
+         |  ${ev.value} = ${if (distance) s"$acc[$cell]" else cell};
+         |}""".stripMargin)
   }
 
   override def toString: String =
-    s"$prettyName($child, K=${prototypes.length / dim}, d=$dim${if (distance) ", distance" else ""})"
+    s"$prettyName($child, K=${prototypes.k}, d=${prototypes.dim}${if (distance) ", distance" else ""})"
   override protected def withNewChildInternal(c: Expression): ArrayArgminSqDist = copy(child = c)
   override def prettyName: String = "array_argmin_sqdist"
 }
 
 object ArrayArgminSqDist {
-  /** Row-major copy of K equal-length prototypes, the layout the kernel reads. */
-  def flatten(prototypes: Seq[Array[Double]]): Array[Double] = {
-    require(prototypes.nonEmpty && prototypes.forall(_.length == prototypes.head.length),
-      s"prototypes must be non-empty and of equal length, got lengths " +
-        prototypes.map(_.length).distinct.mkString(","))
-    Array.concat(prototypes: _*)
-  }
-
   /** One `array<double>` row, copied out once (d doubles); null when `nulls`
     * is set and the row holds a null element, which the copy reads as 0.0. */
   def features(x: ArrayData, nulls: Boolean): Array[Double] = {
@@ -160,65 +184,74 @@ object ArrayArgminSqDist {
     while (i < indices.numElements()) { out(indices.getInt(i)) = values.getDouble(i); i += 1 }
     out
   }
+}
 
-  /** The index of, or the squared distance to, the prototype nearest to `x`. */
-  def argmin(x: Array[Double], prototypes: Array[Double], dim: Int): Int = nearest(x, prototypes, dim)._1
-  def minSqDist(x: Array[Double], prototypes: Array[Double], dim: Int): Double = nearest(x, prototypes, dim)._2
+/** The one best-matching-unit kernel, behind every SOM argmin (`fit`,
+  * `transform`, `computeCost`, `predict` and the catalog's prototype
+  * assignment): K prototypes of d components, held component-major —
+  * `columns(i)(k)` is component i of prototype k — built once per model,
+  * broadcast or expression and only read after, so one instance serves any
+  * number of threads. */
+final class BmuFold private (columns: Array[Array[Double]]) extends Serializable {
+  val dim: Int = columns.length
+  val k: Int = columns(0).length
 
-  /** The one best-matching-unit kernel, behind every SOM argmin: (index,
-    * squared distance) of the prototype nearest to `x` among the row-major
-    * K×`dim` `prototypes`. [[nearestOf]] over every prototype. */
-  def nearest(x: Array[Double], prototypes: Array[Double], dim: Int): (Int, Double) =
-    nearestOf(x, prototypes, dim, null, prototypes.length / dim)
-
-  /** The exact fold behind [[nearest]] and the training scan's refine
-    * (`graft.som.BlockNearest`): the nearest of the first `n` prototypes
-    * listed in `cells` (ascending), or of prototypes 0 until `n` when
-    * `cells` is null. Four prototypes share each pass over `x`, each with
-    * its own accumulator, so four add chains overlap; the `n` mod 4 tail
-    * takes one at a time. Each accumulator is the left-to-right `Σ(a−p)²`
-    * fold, bit-identical to `Vectors.sqdist`. Distances are compared in
-    * list order with NaN above every number: the first minimum wins, and a
-    * row with no non-NaN distance maps to (first listed, NaN). A row whose
-    * length is not `dim` throws, naming both lengths. */
-  private[graft] def nearestOf(x: Array[Double], prototypes: Array[Double], dim: Int,
-                               cells: Array[Int], n: Int): (Int, Double) = {
+  /** The index of the prototype nearest to `x` (squared L2). `acc`, K
+    * doubles of the caller's scratch, is overwritten with every prototype's
+    * squared distance, so `acc(index)` is the winner's.
+    *
+    * Each pass reads four components of `x` and adds their four squared
+    * differences into every prototype's accumulator: the inner loop runs
+    * over the K prototypes, so the JIT vectorises it across them, and
+    * `acc + t0² + t1² + t2² + t3²` adds left to right, so each `acc(k)` is
+    * the left-to-right `Σ(x_i − p_ki)²` fold of `Vectors.sqdist`, bit for
+    * bit. One index-order pass then picks the smallest with NaN above every
+    * number: the first minimum wins, and a row with no non-NaN distance
+    * maps to (0, NaN). A row whose length is not d throws, naming both
+    * lengths. */
+  def argmin(x: Array[Double], acc: Array[Double]): Int = {
     if (x.length != dim) throw new IllegalArgumentException(
       s"feature array has ${x.length} elements but the prototypes have $dim")
-    @inline def cell(j: Int): Int = if (cells == null) j else cells(j)
-    var best = cell(0)
-    var bestD = Double.NaN
-    var j = 0
-    while (j + 4 <= n) {
-      val c0 = cell(j); val c1 = cell(j + 1); val c2 = cell(j + 2); val c3 = cell(j + 3)
-      val o0 = c0 * dim; val o1 = c1 * dim; val o2 = c2 * dim; val o3 = c3 * dim
-      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-      var i = 0
-      while (i < dim) {
-        val a = x(i)
-        val d0 = a - prototypes(o0 + i); s0 += d0 * d0
-        val d1 = a - prototypes(o1 + i); s1 += d1 * d1
-        val d2 = a - prototypes(o2 + i); s2 += d2 * d2
-        val d3 = a - prototypes(o3 + i); s3 += d3 * d3
-        i += 1
+    java.util.Arrays.fill(acc, 0, k, 0.0)
+    var i = 0
+    while (i + 4 <= dim) {
+      val x0 = x(i); val x1 = x(i + 1); val x2 = x(i + 2); val x3 = x(i + 3)
+      val p0 = columns(i); val p1 = columns(i + 1); val p2 = columns(i + 2); val p3 = columns(i + 3)
+      var c = 0
+      while (c < k) {
+        val t0 = x0 - p0(c); val t1 = x1 - p1(c); val t2 = x2 - p2(c); val t3 = x3 - p3(c)
+        acc(c) = acc(c) + t0 * t0 + t1 * t1 + t2 * t2 + t3 * t3
+        c += 1
       }
-      if (closer(s0, bestD)) { best = c0; bestD = s0 }
-      if (closer(s1, bestD)) { best = c1; bestD = s1 }
-      if (closer(s2, bestD)) { best = c2; bestD = s2 }
-      if (closer(s3, bestD)) { best = c3; bestD = s3 }
-      j += 4
+      i += 4
     }
-    while (j < n) {
-      val c = cell(j); val o = c * dim; var s = 0.0; var i = 0
-      while (i < dim) { val d = x(i) - prototypes(o + i); s += d * d; i += 1 }
-      if (closer(s, bestD)) { best = c; bestD = s }
-      j += 1
+    while (i < dim) {
+      val xi = x(i); val p = columns(i)
+      var c = 0
+      while (c < k) { val t = xi - p(c); acc(c) += t * t; c += 1 }
+      i += 1
     }
-    (best, bestD)
+    var best = 0
+    var bestD = Double.NaN
+    var c = 0
+    while (c < k) {
+      val s = acc(c)
+      if (s == s && !(s >= bestD)) { best = c; bestD = s } // s < bestD, NaN last
+      c += 1
+    }
+    best
   }
+}
 
-  /** s < bestD with NaN ordered last: a number always beats NaN. */
-  @inline private def closer(s: Double, bestD: Double): Boolean = s == s && !(s >= bestD)
+object BmuFold {
+  /** K equal-length prototypes (each a row of d components), transposed once. */
+  def apply(prototypes: Seq[Array[Double]]): BmuFold = {
+    require(prototypes.nonEmpty && prototypes.head.nonEmpty &&
+      prototypes.forall(_.length == prototypes.head.length),
+      s"prototypes must be a non-empty K×d matrix, got lengths " +
+        prototypes.map(_.length).distinct.mkString(","))
+    new BmuFold(Array.tabulate(prototypes.head.length)(i => prototypes.map(_(i)).toArray))
+  }
 }
 
 object ArrayVectorExpressions {
@@ -231,10 +264,9 @@ object ArrayVectorExpressions {
     ColumnBridge.column(ArraySqDist(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** BMU index (or with `distance` its squared distance) of `features`
-    * among the row-major K×`dim` `prototypes`. */
-  def argminSqDist(features: Column, prototypes: Array[Double], dim: Int,
-                   distance: Boolean = false): Column =
-    ColumnBridge.column(ArrayArgminSqDist(ColumnBridge.expression(features), prototypes, dim, distance))
+    * among `prototypes`. */
+  def argminSqDist(features: Column, prototypes: BmuFold, distance: Boolean = false): Column =
+    ColumnBridge.column(ArrayArgminSqDist(ColumnBridge.expression(features), prototypes, distance))
 
   /** Make `array_dot` / `array_sqdist` callable from `spark.sql(...)` text. */
   def registerSqlFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {

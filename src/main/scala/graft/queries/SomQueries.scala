@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{ArrayArgminSqDist, HalfUp}
+import graft.functions.{BmuFold, HalfUp}
 import graft.functions.ArrayVectorExpressions.argminSqDist
 import graft.functions.VectorSql._
 import graft.som.{Grid, SOM}
@@ -53,12 +53,12 @@ object SomQueries {
   }
 
   /** (id, squared distance) of the prototype in `protos` nearest to the
-    * `array<double>` column `v`: the BMU kernel [[ArrayArgminSqDist]], its
-    * index read back through the ids. Same bits as `min(struct(d2, proto_id))`
+    * `array<double>` column `v`: the BMU kernel ([[BmuFold]] in the
+    * `ArrayArgminSqDist` expression), its index read back through the ids. Same bits as `min(struct(d2, proto_id))`
     * over `array_sqdist`: lowest id on ties, NaN above every number. */
   def nearest(v: Column, protos: (Array[Long], Array[Array[Double]])): (Column, Column) = {
-    val (flat, dim) = (ArrayArgminSqDist.flatten(protos._2.toSeq), protos._2.head.length)
-    (typedLit(protos._1).getItem(argminSqDist(v, flat, dim)), argminSqDist(v, flat, dim, distance = true))
+    val fold = BmuFold(protos._2.toSeq)
+    (typedLit(protos._1).getItem(argminSqDist(v, fold)), argminSqDist(v, fold, distance = true))
   }
 
   /** A K×d prototype matrix as (cell, dim, nv) rows. */

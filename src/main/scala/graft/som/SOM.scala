@@ -1,6 +1,6 @@
 package graft.som
 
-import graft.functions.{ArrayArgminSqDist, HalfUp}
+import graft.functions.{BmuFold, HalfUp}
 import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, Vector, Vectors}
@@ -18,13 +18,10 @@ import org.apache.spark.storage.StorageLevel
   * Rework of the reference's RDD pipeline:
   *  - the features are decoded once into a cached `RDD[Vector]`; each
   *    iteration is one [[SOM.step]] (the kernel the catalog's SOM update
-  *    entries share), whose assign+aggregate is one single-stage job: the
-  *    BMUs come from [[BlockNearest]], which screens blocks of four points
-  *    against all prototypes with centred dot products and a derived
-  *    rounding-error bound, then runs the exact [[ArrayArgminSqDist.nearest]]
-  *    fold only on the prototypes the bound cannot exclude (about one per
-  *    point on a clustered 64-d input at K=400), so the BMU and its distance
-  *    are bit for bit the exhaustive scan's (the reference's norm-bound
+  *    entries share), whose assign+aggregate is one single-stage job: each
+  *    point's BMU comes from [[BmuFold]], the one exact BMU fold, over the
+  *    prototypes held component-major, so the inner loop runs across the K
+  *    prototypes and the JIT vectorises it (the reference's norm-bound
   *    prune skipped 3 % of candidates at K=400);
   *    `mapPartitions` folds every partition into one K×d partial (sums,
   *    counts, Σd2), and the driver merges the partials in partition-index
@@ -111,7 +108,6 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
     val tMx = $(tMax); val tMn = $(tMin); val iters = $(maxIter); val eps = $(tol)
     val history = scala.collection.mutable.ArrayBuffer.empty[Double]
     val scanSeconds, updateSeconds = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val exactDistances = scala.collection.mutable.ArrayBuffer.empty[Long]
     var iter = 0
     var converged = false
 
@@ -125,7 +121,6 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
         Grid.neighborhood(kern, topo, $(height), $(width), t), $(sumDecimals), $(protoDecimals))
       scanSeconds += (t1 - t0) / 1e9
       updateSeconds += (System.nanoTime() - t1) / 1e9
-      exactDistances += agg.exact
       // Converged when no prototype moved more than tol (the prototypes are
       // already quantized via protoDecimals).
       converged = !next.indices.exists(c => Vectors.sqdist(next(c), prototypes(c)) > eps * eps)
@@ -141,7 +136,7 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
       model.transform(dataset), $(featuresCol), $(predictionCol),
       $(height), $(width), $(maxIter), iter,
       if (history.nonEmpty) history.last else 0.0, history.toArray,
-      scanSeconds.toArray, updateSeconds.toArray, exactDistances.toArray)
+      scanSeconds.toArray, updateSeconds.toArray)
     model.setSummary(Some(summary))
     model
   }
@@ -176,22 +171,19 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
     * `protos`, in one single-stage job: `mapPartitions` folds every
     * partition into one K×d partial (map-side partial aggregation minus the
     * per-iteration plan compile and exchange), and the driver merges the
-    * partials. Each point's BMU is exactly [[ArrayArgminSqDist.nearest]]'s,
-    * found by [[BlockNearest]]'s filter and refine over blocks of four
-    * points (`screen = false`: by `nearest` itself) against the prototypes
-    * as one row-major K×d matrix, broadcast and destroyed after. The
-    * partial also counts the exact distance evaluations. */
-  private[graft] def cellStats(points: RDD[Vector], protos: Array[Vector],
-                               screen: Boolean = true): CellAgg = {
+    * partials. Each point's BMU and distance come from [[BmuFold.argmin]]
+    * against the prototypes, transposed once on the driver, broadcast and
+    * destroyed after; each partition keeps one K-double distance buffer. */
+  private[graft] def cellStats(points: RDD[Vector], protos: Array[Vector]): CellAgg = {
     val k = protos.length
     val dim = protos(0).size
-    val bc = points.sparkContext.broadcast(ArrayArgminSqDist.flatten(protos.map(_.toArray).toSeq))
+    val bc = points.sparkContext.broadcast(BmuFold(protos.map(_.toArray).toSeq))
     try {
       val partials = points.mapPartitions { it =>
-        val search = new BlockNearest(bc.value, dim, screen)
+        val fold = bc.value
+        val acc = new Array[Double](k)
         val a = CellAgg(k, dim)
-        search.foreach(it)((p, cell, d2) => a.add(cell, p, d2))
-        a.exact = search.exact
+        it.foreach { p => val cell = fold.argmin(p.toArray, acc); a.add(cell, p, acc(cell)) }
         Iterator.single(a)
       }
       // Merge partials in PARTITION-INDEX order (collect preserves it): the
@@ -304,8 +296,6 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
     val sums: Array[Array[Double]] = new Array[Array[Double]](k)
     val counts: Array[Long] = new Array[Long](k)
     var cost: Double = 0.0
-    /** exact distance evaluations the BMU search made */
-    var exact: Long = 0L
 
     def add(cell: Int, v: Vector, d2: Double): this.type = {
       if (sums(cell) == null) sums(cell) = new Array[Double](dim)
@@ -337,7 +327,6 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
         c += 1
       }
       cost += o.cost
-      exact += o.exact
       this
     }
   }

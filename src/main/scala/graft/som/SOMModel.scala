@@ -1,6 +1,6 @@
 package graft.som
 
-import graft.functions.{ArrayArgminSqDist, ArrayVectorExpressions}
+import graft.functions.{ArrayVectorExpressions, BmuFold}
 import org.apache.spark.ml.Model
 import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.{Param, ParamMap}
@@ -13,13 +13,13 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
   * (reference `som/SOMModel.scala`).
   *
   * Scoring is one native Catalyst expression, `ArrayArgminSqDist`, not the
-  * reference's UDF (`som/SOMModel.scala:76-82`): the K×d prototype matrix
-  * rides the plan, each row gets its BMU from the one argmin kernel
-  * [[ArrayArgminSqDist.nearest]] — an embarrassingly parallel map, no
-  * shuffle. [[transform]] and [[computeCost]] (one exact aggregate of its
-  * distance output, `som/SOMModel.scala:92-97` minus the RDD detour) are
-  * that expression and `predict` calls the kernel, so all agree on every
-  * row, NaN and ±∞ too.
+  * reference's UDF (`som/SOMModel.scala:76-82`): the model's prototypes,
+  * transposed once into a [[BmuFold]], ride the plan, and each row gets its
+  * BMU from the one exact BMU fold [[BmuFold.argmin]] — an embarrassingly
+  * parallel map, no shuffle. [[transform]] and [[computeCost]] (one exact
+  * aggregate of its distance output, `som/SOMModel.scala:92-97` minus the
+  * RDD detour) are that expression and `predict` calls the kernel, so all
+  * agree on every row, NaN and ±∞ too.
   *
   * Persistence (absent in the reference, `README.md:91`): `MLWritable`
   * `model.write.save(path)` / [[SOMModel.load]], as `PipelineModel` uses.
@@ -42,14 +42,12 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
 
   private[graft] def setGrid(h: Int, w: Int): this.type = { set(height, h); set(width, w); this }
 
-  /** The prototypes as the kernel's row-major K×d array, built once. */
-  private lazy val flatPrototypes: Array[Double] =
-    ArrayArgminSqDist.flatten(prototypes.map(_.toArray).toSeq)
+  /** The prototypes as the BMU kernel holds them, transposed once. */
+  @transient private lazy val fold: BmuFold = BmuFold(prototypes.map(_.toArray).toSeq)
 
   /** BMU index for a single point (reference `som/SOMModel.scala:88-90`).
     * A sparse point is densified for the call only. */
-  def predict(features: Vector): Int =
-    ArrayArgminSqDist.nearest(features.toArray, flatPrototypes, prototypes(0).size)._1
+  def predict(features: Vector): Int = fold.argmin(features.toArray, new Array[Double](fold.k))
 
   /** `ArrayArgminSqDist` over the features column: the BMU index, or with
     * `distance` its squared distance. `array<float>` is cast first. */
@@ -60,7 +58,7 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
       case ArrayType(DoubleType, _) | SQLDataTypes.VectorType => f
       case other => throw new IllegalArgumentException(s"unsupported features type $other")
     }
-    ArrayVectorExpressions.argminSqDist(v, flatPrototypes, prototypes(0).size, distance)
+    ArrayVectorExpressions.argminSqDist(v, fold, distance)
   }
 
   /** Appends each row's BMU index (null for a null row): no UDF, generated

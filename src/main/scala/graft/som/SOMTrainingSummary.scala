@@ -7,10 +7,8 @@ import org.apache.spark.sql.DataFrame
   * objective history ("in order to check convergence", reference
   * `README.md:39-46`). `predictions` is lazy — computed at first action.
   * Per-iteration seconds split into the scan job ([[SOM.cellStats]]) and the
-  * driver update ([[SOM.smooth]]). The scan screens all N·K (point,
-  * prototype) pairs and evaluates the exact distance only for the pairs the
-  * screen cannot exclude: `iterationExactDistances(i) / (N·K)` is the share
-  * iteration i evaluated exactly (1.0 = an exhaustive scan). */
+  * driver update ([[SOM.smooth]]); every scan evaluates all N·K (point,
+  * prototype) distances exactly. */
 class SOMTrainingSummary(
     val predictions: DataFrame,
     val featuresCol: String,
@@ -22,5 +20,4 @@ class SOMTrainingSummary(
     val cost: Double,
     val objectiveHistory: Array[Double],
     val iterationScanSeconds: Array[Double] = Array.empty,
-    val iterationUpdateSeconds: Array[Double] = Array.empty,
-    val iterationExactDistances: Array[Long] = Array.empty)
+    val iterationUpdateSeconds: Array[Double] = Array.empty)

@@ -54,6 +54,41 @@ class VectorSqlSpec extends SparkSpec {
     assert(r.isNullAt(0))
   }
 
+  test("array_sqdist / array_dot: a null element scores null, unequal lengths throw, generated and interpreted") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+    def frame(containsNull: Boolean, rows: Seq[(Long, Seq[Any], Seq[Any])]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, a, b) => Row(i, a, b) }, 2),
+      StructType(Seq(StructField("id", LongType)) ++ Seq("a", "b").map(c =>
+        StructField(c, ArrayType(DoubleType, containsNull), nullable = false))))
+    def scores(df: org.apache.spark.sql.DataFrame) = df.select(col("id"),
+      VectorSql.sqDistFast(col("a"), col("b")), VectorSql.dotFast(col("a"), col("b")))
+      .collect().map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    val withNulls = frame(containsNull = true, Seq(
+      (1L, Seq(5.0, null), Seq(0.0, 0.0)), (2L, Seq(0.0, 0.0), Seq(null, 1.0)),
+      (3L, Seq(1.0, 2.0), Seq(3.0, 5.0))))
+    val noNulls = frame(containsNull = false, Seq((3L, Seq(1.0, 2.0), Seq(3.0, 5.0))))
+    for ((wholeStage, factory) <- Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN")))
+      withConf("spark.sql.codegen.wholeStage" -> wholeStage, "spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> factory) {
+        assert(scores(withNulls) == Map(1L -> (None, None), 2L -> (None, None),
+          3L -> (Some(13.0), Some(13.0))), factory)
+        assert(scores(noNulls) == Map(3L -> (Some(13.0), Some(13.0))), factory)
+        for ((a, b) <- Seq(Seq(1.0, 2.0, 3.0) -> Seq(1.0), Seq(1.0) -> Seq(1.0, 2.0, 3.0));
+             f <- Seq[(org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column](
+               VectorSql.sqDistFast, VectorSql.dotFast)) {
+          val e = intercept[Exception](frame(containsNull = false, Seq((1L, a, b)))
+            .select(f(col("a"), col("b"))).collect())
+          val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+          assert(msgs.exists(m => m != null && m.contains(s"the arrays have ${a.length} and ${b.length} elements")),
+            s"$factory: unexpected error $e")
+        }
+      }
+    // the element scan makes the result nullable only where the type admits null elements
+    assert(withNulls.select(VectorSql.sqDistFast(col("a"), col("b"))).schema.head.nullable)
+    assert(!noNulls.select(VectorSql.sqDistFast(col("a"), col("b"))).schema.head.nullable)
+  }
+
   test("md5Hash60 is non-negative, stable, below 2^60") {
     import spark.implicits._
     val h = Seq("a", "b", "a").toDF("s")

@@ -1,8 +1,13 @@
 package graft.som
 
 import graft.SparkSpec
-import graft.functions.{ArrayArgminSqDist, HalfUp}
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import graft.functions.{ArrayArgminSqDist, BmuFold, HalfUp}
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, UserDefinedType}
 import scala.util.Random
 
 class SOMSpec extends SparkSpec {
@@ -16,9 +21,15 @@ class SOMSpec extends SparkSpec {
     rows.toDF("label", "features")
   }
 
-  /** The BMU kernel over `protos` as the model and the fit hand it over. */
+  /** (index, squared distance) of the BMU kernel for one row. */
+  private def kernel(protos: Seq[Array[Double]], x: Array[Double]): (Int, Double) = {
+    val fold = BmuFold(protos)
+    val acc = new Array[Double](fold.k)
+    val cell = fold.argmin(x, acc)
+    (cell, acc(cell))
+  }
   private def nearest(protos: Array[Vector], p: Vector): (Int, Double) =
-    ArrayArgminSqDist.nearest(p.toArray, ArrayArgminSqDist.flatten(protos.map(_.toArray).toSeq), p.size)
+    kernel(protos.map(_.toArray).toSeq, p.toArray)
 
   // The assertions of the deleted norm-pruned `findClosest`, on the kernel
   // that replaced it.
@@ -37,59 +48,91 @@ class SOMSpec extends SparkSpec {
     assert(nearest(dup, protos(3))._1 == 0)
   }
 
-  /** Reference argmin: each distance the plain left-to-right fold, the
-    * lowest index among the smallest non-NaN distances, (0, NaN) if none. */
-  private def naiveNearest(protos: Array[Array[Double]], x: Array[Double]): (Int, Double) = {
-    val d = protos.map { c =>
-      var s = 0.0
-      for (i <- x.indices) { val t = x(i) - c(i); s += t * t }
-      s
-    }
-    val numbers = d.indices.filterNot(i => d(i).isNaN)
-    if (numbers.isEmpty) (0, Double.NaN) else { val m = numbers.minBy(i => (d(i), i)); (m, d(m)) }
+  /** The reference argmin: each distance is `Vectors.sqdist` of the dense
+    * vectors, then one index-order pass keeps the first strictly smaller
+    * non-NaN distance — `array_position(d, array_min(d))`'s order, NaN
+    * last, (0, NaN) when no distance is a number. */
+  private def naiveNearest(protos: Seq[Array[Double]], x: Array[Double]): (Int, Double) = {
+    val d = protos.map(c => Vectors.sqdist(Vectors.dense(c), Vectors.dense(x)))
+    var best = 0
+    for (i <- d.indices) if (!d(i).isNaN && (d(best).isNaN || d(i) < d(best))) best = i
+    (best, d(best))
   }
 
   private def sameBits(a: Double, b: Double): Boolean =
     java.lang.Double.doubleToRawLongBits(a) == java.lang.Double.doubleToRawLongBits(b)
 
+  /** The `ArrayArgminSqDist` expression's (cell, distance) per row, through
+    * the generated and the interpreted projection, on the rows as
+    * `array<double>` and as VectorUDT (sparse when `sparse`). One projection
+    * scores all rows, so the generated code's distance buffer is reused. */
+  private def expressionRuns(fold: BmuFold, rows: Seq[Array[Double]],
+                             sparse: Boolean): Seq[(String, Seq[(Int, Double)])] = {
+    val udt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
+    val inputs = Seq[(String, DataType, Array[Double] => Any)](
+      ("array", ArrayType(DoubleType, containsNull = false), UnsafeArrayData.fromPrimitiveArray(_)),
+      ("vector", SQLDataTypes.VectorType,
+        x => udt.serialize(if (sparse) Vectors.dense(x).toSparse else Vectors.dense(x))))
+    val projections = Seq[(String, Seq[Expression] => InternalRow => InternalRow)](
+      "generated" -> (e => GenerateUnsafeProjection.generate(e)),
+      "interpreted" -> (e => InterpretedUnsafeProjection.createProjection(e)))
+    for ((input, dt, encode) <- inputs; (mode, project) <- projections) yield {
+      val in = BoundReference(0, dt, nullable = true)
+      val score = project(Seq(ArrayArgminSqDist(in, fold), ArrayArgminSqDist(in, fold, distance = true)))
+      s"$mode $input" -> rows.map { x => val out = score(InternalRow(encode(x))); (out.getInt(0), out.getDouble(1)) }
+    }
+  }
+
+  /** Every way the kernel is reached gives every row the reference's index
+    * and distance bits (a NaN distance: NaN): [[BmuFold.argmin]] with one
+    * buffer across the rows, as the fit's scan calls it, and the expression
+    * on both eval paths and both input types. */
+  private def assertKernel(protos: Seq[Array[Double]], rows: Seq[Array[Double]],
+                           clue: String, sparse: Boolean = false): Unit = {
+    val fold = BmuFold(protos)
+    val acc = new Array[Double](fold.k)
+    val direct = rows.map { x => val cell = fold.argmin(x, acc); (cell, acc(cell)) }
+    val want = rows.map(naiveNearest(protos, _))
+    for ((path, got) <- ("kernel" -> direct) +: expressionRuns(fold, rows, sparse)) {
+      assert(got.length == rows.length, s"$clue, $path")
+      for ((((cell, d2), (wantCell, wantD2)), r) <- got.zip(want).zipWithIndex)
+        assert(cell == wantCell && (if (wantD2.isNaN) d2.isNaN else sameBits(d2, wantD2)),
+          s"$clue, $path, row $r: ($cell, $d2) vs ($wantCell, $wantD2)")
+    }
+  }
+
   test("BMU kernel: every K mod 4 tail, the bit-exact distance, first minimum across lanes and blocks") {
     val rnd = new Random(3)
-    for (k <- Seq(1, 2, 3, 5, 7, 400); dim <- Seq(1, 3, 64)) {
-      val protos = Array.fill(k)(Array.fill(dim)(rnd.nextGaussian()))
-      val flat = ArrayArgminSqDist.flatten(protos.toSeq)
-      for (_ <- 0 until 50) {
-        val x = Array.fill(dim)(rnd.nextGaussian())
-        val (bmu, d2) = ArrayArgminSqDist.nearest(x, flat, dim)
-        val (want, wantD2) = naiveNearest(protos, x)
-        assert(bmu == want, s"K=$k d=$dim")
-        assert(sameBits(d2, wantD2), s"K=$k d=$dim: $d2 vs $wantD2")
+    for (k <- (1 to 9) :+ 400; dim <- Seq(1, 2, 3, 5, 7, 64)) {
+      val protos = Seq.fill(k)(Array.fill(dim)(rnd.nextGaussian()))
+      val rows = Seq.fill(50)(Array.fill(dim)(rnd.nextGaussian()))
+      assertKernel(protos, rows, s"K=$k d=$dim")
+      for (x <- rows) {
+        val (bmu, d2) = kernel(protos, x)
         assert(sameBits(d2, Vectors.sqdist(Vectors.dense(protos(bmu)), Vectors.dense(x))))
       }
     }
-    // an exact tie between any two of K=9 cells (two full blocks and a
-    // tail; e.g. 3 and 4 straddle the first block boundary) goes to the
-    // lower index; every other cell is farther away
+    // an exact tie between any two of K=9 cells goes to the lower index;
+    // every other cell is farther away
     for (i <- 0 until 9; j <- i + 1 until 9) {
-      val protos = Array.tabulate(9)(c => if (c == i || c == j) Array(0.5, -2.0) else Array(c + 1.0, 3.0))
-      assert(ArrayArgminSqDist.nearest(Array(0.5, -1.0), ArrayArgminSqDist.flatten(protos.toSeq), 2) ==
-        (i, 1.0), s"tie $i/$j")
+      val protos = Seq.tabulate(9)(c => if (c == i || c == j) Array(0.5, -2.0) else Array(c + 1.0, 3.0))
+      assert(kernel(protos, Array(0.5, -1.0)) == ((i, 1.0)), s"tie $i/$j")
+      assertKernel(protos, Seq(Array(0.5, -1.0)), s"tie $i/$j")
     }
   }
 
   test("BMU kernel on NaN and ±∞ rows: the reference argmin, NaN ordered last") {
     val inf = Double.PositiveInfinity
     val nan = Double.NaN
-    val protos = Array(Array(inf, 0.0), Array(0.0, 0.0), Array(0.0, 0.0), Array(1.0, 1.0),
+    val protos = Seq(Array(inf, 0.0), Array(0.0, 0.0), Array(0.0, 0.0), Array(1.0, 1.0),
       Array(-inf, 0.0), Array(nan, 0.0), Array(0.0, inf))
     val rows = Seq(Array(0.0, 0.0), Array(inf, 0.0), Array(nan, 0.0), Array(-inf, 0.0),
       Array(0.9, 1.2), Array(inf, inf), Array(-inf, -inf), Array(0.0, -inf))
-    for (k <- 1 to protos.length; x <- rows) {
-      val (bmu, d2) = ArrayArgminSqDist.nearest(x, ArrayArgminSqDist.flatten(protos.take(k).toSeq), 2)
-      val (want, wantD2) = naiveNearest(protos.take(k), x)
-      val row = x.mkString("(", ", ", ")")
-      assert(bmu == want, s"K=$k row $row")
-      assert(if (wantD2.isNaN) d2.isNaN else sameBits(d2, wantD2), s"K=$k row $row: $d2")
-    }
+    for (k <- 1 to protos.length) assertKernel(protos.take(k), rows, s"K=$k")
+    // (∞, 0) against K=3: distances NaN, ∞, ∞ -> the first ∞; (NaN, 0) has no number
+    assert(kernel(protos.take(3), Array(inf, 0.0)) == ((1, inf)))
+    val (cell, d2) = kernel(protos, Array(nan, 0.0))
+    assert(cell == 0 && d2.isNaN)
   }
 
   test("fit produces a full grid model with decreasing-ish objective") {
@@ -341,8 +384,7 @@ class SOMSpec extends SparkSpec {
     val dists = array(protos.toSeq.map(p =>
       graft.functions.VectorSql.sqDistFast(col("v"), typedLit(p))): _*)
     val reference = (array_position(dists, array_min(dists)) - 1).cast("int")
-    val kernel = graft.functions.ArrayVectorExpressions.argminSqDist(col("v"),
-      graft.functions.ArrayArgminSqDist.flatten(protos.toSeq), 2)
+    val kernel = graft.functions.ArrayVectorExpressions.argminSqDist(col("v"), BmuFold(protos.toSeq))
     def run(c: org.apache.spark.sql.Column) = df.select(col("id"), c).collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap
     val want = run(reference)
@@ -439,9 +481,8 @@ class SOMSpec extends SparkSpec {
     }
     val (gen, interp) = codegenAndInterpreted(
       (model.computeCost(vec), model.computeCost(vec.where("id <> 2"))))
-    val flat = ArrayArgminSqDist.flatten(model.prototypes.map(_.toArray).toSeq)
     val kernelSum = Seq(Array(0.9, 0.9, 0.9), Array(0.0, 0.0, 2.5))
-      .foldLeft(0.0)((s, x) => s + ArrayArgminSqDist.nearest(x, flat, 3)._2)
+      .foldLeft(0.0)((s, x) => s + nearest(model.prototypes, Vectors.dense(x))._2)
     for ((withNull, without) <- Seq(gen, interp)) {
       assert(sameBits(withNull, without))
       assert(sameBits(withNull, kernelSum))
@@ -459,9 +500,8 @@ class SOMSpec extends SparkSpec {
       StructType(Seq(StructField("id", LongType),
         StructField("features", ArrayType(DoubleType, containsNull = true), nullable = false))))
     val floats = doubles.select(col("id"), col("features").cast("array<float>").as("features"))
-    val flat = ArrayArgminSqDist.flatten(model.prototypes.map(_.toArray).toSeq)
-    val distance = graft.functions.ArrayVectorExpressions
-      .argminSqDist(col("features").cast("array<double>"), flat, 2, distance = true)
+    val distance = graft.functions.ArrayVectorExpressions.argminSqDist(
+      col("features").cast("array<double>"), BmuFold(model.prototypes.map(_.toArray).toSeq), distance = true)
     for (df <- Seq(doubles, floats)) {
       // the features field is not nullable: only its null elements make prediction nullable
       assert(model.transformSchema(df.schema)("prediction").nullable)
@@ -495,8 +535,7 @@ class SOMSpec extends SparkSpec {
     val (gen, interp) = codegenAndInterpreted(predictions(model.transform(df)))
     assert(gen == want)
     assert(interp == want)
-    val flat = ArrayArgminSqDist.flatten(model.prototypes.map(_.toArray).toSeq)
-    val rowOrderSum = rows.foldLeft(0.0)((s, v) => s + ArrayArgminSqDist.nearest(v.toArray, flat, d)._2)
+    val rowOrderSum = rows.foldLeft(0.0)((s, v) => s + nearest(model.prototypes, v)._2)
     val (genCost, interpCost) = codegenAndInterpreted(model.computeCost(df))
     assert(sameBits(genCost, rowOrderSum) && sameBits(interpCost, rowOrderSum))
     for (bad <- Seq(Vectors.dense(0.5, 0.5, 0.5), Vectors.sparse(3, Array(1), Array(2.0))))
@@ -758,31 +797,6 @@ class SOMSpec extends SparkSpec {
     intercept[IllegalArgumentException](new SOM().setMaxIter(-1))
   }
 
-  /** [[BlockNearest]] over `rows` as one partition: per row (index,
-    * distance), and the exact-fold evaluations it made. */
-  private def blockSearch(protos: Seq[Array[Double]], rows: Seq[Array[Double]],
-                          sparse: Boolean): (Seq[(Int, Double)], Long) = {
-    val search = new BlockNearest(ArrayArgminSqDist.flatten(protos), protos.head.length)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    val vs = rows.iterator.map(r => if (sparse) Vectors.dense(r).toSparse else Vectors.dense(r))
-    search.foreach(vs)((_, cell, d2) => out += ((cell, d2)))
-    (out.toSeq, search.exact)
-  }
-
-  /** The block search gives every row `nearest`'s index and distance bits;
-    * returns its exact-fold evaluations. */
-  private def assertBlockIsNearest(protos: Seq[Array[Double]], rows: Seq[Array[Double]],
-                                   clue: String, sparse: Boolean = false): Long = {
-    val flat = ArrayArgminSqDist.flatten(protos)
-    val (got, exact) = blockSearch(protos, rows, sparse)
-    assert(got.length == rows.length, clue)
-    for (((x, (cell, d2)), r) <- rows.zip(got).zipWithIndex) {
-      val (want, wantD2) = ArrayArgminSqDist.nearest(x, flat, protos.head.length)
-      assert(cell == want && sameBits(d2, wantD2), s"$clue, row $r: ($cell, $d2) vs ($want, $wantD2)")
-    }
-    exact
-  }
-
   /** `n` points drawn around random `centres` with gaussian `spread`. */
   private def mixture(rnd: Random, centres: Array[Array[Double]], n: Int, spread: Double) =
     Seq.fill(n) {
@@ -792,19 +806,13 @@ class SOMSpec extends SparkSpec {
 
   test("block BMU search equals nearest for every K mod 4, d and block tail") {
     val rnd = new Random(11)
-    for (k <- Seq(1, 2, 3, 4, 5, 7, 9, 400); dim <- Seq(1, 2, 3, 64)) {
+    for (k <- (1 to 9) :+ 400; dim <- Seq(1, 2, 3, 5, 64)) {
       val centres = Array.fill(6)(Array.fill(dim)(4 * rnd.nextGaussian()))
       // prototypes sampled from the data as at init, and clustered as late in a fit
       for ((protos, shape) <- Seq(mixture(rnd, centres, k, 1.0) -> "sampled",
                                   mixture(rnd, centres, k, 0.05) -> "clustered")) {
-        for (n <- 0 to 7) {
-          val exact = assertBlockIsNearest(protos, mixture(rnd, centres, n, 1.0), s"K=$k d=$dim n=$n $shape")
-          assert(exact >= n && exact <= n.toLong * k)
-          if (n < 4) assert(exact == n.toLong * k)
-        }
-        val exact = assertBlockIsNearest(protos, mixture(rnd, centres, 64, 1.0), s"K=$k d=$dim n=64 $shape")
-        assert(exact >= 64 && exact <= 64L * k)
-        if (k == 400 && dim == 64) assert(exact < 64L * k / 20, s"$shape: $exact exact distances")
+        for (n <- Seq(0, 1, 2, 3, 4, 5, 6, 7, 64))
+          assertKernel(protos, mixture(rnd, centres, n, 1.0), s"K=$k d=$dim n=$n $shape")
       }
     }
   }
@@ -812,15 +820,14 @@ class SOMSpec extends SparkSpec {
   test("block BMU search on duplicated prototypes, 1-ulp near ties and a point at the prototype mean") {
     val rnd = new Random(12)
     for (dim <- Seq(1, 2, 3, 64)) {
-      // each of 5 prototypes three times, interleaved across blocks: the
-      // lowest index must win
+      // each of 5 prototypes three times, interleaved: the lowest index must win
       val base = Array.fill(5)(Array.fill(dim)(rnd.nextGaussian()))
       val protos = Seq.tabulate(15)(i => base(i * 7 % 5))
-      assertBlockIsNearest(protos, base.toSeq ++ mixture(rnd, base, 23, 0.3), s"duplicates d=$dim")
+      assertKernel(protos, base.toSeq ++ mixture(rnd, base, 23, 0.3), s"duplicates d=$dim")
     }
-    // near ties far from the prototype mean, where the screen's own rounding
-    // is many ulps of the distance: prototype b is prototype a with one
-    // component moved by -2..2 ulps, both at random places among K=9
+    // near ties far from the origin, where one ulp of a component is many
+    // ulps of nothing: prototype b is prototype a with one component moved
+    // by -2..2 ulps, both at random places among K=9
     for (trial <- 0 until 400) {
       val dim = Seq(2, 3, 64)(trial % 3)
       val x = Array.fill(dim)(1000 + rnd.nextGaussian())
@@ -834,34 +841,33 @@ class SOMSpec extends SparkSpec {
       val protos = Array.fill(9)(Array.emptyDoubleArray)
       protos(slots(0)) = a; protos(slots(1)) = b
       slots.drop(2).zip(far).foreach { case (s, p) => protos(s) = p }
-      assertBlockIsNearest(protos.toSeq, Seq(x, x.map(Math.nextUp), a, b), s"near tie $trial")
+      assertKernel(protos.toSeq, Seq(x, x.map(Math.nextUp), a, b), s"near tie $trial")
     }
-    // rows at the prototype mean, which is itself a prototype: x' = p' = 0,
-    // so the screen value and its bound are exactly 0
+    // rows at the prototype mean, which is itself a prototype
     for (dim <- Seq(1, 2, 3, 64); k <- Seq(4, 5, 9)) {
       val v = Array.fill(dim)((rnd.nextInt(7) - 3).toDouble)
       val protos = Seq.tabulate(k)(i => v.map(_ * (i - (k - 1) / 2.0)))
       val mean = Array.tabulate(dim)(i => protos.map(_(i)).sum / k)
-      assertBlockIsNearest(protos, Seq.fill(4)(mean) ++ Seq(mean, protos(1)), s"mean K=$k d=$dim")
+      assertKernel(protos, Seq.fill(4)(mean) ++ Seq(mean, protos(1)), s"mean K=$k d=$dim")
     }
     // a point at the mean of random prototypes
     val protos = Seq.fill(9)(Array.fill(3)(rnd.nextGaussian()))
     val mean = Array.tabulate(3)(i => protos.map(_(i)).sum / 9)
-    assertBlockIsNearest(protos, Seq.fill(4)(mean), "mean of random prototypes")
+    assertKernel(protos, Seq.fill(4)(mean), "mean of random prototypes")
   }
 
   test("block BMU search at extreme magnitudes, on NaN and ±∞ rows, a NaN prototype and sparse rows") {
     val rnd = new Random(13)
     def gauss(n: Int, dim: Int, scale: Double) = Seq.fill(n)(Array.fill(dim)(scale * rnd.nextGaussian()))
-    for (scale <- Seq(1e-300, 1e-160, 1e150, 1e200); dim <- Seq(1, 3, 64); k <- Seq(4, 9, 400)) {
+    for (scale <- Seq(1e-320, 1e-300, 1e-160, 1e150, 1e200, 1e300); dim <- Seq(1, 3, 64); k <- Seq(4, 9, 400)) {
       val clue = s"scale=$scale K=$k d=$dim"
-      assertBlockIsNearest(gauss(k, dim, scale), gauss(13, dim, scale), clue)
-      assertBlockIsNearest(gauss(k, dim, 1.0), gauss(13, dim, scale), s"$clue, rows only")
-      assertBlockIsNearest(gauss(k, dim, scale), gauss(13, dim, 1.0), s"$clue, prototypes only")
+      assertKernel(gauss(k, dim, scale), gauss(13, dim, scale), clue)
+      assertKernel(gauss(k, dim, 1.0), gauss(13, dim, scale), s"$clue, rows only")
+      assertKernel(gauss(k, dim, scale), gauss(13, dim, 1.0), s"$clue, prototypes only")
       // one tiny or huge component in otherwise unit rows
       val rows = gauss(12, dim, 1.0)
       rows.foreach(r => r(rnd.nextInt(dim)) = scale * rnd.nextGaussian())
-      assertBlockIsNearest(gauss(k, dim, 1.0), rows, s"$clue, one component")
+      assertKernel(gauss(k, dim, 1.0), rows, s"$clue, one component")
     }
     val inf = Double.PositiveInfinity
     for (dim <- Seq(1, 3, 64); k <- Seq(4, 9, 400)) {
@@ -869,18 +875,19 @@ class SOMSpec extends SparkSpec {
       val rows = gauss(11, dim, 1.0)
       Seq(1 -> Double.NaN, 4 -> inf, 6 -> -inf, 9 -> Double.NaN).foreach { case (r, v) =>
         rows(r)(rnd.nextInt(dim)) = v }
-      assertBlockIsNearest(protos, rows, s"non-finite rows K=$k d=$dim")
+      assertKernel(protos, rows, s"non-finite rows K=$k d=$dim")
       for (bad <- Seq(Double.NaN, inf)) {
         val withBad = protos.map(_.clone())
         withBad(k / 2)(0) = bad
-        assertBlockIsNearest(withBad, gauss(9, dim, 1.0), s"prototype $bad K=$k d=$dim")
+        assertKernel(withBad, gauss(9, dim, 1.0), s"prototype $bad K=$k d=$dim")
       }
       val sparse = gauss(10, dim, 1.0).map(_.map(v => if (rnd.nextInt(3) == 0) v else 0.0))
-      assertBlockIsNearest(protos, sparse, s"sparse K=$k d=$dim", sparse = true)
+      assertKernel(protos, sparse, s"sparse K=$k d=$dim", sparse = true)
     }
-    // a wrong-length row inside a block throws, as nearest does
-    val protos = gauss(8, 3, 1.0)
-    intercept[IllegalArgumentException](blockSearch(protos, gauss(3, 3, 1.0) :+ Array(1.0, 2.0), sparse = false))
+    // a wrong-length row throws, naming both lengths
+    val e = intercept[IllegalArgumentException](
+      BmuFold(gauss(8, 3, 1.0)).argmin(Array(1.0, 2.0), new Array[Double](8)))
+    assert(e.getMessage.contains("has 2 elements but the prototypes have 3"))
   }
 
   test("fit through the block search is bit-identical to a fit forced through nearest, 20x20") {
@@ -895,29 +902,30 @@ class SOMSpec extends SparkSpec {
       .setProtoDecimals(4).setSumDecimals(6)
       .setInitialModel(new SOMModel("init", init)).fit(df)
     assert(model.summary.numIter == iters)
-    // the same loop, every BMU from nearest
-    val points = SOM.points(df, "features").cache()
+    // the same loop, every BMU from the reference argmin: one partial per
+    // partition, merged in partition order, as the fit's scan merges them
+    val partitions = SOM.points(df, "features").glom().collect()
+    assert(partitions.length == 3)
     var protos = init
     val costs = scala.collection.mutable.ArrayBuffer.empty[Double]
     for (iter <- 0 until iters) {
       val t = Grid.temperature("exponential", iter, iters, 10.0, 1.0)
-      val agg = SOM.cellStats(points, protos, screen = false)
-      assert(agg.exact == n.toLong * 400)
+      val rowsOf = protos.map(_.toArray).toSeq
+      val agg = partitions.map { part =>
+        val a = SOM.CellAgg(400, dim)
+        part.foreach { v => val (cell, d2) = naiveNearest(rowsOf, v.toArray); a.add(cell, v, d2) }
+        a
+      }.foldLeft(SOM.CellAgg(400, dim))((a, b) => a.merge(b))
       val (next, cost) = SOM.smooth(agg, protos, Grid.neighborhood("gaussian", "rectangular", 20, 20, t), 6, 4)
       protos = next
       costs += cost
     }
-    points.unpersist()
     assert(model.prototypes.length == 400)
     for ((p, q) <- model.prototypes.zip(protos))
       assert(p.toArray.map(java.lang.Double.doubleToRawLongBits).sameElements(
         q.toArray.map(java.lang.Double.doubleToRawLongBits)))
     assert(model.summary.objectiveHistory.map(java.lang.Double.doubleToRawLongBits).sameElements(
       costs.map(java.lang.Double.doubleToRawLongBits)))
-    // the screen's work: at least the winner per point, far fewer than N·K
-    val exact = model.summary.iterationExactDistances
-    assert(exact.length == iters)
-    assert(exact.forall(e => e >= n && e < n.toLong * 400 / 10), exact.mkString(","))
   }
 
 }

@@ -40,6 +40,15 @@ if grep -rn 'min(struct(col("d2")' src/main; then
   exit 1
 fi
 
+echo "== one BMU fold =="
+# every SOM argmin (fit, transform, computeCost, predict and the catalog's
+# prototype assignment) runs BmuFold.argmin; a second copy of its NaN-last
+# comparison outside the kernel's file would be a second BMU loop
+if grep -rnF 's == s && !(s >=' src/main | grep -v "^src/main/scala/graft/functions/ArrayVectorExpressions.scala:"; then
+  echo 'NaN-last argmin comparison outside ArrayVectorExpressions.scala: call BmuFold.argmin'
+  exit 1
+fi
+
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests:|All tests" | tail -2
 
