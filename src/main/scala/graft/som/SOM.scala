@@ -1,14 +1,14 @@
 package graft.som
 
 import graft.functions.{BmuFold, HalfUp}
+import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.ml.Estimator
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType, UserDefinedType}
 import org.apache.spark.storage.StorageLevel
 
 /** Batch Self-Organizing Map estimator — Kohonen map trained with the
@@ -16,16 +16,17 @@ import org.apache.spark.storage.StorageLevel
   * (reference `som/SOM.scala`).
   *
   * Rework of the reference's RDD pipeline:
-  *  - the features are decoded once into a cached `RDD[Vector]`; each
+  *  - the features are decoded once, straight from the rows of the
+  *    executed plan, into a cached `RDD[Vector]` ([[SOM.points]]); each
   *    iteration is one [[SOM.step]] (the kernel the catalog's SOM update
-  *    entries share), whose assign+aggregate is one single-stage job: each
-  *    point's BMU comes from [[BmuFold]], the one exact BMU fold, over the
-  *    prototypes held component-major, so the inner loop runs across the K
-  *    prototypes and the JIT vectorises it (the reference's norm-bound
-  *    prune skipped 3 % of candidates at K=400);
-  *    `mapPartitions` folds every partition into one K×d partial (sums,
-  *    counts, Σd2), and the driver merges the partials in partition-index
-  *    order from an ordered `collect` (tree-reduced only when
+  *    entries share), whose assign+aggregate is one plain Spark job over
+  *    that RDD: each point's BMU comes from [[BmuFold]], the one exact BMU
+  *    fold, over the prototypes held component-major, so the inner loop
+  *    runs across the K prototypes and the JIT vectorises it (the
+  *    reference's norm-bound prune skipped 3 % of candidates at K=400);
+  *    every task folds its partition into one K×d partial (sums, counts,
+  *    Σd2), `runJob` returns the partials in partition-index order and the
+  *    driver merges them in that order (tree-reduced only when
   *    partitions×K×d is large), so the float sums are reproducible run to
   *    run — the reference used `mapPartitions` + `reduceByKey` (reference
   *    `som/SOM.scala:192-212`);
@@ -35,11 +36,18 @@ import org.apache.spark.storage.StorageLevel
   *  - the O(K²·d) neighborhood smoothing stays on the driver, like the
   *    reference (`som/SOM.scala:219-234`), but reads the kernel from a
   *    per-iteration table indexed by grid distance and rounds without
-  *    BigDecimal ([[SOM.smooth]]): at K=400, d=64 it takes about 3 ms of
-  *    an iteration (28 ms before), against a scan job of about 65 ms.
+  *    BigDecimal ([[SOM.smooth]]).
+  *
+  * Cost at K=400, d=64, N=12,000 on `local[4]` (4-vCPU VM): a scan job
+  * takes about 30 ms, of which its tasks' CPU (about 65 ms over 4 slots)
+  * fills only half; the smoothing takes about 3 ms of an iteration. The
+  * fit therefore runs as few jobs as it can — the two of `takeSample` (the
+  * first of which fills the cache) and one per iteration — and creates no
+  * RDD per iteration. [[SOMTrainingSummary]] splits a fit's time into
+  * init, scans and driver updates.
   *
   * Scale: per iteration, one scan of N rows with no shuffle, and one
-  * collect of numPartitions K×d partials. The model (K·d doubles) is
+  * result of numPartitions K×d partials. The model (K·d doubles) is
   * broadcast each iteration and destroyed after.
   */
 class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
@@ -75,13 +83,14 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
   }
 
   override def fit(dataset: Dataset[_]): SOMModel = {
+    val start = System.nanoTime()
     transformSchema(dataset.schema, logging = true)
     val k = numCells
 
-    // Column pruning + normalization to VectorUDT (Catalyst prunes the scan
-    // to the features column), then ONE exit to a cached RDD[Vector] for
-    // the iterative hot loop. The per-iteration assign+aggregate is a
-    // tiny ≤K-row result over an unchanging input: re-planning it through
+    // Column pruning + normalization (Catalyst prunes the scan to the
+    // features column), then ONE exit to a cached RDD[Vector] for the
+    // iterative hot loop. The per-iteration assign+aggregate is a tiny
+    // ≤K-row result over an unchanging input: re-planning it through
     // Catalyst every iteration (analysis + whole-stage codegen + exchange)
     // costs more than the aggregation itself — the same reason MLlib's
     // iterative estimators (KMeans, GMM) run their training loops on RDD
@@ -89,56 +98,57 @@ class SOM(override val uid: String) extends Estimator[SOMModel] with SOMParams
     val points = SOM.points(dataset, $(featuresCol))
     points.persist(StorageLevel.MEMORY_AND_DISK)
 
-    // --- init: K seeded random rows with the reference's exact seed chain —
-    // the takeSample seed is the first nextInt of an XORShift generator
-    // seeded by the user seed (`som/SOM.scala:295-298`); warm start takes
-    // precedence. (Sampling the mapped RDD preserves partition structure and
-    // row order, so the same seed draws the same rows as sampling the
-    // DataFrame did.)
-    var prototypes: Array[Vector] = initialModel match {
-      case Some(m) => m.prototypes
-      case None =>
-        val sample = points.takeSample(withReplacement = true, num = k,
-          seed = new XORShiftRandom($(seed)).nextInt())
-        require(sample.length == k, s"not enough data to sample $k prototypes")
-        sample.map(p => Vectors.dense(p.toArray))
-    }
+    try SOM.rethrowBadRow {
+      // --- init: K seeded random rows with the reference's exact seed chain —
+      // the takeSample seed is the first nextInt of an XORShift generator
+      // seeded by the user seed (`som/SOM.scala:295-298`); warm start takes
+      // precedence. (The decoded RDD keeps the plan's partitions and row
+      // order, so the same seed draws the same rows as sampling the
+      // DataFrame did.)
+      var prototypes: Array[Vector] = initialModel match {
+        case Some(m) => m.prototypes
+        case None =>
+          val sample = points.takeSample(withReplacement = true, num = k,
+            seed = new XORShiftRandom($(seed)).nextInt())
+          require(sample.length == k, s"not enough data to sample $k prototypes")
+          sample.map(p => Vectors.dense(p.toArray))
+      }
+      val initSeconds = (System.nanoTime() - start) / 1e9
 
-    val kern = $(kernel); val dec = $(decay); val topo = $(topology)
-    val tMx = $(tMax); val tMn = $(tMin); val iters = $(maxIter); val eps = $(tol)
-    val history = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val scanSeconds, updateSeconds = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var iter = 0
-    var converged = false
+      val kern = $(kernel); val dec = $(decay); val topo = $(topology)
+      val tMx = $(tMax); val tMn = $(tMin); val iters = $(maxIter); val eps = $(tol)
+      val history = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val scanSeconds, updateSeconds = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var iter = 0
+      var converged = false
 
-    while (iter < iters && !converged) {
-      val t = Grid.temperature(dec, iter, iters, tMx, tMn)
-      // SOM.step, with its scan and its driver update timed apart
-      val t0 = System.nanoTime()
-      val agg = SOM.cellStats(points, prototypes)
-      val t1 = System.nanoTime()
-      val (next, cost) = SOM.smooth(agg, prototypes,
-        Grid.neighborhood(kern, topo, $(height), $(width), t), $(sumDecimals), $(protoDecimals))
-      scanSeconds += (t1 - t0) / 1e9
-      updateSeconds += (System.nanoTime() - t1) / 1e9
-      // Converged when no prototype moved more than tol (the prototypes are
-      // already quantized via protoDecimals).
-      converged = !next.indices.exists(c => Vectors.sqdist(next(c), prototypes(c)) > eps * eps)
-      prototypes = next
-      history += cost
-      iter += 1
-    }
+      while (iter < iters && !converged) {
+        val t = Grid.temperature(dec, iter, iters, tMx, tMn)
+        // SOM.step, with its scan and its driver update timed apart
+        val t0 = System.nanoTime()
+        val agg = SOM.cellStats(points, prototypes)
+        val t1 = System.nanoTime()
+        val (next, cost) = SOM.smooth(agg, prototypes,
+          Grid.neighborhood(kern, topo, $(height), $(width), t), $(sumDecimals), $(protoDecimals))
+        scanSeconds += (t1 - t0) / 1e9
+        updateSeconds += (System.nanoTime() - t1) / 1e9
+        // Converged when no prototype moved more than tol (the prototypes are
+        // already quantized via protoDecimals).
+        converged = !next.indices.exists(c => Vectors.sqdist(next(c), prototypes(c)) > eps * eps)
+        prototypes = next
+        history += cost
+        iter += 1
+      }
 
-    points.unpersist(blocking = false)
-
-    val model = copyValues(new SOMModel(uid, prototypes).setParent(this))
-    val summary = new SOMTrainingSummary(
-      model.transform(dataset), $(featuresCol), $(predictionCol),
-      $(height), $(width), $(maxIter), iter,
-      if (history.nonEmpty) history.last else 0.0, history.toArray,
-      scanSeconds.toArray, updateSeconds.toArray)
-    model.setSummary(Some(summary))
-    model
+      val model = copyValues(new SOMModel(uid, prototypes).setParent(this))
+      val summary = new SOMTrainingSummary(
+        model.transform(dataset), $(featuresCol), $(predictionCol),
+        $(height), $(width), $(maxIter), iter,
+        if (history.nonEmpty) history.last else 0.0, history.toArray,
+        scanSeconds.toArray, updateSeconds.toArray, initSeconds)
+      model.setSummary(Some(summary))
+      model
+    } finally points.unpersist(blocking = false)
   }
 
   override def transformSchema(schema: StructType): StructType =
@@ -154,51 +164,89 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
   override def load(path: String): SOM = super.load(path)
 
   /** The features column (VectorUDT or array<float|double>) decoded to
-    * vectors once, for an iterative caller to cache. Sparse rows stay
-    * sparse (the BMU scan densifies per call). */
+    * vectors once, for an iterative caller to cache: one pass over the rows
+    * of the projection's executed plan, so the RDD has the plan's
+    * partitions and row order. A vector row goes through the UDT's own
+    * `deserialize`, so sparse rows stay sparse (the BMU scan densifies per
+    * call); an array row is copied into a dense vector, `array<float>`
+    * after a cast to `array<double>`. A null row, or a null element of an
+    * array row, fails its task with an IllegalArgumentException naming the
+    * column (there is no vector to train on; `transform` scores such a row
+    * null and `computeCost` skips it). */
   private[graft] def points(dataset: Dataset[_], featuresCol: String): RDD[Vector] = {
     val c = col(featuresCol)
-    val f = dataset.schema(featuresCol).dataType match {
-      case SQLDataTypes.VectorType => c
-      case ArrayType(DoubleType, _) => array_to_vector(c)
-      case ArrayType(FloatType, _) => array_to_vector(c.cast("array<double>"))
+    dataset.schema(featuresCol).dataType match {
+      case SQLDataTypes.VectorType =>
+        val udt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
+        dataset.select(c).queryExecution.toRdd.map { r =>
+          if (r.isNullAt(0)) throw badRow(featuresCol, "a null row")
+          udt.deserialize(r.getStruct(0, 4))
+        }
+      case ArrayType(elem @ (DoubleType | FloatType), nullElements) =>
+        val f = if (elem == FloatType) c.cast("array<double>") else c
+        dataset.select(f).queryExecution.toRdd.map { r =>
+          if (r.isNullAt(0)) throw badRow(featuresCol, "a null row")
+          val xs = r.getArray(0)
+          if (nullElements) {
+            var i = 0
+            while (i < xs.numElements()) {
+              if (xs.isNullAt(i)) throw badRow(featuresCol, s"an array row with a null element at index $i")
+              i += 1
+            }
+          }
+          Vectors.dense(xs.toDoubleArray())
+        }
       case other => throw new IllegalArgumentException(s"unsupported features type $other")
     }
-    dataset.select(f).rdd.map(_.getAs[Vector](0))
   }
 
+  private def badRow(featuresCol: String, what: String) =
+    new IllegalArgumentException(s"features column '$featuresCol' holds $what")
+
+  /** Runs `body`, rethrowing an IllegalArgumentException that failed one of
+    * its tasks (a bad features row, see [[points]]) as itself rather than
+    * as the job's SparkException. */
+  private def rethrowBadRow[T](body: => T): T =
+    try body catch {
+      case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
+        throw e.getCause
+    }
+
   /** Per-cell sums, counts and total quantization cost of `points` against
-    * `protos`, in one single-stage job: `mapPartitions` folds every
-    * partition into one K×d partial (map-side partial aggregation minus the
-    * per-iteration plan compile and exchange), and the driver merges the
-    * partials. Each point's BMU and distance come from [[BmuFold.argmin]]
-    * against the prototypes, transposed once on the driver, broadcast and
-    * destroyed after; each partition keeps one K-double distance buffer. */
+    * `protos`, in one single-stage job over `points` itself (`runJob`, so no
+    * RDD is created per call): every task folds its partition into one K×d
+    * partial, and the driver merges the partials in partition-index order.
+    * Each point's BMU and distance come from [[BmuFold.argmin]] against the
+    * prototypes, transposed once on the driver, broadcast and destroyed
+    * after; each task keeps one K-double distance buffer. */
   private[graft] def cellStats(points: RDD[Vector], protos: Array[Vector]): CellAgg = {
     val k = protos.length
     val dim = protos(0).size
-    val bc = points.sparkContext.broadcast(BmuFold(protos.map(_.toArray).toSeq))
+    val sc = points.sparkContext
+    val bc = sc.broadcast(BmuFold(protos.map(_.toArray).toSeq))
     try {
-      val partials = points.mapPartitions { it =>
+      val partial = (it: Iterator[Vector]) => {
         val fold = bc.value
         val acc = new Array[Double](k)
         val a = CellAgg(k, dim)
         it.foreach { p => val cell = fold.argmin(p.toArray, acc); a.add(cell, p, acc(cell)) }
-        Iterator.single(a)
+        a
       }
-      // Merge partials in PARTITION-INDEX order (collect preserves it): the
-      // float sums are then reproducible run-to-run for a fixed partitioning,
-      // unlike aggregate/treeAggregate whose driver merge follows task
-      // completion order. Driver holds numPartitions×K×d doubles — fine up
-      // to ~128 MB; past that, fall back to the tree combine (order
-      // nondeterministic in the last ulp; set sumDecimals to quantize it
-      // away when cross-run bit-equality matters at that scale). The fold
-      // starts from an empty partial, so an input with no partitions
-      // aggregates to no points.
+      // Merge partials in PARTITION-INDEX order (runJob returns them so):
+      // the float sums are then reproducible run-to-run for a fixed
+      // partitioning, unlike aggregate/treeAggregate whose driver merge
+      // follows task completion order. Driver holds numPartitions×K×d
+      // doubles — fine up to ~128 MB; past that, fall back to the tree
+      // combine (order nondeterministic in the last ulp; set sumDecimals to
+      // quantize it away when cross-run bit-equality matters at that
+      // scale). The fold starts from an empty partial, so an input with no
+      // partitions aggregates to no points.
       if (points.getNumPartitions.toLong * k * dim > (1L << 24))
-        partials.treeReduce((a, b) => a.merge(b), depth = 2)
+        points.mapPartitions(it => Iterator.single(partial(it)))
+          .treeReduce((a, b) => a.merge(b), depth = 2)
       else
-        partials.collect().foldLeft(CellAgg(k, dim))((a, b) => a.merge(b))
+        sc.runJob(points, (_: TaskContext, it: Iterator[Vector]) => partial(it))
+          .foldLeft(CellAgg(k, dim))((a, b) => a.merge(b))
     } finally bc.destroy()
   }
 

@@ -1,11 +1,13 @@
 package graft.som
 
 import graft.functions.{ArrayVectorExpressions, BmuFold}
+import org.apache.spark.TaskContext
 import org.apache.spark.ml.Model
 import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.{Param, ParamMap}
 import org.apache.spark.ml.util.{MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 
@@ -16,9 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
   * reference's UDF (`som/SOMModel.scala:76-82`): the model's prototypes,
   * transposed once into a [[BmuFold]], ride the plan, and each row gets its
   * BMU from the one exact BMU fold [[BmuFold.argmin]] — an embarrassingly
-  * parallel map, no shuffle. [[transform]] and [[computeCost]] (one exact
-  * aggregate of its distance output, `som/SOMModel.scala:92-97` minus the
-  * RDD detour) are that expression and `predict` calls the kernel, so all
+  * parallel map, no shuffle. [[transform]] and [[computeCost]] (one job
+  * summing its distance output, `som/SOMModel.scala:92-97` minus the Row
+  * decode) are that expression and `predict` calls the kernel, so all
   * agree on every row, NaN and ±∞ too.
   *
   * Persistence (absent in the reference, `README.md:91`): `MLWritable`
@@ -71,12 +73,20 @@ class SOMModel(override val uid: String, val prototypes: Array[Vector])
   /** [[transform]] under its earlier name. */
   def transformNative(dataset: Dataset[_]): DataFrame = transform(dataset)
 
-  /** Total quantization error: Σ min-squared-distance, one aggregate job;
-    * 0.0 on an empty dataset, like the reference's RDD sum. Null rows are
-    * skipped; a row whose distances are all NaN adds NaN. */
-  def computeCost(dataset: Dataset[_]): Double =
-    dataset.select(coalesce(sum(scoreCol(dataset.schema, distance = true)), lit(0.0)))
-      .head().getDouble(0)
+  /** Total quantization error: Σ min-squared-distance, in one Spark job over
+    * the rows of the distance projection's executed plan. Each task sums its
+    * partition in row order and the driver folds the partition sums in
+    * partition-index order, so the total does not depend on which task
+    * finishes first. 0.0 on an empty dataset, like the reference's RDD sum.
+    * Null rows are skipped; a row whose distances are all NaN adds NaN. */
+  def computeCost(dataset: Dataset[_]): Double = {
+    val d2 = dataset.select(scoreCol(dataset.schema, distance = true)).queryExecution.toRdd
+    d2.sparkContext.runJob(d2, (_: TaskContext, it: Iterator[InternalRow]) => {
+      var s = 0.0
+      it.foreach(r => if (!r.isNullAt(0)) s += r.getDouble(0))
+      s
+    }).foldLeft(0.0)(_ + _)
+  }
 
   /** Prototypes as a small DataFrame `(cell, prototype)` — the broadcastable
     * dimension side for SQL-expressible scoring. */

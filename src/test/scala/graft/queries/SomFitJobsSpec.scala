@@ -2,31 +2,43 @@ package graft.queries
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import java.util.concurrent.atomic.AtomicInteger
+import graft.functions.BmuFold
+import graft.som.{SOM, SOMModel}
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import scala.util.Random
 
-/** The shape of the catalog's SOM fit, measured: `som_fit5` runs the
-  * estimator's kernel, one Spark job per iteration plus a fixed overhead,
-  * not a re-planned multi-job query per iteration. */
+/** The job shape of the SOM passes over the data, measured: `som_fit5`
+  * runs the estimator's kernel, one Spark job per iteration plus a fixed
+  * overhead, not a re-planned multi-job query per iteration; `SOM.fit` adds
+  * only `takeSample`'s two jobs and creates no RDD per iteration; and
+  * `computeCost` is one job. */
 class SomFitJobsSpec extends SparkSpec {
 
-  /** Spark jobs started while `body` runs. */
-  private def jobs(body: => Unit): Int = {
-    val n = new AtomicInteger
+  /** The Spark jobs started while `body` runs, in start order: the ids of
+    * the RDDs each job's stages read. */
+  private def jobRdds(body: => Unit): Seq[Set[Int]] = {
+    val started = new ConcurrentLinkedQueue[(Int, Set[Int])]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(e.jobId -> e.stageInfos.flatMap(_.rddInfos.map(_.id)).toSet)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      // listener events are async: poll until the counter goes quiet
+      // listener events are async: poll until the queue goes quiet
       var last = -1
       var spins = 0
-      while (n.get != last && spins < 50) {
-        last = n.get; spins += 1; Thread.sleep(100)
+      while (started.size != last && spins < 50) {
+        last = started.size; spins += 1; Thread.sleep(100)
       }
-      n.get
+      started.asScala.toSeq.sortBy(_._1).map(_._2)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobs(body: => Unit): Int = jobRdds(body).length
 
   test("som_fit5 runs one job per iteration plus a fixed overhead") {
     val dir = sf("sf0.001")
@@ -34,5 +46,47 @@ class SomFitJobsSpec extends SparkSpec {
     // overhead: two parquet schema reads (prototype table, training input)
     // and the prototype collect
     assert(measured == MlQueries.FitIters + 3, s"som_fit5 ran $measured jobs")
+  }
+
+  private def vectors(seed: Long, n: Int, partitions: Int) = {
+    import spark.implicits._
+    val rnd = new Random(seed)
+    spark.sparkContext.parallelize(Seq.tabulate(n)(i =>
+      (i.toLong, Vectors.dense(Array.fill(8)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(7)))))), partitions)
+      .toDF("id", "features")
+  }
+
+  test("a SOM fit with maxIter = n and tol = 0 runs n + 2 jobs, its n scans over the same RDDs") {
+    val df = vectors(1, 600, 3)
+    val n = 4
+    var model: SOMModel = null
+    val shape = jobRdds {
+      model = new SOM().setHeight(3).setWidth(3).setMaxIter(n).setTol(0.0).setSeed(2).fit(df)
+    }
+    assert(model.summary.numIter == n)
+    // takeSample's count (which fills the points cache) and its sample job,
+    // then one job per iteration
+    assert(shape.length == n + 2, s"fit ran ${shape.length} jobs")
+    val scans = shape.takeRight(n)
+    assert(scans.head.nonEmpty && scans.forall(_ == scans.head), s"scan stages read RDDs $scans")
+  }
+
+  test("computeCost is one job and equals the partition-order fold of its row distances bit for bit") {
+    val rnd = new Random(3)
+    val model = new SOMModel("cost", Array.fill(9)(Vectors.dense(Array.fill(8)(rnd.nextGaussian() * 100))))
+      .setGrid(3, 3)
+    val df = vectors(4, 2000, 6)
+    var cost = Double.NaN
+    assert(jobs { cost = model.computeCost(df) } == 1)
+    val fold = BmuFold(model.prototypes.map(_.toArray).toSeq)
+    val acc = new Array[Double](fold.k)
+    val partitionSums = df.select("features").rdd.glom().collect().map(_.foldLeft(0.0) { (s, r) =>
+      val x = r.getAs[Vector](0).toArray
+      s + acc(fold.argmin(x, acc))
+    })
+    assert(partitionSums.length == 6)
+    val want = partitionSums.foldLeft(0.0)(_ + _)
+    assert(java.lang.Double.doubleToRawLongBits(cost) == java.lang.Double.doubleToRawLongBits(want),
+      s"computeCost $cost, partition-order fold $want")
   }
 }

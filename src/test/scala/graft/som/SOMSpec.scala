@@ -2,12 +2,15 @@ package graft.som
 
 import graft.SparkSpec
 import graft.functions.{ArrayArgminSqDist, BmuFold, HalfUp}
-import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, SparseVector, Vector, Vectors}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedUnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, UserDefinedType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, UserDefinedType}
 import scala.util.Random
 
 class SOMSpec extends SparkSpec {
@@ -928,4 +931,127 @@ class SOMSpec extends SparkSpec {
       costs.map(java.lang.Double.doubleToRawLongBits)))
   }
 
+  /** The decode [[SOM.points]] replaced, kept as its reference: the
+    * `array_to_vector` Scala UDF over array rows, then `Dataset.rdd`'s Row
+    * deserializer. */
+  private def rowDecode(df: DataFrame, c: String): RDD[Vector] = {
+    import org.apache.spark.sql.functions.col
+    val f = df.schema(c).dataType match {
+      case SQLDataTypes.VectorType => col(c)
+      case ArrayType(DoubleType, _) => array_to_vector(col(c))
+      case ArrayType(FloatType, _) => array_to_vector(col(c).cast("array<double>"))
+    }
+    df.select(f).rdd.map(_.getAs[Vector](0))
+  }
+
+  /** A vector's class, active indices (sparse only) and value bits. */
+  private def vectorBits(v: Vector): (String, Seq[Int], Seq[Long]) = v match {
+    case sv: SparseVector =>
+      ("sparse", sv.indices.toSeq, sv.values.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    case dv: DenseVector =>
+      ("dense", Seq.empty, dv.values.map(java.lang.Double.doubleToRawLongBits).toSeq)
+  }
+
+  /** 3-partition frames of `rows` with the features as dense VectorUDT,
+    * sparse VectorUDT (zeros dropped), array<double> and array<float>. */
+  private def featureFrames(rows: Seq[Array[Double]]): Seq[(String, DataFrame)] = {
+    import spark.implicits._
+    def frame[T: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](f: Array[Double] => T) =
+      spark.createDataset(spark.sparkContext.parallelize(rows.map(f), 3)).toDF("features")
+    Seq(
+      "dense vector" -> frame(r => Tuple1(Vectors.dense(r))),
+      "sparse vector" -> frame(r => Tuple1(Vectors.dense(r).toSparse.asInstanceOf[Vector])),
+      "array<double>" -> frame(r => Tuple1(r)),
+      "array<float>" -> frame(r => Tuple1(r.map(_.toFloat))))
+  }
+
+  test("points decodes every features type as the Row decode did, row for row and partition for partition") {
+    val rnd = new Random(21)
+    val rows = Seq.fill(200)(Array.fill(5)(if (rnd.nextInt(3) == 0) 0.0 else rnd.nextGaussian())) ++
+      Seq(Array(Double.NaN, -0.0, Double.PositiveInfinity, Double.NegativeInfinity, 1e-310))
+    for ((name, df) <- featureFrames(rows)) {
+      val got = SOM.points(df, "features").glom().collect()
+      val want = rowDecode(df, "features").glom().collect()
+      assert(got.length == 3 && got.length == want.length, name)
+      for ((g, w) <- got.zip(want)) assert(g.map(vectorBits).toSeq == w.map(vectorBits).toSeq, name)
+      val kinds = got.flatten.map(v => vectorBits(v)._1).distinct.toSeq
+      assert(kinds == Seq(if (name == "sparse vector") "sparse" else "dense"), name)
+    }
+  }
+
+  /** [[SOM.fit]]'s loop run by hand over `points`: the same seeded
+    * `takeSample` init, [[SOM.cellStats]] + [[SOM.smooth]] per iteration and
+    * the same convergence test. */
+  private def fitOn(points: RDD[Vector], som: SOM): (Array[Vector], Seq[Double]) = {
+    def p[T](param: org.apache.spark.ml.param.Param[T]): T = som.getOrDefault(param)
+    val (h, w, iters) = (p(som.height), p(som.width), p(som.maxIter))
+    points.persist()
+    try {
+      var protos = points.takeSample(withReplacement = true, h * w,
+        new XORShiftRandom(p(som.seed)).nextInt()).map(v => Vectors.dense(v.toArray))
+      val costs = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var converged = false
+      while (costs.length < iters && !converged) {
+        val t = Grid.temperature(p(som.decay), costs.length, iters, p(som.tMax), p(som.tMin))
+        val (next, cost) = SOM.smooth(SOM.cellStats(points, protos),
+          protos, Grid.neighborhood(p(som.kernel), p(som.topology), h, w, t),
+          p(som.sumDecimals), p(som.protoDecimals))
+        converged = !next.indices.exists(c => Vectors.sqdist(next(c), protos(c)) > p(som.tol) * p(som.tol))
+        protos = next
+        costs += cost
+      }
+      (protos, costs.toSeq)
+    } finally points.unpersist()
+  }
+
+  test("fit over every features type equals a fit through the Row decode bit for bit") {
+    val rnd = new Random(22)
+    val centres = Array.fill(4)(Array.fill(6)(3 * rnd.nextGaussian()))
+    val rows = mixture(rnd, centres, 600, 1.0).map(_.map(x => if (math.abs(x) < 0.5) 0.0 else x))
+    for ((name, df) <- featureFrames(rows)) {
+      val som = new SOM().setHeight(3).setWidth(4).setMaxIter(4).setTol(0.0).setSeed(23)
+      val model = som.fit(df)
+      val (protos, costs) = fitOn(rowDecode(df, "features"), som)
+      assert(model.summary.numIter == 4, name)
+      assert(model.prototypes.map(vectorBits).toSeq == protos.map(vectorBits).toSeq, name)
+      assert(model.objectiveHistory.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+        costs.map(java.lang.Double.doubleToRawLongBits), name)
+    }
+  }
+
+  test("fit on a null features row or a null array element fails naming the column") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    def frame(dt: org.apache.spark.sql.types.DataType, rows: Seq[Any]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.map(Row(_)), 2),
+        StructType(Seq(StructField("emb", dt))))
+    val arrays = ArrayType(DoubleType, containsNull = true)
+    val cases = Seq(
+      "a null row" -> frame(SQLDataTypes.VectorType,
+        Seq(Vectors.dense(1.0, 2.0), null, Vectors.sparse(2, Array(1), Array(3.0)))),
+      "a null row" -> frame(arrays, Seq(Seq(1.0, 2.0), null, Seq(3.0, 4.0))),
+      "a null element at index 1" -> frame(arrays, Seq(Seq(1.0, 2.0), Seq(3.0, null), Seq(5.0, 6.0))),
+      "a null element at index 0" -> frame(ArrayType(FloatType, containsNull = true),
+        Seq(Seq(1.0f, 2.0f), Seq(null, 4.0f), Seq(5.0f, 6.0f))))
+    for ((what, df) <- cases; warm <- Seq(false, true)) {
+      val som = new SOM().setFeaturesCol("emb").setHeight(2).setWidth(2).setMaxIter(2).setSeed(1)
+      if (warm) som.setInitialModel(new SOMModel("init",
+        Array.fill(4)(Vectors.dense(0.0, 0.0))).setGrid(2, 2))
+      val e = intercept[IllegalArgumentException](som.fit(df))
+      assert(e.getMessage.contains("features column 'emb' holds") && e.getMessage.contains(what),
+        s"${df.schema("emb").dataType} warm=$warm: ${e.getMessage}")
+    }
+  }
+
+  test("initSeconds and the per-iteration times account for no more than the fit's wall time") {
+    val df = demoDF(500)
+    for (iters <- Seq(0, 3)) {
+      val t0 = System.nanoTime()
+      val s = new SOM().setHeight(3).setWidth(3).setMaxIter(iters).setTol(0.0).setSeed(42).fit(df).summary
+      val wall = (System.nanoTime() - t0) / 1e9
+      assert(s.numIter == iters)
+      assert(s.initSeconds > 0.0)
+      assert(s.initSeconds + s.iterationScanSeconds.sum + s.iterationUpdateSeconds.sum <= wall)
+    }
+  }
 }

@@ -49,6 +49,15 @@ if grep -rnF 's == s && !(s >=' src/main | grep -v "^src/main/scala/graft/functi
   exit 1
 fi
 
+echo "== one features decode =="
+# SOM.points decodes the executed plan's rows itself (VectorUDT deserialize,
+# array copy); the Scala UDF that boxes every element and Dataset.rdd's Row
+# deserializer must not come back under graft/som
+if grep -rnE 'array_to_vector|\)\.rdd\b' src/main/scala/graft/som/; then
+  echo "array_to_vector or Dataset.rdd under src/main/scala/graft/som: decode through SOM.points"
+  exit 1
+fi
+
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests:|All tests" | tail -2
 
