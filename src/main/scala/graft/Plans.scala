@@ -3,11 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dumps formatted physical plans for the headline catalog queries into
-  * PLANS.md — the human-auditable companion to PlanSpec's mechanical
-  * asserts: broadcasts, pushed filters, pruned schemas, partial aggregates
-  * and custom operators are visible per query. Regenerate with:
-  * `sbt "runMain graft.Plans /root/testdata/sf0.001 PLANS.md"`. */
+/** Dumps formatted physical plans of catalog queries — the human-auditable
+  * companion to PlanSpec's mechanical asserts: broadcasts, pushed filters,
+  * pruned schemas, partial aggregates and custom operators are visible per
+  * query. `sbt "runMain graft.Plans <sfDir> PLANS.md"` writes every
+  * [[Headline]] plan into one file (regenerate it whole, at sf0.001);
+  * `sbt "runMain graft.Plans <sfDir> <outDir> <name>[,<name>...] [suffix]"`
+  * writes `<outDir>/<name>[_<suffix>].txt` per named entry (before/after
+  * evidence, `plans/r16/…`). Shared artifacts are dropped before each entry,
+  * so no plan depends on the entries run before it. */
 object Plans {
   // the scale-interesting subset: every join/agg/custom-operator shape
   val Headline = Seq(
@@ -210,6 +214,11 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("PLANS.md")
+    val names = args.drop(2).headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val suffix = args.drop(3).headOption.fold("")("_" + _)
+    val wanted = names.getOrElse(Headline)
+    val missing = wanted.filterNot(SparkEntry.queries.contains)
+    require(missing.isEmpty, s"not in the catalog (renamed?): ${missing.mkString(", ")}")
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
@@ -218,22 +227,27 @@ object Plans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.Plans` at `$sfDir` (plans are scale-factor-\n")
-    sb.append("independent: same shapes at any SF). The properties PlanSpec pins\n")
-    sb.append("mechanically — broadcasts, pushdown, pruned ReadSchema, partial\n")
-    sb.append("aggregation, TakeOrderedAndProject, the custom TopKPerKey operator —\n")
-    sb.append("are all visible below.\n")
-    val missing = Headline.filterNot(SparkEntry.queries.contains)
-    require(missing.isEmpty,
-      s"headline names not in the catalog (renamed?): ${missing.mkString(", ")}")
-    Headline.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(mode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+    def plan(name: String): String = {
+      graft.operators.Artifacts.clear()
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(mode)
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out (${Headline.size} plans)")
+    if (names.isDefined) {
+      Files.createDirectories(Paths.get(out))
+      wanted.foreach(name => Files.writeString(Paths.get(out, s"$name$suffix.txt"), plan(name)))
+    } else {
+      val head = s"""# PLANS — formatted physical plans of the headline queries
+        |
+        |Generated by `graft.Plans` at `$sfDir` (plans are scale-factor-
+        |independent: same shapes at any SF), shared artifacts dropped before
+        |each entry. The properties PlanSpec pins mechanically — broadcasts,
+        |pushdown, pruned ReadSchema, partial aggregation,
+        |TakeOrderedAndProject, the custom TopKPerKey operator — are all
+        |visible below.
+        |""".stripMargin
+      Files.writeString(Paths.get(out),
+        head + wanted.map(name => s"\n## $name\n\n```\n${plan(name)}```\n").mkString)
+    }
+    println(s"wrote ${wanted.size} plans to $out")
     spark.stop()
   }
 }

@@ -188,11 +188,13 @@ object ArrayArgminSqDist {
 
 /** The one best-matching-unit kernel, behind every SOM argmin (`fit`,
   * `transform`, `computeCost`, `predict` and the catalog's prototype
-  * assignment): K prototypes of d components, held component-major —
-  * `columns(i)(k)` is component i of prototype k — built once per model,
-  * broadcast or expression and only read after, so one instance serves any
-  * number of threads. */
-final class BmuFold private (columns: Array[Array[Double]]) extends Serializable {
+  * assignment) and every k-means distance: K prototypes of d components,
+  * held component-major — `columns(i)(k)` is component i of prototype k —
+  * built once per model, broadcast or expression and only read after, so
+  * one instance serves any number of threads. [[BmuFold.cosine]] ranks
+  * the same prototypes by cosine instead. */
+sealed class BmuFold private[functions] (protected val columns: Array[Array[Double]])
+    extends Serializable {
   val dim: Int = columns.length
   val k: Int = columns(0).length
 
@@ -210,8 +212,7 @@ final class BmuFold private (columns: Array[Array[Double]]) extends Serializable
     * maps to (0, NaN). A row whose length is not d throws, naming both
     * lengths. */
   def argmin(x: Array[Double], acc: Array[Double]): Int = {
-    if (x.length != dim) throw new IllegalArgumentException(
-      s"feature array has ${x.length} elements but the prototypes have $dim")
+    if (x.length != dim) throw lengthMismatch(x)
     java.util.Arrays.fill(acc, 0, k, 0.0)
     var i = 0
     while (i + 4 <= dim) {
@@ -231,6 +232,15 @@ final class BmuFold private (columns: Array[Array[Double]]) extends Serializable
       while (c < k) { val t = xi - p(c); acc(c) += t * t; c += 1 }
       i += 1
     }
+    nearest(acc)
+  }
+
+  protected final def lengthMismatch(x: Array[Double]) = new IllegalArgumentException(
+    s"feature array has ${x.length} elements but the prototypes have $dim")
+
+  /** The index of the smallest of the K distances in `acc`, NaN above every
+    * number, the first minimum on ties. */
+  protected final def nearest(acc: Array[Double]): Int = {
     var best = 0
     var bestD = Double.NaN
     var c = 0
@@ -243,14 +253,53 @@ final class BmuFold private (columns: Array[Array[Double]]) extends Serializable
   }
 }
 
+/** [[BmuFold]] ranked by negated cosine: `argmin` fills `acc(k)` with
+  * `-(dot(x, p_k) / (norm2(x) * norm2(p_k)))`, each dot product and norm
+  * the left-to-right fold of `array_dot`, so the value is the negation of
+  * `dotFast(x, p) / (norm2Fast(x) * norm2Fast(p))` bit for bit and the
+  * index is the relational `ORDER BY cos DESC, cell` pick. Where Spark
+  * divides by zero (a zero-norm row or prototype) it throws an
+  * IllegalArgumentException naming the prototype and both norms. */
+private final class CosineFold(cols: Array[Array[Double]], norms: Array[Double])
+    extends BmuFold(cols) {
+  override def argmin(x: Array[Double], acc: Array[Double]): Int = {
+    if (x.length != dim) throw lengthMismatch(x)
+    java.util.Arrays.fill(acc, 0, k, 0.0)
+    var xx = 0.0
+    var i = 0
+    while (i < dim) {
+      val xi = x(i); val p = columns(i)
+      xx += xi * xi
+      var c = 0
+      while (c < k) { acc(c) += xi * p(c); c += 1 }
+      i += 1
+    }
+    val nx = math.sqrt(xx)
+    var c = 0
+    while (c < k) {
+      if (nx * norms(c) == 0.0) throw new IllegalArgumentException(
+        s"cosine to prototype $c is undefined: the feature row has norm $nx and the prototype ${norms(c)}")
+      acc(c) = -(acc(c) / (nx * norms(c)))
+      c += 1
+    }
+    nearest(acc)
+  }
+}
+
 object BmuFold {
   /** K equal-length prototypes (each a row of d components), transposed once. */
-  def apply(prototypes: Seq[Array[Double]]): BmuFold = {
+  def apply(prototypes: Seq[Array[Double]]): BmuFold = new BmuFold(transpose(prototypes))
+
+  /** [[apply]]'s prototypes ranked by cosine similarity, most similar first. */
+  def cosine(prototypes: Seq[Array[Double]]): BmuFold = new CosineFold(transpose(prototypes),
+    prototypes.map(p => math.sqrt(p.foldLeft(0.0)((s, x) => s + x * x))).toArray)
+
+  private def transpose(prototypes: Seq[Array[Double]]): Array[Array[Double]] = {
     require(prototypes.nonEmpty && prototypes.head.nonEmpty &&
       prototypes.forall(_.length == prototypes.head.length),
       s"prototypes must be a non-empty K×d matrix, got lengths " +
         prototypes.map(_.length).distinct.mkString(","))
-    new BmuFold(Array.tabulate(prototypes.head.length)(i => prototypes.map(_(i)).toArray))
+    Array.tabulate(prototypes.head.length)(i => prototypes.map(_(i)).toArray)
   }
 }
 

@@ -41,19 +41,20 @@ object Artifacts {
     TrieMap.empty[String, (org.apache.spark.sql.SparkSession, Holder[DataFrame])]
 
   /** Get-or-build: first caller pays the pipeline, later callers reuse the
-    * checkpointed partitions. Keys must include the input dir; the active
-    * SparkSession's UUID is appended automatically so an artifact checkpointed
-    * by a stopped/previous session (dead executor blocks) is never handed to a
-    * new one — the new session just rebuilds under its own key. (The UUID, not
-    * `identityHashCode`: hash codes can be reused after a session is GC'd,
-    * which would resurrect exactly the stale-blocks hazard this key exists to
-    * prevent.) Entries whose owning session has stopped are evicted on the
-    * way in, so dead sessions don't accumulate in the registry. */
-  def shared(key: String)(build: => DataFrame): DataFrame = {
-    val active = org.apache.spark.sql.SparkSession.active
+    * checkpointed partitions. Keys must include the input dir; the UUID of
+    * `spark`, the session the caller builds in, is prepended so an artifact
+    * checkpointed by another session (a stopped one's dead executor blocks,
+    * or a `newSession()` sibling's under its own confs) is never handed to
+    * it — each session builds under its own key. (The session passed in,
+    * not `SparkSession.active`: a caller's session need not be the active
+    * one. The UUID, not `identityHashCode`: hash codes can be reused after
+    * a session is GC'd.) Entries whose owning session has stopped are
+    * evicted on the way in, so dead sessions don't accumulate in the
+    * registry. */
+  def shared(spark: org.apache.spark.sql.SparkSession, key: String)(build: => DataFrame): DataFrame = {
     cache.filterInPlace((_, v) => !v._1.sparkContext.isStopped)
-    val uuid = org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(active)
-    val fresh = (active, new Holder(() => build.localCheckpoint(eager = true)))
+    val uuid = org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(spark)
+    val fresh = (spark, new Holder(() => build.localCheckpoint(eager = true)))
     cache.putIfAbsent(s"$uuid/$key", fresh).getOrElse(fresh)._2.value
   }
 

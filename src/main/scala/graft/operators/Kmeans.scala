@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.HalfUp
-import graft.functions.VectorSql._
+import org.apache.spark.storage.StorageLevel
+import graft.functions.{BmuFold, HalfUp}
+import graft.som.{Grid, SOM}
 
 /** Trained Lloyd k-means coarse quantizer for the IVF serving family.
   *
@@ -20,8 +23,8 @@ import graft.functions.VectorSql._
   * `som/SOM.scala:192-244`); Lloyd is the degenerate neighborhood-of-one
   * case, so the whole oracle discipline of `som_fit5` transfers verbatim:
   *
-  *  - deterministic warm start: the first `k` corpus rows (by id),
-  *    4-decimal-quantized — no sampling anywhere;
+  *  - deterministic warm start: maximin seeds (or the first `k` corpus
+  *    rows by id), 4-decimal-quantized — no sampling anywhere;
   *  - every iterate is QUANTIZED (component sums rounded to 6 decimals,
   *    means to 4) so a DuckDB CTE chain replays the whole fit
   *    hash-identically — the fit itself sits under the oracle gate, not
@@ -31,158 +34,90 @@ import graft.functions.VectorSql._
   *    serving metric; see the measured straggler analysis on
   *    [[Similarity.ivfTopKSpill]]).
   *
-  * Scale shape (100 TB stance): per iteration ONE corpus scan — broadcast
-  * K-row centroid table, map-side `min(struct(metric, cell))` argmin that
-  * collapses the K·N join rows to N before any exchange, then a K-row
-  * vector-sum aggregate (`Summarizer.sum`, partials combine map-side).
-  * The driver holds only K×d doubles between iterations (the SOM-fit
-  * discipline); nothing data-scale is ever collected. Iteration count is
-  * fixed and small — a coarse quantizer needs balance, not convergence.
+  * Scale shape: the SOM kernel itself. The points are decoded once
+  * ([[SOM.keyedPoints]]) and cached for the fit; every assignment and
+  * seeding distance is [[BmuFold]] (squared L2, or [[BmuFold.cosine]]),
+  * and each Lloyd iteration is [[SOM.cellStats]] + [[SOM.smooth]] under the
+  * identity neighborhood — one `runJob` scan with no shuffle returning
+  * numPartitions K×d partials, then the plain quantized mean on the
+  * driver. Seeding is one scan per seed, each returning one candidate per
+  * partition. A fit of `k` cells and `iters` iterations therefore runs
+  * k + iters jobs over one cached RDD (12 for `km_fit`), and the driver
+  * holds only K×d doubles between them; nothing data-scale is ever
+  * collected. Iteration count is fixed and small — a coarse quantizer
+  * needs balance, not convergence.
   */
 object Kmeans {
 
   /** Deterministic MAXIMIN (Gonzalez farthest-point) seeding — the
     * k-means++ job without its RNG: seed 0 is the minimum-id row; each
-    * next seed is the point FARTHEST from the chosen set (max over points
-    * of min over seeds of the metric; min-id tie-break). Immune to the
-    * first-K failure mode where corpus order puts every seed inside one
-    * cluster (KmeansSpec plants exactly that corpus), and fully
-    * oracle-replayable — distances are the shared left-to-right folds,
-    * the selection is an exact min/argmax. k-1 bounded scans, each a
-    * broadcast of ≤k seed rows; a 100 TB run seeds from a sample the same
-    * way. Returns seed row ids IN SELECTION ORDER (= cell numbering). */
-  def maximinSeeds(points: DataFrame, k: Int, spherical: Boolean): Array[Long] = {
-    val first = points.select(min(col("vec_id"))).head().getLong(0)
-    val ids = scala.collection.mutable.ArrayBuffer(first)
-    while (ids.length < k) {
-      val spark = points.sparkSession
-      import spark.implicits._
-      val seeds = points.where(col("vec_id").isin(ids.toSeq: _*))
-        .select(col("v").as("sv"))
-      // per point: worst-case proximity to the chosen set; farthest wins
-      val prox =
-        if (spherical) max(dotFast(col("v"), col("sv"))
-          / (norm2Fast(col("v")) * norm2Fast(col("sv"))))
-        else min(sqDistFast(col("v"), col("sv")))
-      // already-chosen seeds are excluded from the candidate set: on a
-      // degenerate corpus where every remaining point ties at the
-      // worst-case proximity (exact-duplicate vectors), the min-id
-      // tie-break could otherwise re-select a seed and emit duplicate
-      // centroids. The oracle's kmd CTE carries the same NOT IN.
-      val next = points.where(!col("vec_id").isin(ids.toSeq: _*))
-        .crossJoin(broadcast(seeds))
-        .groupBy(col("vec_id")).agg(prox.as("prox"))
-        .orderBy(if (spherical) col("prox").asc else col("prox").desc,
-          col("vec_id").asc)
-        .limit(1).head().getLong(0)
-      ids += next
-    }
-    ids.toArray
-  }
+    * next seed is the not-yet-chosen point FARTHEST from the chosen set
+    * (max over points of min over seeds of the squared distance, or min
+    * over points of max over seeds of the cosine; lower id on ties), so
+    * exact-duplicate vectors never re-select a seed (the oracle's `NOT IN`).
+    * Immune to the first-K failure mode where corpus order puts every seed
+    * inside one cluster (KmeansSpec plants exactly that corpus), and fully
+    * oracle-replayable: the distances are [[BmuFold]]'s left-to-right
+    * folds, and NaN ranks as the relational form ranked it — a NaN squared
+    * distance is never a point's minimum but an all-NaN point wins the
+    * pick, while any NaN cosine makes a point's maximum NaN and loses it.
+    * Cost: one decode, cached, then k scans whose tasks each return their
+    * partition's farthest (distance, lowest id, vector). Returns seed row
+    * ids IN SELECTION ORDER (= cell numbering). */
+  def maximinSeeds(points: DataFrame, k: Int, spherical: Boolean): Array[Long] =
+    maximinSeedsSampled(points, k, spherical, ratePpm = 1000000L)
 
   /** [[maximinSeeds]] over a DETERMINISTIC HASH-SAMPLE of the corpus —
-    * the 100 TB seeding path the full-corpus variant's scaladoc promises
-    * (r9 verdict #4): each of the k−1 selection scans reads only the
-    * `ratePpm`-per-million sample (the `ml_weighted_sample` md5 keep-rule,
-    * salt `"mx:"`), so seeding cost is k·sample-sized instead of
-    * k·corpus-sized while the seeds stay actual corpus rows, deterministic,
-    * and oracle-replayable (the sample predicate is one portable md5
-    * expression — `km_fit_sampled` replays filter + seeding + Lloyd).
-    * Spread degrades gracefully: maximin over a uniform sample still
-    * separates direction regions whenever each region keeps ≥1 sampled row
-    * (KmeansSpec asserts cluster coverage at 50% sampling, and identity
-    * with the full-corpus seeds at ratePpm = 1e6, where the predicate
-    * keeps everything). */
+    * the 100 TB seeding path (r9 verdict #4): the [[seedSample]] rule
+    * (the `ml_weighted_sample` md5 keep-rule, salt `"mx:"`) is a per-row
+    * flag in the one decode and the seeding scans skip unflagged rows, so
+    * seeds are compared over k·sample points while staying actual corpus
+    * rows, deterministic, and oracle-replayable (`km_fit_sampled` replays
+    * filter + seeding + Lloyd). At ratePpm = 1e6 every row is kept and no
+    * hash evaluated. A pool of fewer than `k` rows is rejected, its size
+    * read off the first scan. Spread degrades gracefully: KmeansSpec
+    * asserts cluster coverage at 50% sampling, and identity with the
+    * full-corpus seeds when the sample keeps everything. */
   def maximinSeedsSampled(points: DataFrame, k: Int, spherical: Boolean,
-                          ratePpm: Long): Array[Long] = {
-    // rate 1e6 keeps every row, so the sampling machinery (per-row md5
-    // filter, eager corpus-sized checkpoint, count) would be pure
-    // overhead for an identical result — take the full-corpus path the
-    // seeds are defined to equal (KmeansSpec pins the identity). This is
-    // km_fit's default path; the r10→r11 bench adjudication measured the
-    // machinery at ~2 extra jobs per fit.
-    if (ratePpm >= 1000000L) return maximinSeeds(points, k, spherical)
-    // materialize the sample ONCE: the k−1 selection scans otherwise each
-    // re-read the source and re-evaluate the md5 keep-rule. The sample is
-    // bounded by design (a 100 TB run passes a ppm-scale rate), so the
-    // checkpoint is seed-pool-sized, never corpus-sized.
-    val sample = seedSample(points, ratePpm)
-      .select(col("vec_id"), col("v")).localCheckpoint(eager = true)
-    // guard the degenerate pool (low ratePpm × small corpus): without it,
-    // maximinSeeds' seed-excluding argmax runs out of candidates and dies
-    // in an opaque empty-head. The count is free on the checkpoint.
-    val n = sample.count()
-    require(n >= k,
-      s"seed sample has $n rows but k=$k seeds were requested — " +
-        s"raise ratePpm ($ratePpm/1e6 keep rate) or seed from the full corpus")
-    maximinSeeds(sample, k, spherical)
-  }
+                          ratePpm: Long): Array[Long] =
+    withPoints(points, ratePpm)(seeds(_, k, spherical, ratePpm).map(_._1))
 
   /** The shared keep-rule: md5-derived per-id uniform in [0, 1e6). */
-  def seedSample(points: DataFrame, ratePpm: Long): DataFrame =
-    points.where(graft.functions.VectorSql.md5Hash60(
-      concat(lit("mx:"), col("vec_id").cast("string"))) % 1000000L < ratePpm)
+  def seedSample(points: DataFrame, ratePpm: Long): DataFrame = points.where(keepRule(ratePpm))
+
+  private def keepRule(ratePpm: Long): Column =
+    graft.functions.VectorSql.md5Hash60(
+      concat(lit("mx:"), col("vec_id").cast("string"))) % 1000000L < ratePpm
 
   /** Fixed-iteration Lloyd fit. `points`: (vec_id, v: array<double>).
-    * Initial centroids = the [[maximinSeeds]] rows (or rows vec_id < k
-    * when `firstKSeeds` — the data-sampled heuristic, kept for controlled
-    * comparison and for corpora where ingest order is known-shuffled),
-    * round(4)-quantized. Returns k × d centroid components in cell order. An
-    * iteration that empties a cell carries the cell's previous centroid
-    * forward (no respawn heuristics — deterministic and oracle-replayable
-    * as a LEFT JOIN + COALESCE). */
+    * Initial centroids = the [[maximinSeedsSampled]] rows (or rows
+    * vec_id < k when `firstKSeeds` — the data-sampled heuristic, kept for
+    * controlled comparison and for corpora where ingest order is
+    * known-shuffled), round(4)-quantized. Each iteration is the SOM step
+    * with a one-cell neighborhood: every point joins its nearest
+    * centroid's cell and the cell's centroid becomes
+    * round(round(Σ, 6) / n, 4). An iteration that empties a cell carries
+    * the cell's previous centroid forward (no respawn heuristics —
+    * deterministic and oracle-replayable as a LEFT JOIN + COALESCE).
+    * Returns k × d centroid components in cell order. */
   def fitLloyd(points: DataFrame, k: Int, iters: Int, spherical: Boolean,
                firstKSeeds: Boolean = false,
-               seedRatePpm: Long = 1000000L): Array[Array[Double]] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    var protos: Array[Array[Double]] =
-      if (firstKSeeds)
-        points.where(col("vec_id") < k).orderBy("vec_id").collect()
-          .map(_.getAs[Seq[Double]]("v").toArray.map(HalfUp.round(4)))
-      else {
-        val seedIds = maximinSeedsSampled(points, k, spherical, seedRatePpm)
-        val byId = points.where(col("vec_id").isin(seedIds.toSeq: _*)).collect()
-          .map(r => r.getLong(0) -> r.getAs[Seq[Double]]("v").toArray.map(HalfUp.round(4))).toMap
-        seedIds.map(byId)
-      }
-    require(protos.length == k, s"need $k seed rows, got ${protos.length}")
-    for (_ <- 0 until iters) {
-      val protoDF = protos.zipWithIndex
-        .map { case (c, i) => (i.toLong, c) }.toSeq.toDF("cell", "c")
-      // negated cosine so both metrics take the same ascending
-      // min(struct(m, cell)) — identical ordering to the oracle's
-      // `ORDER BY cos DESC, cell` (strictly monotone negation)
-      val m =
-        if (spherical) -(dotFast(col("v"), col("c"))
-          / (norm2Fast(col("v")) * norm2Fast(col("c"))))
-        else sqDistFast(col("v"), col("c"))
-      val assign = points.crossJoin(broadcast(protoDF))
-        .select(col("vec_id"), col("v"), m.as("m"), col("cell"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("m"), col("cell"))).as("mm"), first(col("v")).as("v"))
-        .select(col("mm.cell").as("cell"), col("v"))
-      // the som_fit5 vector-shaped aggregate: N in-place vector adds, K-row
-      // shuffle, K×d explode AFTER the agg; round(·,6) pins the
-      // order-dependent component sums cross-engine, round(·,4) the mean
-      val sums = assign
-        .select(col("cell"),
-          org.apache.spark.ml.functions.array_to_vector(col("v")).as("fv"))
-        .groupBy(col("cell"))
-        .agg(org.apache.spark.ml.stat.Summarizer.sum(col("fv")).as("sv"),
-          count(lit(1)).as("n"))
-        .select(col("cell"), col("n"),
-          posexplode(org.apache.spark.ml.functions.vector_to_array(col("sv")))
-            .as(Seq("dim", "x")))
-        .select(col("cell"), col("dim"),
-          round(round(col("x"), 6) / col("n"), 4).as("nv"))
-        .collect()
-      val next = protos.map(_.clone()) // empty-cell carryover
-      sums.foreach(r => next(r.getLong(0).toInt)(r.getInt(1)) = r.getDouble(2))
-      protos = next
+               seedRatePpm: Long = 1000000L): Array[Array[Double]] =
+    withPoints(points, if (firstKSeeds) 1000000L else seedRatePpm) { keyed =>
+      val init =
+        if (firstKSeeds) keyed.filter(_._1 < k).map(p => (p._1, p._2)).collect().sortBy(_._1)
+        else seeds(keyed, k, spherical, seedRatePpm)
+      require(init.length == k, s"need $k seed rows, got ${init.length}")
+      var protos = init.map(p => Vectors.dense(p._2.toArray.map(HalfUp.round(4))))
+      val vectors = keyed.map(_._2)
+      // w(i, j) = 1 iff i = j: each cell's plain mean; a cell with no
+      // points keeps its (already 4-decimal) centroid
+      val oneCell = Grid.neighborhood("rectangular", "rectangular", 1, k, 0.0)
+      for (_ <- 0 until iters)
+        protos = SOM.smooth(SOM.cellStats(vectors, fold(protos.map(_.toArray).toSeq, spherical)),
+          protos, oneCell, sumDecimals = 6, protoDecimals = 4)._1
+      protos.map(_.toArray)
     }
-    protos
-  }
 
   /** The fitted quantizer as a (cell: long, c: array<double>) DataFrame —
     * the shape [[Similarity.ivfTopK]]/[[Similarity.ivfTopKSpill]] broadcast.
@@ -192,14 +127,81 @@ object Kmeans {
   def centroids(spark: SparkSession, points: => DataFrame, k: Int, iters: Int,
                 spherical: Boolean, shareKey: String,
                 seedRatePpm: Long = 1000000L): DataFrame =
-    Artifacts.shared(s"kmeans:$shareKey:$k:$iters:$spherical:$seedRatePpm") {
+    Artifacts.shared(spark, s"kmeans:$shareKey:$k:$iters:$spherical:$seedRatePpm") {
       import spark.implicits._
       fitLloyd(points, k, iters, spherical, firstKSeeds = false,
         seedRatePpm = seedRatePpm).zipWithIndex
         .map { case (c, i) => (i.toLong, c) }.toSeq.toDF("cell", "c")
     }
 
-  /** TRAINED per-subspace PQ codebooks — [[fitLloyd]] generalized with a
+  private def fold(rows: Seq[Array[Double]], spherical: Boolean): BmuFold =
+    if (spherical) BmuFold.cosine(rows) else BmuFold(rows)
+
+  /** `points` (vec_id, v) decoded once and cached while `body` runs, each
+    * row flagged with the [[seedSample]] rule at `ratePpm` (every row at
+    * 1e6 or above). A bad row's IllegalArgumentException surfaces as
+    * itself. */
+  private def withPoints[T](points: DataFrame, ratePpm: Long)(
+      body: RDD[(Long, Vector, Boolean)] => T): T = {
+    val flag = if (ratePpm >= 1000000L) lit(true) else keepRule(ratePpm)
+    val keyed = SOM.keyedPoints(points, "vec_id", "v", flag)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try SOM.rethrowBadRow(body(keyed)) finally keyed.unpersist(blocking = false)
+  }
+
+  /** A seeding scan's pick: the farthest point of a partition or overall. */
+  private final case class Farthest(f: Double, id: Long, v: Vector)
+
+  /** Whether (f, id) is picked before (g, jd): the larger farness first —
+    * NaN above every number when `nanFirst`, below when not — then the
+    * lower id (the relational `ORDER BY prox, vec_id`; -0.0 = 0.0). */
+  private def before(f: Double, id: Long, g: Double, jd: Long, nanFirst: Boolean): Boolean =
+    if (f.isNaN || g.isNaN) { if (f.isNaN && g.isNaN) id < jd else f.isNaN == nanFirst }
+    else if (f != g) f > g
+    else id < jd
+
+  /** The maximin seeds among the flagged rows of `keyed`, in selection
+    * order, with their vectors: one scan per seed. A point's farness is its
+    * distance to the nearest chosen seed, `min d2` (NaN only when every
+    * distance is) or `-max cos` (NaN when any cosine is), read off one
+    * [[BmuFold]] pass; before the first seed every point ties, so the first
+    * scan picks the minimum id and counts the pool. */
+  private def seeds(keyed: RDD[(Long, Vector, Boolean)], k: Int, spherical: Boolean,
+                    ratePpm: Long): Array[(Long, Vector)] = {
+    val chosen = scala.collection.mutable.ArrayBuffer.empty[(Long, Vector)]
+    while (chosen.length < k) {
+      val seedFold = if (chosen.isEmpty) null else fold(chosen.map(_._2.toArray).toSeq, spherical)
+      val ids = chosen.map(_._1).toSet
+      val scans = keyed.sparkContext.runJob(keyed, (it: Iterator[(Long, Vector, Boolean)]) => {
+        val acc = if (seedFold == null) null else new Array[Double](seedFold.k)
+        var n = 0L
+        var best: Farthest = null
+        it.foreach { case (id, v, keep) =>
+          if (keep && !ids(id)) {
+            n += 1
+            val f = if (seedFold == null) 0.0 else {
+              val d = acc(seedFold.argmin(v.toArray, acc))
+              if (spherical && acc.exists(_.isNaN)) Double.NaN else d
+            }
+            if (best == null || before(f, id, best.f, best.id, !spherical)) best = Farthest(f, id, v)
+          }
+        }
+        (n, best)
+      })
+      if (chosen.isEmpty) {
+        val n = scans.map(_._1).sum
+        require(n >= k, s"the seed pool has $n rows but k=$k seeds were requested" +
+          (if (ratePpm < 1000000L) s" — raise ratePpm ($ratePpm/1e6 keep rate) or seed from the full corpus"
+           else ""))
+      }
+      val best = scans.flatMap(s => Option(s._2))
+        .reduce((a, b) => if (before(b.f, b.id, a.f, a.id, !spherical)) b else a)
+      chosen += (best.id -> best.v)
+    }
+    chosen.toArray
+  }
+
+  /** TRAINED per-subspace PQ codebooks — a relational Lloyd fit with a
     * subspace grouping column, so ALL `d/subDims` subspace quantizers
     * train in ONE corpus scan per iteration (not d/subDims separate
     * fits — the 100 TB shape: broadcast (sub, code) table, map-side

@@ -447,7 +447,7 @@ object SimilarityQueries {
     * DuckDB replays subvector slicing, every argmin, and every quantized
     * mean, so the whole training chain is byte-hash-gated. */
   def pqTrain(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Artifacts.shared(s"pqtrain:$dir") {
+    graft.operators.Artifacts.shared(s, s"pqtrain:$dir") {
       import s.implicits._
       pqTrainedCb(s, dir).zipWithIndex.flatMap { case (r, j) =>
         r.zipWithIndex.map { case (nv, d2) => (j, d2, nv) }
@@ -888,13 +888,15 @@ object SimilarityQueries {
     * walk there (NswEntrySpec demonstrates recall collapse); maximin
     * entries are maximally spread in direction space BY CONSTRUCTION, so
     * each probe starts near some entry's region. Deterministic (exact
-    * min/argmax over the shared folds, id tie-breaks) and replayed by the
-    * oracle's `es*` CTE chain. Cost: [[NswEntries]]−1 linear scans, paid
-    * once per corpus beside the graph build (shared artifact); a 100 TB
-    * run seeds from a deterministic hash-sample the same way
+    * min/argmax over [[graft.functions.BmuFold.cosine]]'s folds, id
+    * tie-breaks) and replayed by the oracle's `es*` CTE chain. Cost: the
+    * points decoded and cached once, then [[NswEntries]] jobs — a pool
+    * scan for the minimum id and [[NswEntries]]−1 farthest-point scans —
+    * paid once per corpus beside the graph build (shared artifact); a
+    * 100 TB run seeds from a deterministic hash-sample the same way
     * ([[graft.operators.Kmeans.maximinSeedsSampled]]). */
   private def nswEntries(s: SparkSession, points: DataFrame, key: String): DataFrame =
-    graft.operators.Artifacts.shared(s"nsw_entries:$key") {
+    graft.operators.Artifacts.shared(s, s"nsw_entries:$key") {
       import s.implicits._
       graft.operators.Kmeans.maximinSeeds(points, NswEntries, spherical = true)
         .toSeq.toDF("vec_id")
@@ -928,7 +930,7 @@ object SimilarityQueries {
     * (the multiprobe boundary-loss mitigation, at graph-build scale):
     * candidates for the kNN-graph come from shared spilled cells. */
   private[graft] def spilledSqrtN(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Artifacts.shared(s"nsw_spilled:$dir") {
+    graft.operators.Artifacts.shared(s, s"nsw_spilled:$dir") {
       // SHARED per corpus (r17, guide §2.4 — don't recompute what five
       // consumers derive identically): every nsw_graph* artifact build
       // starts from this same assignment, and before r17 each of the five
@@ -961,7 +963,7 @@ object SimilarityQueries {
     * [[NswSteps]] walk rounds as unrolled CTEs. AnnRecallSpec pins
     * recall@10 ≥ 0.95 vs the exact baseline. */
   def annNsw(s: SparkSession, dir: String): DataFrame = {
-    val edges = graft.operators.Artifacts.shared(s"nsw_graph:$dir") {
+    val edges = graft.operators.Artifacts.shared(s, s"nsw_graph:$dir") {
       Similarity.knnGraphEdgesOf(nswDirected(s, dir))
     }
     Similarity.nswTopK(edges, pts(s, dir), probes(s, dir),
@@ -975,7 +977,7 @@ object SimilarityQueries {
     * also the deployment shape: the directed artifact is what a real
     * index maintains; serve view and delete cascade both derive from it. */
   private def nswDirected(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Artifacts.shared(s"nsw_directed:$dir") {
+    graft.operators.Artifacts.shared(s, s"nsw_directed:$dir") {
       Similarity.knnGraphDirected(spilledSqrtN(s, dir), NswM)
     }
 
@@ -994,7 +996,7 @@ object SimilarityQueries {
     * [[annNswDelta]]'s increments — this is the day-zero path, and
     * [[annNswNndDelta]] composes the two. */
   def annNswNnd(s: SparkSession, dir: String): DataFrame = {
-    val edges = graft.operators.Artifacts.shared(s"nsw_graph_nnd:$dir") {
+    val edges = graft.operators.Artifacts.shared(s, s"nsw_graph_nnd:$dir") {
       Similarity.knnGraphEdgesNnd(spilledSqrtN(s, dir), pts(s, dir),
         NswM, nndRingDeg(pts(s, dir).count()), NndRounds)
     }
@@ -1031,7 +1033,7 @@ object SimilarityQueries {
     * NswHierSpec pins recall ≥ the 0.95 bar AND fewer scored rows than
     * the flat walk at ×10 data. */
   def annNswHier(s: SparkSession, dir: String): DataFrame = {
-    val edges = graft.operators.Artifacts.shared(s"nsw_graph:$dir") {
+    val edges = graft.operators.Artifacts.shared(s, s"nsw_graph:$dir") {
       Similarity.knnGraphEdgesOf(nswDirected(s, dir))
     }
     Similarity.nswTopKPerProbe(edges, pts(s, dir), probes(s, dir),
@@ -1079,7 +1081,7 @@ object SimilarityQueries {
     * Daily cost is |Δ|·cellsize pair work + one edge re-rank — the
     * amortization that retires the N^1.5 build from the steady state. */
   def annNswDelta(s: SparkSession, dir: String): DataFrame = {
-    val edges = graft.operators.Artifacts.shared(s"nsw_graph_delta:$dir") {
+    val edges = graft.operators.Artifacts.shared(s, s"nsw_graph_delta:$dir") {
       val full = spilledSqrtN(s, dir) // shared artifact, already checkpointed
       val n = pts(s, dir).count()
       val cut = n - n / 10
@@ -1113,7 +1115,7 @@ object SimilarityQueries {
     * delta batches equals applying both at once (top-M mergeability
     * over the NND artifact), so dailies don't drift. */
   def annNswNndDelta(s: SparkSession, dir: String): DataFrame = {
-    val edges = graft.operators.Artifacts.shared(s"nsw_graph_nnd_delta:$dir") {
+    val edges = graft.operators.Artifacts.shared(s, s"nsw_graph_nnd_delta:$dir") {
       val full = spilledSqrtN(s, dir) // shared artifact, already checkpointed
       val p = pts(s, dir)
       val n = p.count()
@@ -1148,7 +1150,7 @@ object SimilarityQueries {
     val cells = centroidCount(p.count())
     val doomed = p.where(col("vec_id") % NswGdprMod === 0 && col("vec_id") >= cells)
       .select(col("vec_id"))
-    val edges = graft.operators.Artifacts.shared(s"nsw_graph_gdpr:$dir") {
+    val edges = graft.operators.Artifacts.shared(s, s"nsw_graph_gdpr:$dir") {
       // shared spilled assignment + shared directed artifact (r17): the
       // delete cascade CARRIES yesterday's directed build — rebuilding it
       // per entry was one redundant full blocked build per bench rep
@@ -1683,15 +1685,19 @@ object SimilarityQueries {
        |  WHERE rn = 1)""".stripMargin
 
   /** The trained-quantizer replay (r8 verdict #4), mirroring
-    * [[graft.operators.Kmeans.fitLloyd]] under the som_fit5 discipline:
-    * km0 = the MAXIMIN (Gonzalez farthest-point) seed rows in selection
-    * order, r4-quantized — the seeding itself is replayed (kmd/seeds
-    * CTEs: exact min/argmax over the shared folds); each iteration assigns
-    * every vector to its nearest centroid — the SAME left-to-right
-    * list_sum folds Spark runs, so the argmin ranks bit-identically — then
-    * recomputes each cell's mean with component sums rounded to 6 decimals
-    * and means to 4 (an emptied cell carries its previous centroid via
-    * LEFT JOIN + COALESCE). Ends with a `protos AS (cell, c)` CTE in the
+    * [[graft.operators.Kmeans.fitLloyd]] under the som_fit5 discipline.
+    * Spark runs the fit as the one-cell SOM step — k seeding scans and one
+    * [[graft.som.SOM.cellStats]] scan + [[graft.som.SOM.smooth]] per
+    * iteration over one cached decode, 12 jobs for `km_fit` — and this
+    * chain replays it relationally: km0 = the MAXIMIN (Gonzalez
+    * farthest-point) seed rows in selection order, r4-quantized — the
+    * seeding itself is replayed (kmd/seeds CTEs: exact min/argmax over the
+    * shared folds); each iteration assigns every vector to its nearest
+    * centroid — the SAME left-to-right list_sum folds [[graft.functions.BmuFold]]
+    * runs, so the argmin ranks bit-identically — then recomputes each
+    * cell's mean with component sums rounded to 6 decimals and means to 4
+    * (an emptied cell carries its previous centroid via LEFT JOIN +
+    * COALESCE). Ends with a `protos AS (cell, c)` CTE in the
     * serving fragments' shape, so re-pointing a serving oracle at the
     * trained quantizer is a one-line base swap if a future corpus makes
     * the [[kmCentroids]] decision note flip. */

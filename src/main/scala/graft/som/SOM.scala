@@ -6,10 +6,12 @@ import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType, UserDefinedType}
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 /** Batch Self-Organizing Map estimator — Kohonen map trained with the
   * k-means-style batch update plus topological neighborhood smoothing
@@ -173,18 +175,32 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
     * array row, fails its task with an IllegalArgumentException naming the
     * column (there is no vector to train on; `transform` scores such a row
     * null and `computeCost` skips it). */
-  private[graft] def points(dataset: Dataset[_], featuresCol: String): RDD[Vector] = {
+  private[graft] def points(dataset: Dataset[_], featuresCol: String): RDD[Vector] =
+    decode(dataset, featuresCol)((_, v) => v)
+
+  /** [[points]] keyed by the long `idCol`, with `flag` (a boolean column,
+    * null read as false) evaluated in the same projection: k-means seeding
+    * reads the ids and its sample rule off the one decode its fit caches. */
+  private[graft] def keyedPoints(dataset: Dataset[_], idCol: String, featuresCol: String,
+                                 flag: Column): RDD[(Long, Vector, Boolean)] =
+    decode(dataset, featuresCol, col(idCol).cast("long"), flag)((r, v) =>
+      (r.getLong(1), v, !r.isNullAt(2) && r.getBoolean(2)))
+
+  /** The projection of `featuresCol` and `extra`, each row handed to `row`
+    * with its decoded features (the row is reused; read it in the call). */
+  private def decode[T: ClassTag](dataset: Dataset[_], featuresCol: String, extra: Column*)(
+      row: (InternalRow, Vector) => T): RDD[T] = {
     val c = col(featuresCol)
     dataset.schema(featuresCol).dataType match {
       case SQLDataTypes.VectorType =>
         val udt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
-        dataset.select(c).queryExecution.toRdd.map { r =>
+        dataset.select(c +: extra: _*).queryExecution.toRdd.map { r =>
           if (r.isNullAt(0)) throw badRow(featuresCol, "a null row")
-          udt.deserialize(r.getStruct(0, 4))
+          row(r, udt.deserialize(r.getStruct(0, 4)))
         }
       case ArrayType(elem @ (DoubleType | FloatType), nullElements) =>
         val f = if (elem == FloatType) c.cast("array<double>") else c
-        dataset.select(f).queryExecution.toRdd.map { r =>
+        dataset.select(f +: extra: _*).queryExecution.toRdd.map { r =>
           if (r.isNullAt(0)) throw badRow(featuresCol, "a null row")
           val xs = r.getArray(0)
           if (nullElements) {
@@ -194,7 +210,7 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
               i += 1
             }
           }
-          Vectors.dense(xs.toDoubleArray())
+          row(r, Vectors.dense(xs.toDoubleArray()))
         }
       case other => throw new IllegalArgumentException(s"unsupported features type $other")
     }
@@ -206,24 +222,29 @@ object SOM extends org.apache.spark.ml.util.DefaultParamsReadable[SOM] {
   /** Runs `body`, rethrowing an IllegalArgumentException that failed one of
     * its tasks (a bad features row, see [[points]]) as itself rather than
     * as the job's SparkException. */
-  private def rethrowBadRow[T](body: => T): T =
+  private[graft] def rethrowBadRow[T](body: => T): T =
     try body catch {
       case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
         throw e.getCause
     }
 
   /** Per-cell sums, counts and total quantization cost of `points` against
-    * `protos`, in one single-stage job over `points` itself (`runJob`, so no
-    * RDD is created per call): every task folds its partition into one K×d
-    * partial, and the driver merges the partials in partition-index order.
-    * Each point's BMU and distance come from [[BmuFold.argmin]] against the
-    * prototypes, transposed once on the driver, broadcast and destroyed
-    * after; each task keeps one K-double distance buffer. */
-  private[graft] def cellStats(points: RDD[Vector], protos: Array[Vector]): CellAgg = {
-    val k = protos.length
-    val dim = protos(0).size
+    * `protos` ([[BmuFold.apply]], squared L2). */
+  private[graft] def cellStats(points: RDD[Vector], protos: Array[Vector]): CellAgg =
+    cellStats(points, BmuFold(protos.map(_.toArray).toSeq))
+
+  /** Per-cell sums, counts and summed distance of `points` against the
+    * prototypes of `fold`, whose metric ranks them, in one single-stage job
+    * over `points` itself (`runJob`, so no RDD is created per call): every
+    * task folds its partition into one K×d partial, and the driver merges
+    * the partials in partition-index order. Each point's cell and distance
+    * come from [[BmuFold.argmin]]; the fold is broadcast and destroyed
+    * after, and each task keeps one K-double distance buffer. */
+  private[graft] def cellStats(points: RDD[Vector], fold: BmuFold): CellAgg = {
+    val k = fold.k
+    val dim = fold.dim
     val sc = points.sparkContext
-    val bc = sc.broadcast(BmuFold(protos.map(_.toArray).toSeq))
+    val bc = sc.broadcast(fold)
     try {
       val partial = (it: Iterator[Vector]) => {
         val fold = bc.value

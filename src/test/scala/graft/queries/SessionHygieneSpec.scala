@@ -42,4 +42,21 @@ class SessionHygieneSpec extends SparkSpec {
     }
     assert(!spark.catalog.tableExists("graft_embeddings"))
   }
+
+  test("Artifacts.shared keys by the session passed in: a newSession caller builds and reads its own entry") {
+    import graft.operators.Artifacts
+    val child = spark.newSession()
+    assert(org.apache.spark.sql.SparkSession.active ne child)
+    val key = "session_hygiene:shared"
+    var builds = Seq.empty[String]
+    val parent = Artifacts.shared(spark, key) { builds :+= "parent"; spark.range(3).toDF("x") }
+    // the child is not the active session, yet it gets its own build
+    val own = Artifacts.shared(child, key) { builds :+= "child"; child.range(5).toDF("x") }
+    assert(builds == Seq("parent", "child"))
+    assert(parent.count() == 3 && own.count() == 5)
+    // each session reuses its own entry, and neither sees the other's
+    assert(Artifacts.shared(spark, key)(fail("the parent entry was rebuilt")).count() == 3)
+    assert(Artifacts.shared(child, key)(fail("the child entry was rebuilt")).count() == 5)
+    assert(own.sparkSession eq child)
+  }
 }

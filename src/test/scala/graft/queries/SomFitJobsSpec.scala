@@ -12,17 +12,20 @@ import scala.util.Random
 /** The job shape of the SOM passes over the data, measured: `som_fit5`
   * runs the estimator's kernel, one Spark job per iteration plus a fixed
   * overhead, not a re-planned multi-job query per iteration; `SOM.fit` adds
-  * only `takeSample`'s two jobs and creates no RDD per iteration; and
-  * `computeCost` is one job. */
+  * only `takeSample`'s two jobs and creates no RDD per iteration;
+  * `computeCost` is one job; and k-means, the one-cell SOM step, runs one
+  * job per seed and per iteration over one cached decode. */
 class SomFitJobsSpec extends SparkSpec {
 
   /** The Spark jobs started while `body` runs, in start order: the ids of
-    * the RDDs each job's stages read. */
-  private def jobRdds(body: => Unit): Seq[Set[Int]] = {
+    * the RDDs each job's stages read (with `cachedOnly`, only those marked
+    * for caching). */
+  private def jobRdds(body: => Unit, cachedOnly: Boolean = false): Seq[Set[Int]] = {
     val started = new ConcurrentLinkedQueue[(Int, Set[Int])]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(e.jobId -> e.stageInfos.flatMap(_.rddInfos.map(_.id)).toSet)
+        started.add(e.jobId -> e.stageInfos.flatMap(_.rddInfos)
+          .filter(r => !cachedOnly || r.storageLevel.isValid).map(_.id).toSet)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -88,5 +91,27 @@ class SomFitJobsSpec extends SparkSpec {
     val want = partitionSums.foldLeft(0.0)(_ + _)
     assert(java.lang.Double.doubleToRawLongBits(cost) == java.lang.Double.doubleToRawLongBits(want),
       s"computeCost $cost, partition-order fold $want")
+  }
+
+  test("a k-means fit runs at most k - 1 + iters + 2 jobs, all over one cached RDD; maximin seeding k jobs") {
+    val pts = SomQueries.points(spark, sf("sf0.001"))
+    val (k, iters) = (9, 3)
+    // every job reads the same cached RDDs, among them the fit's own decode,
+    // which it releases when it returns
+    def oneCache(shape: Seq[Set[Int]]): Boolean =
+      shape.forall(_ == shape.head) &&
+        shape.head.exists(id => !spark.sparkContext.getPersistentRDDs.contains(id))
+    for (spherical <- Seq(false, true)) {
+      val shape = jobRdds(graft.operators.Kmeans.fitLloyd(pts, k, iters, spherical), cachedOnly = true)
+      // a pool scan (which fills the cache), k - 1 seeding scans, one scan per iteration
+      assert(shape.length <= k - 1 + iters + 2, s"fit ran ${shape.length} jobs")
+      assert(shape.length == k + iters, s"fit ran ${shape.length} jobs")
+      assert(oneCache(shape), s"jobs read cached RDDs $shape")
+    }
+    // the NSW entries: one pool scan and NswEntries - 1 seeding scans
+    val entries = jobRdds(graft.operators.Kmeans.maximinSeeds(pts, SimilarityQueries.NswEntries,
+      spherical = true), cachedOnly = true)
+    assert(entries.length <= 4, s"maximin seeding ran ${entries.length} jobs")
+    assert(oneCache(entries), s"jobs read cached RDDs $entries")
   }
 }

@@ -32,11 +32,12 @@ fi
 
 echo "== one nearest-prototype kernel =="
 # the catalog's BMU and IVF-cell assignment project ArrayArgminSqDist
-# (SomQueries.nearest); a cross join + min(struct(d2, ...)) argmin would be a
-# second copy of its fold, tie-break and NaN order (som_assign_sql keeps
-# that form as SQL text, which this pattern does not match)
-if grep -rn 'min(struct(col("d2")' src/main; then
-  echo 'min(struct(col("d2") ...)) under src/main: assign through SomQueries.nearest'
+# (SomQueries.nearest) and k-means assigns through SOM.cellStats; a cross
+# join + min(struct(d2, ...)) or min(struct(m, cell)) argmin would be a
+# second copy of BmuFold's fold, tie-break and NaN order (som_assign_sql
+# keeps that form as SQL text, which this pattern does not match)
+if grep -rnE 'min\(struct\(col\("(d2|m)"\)' src/main; then
+  echo 'min(struct(col("d2") | col("m") ...)) under src/main: assign through SomQueries.nearest or SOM.cellStats'
   exit 1
 fi
 
@@ -50,11 +51,13 @@ if grep -rnF 's == s && !(s >=' src/main | grep -v "^src/main/scala/graft/functi
 fi
 
 echo "== one features decode =="
-# SOM.points decodes the executed plan's rows itself (VectorUDT deserialize,
-# array copy); the Scala UDF that boxes every element and Dataset.rdd's Row
-# deserializer must not come back under graft/som
-if grep -rnE 'array_to_vector|\)\.rdd\b' src/main/scala/graft/som/; then
-  echo "array_to_vector or Dataset.rdd under src/main/scala/graft/som: decode through SOM.points"
+# SOM.points / SOM.keyedPoints decode the executed plan's rows themselves
+# (VectorUDT deserialize, array copy); the Scala UDF that boxes every
+# element and the ML vector-sum aggregate over it must not come back
+# anywhere in src/main, and neither may Dataset.rdd's Row deserializer
+# under graft/som
+if grep -rnE 'array_to_vector|Summarizer' src/main || grep -rnE '\)\.rdd\b' src/main/scala/graft/som/; then
+  echo "array_to_vector or Summarizer under src/main, or Dataset.rdd under src/main/scala/graft/som: decode through SOM.points"
   exit 1
 fi
 
