@@ -1,4 +1,5 @@
 package graft
+import graft.sources.Tables
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry: times every catalog query on SPARK_GRAFT_SF_DIR and
@@ -40,7 +41,7 @@ object Bench {
     // Warm up the JVM/session once so the first measured query doesn't absorb
     // codegen + scheduler startup (~3s) that isn't its own cost.
     spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    Tables.parquet(spark, s"$sfDir/region.parquet").count()
     // optional query-name filter (comma-separated) for targeted scale runs —
     // the driver never sets it, so the per-round bench stays the full catalog
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)

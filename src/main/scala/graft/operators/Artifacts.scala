@@ -50,13 +50,22 @@ object Artifacts {
     * one. The UUID, not `identityHashCode`: hash codes can be reused after
     * a session is GC'd.) Entries whose owning session has stopped are
     * evicted on the way in, so dead sessions don't accumulate in the
-    * registry. */
+    * registry. A build whose optimized plan is a `LocalRelation` (rows
+    * built on the driver, e.g. `toDF` over a fitted centroid array) has no
+    * lineage to cut and is registered as it is: checkpointing it would
+    * only run one more job. */
   def shared(spark: org.apache.spark.sql.SparkSession, key: String)(build: => DataFrame): DataFrame = {
     cache.filterInPlace((_, v) => !v._1.sparkContext.isStopped)
     val uuid = org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(spark)
-    val fresh = (spark, new Holder(() => build.localCheckpoint(eager = true)))
+    val fresh = (spark, new Holder(() => materialize(build)))
     cache.putIfAbsent(s"$uuid/$key", fresh).getOrElse(fresh)._2.value
   }
+
+  private def materialize(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.ColumnBridge.optimizedPlan(df) match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
+      case _ => df.localCheckpoint(eager = true)
+    }
 
   /** Drop every shared artifact — bench repetitions call this so each rep
     * pays the full pipeline cost honestly. Disk LAYOUTS ([[sharedPath]])
@@ -77,11 +86,13 @@ object Artifacts {
 
   /** Get-or-write: the disk twin of [[shared]] for artifacts that must live
     * as FILES (partition-pruned reads, e.g. the IVF cell layout). Keyed by
-    * caller key + the active session's UUID, and the UUID is baked into the
-    * DIRECTORY NAME — so two concurrent sessions (parallel correctness
-    * checks at different SFs, or two local runs) write disjoint paths and
-    * can never clobber each other mid-read, and a second invocation within
-    * one session returns the existing path without re-writing the corpus.
+    * caller key + the UUID of `spark`, the session the caller passes (as
+    * for [[shared]]: not `SparkSession.active`, which need not be the
+    * caller's), and the UUID is baked into the DIRECTORY NAME — so two
+    * concurrent sessions (parallel correctness checks at different SFs, or
+    * two local runs) write disjoint paths and can never clobber each other
+    * mid-read, and a second invocation within one session returns the
+    * existing path without re-writing the corpus.
     * Dead sessions' layouts are evicted and best-effort deleted on the next
     * call. Per-key initialization is serialized through [[Holder]]'s lazy
     * val — two concurrent first callers of the same key can never both run
@@ -96,15 +107,14 @@ object Artifacts {
     * row (`ml_export_shards`: rows/schema match, sums differ). A repo-local
     * scratch dir has a single owner. Overridable via `-Dgraft.layout.dir`
     * (a real deployment points it at durable shared storage). */
-  def sharedPath(key: String)(write: String => Unit): String = {
-    val active = org.apache.spark.sql.SparkSession.active
+  def sharedPath(spark: org.apache.spark.sql.SparkSession, key: String)(write: String => Unit): String = {
     layouts.filterInPlace { (_, v) =>
       val alive = !v._1.sparkContext.isStopped
       if (!alive && v._2.built) deleteRecursively(new java.io.File(v._2.value))
       alive
     }
-    val uuid = org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(active)
-    val fresh = (active, new Holder(() => {
+    val uuid = org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(spark)
+    val fresh = (spark, new Holder(() => {
       val base = sys.props.get("graft.layout.dir")
         .map(java.nio.file.Paths.get(_))
         .getOrElse(graft.RepoRoot.dir.resolve("target").resolve("graft_layouts"))

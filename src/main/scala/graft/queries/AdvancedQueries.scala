@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import graft.operators.{AsOfJoin, Salting}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,7 +15,7 @@ object AdvancedQueries {
   private def ev(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fork.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = fork.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.parquet(fork, s"$dir/events.parquet")
     raw.withColumn("ts_us", EventTs.tsUs(raw))
   }
 
@@ -34,7 +35,7 @@ object AdvancedQueries {
   /** Revenue per supplier via two-phase salted aggregation — identical output
     * to a plain GROUP BY (the oracle is exactly that). */
   def qSkewAgg(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(s, s"$dir/lineitem.parquet")
     Salting.saltedSumAgg(li, "l_suppkey",
       pmod(col("l_orderkey"), lit(8)),
       Seq((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(18,4)") -> "revenue"),
@@ -55,7 +56,7 @@ object AdvancedQueries {
     * shape is the same either way (and `q_approx_distinct_kmv` is the
     * fully bit-gated sketch twin). */
   def qApproxDistinct(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/lineitem.parquet")
+    Tables.parquet(s, s"$dir/lineitem.parquet")
       .groupBy(col("l_returnflag"))
       .agg(approx_count_distinct(col("l_partkey")).as("approx_parts"),
         countDistinct(col("l_partkey")).as("exact_parts"),
@@ -88,7 +89,7 @@ object AdvancedQueries {
   def qApproxDistinctKmv(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    val hashes = fork.read.parquet(s"$dir/lineitem.parquet")
+    val hashes = Tables.parquet(fork, s"$dir/lineitem.parquet")
       .select(col("l_returnflag"),
         graft.functions.VectorSql.md5Hash60(col("l_partkey").cast("string")).as("h"))
       .distinct()
@@ -121,7 +122,7 @@ object AdvancedQueries {
     val sk = ColumnBridge.column(
       graft.functions.KmvAgg(ColumnBridge.expression(h), KmvK)
         .toAggregateExpression())
-    s.read.parquet(s"$dir/lineitem.parquet")
+    Tables.parquet(s, s"$dir/lineitem.parquet")
       .groupBy(col("l_returnflag"))
       .agg(sk.as("sk"))
       .select(col("l_returnflag"),
@@ -153,7 +154,7 @@ object AdvancedQueries {
 
   /** The URGENT-orders member-key set — build input of both Bloom forms. */
   private def bloomKeys(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/orders.parquet")
+    Tables.parquet(s, s"$dir/orders.parquet")
       .where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey").as("key")).distinct()
 
@@ -177,7 +178,7 @@ object AdvancedQueries {
     * two-level aggregate folds probe/member/hit counts together. */
   private def bloomContract(s: SparkSession, dir: String, urgent: DataFrame,
                             bits: DataFrame, mBits: Long): DataFrame = {
-    val probes = s.read.parquet(s"$dir/lineitem.parquet")
+    val probes = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_orderkey").as("key")).distinct()
     val perKey = probes
       .join(broadcast(urgent.select(col("key"), lit(1L).as("is_member"))),
@@ -339,7 +340,7 @@ object AdvancedQueries {
     * [[cmsFreqStream]]'s read-back shares with the batch path. */
   private[graft] def cmsEstimatesFrom(s: SparkSession, dir: String,
                                       sketch: DataFrame): DataFrame =
-    s.read.parquet(s"$dir/lineitem.parquet").select(col("l_partkey"))
+    Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_partkey"))
       .distinct()
       .select(col("l_partkey"), explode(cmsBuckets(col("l_partkey"))).as("rc"))
       .select(col("l_partkey"), col("rc.r").as("r"), col("rc.c").as("c"))
@@ -351,7 +352,7 @@ object AdvancedQueries {
     * [[qTopkFreqCms]] ranks. */
   private[graft] def cmsEstimates(s: SparkSession, dir: String): DataFrame =
     cmsEstimatesFrom(s, dir, cmsSketch(
-      s.read.parquet(s"$dir/lineitem.parquet").select(col("l_partkey"))))
+      Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_partkey"))))
 
   /** The shared heavy-hitter report tail: distributed top-10 via
     * orderBy+limit (plans as TakeOrderedAndProject — per-partition
@@ -388,7 +389,7 @@ object AdvancedQueries {
     import fork.implicits._
     val root = StreamScratch.fresh("cms")
     val (inDir, outDir, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
-    fork.read.parquet(s"$dir/lineitem.parquet").select(col("l_partkey"))
+    Tables.parquet(fork, s"$dir/lineitem.parquet").select(col("l_partkey"))
       .repartition(3).write.parquet(inDir)
     StreamScratch.sizeStateStoresAdaptive(fork, inDir)
     val stream = fork.readStream.schema("l_partkey LONG")
@@ -448,7 +449,7 @@ object AdvancedQueries {
     // heap-operator strategy registered below is visible to the planner
     fork.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fork.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = fork.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.parquet(fork, s"$dir/events.parquet")
     val evDf = raw.withColumn("ts_us", EventTs.tsUs(raw))
     val keyed = evDf
       .select(col("user_id"), col("ts_us"), expr(s"ts_us DIV $winUs").as("win"))
@@ -456,7 +457,7 @@ object AdvancedQueries {
     // kmv_distinct_stream_win — both entries stage the identical
     // (user_id, ts_us, win) frame at the same window width, so one layout
     // serves both (checkpoints and sinks stay per-run fresh)
-    val inDir = StreamScratch.stageOrderedShared(s"events_win${CmsWinDays}d:$dir") {
+    val inDir = StreamScratch.stageOrderedShared(s, s"events_win${CmsWinDays}d:$dir") {
       val wins = keyed.select(col("win")).distinct().orderBy(col("win"))
         .collect().map(_.getLong(0)) // window-count-sized (span/width)
       wins.toSeq.map(w => keyed.where(col("win") === w))
@@ -531,12 +532,12 @@ object AdvancedQueries {
     val winUs = CmsWinDays * 86400L * 1000000L
     fork.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fork.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = fork.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.parquet(fork, s"$dir/events.parquet")
     val evDf = raw.withColumn("ts_us", EventTs.tsUs(raw))
     val keyed = evDf
       .select(col("user_id"), col("ts_us"), expr(s"ts_us DIV $winUs").as("win"))
     // same staged layout as cms_freq_stream_win (identical frame + width)
-    val inDir = StreamScratch.stageOrderedShared(s"events_win${CmsWinDays}d:$dir") {
+    val inDir = StreamScratch.stageOrderedShared(s, s"events_win${CmsWinDays}d:$dir") {
       val wins = keyed.select(col("win")).distinct().orderBy(col("win"))
         .collect().map(_.getLong(0)) // window-count-sized (span/width)
       wins.toSeq.map(w => keyed.where(col("win") === w))
@@ -585,7 +586,7 @@ object AdvancedQueries {
     * AdvancedOpsSpec asserts the merged matrix equals the monolithic one
     * exactly (not just the top-10 surviving). */
   private[graft] def cmsMergedSketch(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_partkey"), pmod(col("l_orderkey"), lit(3)).as("shard"))
     val partials = (0 until 3).map { sh =>
       cmsSketch(li.where(col("shard") === sh).select(col("l_partkey")))
@@ -616,7 +617,7 @@ object AdvancedQueries {
   def qKmvSetOps(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    val hashes = fork.read.parquet(s"$dir/lineitem.parquet")
+    val hashes = Tables.parquet(fork, s"$dir/lineitem.parquet")
       .select(col("l_returnflag").as("flag"),
         graft.functions.VectorSql.md5Hash60(col("l_partkey").cast("string")).as("h"))
       .distinct()
@@ -674,11 +675,11 @@ object AdvancedQueries {
     import fork.implicits._
     val root = StreamScratch.fresh("kmv")
     val (inDir, outDir, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
-    fork.read.parquet(s"$dir/lineitem.parquet")
+    Tables.parquet(fork, s"$dir/lineitem.parquet")
       .select(col("l_returnflag"), col("l_partkey"))
       .repartition(3).write.parquet(inDir)
     StreamScratch.sizeStateStoresAdaptive(fork, inDir)
-    val sch = fork.read.parquet(inDir).schema
+    val sch = Tables.parquet(fork, inDir).schema
     val stream = fork.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
     val keyed = stream.select(col("l_returnflag").as("flag"),
@@ -720,7 +721,7 @@ object AdvancedQueries {
     * sits inside the exact p40–p60 band. */
   val QhMod = 4
   def qApproxQuantileHash(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(s, s"$dir/lineitem.parquet")
     val keyed = graft.functions.VectorSql.md5Hash60(
       concat(col("l_orderkey").cast("string"), lit(":"),
         col("l_linenumber").cast("string")))
@@ -755,7 +756,7 @@ object AdvancedQueries {
     * the in-band yardstick — production gates it by a sampled audit);
     * `q_approx_quantile_hash` stays the fully bit-gated twin. */
   def qApproxQuantile(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_returnflag"), col("l_extendedprice"))
     val sk = li.groupBy(col("l_returnflag"))
       .agg(
@@ -786,7 +787,7 @@ object AdvancedQueries {
   def qTopKPerKey(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    val li = fork.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(fork, s"$dir/lineitem.parquet")
       .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice"))
     graft.plans.TopKPerKey.topKPerKey(li,
@@ -807,7 +808,7 @@ object AdvancedQueries {
       fork.experimental.extraOptimizations :+ graft.plans.WindowTopKRewrite
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    fork.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("li_rw")
+    Tables.parquet(fork, s"$dir/lineitem.parquet").createOrReplaceTempView("li_rw")
     fork.sql(windowTopKSql("li_rw"))
   }
 
@@ -821,7 +822,7 @@ object AdvancedQueries {
       fork.experimental.extraOptimizations :+ graft.plans.WindowTopKRewrite
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    fork.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("li_rkrw")
+    Tables.parquet(fork, s"$dir/lineitem.parquet").createOrReplaceTempView("li_rkrw")
     fork.sql(rankTopKSql("li_rkrw"))
   }
 
@@ -844,9 +845,9 @@ object AdvancedQueries {
     fork.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "64MB")
     fork.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1KB")
     fork.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val li = fork.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(fork, s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-    val o = fork.read.parquet(s"$dir/orders.parquet")
+    val o = Tables.parquet(fork, s"$dir/orders.parquet")
       .where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderstatus"))
     li.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -872,16 +873,16 @@ object AdvancedQueries {
     * oracle is the plain unpartitioned join the pruning must be
     * invisible to. Revenue in exact e4 integer units. */
   def qDppPrune(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"dpp:$dir") { path =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"dpp:$dir") { path =>
+      Tables.parquet(s, s"$dir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
           col("l_discount"), col("l_shipdate"))
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
         .repartition(col("ship_month"))
         .write.partitionBy("ship_month").parquet(path)
     }
-    val fact = s.read.parquet(layout)
-    val dim = s.read.parquet(s"$dir/orders.parquet")
+    val fact = Tables.parquet(s, layout)
+    val dim = Tables.parquet(s, s"$dir/orders.parquet")
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("ship_month"),
         year(col("o_orderdate")).as("yr"), quarter(col("o_orderdate")).as("qtr"))
       .distinct()
@@ -898,8 +899,8 @@ object AdvancedQueries {
     * side salted deterministically, small side replicated ×8) — output
     * identical to the plain join, so the oracle IS the plain join. */
   def qSaltedJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
-    val supp = s.read.parquet(s"$dir/supplier.parquet")
+    val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+    val supp = Tables.parquet(s, s"$dir/supplier.parquet")
       .select(col("s_suppkey").as("l_suppkey"), col("s_nationkey"))
     Salting.saltedJoin(li, supp, "l_suppkey", factor = 8,
         bigSaltSource = pmod(col("l_orderkey"), lit(8)))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,7 +25,7 @@ object EventQueries {
   private def ev(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fork.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = fork.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.parquet(fork, s"$dir/events.parquet")
     raw.withColumn("ts_us", EventTs.tsUs(raw))
   }
 
@@ -168,8 +169,8 @@ object EventQueries {
     val (outDir, ckpt) = (s"$root/out", s"$root/ckpt")
     fork.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fork.conf.set("spark.sql.session.timeZone", "UTC")
-    val inDir = StreamScratch.stageOrderedShared(s"dau_3d_sent:$dir") {
-      val raw = fork.read.parquet(s"$dir/events.parquet")
+    val inDir = StreamScratch.stageOrderedShared(s, s"dau_3d_sent:$dir") {
+      val raw = Tables.parquet(fork, s"$dir/events.parquet")
       val evDf = raw.withColumn("ts_us", EventTs.tsUs(raw))
         .withColumn("slice", expr("ts_us DIV 259200000000"))
         .select(col("user_id"), col("ts_us"), col("slice"))
@@ -224,8 +225,8 @@ object EventQueries {
     val (outDir, ckpt) = (s"$root/out", s"$root/ckpt")
     fork.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fork.conf.set("spark.sql.session.timeZone", "UTC")
-    val inDir = StreamScratch.stageOrderedShared(s"attrib_3d:$dir") {
-      val raw = fork.read.parquet(s"$dir/events.parquet")
+    val inDir = StreamScratch.stageOrderedShared(s, s"attrib_3d:$dir") {
+      val raw = Tables.parquet(fork, s"$dir/events.parquet")
       val evDf = raw.withColumn("ts_us", EventTs.tsUs(raw))
         .where(col("event_type").isin("view", "click", "purchase"))
         .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
@@ -528,8 +529,8 @@ object EventQueries {
     fork.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fork.conf.set("spark.sql.session.timeZone", "UTC")
     // immutable staged slices cached per session (checkpoint/sink per-run)
-    val inDir = StreamScratch.stageOrderedShared(s"cep_3d:$dir") {
-      val raw = fork.read.parquet(s"$dir/events.parquet")
+    val inDir = StreamScratch.stageOrderedShared(s, s"cep_3d:$dir") {
+      val raw = Tables.parquet(fork, s"$dir/events.parquet")
       val evDf = raw.withColumn("ts_us", EventTs.tsUs(raw))
         .withColumn("slice", expr("ts_us DIV 259200000000")) // 3-day slices
       val slices = evDf.select(col("slice")).distinct().orderBy(col("slice"))
@@ -550,15 +551,18 @@ object EventQueries {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[graft.streaming.EventStream.Event]
-    val q = graft.streaming.EventStream
+    val matches = graft.streaming.EventStream
       .patternStream(stream, windowUs = 30L * 60 * 1000000).toDF()
+    val q = matches
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    fork.read.parquet(outDir)
+    // the schema the sink wrote: inferring it from the fresh output would
+    // run one more job
+    fork.read.schema(matches.schema).parquet(outDir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_matches"),
         min(col("view_us")).as("first_view_us"),
@@ -586,8 +590,8 @@ object EventQueries {
     // built once per session, reused by every later invocation — 22
     // coalesce(1) writes leave the per-run hot path (checkpoint + sink
     // stay fresh under `root`, so the stream itself replays in full)
-    val staged = StreamScratch.stageOrderedSharedMulti(s"ssjoin_3d:$dir") {
-      val raw = fork.read.parquet(s"$dir/events.parquet")
+    val staged = StreamScratch.stageOrderedSharedMulti(s, s"ssjoin_3d:$dir") {
+      val raw = Tables.parquet(fork, s"$dir/events.parquet")
       val evDf = raw.withColumn("ts_us", EventTs.tsUs(raw))
         .withColumn("slice", expr("ts_us DIV 259200000000")) // 3-day slices
       val slices = evDf.select(col("slice")).distinct().orderBy(col("slice"))
@@ -616,18 +620,19 @@ object EventQueries {
       .withWatermark("click_ts", "10 minutes")
       .select(col("event_id").as("click_id"), col("click_ts"),
         col("user_id").as("c_user_id"))
-    val q = vs.join(cs, expr(
+    val pairs = vs.join(cs, expr(
         """user_id = c_user_id AND
           |click_ts >= view_ts AND
           |click_ts <= view_ts + interval 30 minutes""".stripMargin))
       .select(col("user_id"), col("view_id"), col("click_id"))
+    val q = pairs
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    fork.read.parquet(outDir)
+    fork.read.schema(pairs.schema).parquet(outDir)
       .select(col("user_id"), col("view_id"), col("click_id"))
   }
 
@@ -667,7 +672,9 @@ object EventQueries {
   // defensively. All input files load in ONE micro-batch (no
   // maxFilesPerTrigger). Work dirs are FIXED per entry and cleared UP FRONT:
   // bench reps must not accumulate corpus copies in /tmp, and a leftover
-  // checkpoint would make a rerun resume into an empty sink.
+  // checkpoint would make a rerun resume into an empty sink. `s` is the
+  // caller's session, which owns the staged input layout; `fork` is its
+  // Scoped fork, which runs the stream.
 
   private def clearDir(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
@@ -676,13 +683,13 @@ object EventQueries {
         .iterator().asScala.foreach(java.nio.file.Files.delete)
     }
 
-  private def streamedSink(fork: SparkSession, dir: String, name: String,
+  private def streamedSink(s: SparkSession, fork: SparkSession, dir: String, name: String,
                            addSentinel: Boolean,
                            mutateInput: DataFrame => DataFrame = identity)
                           (transform: DataFrame => DataFrame): DataFrame = {
     fork.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     fork.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = fork.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.parquet(fork, s"$dir/events.parquet")
     val src = raw
       .select(col("event_id"), EventTs.tsTimestamp(raw).as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -714,21 +721,24 @@ object EventQueries {
     // gates) streams the SAME files (r16 optimization round; the write was
     // ~0.7 s per invocation × 7 entries × reps). Checkpoint and sink stay
     // per-run fresh above, so each run still consumes every staged file.
-    val inDir = graft.operators.Artifacts.sharedPath(
+    val inDir = graft.operators.Artifacts.sharedPath(s,
       s"stage:events_sink_$name:$dir") { p => input.write.parquet(p) }
     // single-batch source (no maxFilesPerTrigger): one micro-batch reads the
     // whole staged input, so state stores size to the SUM of staged bytes —
     // scale-adaptive like the slice-staged siblings (r16 verdict ask #4)
     StreamScratch.sizeStateStoresAdaptiveTotal(fork, inDir)
     val stream = fork.readStream.schema(src.schema).parquet(inDir)
-    val q = transform(stream)
+    val out = transform(stream)
+    val q = out
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    fork.read.parquet(outDir)
+    // the schema the sink wrote: inferring it from the fresh output would
+    // run one more job
+    fork.read.schema(out.schema).parquet(outDir)
   }
 
   /** The STREAMING resample path directly under the DuckDB oracle (VERDICT
@@ -739,7 +749,7 @@ object EventQueries {
     * through the batch twin. */
   def resampleStreamed(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     import fork.implicits._
-    streamedSink(fork, dir, "resample", addSentinel = true) { df =>
+    streamedSink(s, fork, dir, "resample", addSentinel = true) { df =>
       graft.streaming.EventStream.resampleStream(
           df.as[graft.streaming.EventStream.Event],
           intervalUs = 15L * 60 * 1000000)
@@ -753,7 +763,7 @@ object EventQueries {
     * as `events_sessionize`. */
   def sessionizeStreamed(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     import fork.implicits._
-    streamedSink(fork, dir, "sessionize", addSentinel = true) { df =>
+    streamedSink(s, fork, dir, "sessionize", addSentinel = true) { df =>
       graft.streaming.EventStream.sessionize(
           df.as[graft.streaming.EventStream.Event])
         .filter(_.user_id >= 0).toDF()
@@ -771,7 +781,7 @@ object EventQueries {
     * choice is immaterial; state is bounded by the watermark horizon (the
     * production property — an unbounded `distinct` would never age out). */
   def dedupStreamed(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    streamedSink(fork, dir, "dedup", addSentinel = false,
+    streamedSink(s, fork, dir, "dedup", addSentinel = false,
         mutateInput = src => src.union(src.where(col("event_id") % 7 === 0))) {
       graft.streaming.EventStream.dedupEvents
     }.select(col("event_id"),
@@ -788,7 +798,7 @@ object EventQueries {
     * beyond the final watermark and is never emitted. Same oracle as
     * `events_hourly`. */
   def hourlyStreamed(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    streamedSink(fork, dir, "hourly", addSentinel = true)(
+    streamedSink(s, fork, dir, "hourly", addSentinel = true)(
         graft.streaming.EventStream.hourly)
       .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), round(col("sum_value"), 4).as("sum_value"))
@@ -800,7 +810,7 @@ object EventQueries {
     * the sentinel is a day out, so every data window finalizes while the
     * sentinel's own 4 windows never do. */
   def slidingStreamed(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    streamedSink(fork, dir, "sliding", addSentinel = true)(
+    streamedSink(s, fork, dir, "sliding", addSentinel = true)(
         graft.streaming.EventStream.sliding)
       .select(
         date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
@@ -813,8 +823,8 @@ object EventQueries {
     * is absent from the dimension, so it advances the watermark but drops
     * out of the inner join — no filter needed. */
   def hourlyTierStreamed(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    streamedSink(fork, dir, "tier", addSentinel = true) { df =>
-      val tiers = fork.read.parquet(s"$dir/events.parquet")
+    streamedSink(s, fork, dir, "tier", addSentinel = true) { df =>
+      val tiers = Tables.parquet(fork, s"$dir/events.parquet")
         .select(col("user_id")).distinct()
         .withColumn("tier", pmod(col("user_id"), lit(4)).cast("int"))
       graft.streaming.EventStream.hourlyByTier(df, tiers)
@@ -829,7 +839,7 @@ object EventQueries {
     * SQL as the batch `events_funnel`. */
   def funnelStreamed(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     import fork.implicits._
-    streamedSink(fork, dir, "funnel", addSentinel = true) { df =>
+    streamedSink(s, fork, dir, "funnel", addSentinel = true) { df =>
       graft.streaming.EventStream.funnelStream(
           df.as[graft.streaming.EventStream.Event])
         .filter(_.user_id >= 0).toDF()

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import graft.functions.VectorSql.md5Hash60
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,7 +36,7 @@ object GraphQueries {
     * `n` (the id-space size the targets draw from) is the one corpus-scale
     * count collected — metadata, same discipline as ml_export_shards. */
   def graphPagerank(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(s, s"$dir/documents.parquet")
     val n = docs.count()
     graft.operators.Graph.pagerank(
       linkGraph(docs, n), docs.select(col("doc_id").as("id")), PrIters)
@@ -51,7 +52,7 @@ object GraphQueries {
     * three-way self-join — two different algorithms, one exact integer
     * answer, which is the point of the gate. */
   def graphTriangles(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(s, s"$dir/documents.parquet")
     val n = docs.count()
     graft.operators.Graph.triangleCounts(
       linkGraph(docs, n), docs.select(col("doc_id").as("id")))
@@ -67,7 +68,7 @@ object GraphQueries {
     * then one count per degree value. Degree-cardinality output at any
     * corpus size; everything exact integers. */
   def graphDegreeHist(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(s, s"$dir/documents.parquet")
     val n = docs.count()
     val indeg = linkGraph(docs, n).groupBy(col("dst")).agg(count(lit(1)).as("d"))
     docs.select(col("doc_id"))
@@ -88,7 +89,7 @@ object GraphQueries {
     * integer 1e6 div deg units). The oracle replays the identical cap and
     * scoring from the plain adjacency spelling. */
   def graphLinkPredict(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(s, s"$dir/documents.parquet")
     val n = docs.count()
     graft.operators.Graph.commonNeighbors(linkGraph(docs, n), LinkPredK)
   }
@@ -99,7 +100,7 @@ object GraphQueries {
     * label ties — fully deterministic, so the oracle unrolls every round
     * as staged CTEs, the [[graphPagerank]] discipline). */
   def graphCommunities(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(s, s"$dir/documents.parquet")
     val n = docs.count()
     graft.operators.Graph.labelPropagate(
         linkGraph(docs, n), docs.select(col("doc_id").as("id")), LpaIters)

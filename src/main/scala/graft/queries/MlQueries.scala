@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import graft.som.{SOM, SOMModel}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -154,7 +155,7 @@ object MlQueries {
     * on any cluster size (the salted-hash discipline of
     * `ml_train_test_split`). */
   def mlWeightedSample(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
       .withColumn("rate_ppm",
         least(lit(1000000L), col("n_chars").cast("long") * 4000))
       .select(col("doc_id"), col("rate_ppm"),
@@ -175,7 +176,7 @@ object MlQueries {
   def mlNormOutliers(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    val n2 = fork.read.parquet(s"$dir/embeddings.parquet")
+    val n2 = Tables.parquet(fork, s"$dir/embeddings.parquet")
       .select(col("vec_id"),
         graft.functions.VectorSql.dotFast(
           col("embedding").cast("array<double>"),
@@ -204,7 +205,7 @@ object MlQueries {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))
       .orderBy(col("h"), col("doc_id"))
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"), col("source"),
         graft.operators.TextOps.bpeTokenCount(col("text")).cast("long").as("n_tokens"),
         graft.functions.VectorSql.md5Hash60(
@@ -233,12 +234,12 @@ object MlQueries {
     * invariance). */
   val ShardBudgetTokens = 4000L
   def mlExportShards(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"),
         graft.operators.TextOps.bpeTokenCount(col("text")).cast("long").as("t"))
     val n = docs.count() // metadata-cheap; sizes the prefix-sum buckets
     val bucketSize = math.max(256L, math.ceil(math.sqrt(n.toDouble)).toLong)
-    val layout = graft.operators.Artifacts.sharedPath(s"shards:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"shards:$dir") { path =>
       graft.sources.Sources.writePartitioned(
         graft.operators.Shards.assignShards(docs, "doc_id", "t",
           ShardBudgetTokens, bucketSize), path, "shard")
@@ -248,7 +249,7 @@ object MlQueries {
     // manifest — exactly the rows-match/hash-differ signature of
     // CORRECTNESS_r07's one red row. Fail loud instead. One count() over the
     // reduced layout: metadata-cheap next to the manifest aggregate itself.
-    val back = s.read.parquet(layout)
+    val back = Tables.parquet(s, layout)
     val nBack = back.count()
     require(nBack == n,
       s"shard layout read-back row count $nBack != assigned count $n " +
@@ -280,7 +281,7 @@ object MlQueries {
   }
 
   private def embFeatures(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables.parquet(s, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("features"))
 
   /** The deterministic 4-decimal init (embeddings vec_id < 9) both fit
@@ -337,7 +338,7 @@ object MlQueries {
       val pts = SomQueries.points(fork, dir)
       // immutable staged training slices cached per session (checkpoint
       // per-run fresh, so every slice still replays in order)
-      val inDir = StreamScratch.stageOrderedShared(s"somfit_$FitIters:$dir") {
+      val inDir = StreamScratch.stageOrderedShared(s, s"somfit_$FitIters:$dir") {
         (0 until FitIters).map(b =>
           pts.where(pmod(col("vec_id"), lit(FitIters)) === b))
       }
@@ -500,7 +501,7 @@ object MlQueries {
     * partitioning or row order, so re-runs, engines, and backfills agree
     * row-for-row. 80/20 by hash bucket. */
   def mlTrainTestSplit(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables.parquet(s, s"$dir/embeddings.parquet")
       .select(col("vec_id"),
         when(graft.functions.VectorSql.md5Hash60(
           concat(lit("split:"), col("vec_id").cast("string"))) % 100 < 80, "train")
@@ -527,7 +528,7 @@ object MlQueries {
     * portable md5 kernel the oracle replays verbatim. */
   def mlFeatureHash(s: SparkSession, dir: String): DataFrame = {
     val md5 = graft.functions.VectorSql.md5Hash60 _
-    val vecs = s.read.parquet(s"$dir/documents.parquet")
+    val vecs = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"),
         explode(graft.operators.TextOps.tokensFast(col("text"))).as("tok"))
       .select(col("doc_id"),
@@ -576,7 +577,7 @@ object MlQueries {
     * scan; the model never sees the data twice (R² comes from the same
     * moments — measured ≈0.9: quantity genuinely prices an order). */
   def mlLinReg(s: SparkSession, dir: String): DataFrame = {
-    val feat = s.read.parquet(s"$dir/lineitem.parquet")
+    val feat = Tables.parquet(s, s"$dir/lineitem.parquet")
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("x1"),
         expr("cast(sum(l_quantity) as bigint)").as("x2"),
@@ -611,7 +612,7 @@ object MlQueries {
     * bigint to ~10⁷ rows per side (the ×10 corpus); beyond that drop the
     * scale a digit. */
   def mlTreeStump(s: SparkSession, dir: String): DataFrame = {
-    val h = s.read.parquet(s"$dir/lineitem.parquet")
+    val h = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_quantity").cast("int").as("qty"),
         (col("l_extendedprice") > 30000).cast("long").as("y"))
       .groupBy(col("qty"))
@@ -665,7 +666,7 @@ object MlQueries {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
     // the one corpus scan: joint value histogram, ≤550 cells
-    val h = s.read.parquet(s"$dir/lineitem.parquet")
+    val h = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_quantity").cast("int").as("qty"),
         expr("cast(cast(l_discount as decimal(18,2)) * 100 as int)").as("disc"),
         (col("l_extendedprice") > 30000).cast("long").as("y"))
@@ -766,7 +767,7 @@ object MlQueries {
       .partitionBy(col("feature")).orderBy(col("v"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    val h0 = s.read.parquet(s"$dir/lineitem.parquet")
+    val h0 = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_quantity").cast("int").as("qty"),
         expr("cast(cast(l_discount as decimal(18,2)) * 100 as int)").as("disc"),
         (col("l_extendedprice") > 30000).cast("long").as("y"))
@@ -836,7 +837,7 @@ object MlQueries {
     * corpus itself is touched exactly once (the histogram scan). Spec
     * proves equality with a driver-side PAV run and monotonicity. */
   def mlIsotonic(s: SparkSession, dir: String): DataFrame = {
-    val h = s.read.parquet(s"$dir/lineitem.parquet")
+    val h = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_quantity").cast("int").as("qty"),
         (col("l_extendedprice") > 30000).cast("long").as("y"))
       .groupBy(col("qty"))
@@ -886,7 +887,7 @@ object MlQueries {
     * broadcast-scale. df = K−1 rides along; the spec recomputes χ² in
     * floating point and pins the milli rendering within 1. */
   def mlChi2Select(s: SparkSession, dir: String): DataFrame = {
-    val base = s.read.parquet(s"$dir/lineitem.parquet")
+    val base = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_quantity").cast("int").as("qty"),
         expr("cast(cast(l_discount as decimal(18,2)) * 100 as int)").as("disc"),
         (col("l_extendedprice") > 30000).cast("long").as("y"))
@@ -936,7 +937,7 @@ object MlQueries {
     * cardinality (≤ ~37k distinct values at any corpus size — the value
     * histogram discipline), and the corpus is scanned once. */
   def mlKsTest(s: SparkSession, dir: String): DataFrame = {
-    val h = s.read.parquet(s"$dir/events.parquet")
+    val h = Tables.parquet(s, s"$dir/events.parquet")
       .where(col("event_type").isin("click", "purchase"))
       .select(col("event_type"),
         expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("x"))
@@ -984,7 +985,7 @@ object MlQueries {
     * unpartitioned window. U₂ ≤ 2·n₁·n₂ ~ 10¹³ at the ×10 corpus —
     * bigint-safe (5·10⁵·U₂ ≤ 7·10¹⁸ at the ×10 corpus); drop the scale a digit beyond. */
   def mlAuc(s: SparkSession, dir: String): DataFrame = {
-    val h = s.read.parquet(s"$dir/lineitem.parquet")
+    val h = Tables.parquet(s, s"$dir/lineitem.parquet")
       .select(col("l_quantity").cast("int").as("qty"),
         (col("l_extendedprice") > 30000).cast("long").as("y"))
       .groupBy(col("qty"))
@@ -1019,7 +1020,7 @@ object MlQueries {
     * sums into 2·B cells — no shuffle beyond the B-row aggregate, the
     * reason this shape scales where true resampling does not. */
   def mlBootstrapCi(s: SparkSession, dir: String): DataFrame = {
-    val p = s.read.parquet(s"$dir/events.parquet")
+    val p = Tables.parquet(s, s"$dir/events.parquet")
       .where(col("event_type") === "purchase")
       .select(col("event_id"),
         expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("cents"))
@@ -1061,7 +1062,7 @@ object MlQueries {
     * exploded ×B, conditional partials into B cells — the bootstrap's
     * cost shape. All integers end to end. */
   def mlPermTest(s: SparkSession, dir: String): DataFrame = {
-    val e = s.read.parquet(s"$dir/events.parquet")
+    val e = Tables.parquet(s, s"$dir/events.parquet")
       .where(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("event_type"),
         expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("cents"))
@@ -1110,7 +1111,7 @@ object MlQueries {
     * variances (the z form — at corpus n the Welch-t correction is
     * noise); constant-size output at any scale. */
   def mlAbTest(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
+    Tables.parquet(s, s"$dir/events.parquet")
       .where(col("event_type").isin("click", "purchase"))
       .select(col("event_type"),
         expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("x"))

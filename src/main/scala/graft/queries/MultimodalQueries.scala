@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import graft.operators.{Dedup, Multimodal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,7 +54,7 @@ object MultimodalQueries {
     * only exchange carries bare ids); the scan reads only doc_id. */
   def mmImageDecode(s: SparkSession, dir: String): DataFrame = {
     val makePng = udf { (id: Long) => Multimodal.syntheticPng(id, PngW, PngH) }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makePng(col("media_id")))
@@ -68,7 +69,7 @@ object MultimodalQueries {
     * id, parse header + samples, emit rate/counts + exact sample aggregates. */
   def mmAudioDecode(s: SparkSession, dir: String): DataFrame = {
     val makeWav = udf { (id: Long) => Multimodal.syntheticWav(id, WavSamples, WavRate) }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeWav(col("media_id")))
@@ -88,7 +89,7 @@ object MultimodalQueries {
     * hash-mismatches. */
   def mmImageResize(s: SparkSession, dir: String): DataFrame = {
     val makePng = udf { (id: Long) => Multimodal.syntheticPng(id, PngW, PngH) }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makePng(col("media_id")))
@@ -102,7 +103,7 @@ object MultimodalQueries {
   /** Byte-level metadata over a binary payload column: size + digest +
     * a 4-bucket shard key. Pure column expressions, no decode. */
   def mmByteStats(s: SparkSession, dir: String): DataFrame = {
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"), col("text").cast("binary").as("payload"))
     Multimodal.byteStats(media)
       .select(col("media_id"), col("n_bytes").cast("int").as("n_bytes"), col("digest"),
@@ -114,7 +115,7 @@ object MultimodalQueries {
     * the DuckDB oracle's codepoint histogram equals the byte histogram —
     * exact integer arithmetic in both engines. */
   def mmFeatureAgg(s: SparkSession, dir: String): DataFrame = {
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"),
         regexp_replace(col("text"), "[^\\x00-\\x7F]", "").cast("binary").as("payload"))
     Multimodal.extractFeatures(media)
@@ -137,7 +138,7 @@ object MultimodalQueries {
     // (the MJPEG path is spec-pinned with true JPEG frames separately)
     val makeAvi = udf { (id: Long) =>
       Multimodal.syntheticAvi(id, VidW, VidH, VidFrames, codec = "bmp") }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeAvi(col("media_id")))
@@ -157,7 +158,7 @@ object MultimodalQueries {
   def mmFrameSample(s: SparkSession, dir: String): DataFrame = {
     val makeAvi = udf { (id: Long) =>
       Multimodal.syntheticAvi(id, VidW, VidH, VidFrames, codec = "bmp") }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeAvi(col("media_id")))
@@ -196,7 +197,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticBlockImage(iid, PngW, PngH, 2)
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeMedia(col("media_id")))
@@ -237,7 +238,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticFrameWav(aid, Multimodal.AudioFpFrames, WavFrameLen)
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeMedia(col("media_id")))
@@ -284,7 +285,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticFrameAvi(vid, F, VidFpW, VidFpH)
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeMedia(col("media_id")))
@@ -322,7 +323,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticTileImage(iid, ImgCbCols, ImgCbRows, VidFpW, format = "bmp")
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .where(col("doc_id") % 4 === 0)
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
@@ -358,7 +359,7 @@ object MultimodalQueries {
     val textPairs = TextDedupQueries.sharedPairs(s, dir)
       .select(col("doc_a"), col("doc_b"))
     val imgPairs = mmImageDedup(s, dir).select(col("doc_a"), col("doc_b"))
-    val d = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"))
+    val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
     Dedup.keepListConverged(d, "doc_id", textPairs.unionByName(imgPairs))
   }
 
@@ -385,7 +386,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticBlockImage(iid, PngW, PngH, 2, brightR = true)
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeMedia(col("media_id")))
@@ -427,7 +428,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticBandWav(aid)
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeMedia(col("media_id")))
@@ -468,7 +469,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticBandWav(aid)
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeMedia(col("media_id")))
@@ -514,7 +515,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticFrameAvi(vid, F, VidFpW, VidFpH)
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeMedia(col("media_id")))
@@ -564,7 +565,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticTileImage(iid, ImgTiles, ImgTiles, VidFpW, format = "bmp")
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)
       .withColumn("payload", makeMedia(col("media_id")))
@@ -616,7 +617,7 @@ object MultimodalQueries {
         case _ => Multimodal.syntheticTileImage(iid, Img2dCols, Img2dRows, VidFpW, format = "bmp")
       }
     }
-    val media = s.read.parquet(s"$dir/documents.parquet")
+    val media = Tables.parquet(s, s"$dir/documents.parquet")
       .where(col("doc_id") % 2 === 0)
       .select(col("doc_id").as("media_id"))
       .transform(spreadIds)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
 object RelationalQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(s, s"$dir/$name.parquet")
 
   /** TPC-H Q1-style pricing summary: filter + hash agg + scalar math. */
   def q1Pricing(s: SparkSession, dir: String): DataFrame =
@@ -307,11 +308,11 @@ object RelationalQueries {
     * history rescan the oracle performs. */
   def qIncrRollup(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
-    val mvPath = graft.operators.Artifacts.sharedPath(s"incr_rollup:$dir") { path =>
+    val mvPath = graft.operators.Artifacts.sharedPath(s, s"incr_rollup:$dir") { path =>
       rollupPartial(li.where(col("l_shipdate") < lit(IncrCutoff)))
         .write.parquet(path)
     }
-    val merged = s.read.parquet(mvPath)
+    val merged = Tables.parquet(s, mvPath)
       .unionByName(rollupPartial(li.where(col("l_shipdate") >= lit(IncrCutoff))))
       .groupBy(col("month"), col("l_returnflag"))
       .agg(sum(col("n_items")).cast("long").as("n_items"),
@@ -333,8 +334,8 @@ object RelationalQueries {
     * exactly the type whose re-aggregation reproduces the query's
     * Sum-of-cast to the bit). Written once through Artifacts. */
   private def mvMonthlyPath(s: SparkSession, dir: String): String =
-    graft.operators.Artifacts.sharedPath(s"mv_monthly:$dir") { path =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+    graft.operators.Artifacts.sharedPath(s, s"mv_monthly:$dir") { path =>
+      Tables.parquet(s, s"$dir/lineitem.parquet")
         .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("month"),
           col("l_returnflag"))
         .agg(count(lit(1)).as("n_items"),
@@ -346,14 +347,14 @@ object RelationalQueries {
 
   private def mvQuery(fork: SparkSession, dir: String,
                       groupFlag: Boolean): DataFrame = {
-    val mvPlan = fork.read.parquet(mvMonthlyPath(fork, dir))
+    val mvPlan = Tables.parquet(fork, mvMonthlyPath(fork, dir))
       .queryExecution.analyzed
     fork.experimental.extraOptimizations =
       fork.experimental.extraOptimizations :+
         graft.plans.MvRollupRewrite(mvPlan, "lineitem.parquet")
     // the USER'S query: a plain aggregate over the raw fact table — the
     // MV appears nowhere in it; the optimizer rule alone routes it
-    val li = fork.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(fork, s"$dir/lineitem.parquet")
     val keys =
       if (groupFlag) Seq(date_format(col("l_shipdate"), "yyyy-MM").as("month"),
         col("l_returnflag"))
@@ -413,12 +414,12 @@ object RelationalQueries {
   def mvRefreshStream(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     val root = StreamScratch.fresh("mvrefresh")
     val (mvDir, ckpt) = (s"$root/mv", s"$root/ckpt")
-    val li = fork.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(fork, s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_shipdate"), col("l_returnflag"),
         col("l_quantity"), col("l_extendedprice"), col("l_discount"))
     // immutable staged increments cached per session (MV dir + checkpoint
     // stay per-run fresh, so every refresh batch still replays)
-    val inDir = StreamScratch.stageOrderedShared(s"mvrefresh_4:$dir") {
+    val inDir = StreamScratch.stageOrderedShared(s, s"mvrefresh_4:$dir") {
       (0 to 3).map(k => li.where(expr(s"l_orderkey % 4 = $k")))
     }
     val stream = fork.readStream.schema(li.schema)
@@ -439,7 +440,7 @@ object RelationalQueries {
     q.awaitTermination()
     val batches = new java.io.File(mvDir).listFiles()
       .filter(_.getName.startsWith("batch=")).map(_.toString).sorted
-    fork.read.parquet(batches: _*)
+    Tables.parquet(fork, batches: _*)
       .groupBy(col("month"), col("l_returnflag"))
       .agg(sum(col("n_items")).cast("long").as("n_items"),
         round(sum(col("sum_qty")), 2).as("sum_qty"),
@@ -459,9 +460,9 @@ object RelationalQueries {
     * — the shift is a multiple of 16) and bumps stripe-4 revenue by an
     * exact 0.01 (U on the decimal measure). Stripe = l_orderkey mod 40. */
   private def mvCdfLayout(s: SparkSession, dir: String): String =
-    graft.operators.Artifacts.sharedPath(s"mvcdf:$dir") { path =>
+    graft.operators.Artifacts.sharedPath(s, s"mvcdf:$dir") { path =>
       val table = s"$path/table"
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
         .select(expr("l_orderkey * 8 + l_linenumber").as("lkey"),
           date_format(col("l_shipdate"), "yyyy-MM").as("month"),
           col("l_returnflag"), col("l_quantity"),
@@ -546,7 +547,7 @@ object RelationalQueries {
       .agg(count(lit(1)).as("n_items"), sum(col("l_quantity")).as("sum_qty"),
         sum(col("rev")).cast("decimal(18,4)").as("rev"))
     val deltaDirs = (2 to vLast).map(v => s"$outDir/v$v")
-    base.unionByName(fork.read.parquet(deltaDirs: _*))
+    base.unionByName(Tables.parquet(fork, deltaDirs: _*))
       .groupBy(col("month"), col("l_returnflag"))
       .agg(sum(col("n_items")).as("n_items"), sum(col("sum_qty")).as("sum_qty"),
         sum(col("rev")).cast("decimal(18,4)").as("rev"))
@@ -603,7 +604,7 @@ object RelationalQueries {
       .agg(count(lit(1)).as("n_items"), sum(col("l_quantity")).as("sum_qty"),
         sum(col("rev")).cast("decimal(18,4)").as("rev"))
     val deltaDirs = (2 to vLast).map(v => s"$outDir/v$v")
-    base.unionByName(fork.read.parquet(deltaDirs: _*))
+    base.unionByName(Tables.parquet(fork, deltaDirs: _*))
       .groupBy(col("month"), col("l_returnflag"))
       .agg(sum(col("n_items")).as("n_items"), sum(col("sum_qty")).as("sum_qty"),
         sum(col("rev")).cast("decimal(18,4)").as("rev"))

@@ -1,9 +1,11 @@
 package graft.queries
 
+import graft.sources.Tables
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Similarity-search catalog: exact brute-force cosine top-k, IVF-bucketed
   * approximate top-k (SOM prototypes as the coarse quantizer), and
@@ -135,7 +137,7 @@ object SimilarityQueries {
   def bitextMine(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorSql.{dotFast, norm2Fast}
     import org.apache.spark.sql.expressions.Window
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
     val xs = emb.where(col("label") === 0).orderBy(col("vec_id")).limit(BtQueryN)
@@ -177,13 +179,13 @@ object SimilarityQueries {
   def annFiltered(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    val withLabel = fork.read.parquet(s"$dir/embeddings.parquet")
+    val withLabel = Tables.parquet(fork, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
     val probesL = withLabel.where(col("vec_id") < NumProbes)
       .select(col("vec_id").as("probe_id"), col("v").as("p"),
         col("label").as("plabel"))
-    val allowed = fork.read.parquet(s"$dir/documents.parquet")
+    val allowed = Tables.parquet(fork, s"$dir/documents.parquet")
       .where(col("lang") === "en").select(col("doc_id"))
     Similarity.filteredTopK(withLabel, probesL, allowed, K,
       useHeapOperator = true)
@@ -223,7 +225,7 @@ object SimilarityQueries {
     def cosC(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.VectorSql.dotFast(a, b) /
         (graft.functions.VectorSql.norm2Fast(a) * graft.functions.VectorSql.norm2Fast(b))
-    val layout = graft.operators.Artifacts.sharedPath(s"ivf_spill_layout:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"ivf_spill_layout:$dir") { path =>
       val vrnW = Window.partitionBy(col("vec_id")).orderBy(col("vcos").desc, col("cell"))
       val spilled = pts(s, dir).crossJoin(broadcast(centroids))
         .select(col("vec_id"), col("v"), col("cell"),
@@ -241,7 +243,7 @@ object SimilarityQueries {
       .select(col("probe_id"), col("p"), col("cell"))
     val wantedCells = probeCells.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val pruned = s.read.parquet(layout).where(col("cell").isin(wantedCells: _*))
+    val pruned = Tables.parquet(s, layout).where(col("cell").isin(wantedCells: _*))
     val w = Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
     pruned
       .join(broadcast(probeCells), "cell")
@@ -533,7 +535,7 @@ object SimilarityQueries {
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
     val cb = pqHeuristicCb(fork, dir)
-    val layout = graft.operators.Artifacts.sharedPath(s"ivfpq_layout:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"ivfpq_layout:$dir") { path =>
       graft.sources.Sources.writePartitioned(
         assigned(fork, dir).select(col("vec_id"),
           Similarity.pqCodes(col("v"), cb, PqSubDims).as("codes"), col("cell")),
@@ -551,7 +553,7 @@ object SimilarityQueries {
     val probeCells = ivfPqProbeCells(fork, dir)
     val wantedCells = probeCells.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val coded = fork.read.parquet(layout)
+    val coded = Tables.parquet(fork, layout)
       .where(col("cell").isin(wantedCells: _*))
       .select(col("vec_id"), col("cell"),
         Similarity.pqRecon(col("codes"), cb, PqSubDims).as("r"))
@@ -585,7 +587,7 @@ object SimilarityQueries {
       s"day-zero corpus ($cut rows) must contain the $PqNumCodes codebook rows — " +
         "a smaller day-zero trains a different codebook: that is a rebuild, not a delta")
     val cb = pqHeuristicCb(fork, dir)
-    val layout = graft.operators.Artifacts.sharedPath(s"ivfpq_delta:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"ivfpq_delta:$dir") { path =>
       // materialize once: base write + delta append each consume the
       // assignment+encode pipeline (the multiply-consumed-frame discipline)
       val coded = assigned(fork, dir).select(col("vec_id"),
@@ -621,7 +623,7 @@ object SimilarityQueries {
     val doomed = pts(fork, dir)
       .where(col("vec_id") % NswGdprMod === 0 && col("vec_id") >= PqNumCodes)
       .select(col("vec_id"))
-    val layout = graft.operators.Artifacts.sharedPath(s"ivfpq_gdpr:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"ivfpq_gdpr:$dir") { path =>
       graft.sources.Sources.writePartitioned(
         assigned(fork, dir).select(col("vec_id"),
           Similarity.pqCodes(col("v"), cb, PqSubDims).as("codes"), col("cell")),
@@ -784,7 +786,7 @@ object SimilarityQueries {
   def retrievalRrf(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.experimental.extraStrategies =
       fork.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    val d = fork.read.parquet(s"$dir/documents.parquet")
+    val d = Tables.parquet(fork, s"$dir/documents.parquet")
     val toks = d.select(col("doc_id"),
       graft.operators.TextOps.tokensFast(col("text")).as("t"))
     // tf is the ONE tokenize pass (r17): it is a REDUCED artifact (one row
@@ -1268,7 +1270,7 @@ object SimilarityQueries {
     // write disjoint paths (no mid-read clobber) and repeat invocations in
     // one session serve from the existing layout without re-writing the
     // corpus — the persistent-serving-index shape (r5 verdict task 4)
-    val layout = graft.operators.Artifacts.sharedPath(s"ivf_layout:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"ivf_layout:$dir") { path =>
       graft.sources.Sources.writeIvfLayout(assigned(s, dir), path)
     }
     serveIvfLayout(s, dir, layout)
@@ -1290,7 +1292,7 @@ object SimilarityQueries {
     * `dedup_incremental_pairs`, the bench simulates yesterday's layout from
     * scratch — the delta step itself is increment-sized.) */
   def annIvfDelta(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"ivf_delta:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"ivf_delta:$dir") { path =>
       val a = assigned(s, dir) // frozen centroids: same quantizer both days
       val n = pts(s, dir).count()
       val cut = n - n / 10
@@ -1317,7 +1319,7 @@ object SimilarityQueries {
   // claim replayed for real, not just re-run from a fresh checkpoint)
   private[graft] def serveIvfLayoutProbes(s: SparkSession, dir: String,
                                           layout: String, probesDf: DataFrame): DataFrame =
-    serveIvfFrame(s, dir, s.read.parquet(layout), probesDf)
+    serveIvfFrame(s, dir, Tables.parquet(s, layout), probesDf)
 
   /** [[serveIvfLayoutProbes]] for an EXPLICIT corpus frame — the seam the
     * streaming-maintained index uses to serve the UNION of the immutable
@@ -1383,22 +1385,26 @@ object SimilarityQueries {
     val (inDir, outDir, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     // probe traffic split across files: one file per trigger
     probes(fork, dir).repartition(3).write.parquet(inDir)
-    val layout = graft.operators.Artifacts.sharedPath(s"ivf_layout:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"ivf_layout:$dir") { path =>
       graft.sources.Sources.writeIvfLayout(assigned(fork, dir), path)
     }
     val stream = fork.readStream.schema("probe_id LONG, p ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1).parquet(inDir)
+    // the schema the batches wrote, for the read-back: inferring it from
+    // the fresh output would run one more job
+    val written = new java.util.concurrent.atomic.AtomicReference[StructType]
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        serveIvfLayoutProbes(fork, dir, layout, batch)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        val served = serveIvfLayoutProbes(fork, dir, layout, batch)
+        written.set(served.schema)
+        served.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
         ()
       }
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    fork.read.parquet(outDir)
+    fork.read.schema(written.get).parquet(outDir)
       .select(col("probe_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
   }
 
@@ -1430,7 +1436,7 @@ object SimilarityQueries {
     * partitioned write), the base is write-once, and query cost grows
     * only with segment COUNT until compaction folds them in. */
   def annIvfDeltaStream(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val corpus = streamMaintainedIndex(fork, dir, StreamScratch.fresh("ann_ivf_delta"))
+    val corpus = streamMaintainedIndex(s, fork, dir, StreamScratch.fresh("ann_ivf_delta"))
     serveIvfFrame(fork, dir, corpus, probes(fork, dir))
   }
 
@@ -1439,14 +1445,16 @@ object SimilarityQueries {
     * segments beside the immutable base, return the base∪segments serve
     * frame (cell a partition column of both union legs). `root` must be
     * FRESH (callers clear via [[StreamScratch.fresh]] — a stale checkpoint
-    * would mark input files already-processed and serve stale segments). */
-  private def streamMaintainedIndex(fork: SparkSession, dir: String,
+    * would mark input files already-processed and serve stale segments).
+    * The base layout is keyed by `s`, the caller's session; `fork`, its
+    * Scoped fork, runs the stream. */
+  private def streamMaintainedIndex(s: SparkSession, fork: SparkSession, dir: String,
                                     root: java.nio.file.Path): DataFrame = {
     val (inDir, segDir, ckpt) = (s"$root/in", s"$root/seg", s"$root/ckpt")
     val n = pts(fork, dir).count()
     val cut = n - n / 10
     // the immutable base: yesterday's 90%, written once per session
-    val base = graft.operators.Artifacts.sharedPath(s"ivf_base90:$dir") { path =>
+    val base = graft.operators.Artifacts.sharedPath(s, s"ivf_base90:$dir") { path =>
       graft.sources.Sources.writeIvfLayout(
         assigned(fork, dir).where(col("vec_id") < cut), path)
     }
@@ -1469,8 +1477,8 @@ object SimilarityQueries {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    fork.read.parquet(base)
-      .unionByName(fork.read.parquet(segDir).drop("batch"))
+    Tables.parquet(fork, base)
+      .unionByName(Tables.parquet(fork, segDir).drop("batch"))
   }
 
   /** THE COMPOSED LIFECYCLE — both streaming halves in one entry, which is
@@ -1487,23 +1495,27 @@ object SimilarityQueries {
     * asserts BOTH checkpoints really crossed micro-batch boundaries. */
   def annServeStreamLive(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     val root = StreamScratch.fresh("ann_live") // WHOLE root: index AND serve
-    val corpus = streamMaintainedIndex(fork, dir, root.resolve("index"))
+    val corpus = streamMaintainedIndex(s, fork, dir, root.resolve("index"))
     val (inDir, outDir, ckpt) =
       (s"$root/serve/in", s"$root/serve/out", s"$root/serve/ckpt")
     probes(fork, dir).repartition(3).write.parquet(inDir)
     val stream = fork.readStream.schema("probe_id LONG, p ARRAY<DOUBLE>")
       .option("maxFilesPerTrigger", 1).parquet(inDir)
+    // the schema the batches wrote, for the read-back: inferring it from
+    // the fresh output would run one more job
+    val written = new java.util.concurrent.atomic.AtomicReference[StructType]
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        serveIvfFrame(fork, dir, corpus, batch)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        val served = serveIvfFrame(fork, dir, corpus, batch)
+        written.set(served.schema)
+        served.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
         ()
       }
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    fork.read.parquet(outDir)
+    fork.read.schema(written.get).parquet(outDir)
       .select(col("probe_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
   }
 
@@ -1532,7 +1544,7 @@ object SimilarityQueries {
     val doomed = pts(s, dir)
       .where(col("vec_id") % NswGdprMod === 0 && col("vec_id") >= K9)
       .select(col("vec_id"))
-    val layout = graft.operators.Artifacts.sharedPath(s"ivf_gdpr:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"ivf_gdpr:$dir") { path =>
       graft.sources.Sources.writeIvfLayout(assigned(s, dir), path)
       graft.sources.Sources.deletePartitioned(s, path, "cell", "vec_id", doomed)
     }

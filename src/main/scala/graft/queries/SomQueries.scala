@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{BmuFold, HalfUp}
@@ -32,7 +33,7 @@ object SomQueries {
   val T = 2.0     // fixed temperature for the single update step
 
   private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables.parquet(s, s"$dir/embeddings.parquet")
 
   /** points: (vec_id, v: array<double>) */
   def points(s: SparkSession, dir: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.sources.Sources
+import graft.sources.{Sources, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,7 +32,7 @@ object SourceQueries {
       graft.RepoRoot.dir.resolve("target").resolve("fixtures").toString)
 
   private def nationRows(s: SparkSession, dir: String): Seq[(Long, String, Long)] =
-    s.read.parquet(s"$dir/nation.parquet")
+    Tables.parquet(s, s"$dir/nation.parquet")
       .select(col("n_nationkey").cast("long"), col("n_name"),
         col("n_regionkey").cast("long"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -64,7 +64,7 @@ object SourceQueries {
       StructField("n_nationkey", LongType), StructField("n_name", StringType),
       StructField("n_regionkey", LongType)))
     val nation = Sources.readCsv(s, csvPath, schema)
-    val region = s.read.parquet(s"$dir/region.parquet")
+    val region = Tables.parquet(s, s"$dir/region.parquet")
       .select(col("r_regionkey").cast("long").as("r_regionkey"), col("r_name"))
     nation.join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"))
@@ -93,7 +93,7 @@ object SourceQueries {
   def srcOrcNation(s: SparkSession, dir: String): DataFrame = {
     val orcPath = s"$FixtureDir/nation_orc"
     Sources.writeOrc(
-      s.read.parquet(s"$dir/nation.parquet")
+      Tables.parquet(s, s"$dir/nation.parquet")
         .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
           col("n_regionkey").cast("long").as("n_regionkey")),
       orcPath)
@@ -148,8 +148,8 @@ object SourceQueries {
     * only the overlapping grid cells (pruning plan-asserted in
     * SourcesSpec). */
   def qZorderPrune(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"zorder_orders:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"zorder_orders:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .withColumn("d_day",
           datediff(col("o_orderdate").cast("date"), lit("1970-01-01").cast("date")))
       Sources.writeZorderLayout(orders, "d_day", "o_custkey", path)
@@ -172,8 +172,8 @@ object SourceQueries {
     * layouts' whole contract is returning exactly the plain filter's
     * rows. */
   def qHilbertPrune(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"hilbert_orders:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"hilbert_orders:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .withColumn("d_day",
           datediff(col("o_orderdate").cast("date"), lit("1970-01-01").cast("date")))
       Sources.writeHilbertLayout(orders, "d_day", "o_custkey", path)
@@ -196,14 +196,14 @@ object SourceQueries {
     * reads the post-delete layout back and profiles it per source; the
     * oracle is the anti-join the delete must be indistinguishable from. */
   def qGdprDelete(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"gdpr:$dir") { path =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"gdpr:$dir") { path =>
+      val docs = Tables.parquet(s, s"$dir/documents.parquet")
         .select(col("doc_id"), col("source"), col("n_chars"))
       Sources.writePartitioned(docs, path, "source")
       Sources.deletePartitioned(s, path, "source", "doc_id",
         docs.where(col("doc_id") % 97 === 0).select(col("doc_id")))
     }
-    s.read.parquet(layout)
+    Tables.parquet(s, layout)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).cast("long").as("tot_chars"),
@@ -229,8 +229,8 @@ object SourceQueries {
   /** The two-version orders store [[qTimeTravel]] and [[qDsv2Travel]]
     * both read (one shared layout, two read surfaces). */
   private def timeTravelLayout(s: SparkSession, dir: String): String =
-    graft.operators.Artifacts.sharedPath(s"timetravel:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    graft.operators.Artifacts.sharedPath(s, s"timetravel:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .withColumn("bucket", (col("o_orderkey") % 16).cast("int"))
       graft.sources.Versioned.commitBase(orders, path, "bucket", 16)
       val delta = orders.where(col("o_orderkey") % 64 < 4)
@@ -274,8 +274,8 @@ object SourceQueries {
     * lands in the output; the oracle recomputes the final state
     * relationally from the delta formulas. */
   def qStoreSchemaEvo(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"schemaevo:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"schemaevo:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .withColumn("bucket", (col("o_orderkey") % 16).cast("int"))
       graft.sources.Versioned.commitBase(orders, path, "bucket", 16)
       val delta = orders.where(col("o_orderkey") % 64 < 4)
@@ -304,8 +304,8 @@ object SourceQueries {
     * from `hasVersion`, so a vacuum that under-deletes fails the gate
     * too). Oracle recomputes both kept states from the stripe formulas. */
   def qStoreVacuum(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"vacuum:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"vacuum:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .withColumn("bucket", (col("o_orderkey") % 16).cast("int"))
       graft.sources.Versioned.commitBase(orders, path, "bucket", 16)
       val d2 = orders.where(col("o_orderkey") % 64 < 4)
@@ -345,9 +345,9 @@ object SourceQueries {
     * divergence costs only the touched buckets — the same O(delta)
     * argument the commit log makes, stretched across directories. */
   def qStoreClone(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"storeclone:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"storeclone:$dir") { path =>
       val src = s"$path/src"; val dst = s"$path/dst"
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -392,11 +392,11 @@ object SourceQueries {
     * pins base + final while the spec pins the versioning mechanics.
     * Oracle computes both states relationally. */
   def qCdcStream(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"cdcstream:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"cdcstream:$dir") { path =>
       val table = s"$path/table"
       val inDir = s"$path/in"
       val ckpt = s"$path/ckpt"
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .withColumn("bucket", (col("o_orderkey") % 16).cast("int"))
       graft.sources.Versioned.commitBase(orders, table, "bucket", 16)
       val delta = orders.where(col("o_orderkey") % 10 === 3)
@@ -448,11 +448,11 @@ object SourceQueries {
     * version mapping, kill-and-resume without re-application, replay
     * no-ops, and the mode/partitioning guards. */
   def qStoreSinkStream(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"storesink:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"storesink:$dir") { path =>
       val table = s"$path/table"
       val inDir = s"$path/in"
       val ckpt = s"$path/ckpt"
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .withColumn("bucket", (col("o_orderkey") % 16).cast("int"))
       graft.sources.Versioned.commitBase(orders, table, "bucket", 16)
       val delta = orders.where(col("o_orderkey") % 10 === 3)
@@ -499,11 +499,11 @@ object SourceQueries {
     * pins base + final states relationally — the deleted stripe GONE,
     * the updated stripe tripled, everything else untouched. */
   def qCdcMergeStream(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"cdcmerge:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"cdcmerge:$dir") { path =>
       val table = s"$path/table"
       val inDir = s"$path/in"
       val ckpt = s"$path/ckpt"
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .withColumn("bucket", (col("o_orderkey") % 16).cast("int"))
       graft.sources.Versioned.commitBase(orders, table, "bucket", 16)
       val changes = orders.where(col("o_orderkey") % 10 === 3)
@@ -565,11 +565,11 @@ object SourceQueries {
     * (disjoint doomed-key deletes commute); the hash gate pins the final
     * state = the plain anti-join, same oracle as `q_gdpr_delete`. */
   def qGdprStream(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"gdprstream:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(s, s"gdprstream:$dir") { path =>
       val table = s"$path/table"
       val inDir = s"$path/in"
       val ckpt = s"$path/ckpt"
-      val docs = fork.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.parquet(fork, s"$dir/documents.parquet")
         .select(col("doc_id"), col("source"), col("n_chars"))
         .withColumn("bucket", (col("doc_id") % 16).cast("int"))
       graft.sources.Versioned.commitBase(docs, table, "bucket", 16)
@@ -636,8 +636,8 @@ object SourceQueries {
   /** The date-striped orders store [[qZonemapPrune]] and [[qDsv2Skip]]
     * both read. */
   private def zonemapLayout(s: SparkSession, dir: String): String =
-    graft.operators.Artifacts.sharedPath(s"zonemap:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    graft.operators.Artifacts.sharedPath(s, s"zonemap:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .withColumn("order_day", datediff(col("o_orderdate"), lit("1970-01-01")).cast("long"))
         .withColumn("bucket", expr("cast((order_day div 160) % 16 as int)"))
       graft.sources.Versioned.commitBase(orders, path, "bucket", 16)
@@ -707,8 +707,8 @@ object SourceQueries {
   /** The bloom-indexed customer store [[qStoreBloomSkip]] and
     * [[qDsv2Lookup]] both read. */
   private def bloomSkipLayout(s: SparkSession, dir: String): String =
-    graft.operators.Artifacts.sharedPath(s"bloomskip:$dir") { path =>
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+    graft.operators.Artifacts.sharedPath(s, s"bloomskip:$dir") { path =>
+      val cust = Tables.parquet(s, s"$dir/customer.parquet")
         .withColumn("bucket", pmod(col("c_custkey"), lit(16)).cast("int"))
       graft.sources.Versioned.commitBase(cust, path, "bucket", 16)
       graft.sources.Versioned.writeBloomIndex(s, path, 1, "c_custkey")
@@ -717,7 +717,7 @@ object SourceQueries {
   /** The bounded point-lookup batch: 6 present keys + the same 6 offset
     * beyond the max key (guaranteed absent). */
   private def bloomSkipProbes(s: SparkSession, dir: String): Seq[Long] = {
-    val cust = s.read.parquet(s"$dir/customer.parquet")
+    val cust = Tables.parquet(s, s"$dir/customer.parquet")
     val present = cust.where(col("c_custkey") % 97 === 0)
       .select(col("c_custkey")).orderBy(col("c_custkey")).limit(6)
       .collect().map(_.getLong(0)).toSeq
@@ -762,8 +762,8 @@ object SourceQueries {
     * (the txn-app-id discipline), `INSERT OVERWRITE` = commitRewrite,
     * pinned-view write rejection, and bootstrap-from-empty. */
   def qDsv2Write(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"dsv2write:$dir") { path =>
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"dsv2write:$dir") { path =>
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .withColumn("bucket", (col("o_orderkey") % 16).cast("int"))
       graft.sources.Versioned.commitBase(orders, path, "bucket", 16)
       fork.sql("CREATE OR REPLACE TEMPORARY VIEW graft_store_w " +
@@ -804,8 +804,8 @@ object SourceQueries {
   def qStoreSqlMerge(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.experimental.extraOptimizations =
       fork.experimental.extraOptimizations :+ graft.sources.GraftRowLevelRewrite
-    val layout = graft.operators.Artifacts.sharedPath(s"storesqlmerge:$dir") { path =>
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"storesqlmerge:$dir") { path =>
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -850,8 +850,8 @@ object SourceQueries {
   def qStoreSqlUpdate(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.experimental.extraOptimizations =
       fork.experimental.extraOptimizations :+ graft.sources.GraftRowLevelRewrite
-    val layout = graft.operators.Artifacts.sharedPath(s"storesqlupdate:$dir") { path =>
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"storesqlupdate:$dir") { path =>
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -879,8 +879,8 @@ object SourceQueries {
     * is 8 rows lighter. The doomed set is the 8 smallest keys of the
     * `% 64 = 1` stripe, re-derivable relationally by the oracle. */
   def qStoreSqlDelete(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"storesqldelete:$dir") { path =>
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"storesqldelete:$dir") { path =>
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -917,8 +917,8 @@ object SourceQueries {
     * the new column (null for untouched-key provenance), while a
     * `versionAsOf 1` pinned read NEVER sees it. */
   def qStoreSqlEvolve(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"storesqlevolve:$dir") { path =>
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"storesqlevolve:$dir") { path =>
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -962,9 +962,9 @@ object SourceQueries {
     * so the staged source applies I/U feeds — the CDC-apply shape.
     * GraftHopSpec adds the kill-mid-hop resume proof. */
   def qStoreStreamHop(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layoutB = graft.operators.Artifacts.sharedPath(s"storehop:$dir") { pathB =>
+    val layoutB = graft.operators.Artifacts.sharedPath(s, s"storehop:$dir") { pathB =>
       val pathA = s"$pathB-src"
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -1019,8 +1019,8 @@ object SourceQueries {
     * vocabulary between them. */
   def qStoreHopCdc(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     val layoutA = storeChangesLayout(fork, dir)
-    val layoutB = graft.operators.Artifacts.sharedPath(s"storehopcdc:$dir") { pathB =>
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+    val layoutB = graft.operators.Artifacts.sharedPath(s, s"storehopcdc:$dir") { pathB =>
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -1086,14 +1086,14 @@ object SourceQueries {
     * bloom-pruned shrinkage, the hint-free BroadcastHashJoin); the oracle
     * pins the join's VALUES. */
   def qStoreStatsJoin(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"statsjoin:$dir") { path =>
-      val nation = fork.read.parquet(s"$dir/nation.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"statsjoin:$dir") { path =>
+      val nation = Tables.parquet(fork, s"$dir/nation.parquet")
         .withColumn("bucket", pmod(col("n_nationkey"), lit(4)).cast("int"))
       graft.sources.Versioned.commitBase(nation, path, "bucket", 4)
       graft.sources.Versioned.writeRowCounts(fork, path, 1)
     }
     val nat = fork.read.format("graftstore").option("path", layout).load()
-    fork.read.parquet(s"$dir/customer.parquet")
+    Tables.parquet(fork, s"$dir/customer.parquet")
       .join(nat, col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_cust"),
@@ -1119,7 +1119,7 @@ object SourceQueries {
   def qStoreCatalogSql(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
-    val wh = graft.operators.Artifacts.sharedPath(s"catalogsql:$dir") { path =>
+    val wh = graft.operators.Artifacts.sharedPath(s, s"catalogsql:$dir") { path =>
       fork.conf.set("spark.sql.catalog.graft_cat.warehouse", path)
       fork.sql("CREATE NAMESPACE graft_cat.lake")
       fork.sql(
@@ -1129,7 +1129,7 @@ object SourceQueries {
           |) USING graftstore
           |OPTIONS (keyCol 'o_orderkey', bucketCol 'bucket', nBuckets '16')"""
           .stripMargin)
-      fork.read.parquet(s"$dir/orders.parquet")
+      Tables.parquet(fork, s"$dir/orders.parquet")
         .createOrReplaceTempView("graft_cat_src")
       fork.sql(
         """INSERT INTO graft_cat.lake.orders
@@ -1174,7 +1174,7 @@ object SourceQueries {
   def qStoreSqlMaintenance(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
-    val wh = graft.operators.Artifacts.sharedPath(s"catalogmaint:$dir") { path =>
+    val wh = graft.operators.Artifacts.sharedPath(s, s"catalogmaint:$dir") { path =>
       fork.conf.set("spark.sql.catalog.graft_cat.warehouse", path)
       fork.sql("CREATE NAMESPACE graft_cat.lake")
       fork.sql(
@@ -1183,7 +1183,7 @@ object SourceQueries {
           |) USING graftstore
           |OPTIONS (keyCol 'o_orderkey', bucketCol 'bucket', nBuckets '16')"""
           .stripMargin)
-      fork.read.parquet(s"$dir/orders.parquet")
+      Tables.parquet(fork, s"$dir/orders.parquet")
         .createOrReplaceTempView("graft_maint_src")
       fork.sql(
         """INSERT INTO graft_cat.lake.orders_m
@@ -1262,7 +1262,7 @@ object SourceQueries {
   def qStoreAlterAdd(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
-    val wh = graft.operators.Artifacts.sharedPath(s"alteradd:$dir") { path =>
+    val wh = graft.operators.Artifacts.sharedPath(s, s"alteradd:$dir") { path =>
       fork.conf.set("spark.sql.catalog.graft_cat.warehouse", path)
       fork.sql("CREATE NAMESPACE graft_cat.lake")
       fork.sql(
@@ -1271,7 +1271,7 @@ object SourceQueries {
           |) USING graftstore
           |OPTIONS (keyCol 'o_orderkey', bucketCol 'bucket', nBuckets '16')"""
           .stripMargin)
-      fork.read.parquet(s"$dir/orders.parquet")
+      Tables.parquet(fork, s"$dir/orders.parquet")
         .createOrReplaceTempView("graft_alter_src")
       fork.sql(
         """INSERT INTO graft_cat.lake.orders_a
@@ -1316,7 +1316,7 @@ object SourceQueries {
   def qStoreMergeEvolve(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
-    val wh = graft.operators.Artifacts.sharedPath(s"mergeevolve:$dir") { path =>
+    val wh = graft.operators.Artifacts.sharedPath(s, s"mergeevolve:$dir") { path =>
       fork.conf.set("spark.sql.catalog.graft_cat.warehouse", path)
       fork.sql("CREATE NAMESPACE graft_cat.lake")
       fork.sql(
@@ -1325,7 +1325,7 @@ object SourceQueries {
           |) USING graftstore
           |OPTIONS (keyCol 'o_orderkey', bucketCol 'bucket', nBuckets '16')"""
           .stripMargin)
-      fork.read.parquet(s"$dir/orders.parquet")
+      Tables.parquet(fork, s"$dir/orders.parquet")
         .createOrReplaceTempView("graft_me_base")
       fork.sql(
         """INSERT INTO graft_cat.lake.orders_me
@@ -1337,7 +1337,7 @@ object SourceQueries {
         s2.conf.set("spark.sql.catalog.graft_cat",
           classOf[graft.sources.GraftCatalog].getName)
         s2.conf.set("spark.sql.catalog.graft_cat.warehouse", path)
-        s2.read.parquet(s"$dir/orders.parquet")
+        Tables.parquet(s2, s"$dir/orders.parquet")
           .createOrReplaceTempView("graft_me_src")
         s2.sql(
           """MERGE WITH SCHEMA EVOLUTION INTO graft_cat.lake.orders_me t
@@ -1380,8 +1380,8 @@ object SourceQueries {
     * every call: it must fail loud (`conflict_refused` = 1 is gated), and
     * its refused attempt commits nothing (`n_versions` stays 3). */
   def qStoreCommitRetry(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
-    val layout = graft.operators.Artifacts.sharedPath(s"commitretry:$dir") { path =>
-      val orders = fork.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"commitretry:$dir") { path =>
+      val orders = Tables.parquet(fork, s"$dir/orders.parquet")
         .select(col("o_orderkey"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -1403,7 +1403,7 @@ object SourceQueries {
     // the CONFLICT probe runs every call (it commits nothing, so it is
     // idempotent): writer C also read v1 but touches B's stripe — a
     // genuine write-write conflict must fail loud, never last-writer-wins
-    val ordersNow = fork.read.parquet(s"$dir/orders.parquet")
+    val ordersNow = Tables.parquet(fork, s"$dir/orders.parquet")
       .select(col("o_orderkey"),
         expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
           .as("price_e4"))
@@ -1439,7 +1439,7 @@ object SourceQueries {
   def qStoreSqlHistory(s: SparkSession, dir: String): DataFrame = Scoped(s) { fork =>
     fork.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
-    val wh = graft.operators.Artifacts.sharedPath(s"cataloghist:$dir") { path =>
+    val wh = graft.operators.Artifacts.sharedPath(s, s"cataloghist:$dir") { path =>
       fork.conf.set("spark.sql.catalog.graft_cat.warehouse", path)
       fork.sql("CREATE NAMESPACE graft_cat.lake")
       fork.sql(
@@ -1448,7 +1448,7 @@ object SourceQueries {
           |) USING graftstore
           |OPTIONS (keyCol 'o_orderkey', bucketCol 'bucket', nBuckets '16')"""
           .stripMargin)
-      fork.read.parquet(s"$dir/orders.parquet")
+      Tables.parquet(fork, s"$dir/orders.parquet")
         .createOrReplaceTempView("graft_hist_src")
       fork.sql(
         """INSERT INTO graft_cat.lake.orders_h
@@ -1536,8 +1536,8 @@ object SourceQueries {
     * index decision relationally. */
   def qStoreBloomSkipDelta(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val layout = graft.operators.Artifacts.sharedPath(s"bloomskipdelta:$dir") { path =>
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"bloomskipdelta:$dir") { path =>
+      val cust = Tables.parquet(s, s"$dir/customer.parquet")
         .withColumn("bucket", pmod(col("c_custkey"), lit(16)).cast("int"))
       graft.sources.Versioned.commitBase(cust, path, "bucket", 16)
       graft.sources.Versioned.writeBloomIndex(s, path, 1, "c_custkey")
@@ -1552,7 +1552,7 @@ object SourceQueries {
         upd.unionByName(fresh), path, 2, "c_custkey", "bucket")
       graft.sources.Versioned.writeBloomIndexIncremental(s, path, 2)
     }
-    val maxKey = s.read.parquet(s"$dir/customer.parquet")
+    val maxKey = Tables.parquet(s, s"$dir/customer.parquet")
       .agg(max(col("c_custkey"))).head().getLong(0)
     val probes = Seq(0L, 64L) ++                      // updated keys
       (0 until 3).map(j => maxKey + 1 + 32L * j) ++   // new keys
@@ -1594,8 +1594,8 @@ object SourceQueries {
     * [[qStoreChangesStream]] both read (one shared layout — a serving
     * store is written once, consumed by many feeds). */
   private def storeChangesLayout(s: SparkSession, dir: String): String =
-    graft.operators.Artifacts.sharedPath(s"storechanges:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    graft.operators.Artifacts.sharedPath(s, s"storechanges:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -1641,21 +1641,25 @@ object SourceQueries {
     val stream = fork.readStream
       .schema(StructType(Seq(StructField("version", IntegerType))))
       .option("maxFilesPerTrigger", 1).parquet(inDir)
+    // the schema the batches wrote, for the read-back: inferring it from
+    // the fresh output would run one more job
+    val written = new java.util.concurrent.atomic.AtomicReference[StructType]
     val q = stream.writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
         b.select(col("version")).distinct().collect().map(_.getInt(0))
           .foreach { v =>
             val (cdf, _) = graft.sources.Versioned.changes(
               b.sparkSession, layout, v - 1, v, "o_orderkey")
-            cdf.withColumn("version", lit(v)).write.mode("overwrite")
-              .parquet(s"$outDir/v$v")
+            val feed = cdf.withColumn("version", lit(v))
+            written.set(feed.schema)
+            feed.write.mode("overwrite").parquet(s"$outDir/v$v")
           }
       }
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    fork.read.parquet((2 to vLast).map(v => s"$outDir/v$v"): _*)
+    fork.read.schema(written.get).parquet((2 to vLast).map(v => s"$outDir/v$v"): _*)
       .select(col("version"), col("op"), col("o_orderkey"), col("o_custkey"),
         col("o_orderstatus"), col("price_e4"))
   }
@@ -1680,16 +1684,19 @@ object SourceQueries {
     val layout = storeChangesLayout(s, dir)
     val root = StreamScratch.fresh("cdfsrc").toString
     val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
-    val q = fork.readStream.format("graftstore")
+    val changes = fork.readStream.format("graftstore")
       .option("path", layout).option("keyCol", "o_orderkey")
       .option("maxVersionsPerTrigger", "1")
       .load()
+    val q = changes
       .writeStream.format("parquet").option("path", outDir)
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    fork.read.parquet(outDir)
+    // the schema the sink wrote: inferring it from the fresh output would
+    // run one more job
+    fork.read.schema(changes.schema).parquet(outDir)
       .select(col("_commit_version").as("version"), col("op"), col("o_orderkey"),
         col("o_custkey"), col("o_orderstatus"), col("price_e4"))
   }
@@ -1714,8 +1721,8 @@ object SourceQueries {
     * the mechanics (pointer copy, byte-untouched control, one-file
     * postcondition, no-op recompaction). */
   def qStoreCompact(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"storecompact:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"storecompact:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           expr("cast(cast(o_totalprice as decimal(18,4)) * 10000 as bigint)")
             .as("price_e4"))
@@ -1754,8 +1761,8 @@ object SourceQueries {
     * content equality across the rewrite and the one-file-per-bucket
     * compaction side effect. */
   def qStoreRecluster(s: SparkSession, dir: String): DataFrame = {
-    val layout = graft.operators.Artifacts.sharedPath(s"recluster:$dir") { path =>
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+    val layout = graft.operators.Artifacts.sharedPath(s, s"recluster:$dir") { path =>
+      val orders = Tables.parquet(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           col("o_orderdate"))
         .withColumn("order_day",

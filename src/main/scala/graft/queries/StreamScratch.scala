@@ -52,11 +52,12 @@ private[graft] object StreamScratch {
     * layout is shared; checkpoints and sinks stay per-run fresh, so a fresh
     * stream still consumes every staged file and exactly-once / restart
     * claims are untouched. `build` (including any slice-bound collects it
-    * performs) runs only on the FIRST call per (session, key). Returns the
+    * performs) runs only on the FIRST call per (`s`, key), `s` being the
+    * caller's session (not a Scoped fork, which is new per call). Returns the
     * cached input dir to `readStream` from. */
-  def stageOrderedShared(key: String)(
+  def stageOrderedShared(s: org.apache.spark.sql.SparkSession, key: String)(
       build: => Seq[org.apache.spark.sql.DataFrame]): String =
-    graft.operators.Artifacts.sharedPath(s"stage:$key") { path =>
+    graft.operators.Artifacts.sharedPath(s, s"stage:$key") { path =>
       stageOrdered(path, build)
     }
 
@@ -65,9 +66,9 @@ private[graft] object StreamScratch {
     * stream-stream join's view and click sides): each named side lands
     * under `<layout>/<name>`, and the returned dirs are stable across
     * invocations. */
-  def stageOrderedSharedMulti(key: String)(
+  def stageOrderedSharedMulti(s: org.apache.spark.sql.SparkSession, key: String)(
       build: => Seq[(String, Seq[org.apache.spark.sql.DataFrame])]): String =
-    graft.operators.Artifacts.sharedPath(s"stage:$key") { path =>
+    graft.operators.Artifacts.sharedPath(s, s"stage:$key") { path =>
       build.foreach { case (name, slices) => stageOrdered(s"$path/$name", slices) }
     }
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import graft.operators.{Artifacts, Dedup, LmScorer, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
 object TextDedupQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
 
   /** Per-document quality stats: token counts, BPE-ish token count, alpha
     * ratio, average token length. */
@@ -665,7 +666,7 @@ object TextDedupQueries {
     * query, one scan + one per-doc count for the serve, global top-k via
     * TakeOrderedAndProject. */
   def textPhraseSearch(s: SparkSession, dir: String): DataFrame = {
-    val toks = s.read.parquet(s"$dir/documents.parquet")
+    val toks = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"),
         graft.functions.TextKernels.spaceTokens(col("text")).as("t"))
       .where(size(col("t")) >= 2) // Spark sequence(1,0) would DESCEND
@@ -698,7 +699,7 @@ object TextDedupQueries {
     * aggregates over the in-scan bigram stream + two marginal joins —
     * every count exact, partial-combining, at any corpus size. */
   def textCollocations(s: SparkSession, dir: String): DataFrame = {
-    val toks = s.read.parquet(s"$dir/documents.parquet")
+    val toks = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"),
         graft.functions.TextKernels.spaceTokens(col("text")).as("t"))
       .where(size(col("t")) >= 2)
@@ -878,7 +879,7 @@ object TextDedupQueries {
     * directly — min() is duplicate-insensitive, so the distinct shuffle is
     * skipped. */
   private def sharedSignatures(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(Artifacts.sharedPath(s"minhash_sig:$dir") { path =>
+    Tables.parquet(s, Artifacts.sharedPath(s, s"minhash_sig:$dir") { path =>
       Dedup.minhashSignatures(Dedup.docShinglesRaw(docs(s, dir), "doc_id", "text"))
         .write.parquet(path)
     })
@@ -889,7 +890,7 @@ object TextDedupQueries {
     * confirm re-shingles ONLY candidate docs — the full corpus is touched
     * exactly once, by the signature scan. */
   private[graft] def sharedPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(Artifacts.sharedPath(s"minhash_pairs:$dir") { path =>
+    Tables.parquet(s, Artifacts.sharedPath(s, s"minhash_pairs:$dir") { path =>
       confirmedPairsFrom(s, dir, sharedSignatures(s, dir), maxBandDf = Some(64))
         .write.parquet(path)
     })
@@ -1002,7 +1003,7 @@ object TextDedupQueries {
     * populations before and after a delta/delete, breaking their
     * equals-recompute contracts; see [[graft.operators.Dedup.scrubArtifacts]]). */
   private def sharedPairsUncapped(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(Artifacts.sharedPath(s"minhash_pairs_uncapped:$dir") { path =>
+    Tables.parquet(s, Artifacts.sharedPath(s, s"minhash_pairs_uncapped:$dir") { path =>
       confirmedPairsFrom(s, dir, sharedSignatures(s, dir), maxBandDf = None)
         .write.parquet(path)
     })
@@ -1070,7 +1071,7 @@ object TextDedupQueries {
     val (inDir, outDir, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     // stage the corpus into a directory: the file stream source reads
     // directories, and the driver testdata is a single parquet file
-    val docsIn = fork.read.parquet(s"$dir/documents.parquet")
+    val docsIn = Tables.parquet(fork, s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     docsIn.write.parquet(inDir)
     // no maxFilesPerTrigger: ONE micro-batch loads every staged file, so the
@@ -1111,7 +1112,7 @@ object TextDedupQueries {
     import fork.implicits._
     val root = StreamScratch.fresh("dedup_evict")
     val (inDir, outDir, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
-    val docsIn = fork.read.parquet(s"$dir/documents.parquet")
+    val docsIn = Tables.parquet(fork, s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     // split across files, one per trigger: the watermark genuinely ADVANCES
     // between micro-batches, so the eviction machinery runs live (a

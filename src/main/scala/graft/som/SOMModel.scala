@@ -1,5 +1,6 @@
 package graft.som
 
+import graft.sources.Tables
 import graft.functions.{ArrayVectorExpressions, BmuFold}
 import org.apache.spark.TaskContext
 import org.apache.spark.ml.Model
@@ -152,7 +153,7 @@ object SOMModel extends MLReadable[SOMModel] {
       implicit val fmt: DefaultFormats.type = DefaultFormats
       val json = parse(sparkSession.read.text(s"$path/metadata").head().getString(0))
       val uid = (json \ "uid").extract[String]
-      val rows = sparkSession.read.parquet(s"$path/data/prototypes")
+      val rows = Tables.parquet(sparkSession, s"$path/data/prototypes")
         .select("cell", "prototype").collect()
       val protos = new Array[Vector](rows.length)
       rows.foreach(r => protos(r.getInt(0)) = Vectors.dense(r.getAs[Seq[Double]](1).toArray))

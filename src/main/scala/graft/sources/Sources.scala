@@ -19,9 +19,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** CSV with explicit schema — no inference pass, malformed rows quarantined
     * rather than failing the job. */
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
@@ -68,7 +65,7 @@ object Sources {
   def deletePartitioned(spark: SparkSession, path: String,
                         partitionCol: String, keyCol: String,
                         ids: DataFrame): Unit = {
-    val layout = spark.read.parquet(path)
+    val layout = Tables.parquet(spark, path)
     val doomed = broadcast(ids.select(col(keyCol)))
     val affected = layout.join(doomed, keyCol)
       .select(col(partitionCol)).distinct().collect().map(_.get(0))
@@ -182,7 +179,7 @@ object Sources {
     * meta file — never from data. */
   def zorderRead(spark: SparkSession, path: String,
                  loA: Long, hiA: Long, loB: Long, hiB: Long): DataFrame = {
-    val m = spark.read.parquet(s"$path/meta").head()
+    val m = Tables.parquet(spark, s"$path/meta").head()
     val (amn, amx, bmn, bmx, bits) =
       (m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3), m.getInt(4))
     val cells = 1 << bits
@@ -192,7 +189,7 @@ object Sources {
       ca <- cellOf(loA, amn, amx) to cellOf(hiA, amn, amx)
       cb <- cellOf(loB, bmn, bmx) to cellOf(hiB, bmn, bmx)
     } yield mortonBucket(ca, cb, bits)
-    spark.read.parquet(s"$path/data")
+    Tables.parquet(spark, s"$path/data")
       .where(col("zbucket").isin(buckets: _*))
   }
 
@@ -234,7 +231,7 @@ object Sources {
     * predicate (cells are coarse). */
   def hilbertRead(spark: SparkSession, path: String,
                   loA: Long, hiA: Long, loB: Long, hiB: Long): DataFrame = {
-    val m = spark.read.parquet(s"$path/meta").head()
+    val m = Tables.parquet(spark, s"$path/meta").head()
     val (amn, amx, bmn, bmx, bits) =
       (m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3), m.getInt(4))
     val cells = 1 << bits
@@ -245,7 +242,7 @@ object Sources {
       cellOf(loB, bmn, bmx), cellOf(hiB, bmn, bmx))
     val pred = runs.map { case (lo, hi) => col("hbucket").between(lo, hi) }
       .reduce(_ || _)
-    spark.read.parquet(s"$path/data").where(pred)
+    Tables.parquet(spark, s"$path/data").where(pred)
   }
 
   /** SMALL-FILES COMPACTION — the table-maintenance pass every streaming or
@@ -283,7 +280,7 @@ object Sources {
         .map(Files.size).sum
     }
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(path).repartition(nFiles)
+    Tables.parquet(spark, path).repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     Files.move(dir, old)
     Files.move(tmp, dir)

@@ -407,7 +407,7 @@ object Versioned {
       "every bucket is the empty sentinel — no data files to read a schema from")
     balancedUnion(byVer.map { case (ver, entries) =>
       val buckets = entries.keys.toSeq.map(lit(_))
-      spark.read.parquet(dataPath(dir, ver))
+      Tables.parquet(spark, dataPath(dir, ver))
         .where(col(bucketColOf(spark, dir, ver)).isin(buckets: _*))
     // allowMissingColumns: under schema evolution a version can span data
     // files of different widths — columns a version's older files predate

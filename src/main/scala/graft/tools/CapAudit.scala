@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.sources.Tables
 import graft.operators.{Dedup, Similarity}
 import graft.queries.SomQueries
 import org.apache.spark.sql.SparkSession
@@ -33,7 +34,7 @@ object CapAudit {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.parquet(spark, s"$sfDir/documents.parquet")
     val nDocs = docs.count()
     println(s"[capaudit] corpus: $nDocs docs")
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,12 +64,12 @@ object GenScale {
     def replicate(table: String, keys: Seq[String],
                   perCopy: (DataFrame, Int) => DataFrame = (d, _) => d): Unit = {
       if (!scaleTables(table)) {
-        spark.read.parquet(s"$src/$table.parquet")
+        Tables.parquet(spark, s"$src/$table.parquet")
           .write.mode("overwrite").parquet(s"$out/$table.parquet")
         println(s"[genscale] $table passthrough (not in scaleTables) -> $out/$table.parquet")
         return
       }
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = Tables.parquet(spark, s"$src/$table.parquet")
       val spans = keys.map(k =>
         k -> (base.agg(max(col(k))).head.getLong(0) + 1L)).toMap
       val scaled = (0 until copies)
@@ -131,7 +132,7 @@ object GenScale {
     // warms up on region; unfiltered runs must not hit missing paths)
     Seq("region", "nation", "customer", "supplier", "part")
       .foreach { t =>
-        spark.read.parquet(s"$src/$t.parquet")
+        Tables.parquet(spark, s"$src/$t.parquet")
           .write.mode("overwrite").parquet(s"$out/$t.parquet")
         println(s"[genscale] $t passthrough -> $out/$t.parquet")
       }

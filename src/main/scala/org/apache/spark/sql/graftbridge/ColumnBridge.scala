@@ -47,6 +47,10 @@ object ColumnBridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
 
+  /** Optimized logical plan of a DataFrame. */
+  def optimizedPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.optimizedPlan
+
   /** Re-wrap a batch DataFrame's physical plan as a STREAMING DataFrame —
     * the V1 streaming `Source.getBatch` contract (the engine asserts
     * `isStreaming`); exactly FileStreamSource's own spelling
@@ -76,6 +80,12 @@ object ColumnBridge {
     * a real UUID cannot. */
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
+  /** The Hadoop configuration the session's file sources list and read
+    * with: the SparkContext's, overlaid with the session's SQL confs
+    * (`sessionState` is `private[sql]`). */
+  def newHadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
 
   /** Register a Catalyst expression builder as a SQL function on an existing
     * session (the runtime sibling of `SparkSessionExtensions.injectFunction`,

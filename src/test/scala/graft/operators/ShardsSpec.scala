@@ -74,7 +74,7 @@ class ShardsSpec extends SparkSpec {
   }
 
   test("layout scratch dir is repo-local, not java.io.tmpdir") {
-    val p = Artifacts.sharedPath("shards_spec_scratch") { dir =>
+    val p = Artifacts.sharedPath(spark, "shards_spec_scratch") { dir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir)): Unit
     }
     val repoTarget = graft.RepoRoot.dir.resolve("target").toAbsolutePath.toString

@@ -168,11 +168,11 @@ class SimilaritySpec extends SparkSpec {
 
   test("sharedPath: one write per session+key, concurrent sessions disjoint") {
     var writesA = 0
-    val p1 = Artifacts.sharedPath("spec_layout:x") { dir =>
+    val p1 = Artifacts.sharedPath(spark, "spec_layout:x") { dir =>
       writesA += 1
       new java.io.File(dir).mkdirs()
     }
-    val p2 = Artifacts.sharedPath("spec_layout:x") { dir =>
+    val p2 = Artifacts.sharedPath(spark, "spec_layout:x") { dir =>
       writesA += 1
       new java.io.File(dir).mkdirs()
     }
@@ -180,7 +180,7 @@ class SimilaritySpec extends SparkSpec {
     assert(writesA == 1, "second invocation must NOT re-write the layout")
     // a different key (e.g. another SF dir) gets its own directory
     var writesB = 0
-    val p3 = Artifacts.sharedPath("spec_layout:y") { dir =>
+    val p3 = Artifacts.sharedPath(spark, "spec_layout:y") { dir =>
       writesB += 1
       new java.io.File(dir).mkdirs()
     }
@@ -191,7 +191,7 @@ class SimilaritySpec extends SparkSpec {
     // clear() keeps layouts alive (persistent-index semantics)
     Artifacts.clear()
     var writesC = 0
-    val p4 = Artifacts.sharedPath("spec_layout:x") { _ => writesC += 1 }
+    val p4 = Artifacts.sharedPath(spark, "spec_layout:x") { _ => writesC += 1 }
     assert(p4 == p1 && writesC == 0, "clear() must not evict live-session layouts")
   }
 }

@@ -59,4 +59,23 @@ class SessionHygieneSpec extends SparkSpec {
     assert(Artifacts.shared(child, key)(fail("the child entry was rebuilt")).count() == 5)
     assert(own.sparkSession eq child)
   }
+
+  test("Artifacts.sharedPath keys by the session passed in: a newSession caller writes and reads its own layout") {
+    import graft.operators.Artifacts
+    val child = spark.newSession()
+    assert(org.apache.spark.sql.SparkSession.active ne child)
+    val key = "session_hygiene:shared_path"
+    var writes = Seq.empty[String]
+    val parent = Artifacts.sharedPath(spark, key) { p => writes :+= "parent"; spark.range(3).write.parquet(p) }
+    // the child is not the active session, yet it writes its own layout
+    val own = Artifacts.sharedPath(child, key) { p => writes :+= "child"; child.range(5).write.parquet(p) }
+    assert(writes == Seq("parent", "child"))
+    assert(parent != own)
+    val uuid = org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID _
+    assert(parent.contains(uuid(spark)) && own.contains(uuid(child)))
+    // each session reuses its own layout and reads its own rows
+    assert(Artifacts.sharedPath(spark, key)(_ => fail("the parent layout was rewritten")) == parent)
+    assert(Artifacts.sharedPath(child, key)(_ => fail("the child layout was rewritten")) == own)
+    assert(spark.read.parquet(parent).count() == 3 && child.read.parquet(own).count() == 5)
+  }
 }

@@ -43,12 +43,46 @@ class SomFitJobsSpec extends SparkSpec {
   /** Spark jobs started while `body` runs. */
   private def jobs(body: => Unit): Int = jobRdds(body).length
 
+  /** A fresh copy of the sf0.001 tables: its paths are new to
+    * `Tables.parquet`, so the first read of each table infers its schema. */
+  private def coldCopy(): String = {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get(sf("sf0.001"))
+    val dst = java.nio.file.Files.createTempDirectory("graft_jobs_sf")
+    java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
+      val to = dst.resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(to)
+      else java.nio.file.Files.copy(p, to)
+    }
+    dst.toString
+  }
+
   test("som_fit5 runs one job per iteration plus a fixed overhead") {
-    val dir = sf("sf0.001")
-    val measured = jobs { MlQueries.somFit5(spark, dir); () }
-    // overhead: two parquet schema reads (prototype table, training input)
-    // and the prototype collect
-    assert(measured == MlQueries.FitIters + 3, s"som_fit5 ran $measured jobs")
+    val dir = coldCopy()
+    val cold = jobs { MlQueries.somFit5(spark, dir); () }
+    // overhead: one parquet schema read (the prototype table and the
+    // training input are both the embeddings table: the second read reuses
+    // the first one's schema) and the prototype collect
+    assert(cold == MlQueries.FitIters + 2, s"som_fit5 ran $cold jobs")
+    // the schemas are remembered: a repeated run pays only the collect
+    val warm = jobs { MlQueries.somFit5(spark, dir); () }
+    assert(warm == MlQueries.FitIters + 1, s"a repeated som_fit5 ran $warm jobs")
+  }
+
+  test("a km_fit entry run plus count() is 15 jobs cold and 14 warm: its centroid rows are not checkpointed") {
+    val dir = coldCopy()
+    def run(): Int = {
+      graft.operators.Artifacts.clear()
+      jobs { SimilarityQueries.kmFit(spark, dir).count(); () }
+    }
+    // the embeddings schema read, 12 fit jobs and count's two; the 9
+    // driver-built centroid rows are a LocalRelation, which Artifacts.shared
+    // does not checkpoint
+    val cold = run()
+    assert(cold == 15, s"cold km_fit + count ran $cold jobs")
+    val warm = run()
+    assert(warm == 14, s"warm km_fit + count ran $warm jobs")
+    graft.operators.Artifacts.clear()
   }
 
   private def vectors(seed: Long, n: Int, partitions: Int) = {

@@ -102,7 +102,7 @@ class IvfDeltaSpec extends SparkSpec {
       col("neighbor_id") % SimilarityQueries.NswGdprMod === 0 &&
         col("neighbor_id") >= 9).count()
     assert(doomedServed == 0, "a deleted vector was served as a neighbor")
-    val layout = graft.operators.Artifacts.sharedPath(s"ivf_gdpr:$dir")(_ =>
+    val layout = graft.operators.Artifacts.sharedPath(spark, s"ivf_gdpr:$dir")(_ =>
       fail("layout missing — expected it cached from the serve"))
     val left = spark.read.parquet(layout)
       .where(col("vec_id") % SimilarityQueries.NswGdprMod === 0 &&

@@ -73,7 +73,7 @@ class IvfPqDeltaSpec extends SparkSpec {
     val doomedServed = res.where(
       col("neighbor_id") % mod === 0 && col("neighbor_id") >= cb).count()
     assert(doomedServed == 0, "a deleted vector was served as a neighbor")
-    val layout = graft.operators.Artifacts.sharedPath(s"ivfpq_gdpr:$dir")(_ =>
+    val layout = graft.operators.Artifacts.sharedPath(spark, s"ivfpq_gdpr:$dir")(_ =>
       fail("layout missing — expected it cached from the serve"))
     val codes = spark.read.parquet(layout)
     assert(codes.where(col("vec_id") % mod === 0 && col("vec_id") >= cb).count() == 0,

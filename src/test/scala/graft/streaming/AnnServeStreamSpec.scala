@@ -69,7 +69,7 @@ class AnnServeStreamSpec extends SparkSpec {
     val batchProbes = spark.read.parquet(root.resolve("in").toString)
       .where(org.apache.spark.sql.functions.col("probe_id")
         .isin(servedIds.toSeq: _*))
-    val layout = graft.operators.Artifacts.sharedPath(s"ivf_layout:$dir") { path =>
+    val layout = graft.operators.Artifacts.sharedPath(spark, s"ivf_layout:$dir") { path =>
       graft.sources.Sources.writeIvfLayout(
         SimilarityQueries.assigned(spark, dir), path)
     }

@@ -50,7 +50,7 @@ class IvfDeltaStreamSpec extends SparkSpec {
     SimilarityQueries.annIvfDeltaStream(spark, dir).collect()
     val root = SimilarityQueries.annIvfDeltaStreamRoot
     val base = java.nio.file.Paths.get(
-      graft.operators.Artifacts.sharedPath(s"ivf_base90:$dir")(_ =>
+      graft.operators.Artifacts.sharedPath(spark, s"ivf_base90:$dir")(_ =>
         fail("base artifact missing — expected it cached from the run")))
     // compact into a COPY of the base (the shared artifact must stay
     // pristine for other tests), as a real compactor would off the write path
@@ -78,7 +78,7 @@ class IvfDeltaStreamSpec extends SparkSpec {
     // the base artifact survives Artifacts' session cache between runs —
     // capture its exact file set + mtimes, then replay the whole stream
     val base = java.nio.file.Paths.get(
-      graft.operators.Artifacts.sharedPath(s"ivf_base90:$dir")(_ => fail(
+      graft.operators.Artifacts.sharedPath(spark, s"ivf_base90:$dir")(_ => fail(
         "base artifact missing — expected it cached from the first run")))
     val before = fileState(base)
     val second = SimilarityQueries.annIvfDeltaStream(spark, dir)

@@ -61,6 +61,15 @@ if grep -rnE 'array_to_vector|Summarizer' src/main || grep -rnE '\)\.rdd\b' src/
   exit 1
 fi
 
+echo "== one parquet table read =="
+# every parquet read under src/main goes through graft.sources.Tables,
+# which infers a file set's schema once; a plain read.parquet runs a
+# schema-inference job on every call
+if grep -rnF "read.parquet(" src/main | grep -v "^src/main/scala/graft/sources/Tables.scala:"; then
+  echo "read.parquet( outside graft.sources.Tables: read through Tables.parquet"
+  exit 1
+fi
+
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests:|All tests" | tail -2
 
